@@ -15,6 +15,7 @@ from pyspark.sql.types import (
 )
 
 from ..geom.blocks import find_blocks
+from .geometry_update import map_groups
 
 BLOCK_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -50,12 +51,7 @@ def extract_blocks(roads: DataFrame) -> DataFrame:
         return pd.DataFrame(rows,
                             columns=[f.name for f in BLOCK_SCHEMA.fields])
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id"], _process)
-
-    return src.repartition(n, "doc_id").sortWithinPartitions("doc_id") \
-        .mapInPandas(batched, BLOCK_SCHEMA)
+    return map_groups(src, ["doc_id"], _process, BLOCK_SCHEMA, n)
 
 
 def assign_features_to_blocks(features: DataFrame, blocks: DataFrame,

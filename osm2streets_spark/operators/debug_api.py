@@ -30,6 +30,7 @@ from ..geom.core import (
     cumulative_lengths, interpolate_along, polyline_length,
     thicken_polyline, xy_to_lonlat,
 )
+from .geometry_update import map_groups
 
 # ---------------------------------------------------------------------------
 # way_to_xml (lib.rs:290-314)
@@ -160,37 +161,34 @@ def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
 
     from ..geom.core import lonlat_to_xy
 
-    def _build(batches):
-        for pdf in batches:
-            rows = []
-            for (doc_id, way_id), g in pdf.groupby(["doc_id", "way_id"],
-                                                   sort=True):
-                g = g.sort_values("pos")
-                lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
-                w = float(g["total_width"].iloc[0])
-                pl = lonlat_to_xy(
-                    np.column_stack([g["lon"].to_numpy(),
-                                     g["lat"].to_numpy()]), lo, la)
-                if len(pl) < 2:
-                    continue
-                feats = [_polygon_feature(
-                    thicken_polyline(pl, 1.5 * w), lo, la,
-                    {"type": "way_body", "way_id": int(way_id)})]
-                feats += [
-                    _polygon_feature(c, lo, la,
-                                     {"type": "chevron", "way_id":
-                                      int(way_id), "idx": ci})
-                    for ci, c in enumerate(_chevrons(pl, w))]
-                rows.append((doc_id, int(way_id), json.dumps(
-                    {"type": "FeatureCollection", "features": feats},
-                    separators=(",", ":"))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "way_id", "feature_json"])
+    def _build(pdf):
+        rows = []
+        for (doc_id, way_id), g in pdf.groupby(["doc_id", "way_id"],
+                                               sort=True):
+            g = g.sort_values("pos")
+            lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
+            w = float(g["total_width"].iloc[0])
+            pl = lonlat_to_xy(
+                np.column_stack([g["lon"].to_numpy(),
+                                 g["lat"].to_numpy()]), lo, la)
+            if len(pl) < 2:
+                continue
+            feats = [_polygon_feature(
+                thicken_polyline(pl, 1.5 * w), lo, la,
+                {"type": "way_body", "way_id": int(way_id)})]
+            feats += [
+                _polygon_feature(c, lo, la,
+                                 {"type": "chevron", "way_id":
+                                  int(way_id), "idx": ci})
+                for ci, c in enumerate(_chevrons(pl, w))]
+            rows.append((doc_id, int(way_id), json.dumps(
+                {"type": "FeatureCollection", "features": feats},
+                separators=(",", ":"))))
+        return pd.DataFrame(
+            rows, columns=["doc_id", "way_id", "feature_json"])
 
     schema = "doc_id string, way_id long, feature_json string"
-    return pts.repartition("doc_id") \
-              .sortWithinPartitions("doc_id", "way_id", "pos") \
-              .mapInPandas(_build, schema=schema)
+    return map_groups(pts, ["doc_id", "way_id"], _build, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -250,56 +248,53 @@ def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
 
     off = -1.3 if driving_side == "right" else 1.3
 
-    def _build(batches):
-        for pdf in batches:
-            rows = []
-            for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
-                                                 sort=True):
-                lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
-                road_pts = {}
-                for row in g.itertuples(index=False):
-                    xy = np.asarray(row.center_xy,
-                                    dtype=float).reshape(-1, 2)
-                    if len(xy) < 2:
-                        continue
-                    # first center-line segment pointing AWAY from i
-                    p0, p1 = ((xy[0], xy[1]) if row.is_src_end
-                              else (xy[-1], xy[-2]))
-                    seg = p1 - p0
-                    sl = float(np.hypot(*seg))
-                    if sl < 1e-9:
-                        continue
-                    d = seg / sl
-                    n = np.array([d[1], -d[0]])
-                    bidi = not (bool(row.driveable)
-                                and row.oneway_dir in ("forward",
-                                                       "backward"))
-                    if bidi:
-                        road_pts[int(row.road_id)] = (p0 + n * off,
-                                                      p0 - n * off)
-                    else:
-                        road_pts[int(row.road_id)] = (p0, p0)
-                movements = json.loads(g["movements_json"].iloc[0])
-                for frm, to in movements:
-                    if frm == to or frm not in road_pts \
-                            or to not in road_pts:
-                        continue
-                    ring = _arrow_ring(road_pts[frm][0], road_pts[to][1])
-                    if ring is None:
-                        continue
-                    feat = _polygon_feature(
-                        ring, lo, la,
-                        {"type": "movement", "from": frm, "to": to})
-                    rows.append((doc_id, int(i_id), frm, to,
-                                 json.dumps(feat, separators=(",", ":"))))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "i_id", "from_road", "to_road", "arrow_json"])
+    def _build(pdf):
+        rows = []
+        for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
+                                             sort=True):
+            lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
+            road_pts = {}
+            for row in g.itertuples(index=False):
+                xy = np.asarray(row.center_xy,
+                                dtype=float).reshape(-1, 2)
+                if len(xy) < 2:
+                    continue
+                # first center-line segment pointing AWAY from i
+                p0, p1 = ((xy[0], xy[1]) if row.is_src_end
+                          else (xy[-1], xy[-2]))
+                seg = p1 - p0
+                sl = float(np.hypot(*seg))
+                if sl < 1e-9:
+                    continue
+                d = seg / sl
+                n = np.array([d[1], -d[0]])
+                bidi = not (bool(row.driveable)
+                            and row.oneway_dir in ("forward",
+                                                   "backward"))
+                if bidi:
+                    road_pts[int(row.road_id)] = (p0 + n * off,
+                                                  p0 - n * off)
+                else:
+                    road_pts[int(row.road_id)] = (p0, p0)
+            movements = json.loads(g["movements_json"].iloc[0])
+            for frm, to in movements:
+                if frm == to or frm not in road_pts \
+                        or to not in road_pts:
+                    continue
+                ring = _arrow_ring(road_pts[frm][0], road_pts[to][1])
+                if ring is None:
+                    continue
+                feat = _polygon_feature(
+                    ring, lo, la,
+                    {"type": "movement", "from": frm, "to": to})
+                rows.append((doc_id, int(i_id), frm, to,
+                             json.dumps(feat, separators=(",", ":"))))
+        return pd.DataFrame(rows, columns=[
+            "doc_id", "i_id", "from_road", "to_road", "arrow_json"])
 
     schema = ("doc_id string, i_id long, from_road long, to_road long, "
               "arrow_json string")
-    return ends.repartition("doc_id") \
-               .sortWithinPartitions("doc_id", "i_id", "road_id") \
-               .mapInPandas(_build, schema=schema)
+    return map_groups(ends, ["doc_id", "i_id"], _build, schema)
 
 
 def movements_from_lane(arrows: DataFrame, roads_final: DataFrame,

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .geometry_update import map_groups
+
 
 def dc_sides_doc(doc_id: str, recs: list[tuple]) -> list[tuple]:
     """Pure per-doc A7 kernel (dual_carriageways.rs:166-198 trace,
@@ -99,14 +101,8 @@ def trace_dual_carriageway_sides(roads: DataFrame) -> DataFrame:
         return pd.DataFrame(rows,
                             columns=[f.name for f in SIDE_SCHEMA.fields])
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id"], _process)
-
-    spark = src.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    return src.repartition(n, "doc_id").sortWithinPartitions("doc_id") \
-        .mapInPandas(batched, SIDE_SCHEMA)
+    return map_groups(src, ["doc_id"], _process, SIDE_SCHEMA,
+                      src.sparkSession.sparkContext.defaultParallelism)
 
 
 def detect_dual_carriageway_endpoints(roads: DataFrame) -> DataFrame:

@@ -346,7 +346,7 @@ def stream_groups(batches, key_cols: list[str], process):
     carry forward. Peak per-task pandas footprint = one Arrow batch +
     one group, instead of the whole shuffled partition — the difference
     between bounded memory and an OOM on a skewed 100 TB partition.
-    Requires the caller to sortWithinPartitions on key_cols."""
+    Requires key-sorted input; map_groups provides it."""
     carry = None
     for pdf in batches:
         if carry is not None and len(carry):
@@ -367,29 +367,32 @@ def stream_groups(batches, key_cols: list[str], process):
         yield process(carry)
 
 
-def run_t6(road_ends: DataFrame, trims_only: bool = False) -> DataFrame:
+def map_groups(df: DataFrame, keys: list[str], fn, schema,
+               n: int | None = None) -> DataFrame:
+    """Run `fn` on complete `keys` groups: hash-repartition on keys
+    (n partitions; spark.sql.shuffle.partitions when None), sort within
+    partitions on keys, and stream each partition's Arrow batches
+    through stream_groups. fn gets a pandas frame of one or more
+    complete groups and returns a pandas frame of `schema` — the
+    per-group semantics of groupBy().applyInPandas without its
+    per-group plumbing overhead and without materializing the
+    partition."""
+    def batched(batches):
+        yield from stream_groups(batches, keys, fn)
+
+    parted = df.repartition(n, *keys) if n else df.repartition(*keys)
+    return parted.sortWithinPartitions(*keys).mapInPandas(batched, schema)
+
+
+def run_t6(road_ends: DataFrame, trims_only: bool = False,
+           n: int | None = None) -> DataFrame:
     """road_ends columns: doc_id, i_id, road_id, is_src_end, xy,
     total_width, driveable, can_out, can_in, restrictions_json,
-    driving_side.
-
-    Physical shape: hash-repartition on the full group key, sort within
-    partitions so junction groups are contiguous, then ONE mapInPandas
-    that streams complete groups per Arrow batch (stream_groups) — the
-    per-group semantics of groupBy().applyInPandas without its
-    per-group plumbing overhead (junction groups are 1-6 rows) and
-    without materializing the partition."""
-    from ..session import kernel_partitions
-    spark = road_ends.sparkSession
-    n = kernel_partitions(spark)
-
-    def batched(batches):
-        yield from stream_groups(
-            batches, ["doc_id", "i_id"],
-            lambda pdf: t6_process(pdf, trims_only))
-
-    return road_ends.repartition(n, "doc_id", "i_id") \
-        .sortWithinPartitions("doc_id", "i_id") \
-        .mapInPandas(batched, schema=TRIM_SCHEMA)
+    driving_side. One map_groups pass over (doc_id, i_id) junction
+    groups (1-6 rows each) in n partitions."""
+    return map_groups(road_ends, ["doc_id", "i_id"],
+                      lambda pdf: t6_process(pdf, trims_only),
+                      TRIM_SCHEMA, n)
 
 
 def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..geom.core import ring_centroid, xy_to_lonlat
+from .geometry_update import map_groups
 
 ZEBRA_BAR_WIDTH = 0.5
 ZEBRA_GAP = 0.5
@@ -106,9 +107,8 @@ def render_sidewalk_corners(roads_final: DataFrame,
                             ints: DataFrame) -> DataFrame:
     """S8 sidewalk corners (make_sidewalk_corners,
     render/intersection_markings.rs:43-135): per junction, corner
-    polygons where two sidewalk-edged roads meet. Same per-junction
-    mapInPandas shape as run_t6 — fine-grained group key, Arrow
-    batched, in-batch groupby."""
+    polygons where two sidewalk-edged roads meet. One map_groups pass
+    over (doc_id, i_id) junction groups, like run_t6."""
     both = F.array(
         F.struct(F.col("src_i").alias("i_id"), F.lit(True).alias("is_src_end")),
         F.struct(F.col("dst_i").alias("i_id"), F.lit(False).alias("is_src_end")),
@@ -124,52 +124,49 @@ def render_sidewalk_corners(roads_final: DataFrame,
     polys = ints.where(F.col("polygon_xy").isNotNull()).select(
         "doc_id", "i_id", "polygon_xy", "lon0", "lat0")
     src = ends.join(polys, ["doc_id", "i_id"])
-    spark = src.sparkSession
-    n = spark.sparkContext.defaultParallelism * 4
 
-    def batched(batches):
+    def _corners(pdf):
         from ..geom.intersection_kernel import sidewalk_corners
 
-        for pdf in batches:
-            rows = []
-            for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
-                                                 sort=False):
-                ring = np.asarray(g["polygon_xy"].iloc[0],
-                                  dtype=float).reshape(-1, 2)
-                lo = float(g["lon0"].iloc[0])
-                la = float(g["lat0"].iloc[0])
-                ends_k = []
-                for row in g.sort_values("road_id").itertuples(index=False):
-                    xy = np.asarray(row.center_xy,
-                                    dtype=float).reshape(-1, 2)
-                    if len(xy) < 2:
-                        continue
-                    if not bool(row.is_src_end):
-                        xy = xy[::-1]
-                    ends_k.append({
-                        "key": (int(row.road_id), bool(row.is_src_end)),
-                        "road_id": int(row.road_id),
-                        "is_src_end": bool(row.is_src_end),
-                        "xy": xy,
-                        "width": float(row.total_width),
-                        "specs": json.loads(row.lane_specs_json),
-                    })
-                if len(ends_k) < 2:
+        rows = []
+        for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
+                                             sort=False):
+            ring = np.asarray(g["polygon_xy"].iloc[0],
+                              dtype=float).reshape(-1, 2)
+            lo = float(g["lon0"].iloc[0])
+            la = float(g["lat0"].iloc[0])
+            ends_k = []
+            for row in g.sort_values("road_id").itertuples(index=False):
+                xy = np.asarray(row.center_xy,
+                                dtype=float).reshape(-1, 2)
+                if len(xy) < 2:
                     continue
-                for idx, ring_out in enumerate(
-                        sidewalk_corners(ends_k, ring)):
-                    ll = xy_to_lonlat(ring_out, lo, la)
-                    feat = json.dumps({
-                        "type": "Feature",
-                        "geometry": {"type": "Polygon", "coordinates": [[
-                            [round(float(x), 9), round(float(y), 9)]
-                            for x, y in ll]]},
-                        "properties": {"type": "sidewalk corner"},
-                    }, separators=(",", ":"))
-                    rows.append((doc_id, int(i_id), idx, feat))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "i_id", "marking_idx",
-                               "feature_json"])
+                if not bool(row.is_src_end):
+                    xy = xy[::-1]
+                ends_k.append({
+                    "key": (int(row.road_id), bool(row.is_src_end)),
+                    "road_id": int(row.road_id),
+                    "is_src_end": bool(row.is_src_end),
+                    "xy": xy,
+                    "width": float(row.total_width),
+                    "specs": json.loads(row.lane_specs_json),
+                })
+            if len(ends_k) < 2:
+                continue
+            for idx, ring_out in enumerate(
+                    sidewalk_corners(ends_k, ring)):
+                ll = xy_to_lonlat(ring_out, lo, la)
+                feat = json.dumps({
+                    "type": "Feature",
+                    "geometry": {"type": "Polygon", "coordinates": [[
+                        [round(float(x), 9), round(float(y), 9)]
+                        for x, y in ll]]},
+                    "properties": {"type": "sidewalk corner"},
+                }, separators=(",", ":"))
+                rows.append((doc_id, int(i_id), idx, feat))
+        return pd.DataFrame(
+            rows, columns=["doc_id", "i_id", "marking_idx",
+                           "feature_json"])
 
-    return src.repartition(n, "doc_id", "i_id").mapInPandas(
-        batched, schema=CORNER_SCHEMA)
+    return map_groups(src, ["doc_id", "i_id"], _corners, CORNER_SCHEMA,
+                      src.sparkSession.sparkContext.defaultParallelism * 4)

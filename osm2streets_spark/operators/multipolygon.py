@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from .geometry_update import map_groups
+
 
 def assemble_rings(way_pts: list[tuple[list, str]]) -> dict:
     """way_pts: [(points [[lon,lat]...], role)] → {'outer': [rings],
@@ -126,12 +128,5 @@ def assemble_multipolygons(relations: DataFrame, ways: DataFrame,
                          json.dumps(feat, separators=(",", ":"))))
         return pd.DataFrame(rows, columns=[f.name for f in MP_SCHEMA.fields])
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id", "rel_id"], _process)
-
-    spark = joined.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    return joined.repartition(n, "doc_id", "rel_id") \
-        .sortWithinPartitions("doc_id", "rel_id").mapInPandas(
-        batched, MP_SCHEMA)
+    return map_groups(joined, ["doc_id", "rel_id"], _process, MP_SCHEMA,
+                      joined.sparkSession.sparkContext.defaultParallelism)

@@ -16,6 +16,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from .geometry_update import map_groups
+
 DIST_SCHEMA = StructType([
     StructField("doc_id", StringType()),
     StructField("src_i", LongType()),
@@ -65,14 +67,7 @@ def shortest_dists_from_hubs(roads: DataFrame, max_hubs: int = 2) -> DataFrame:
                                  round(float(d), 3)))
         return pd.DataFrame(rows, columns=[f.name for f in DIST_SCHEMA.fields])
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id"], _process)
-
-    # sorted doc groups + streaming bounds per-task memory to one Arrow
-    # batch + one doc instead of the whole shuffled partition
-    return src.repartition(n, "doc_id").sortWithinPartitions("doc_id") \
-        .mapInPandas(batched, DIST_SCHEMA)
+    return map_groups(src, ["doc_id"], _process, DIST_SCHEMA, n)
 
 
 def r_hop_neighborhood(roads: DataFrame, rounds: int = 3) -> DataFrame:
@@ -182,9 +177,4 @@ def simple_paths(roads: DataFrame,
         return pd.DataFrame(
             rows, columns=[f.name for f in PATH_SCHEMA.fields])
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id"], _process)
-
-    return src.repartition(n, "doc_id").sortWithinPartitions("doc_id") \
-        .mapInPandas(batched, PATH_SCHEMA)
+    return map_groups(src, ["doc_id"], _process, PATH_SCHEMA, n)

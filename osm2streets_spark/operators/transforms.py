@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from ..geom.core import simplify_rdp, polyline_length
+from .geometry_update import map_groups
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
@@ -726,7 +727,8 @@ def run_transforms(roads: DataFrame,
                    with_sidepath_zip: bool = False,
                    with_remove_disconnected: bool = True,
                    split_threshold: int = 4000,
-                   split_zoom: int = 12) -> DataFrame:
+                   split_zoom: int = 12,
+                   n: int | None = None) -> DataFrame:
     """Per-doc T4[+T3]+T1+T2+T1. Input needs the columns in _ROAD_FIELDS
     (per-end metadata columns optional — filled with nulls). Output has
     row_kind='road' rows (the surviving roads, with pretrim memos) and
@@ -739,28 +741,15 @@ def run_transforms(roads: DataFrame,
     intersections whose incident roads span cells are FROZEN — no
     collapse may touch them (their other-cell roads are invisible to
     the group), and T4 is skipped for split docs (components span
-    cells). Same mapInPandas-with-in-batch-groupby shape as run_t6."""
+    cells). One map_groups pass over (doc, cell) groups in n
+    partitions."""
     src = _prep_transform_cells(roads, split_threshold, split_zoom)
-    cols = ["doc_id", "_tcell"] + [n for n, _ in _ROAD_FIELDS]
-
-    from ..session import kernel_partitions
-    spark = src.sparkSession
-    n = kernel_partitions(spark)
-
-    def _process(pdf):
-        return _transform_batch(pdf, with_sidepath_zip,
-                                with_remove_disconnected)
-
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id", "_tcell"], _process)
-
-    # sortWithinPartitions makes (doc, cell) groups contiguous so
-    # stream_groups bounds per-task memory to one Arrow batch + one
-    # group instead of the whole partition
-    return src.select(*cols).repartition(n, "doc_id", "_tcell") \
-        .sortWithinPartitions("doc_id", "_tcell") \
-        .mapInPandas(batched, schema=TRANSFORM_SCHEMA)
+    cols = ["doc_id", "_tcell"] + [c for c, _ in _ROAD_FIELDS]
+    return map_groups(
+        src.select(*cols), ["doc_id", "_tcell"],
+        lambda pdf: _transform_batch(pdf, with_sidepath_zip,
+                                     with_remove_disconnected),
+        TRANSFORM_SCHEMA, n)
 
 
 def _prep_transform_cells(roads: DataFrame, split_threshold: int,
@@ -840,7 +829,8 @@ def run_transform_steps(roads: DataFrame,
                         with_sidepath_zip: bool = False,
                         with_remove_disconnected: bool = True,
                         split_threshold: int = 4000,
-                        split_zoom: int = 12) -> DataFrame:
+                        split_zoom: int = 12,
+                        n: int | None = None) -> DataFrame:
     """Stepwise transformation debugging — the Spark counterpart of the
     reference's apply_transformations_stepwise_debugging
     (transform/mod.rs:94-109): a network-size snapshot per
@@ -854,10 +844,7 @@ def run_transform_steps(roads: DataFrame,
     (frozen seam intersections count once per cell they touch — the
     sequential replay aggregates identically)."""
     src = _prep_transform_cells(roads, split_threshold, split_zoom)
-    cols = ["doc_id", "_tcell"] + [n for n, _ in _ROAD_FIELDS]
-
-    from ..session import kernel_partitions
-    n = kernel_partitions(src.sparkSession)
+    cols = ["doc_id", "_tcell"] + [c for c, _ in _ROAD_FIELDS]
 
     def _steps_doc(doc_id, pdf, doc_split):
         pdf = pdf.sort_values("road_id")
@@ -888,13 +875,8 @@ def run_transform_steps(roads: DataFrame,
         ]
         return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
 
-    def batched(batches):
-        from .geometry_update import stream_groups
-        yield from stream_groups(batches, ["doc_id", "_tcell"], _process)
-
-    per_cell = src.select(*cols).repartition(n, "doc_id", "_tcell") \
-        .sortWithinPartitions("doc_id", "_tcell") \
-        .mapInPandas(batched, schema=STEPS_SCHEMA)
+    per_cell = map_groups(src.select(*cols), ["doc_id", "_tcell"],
+                          _process, STEPS_SCHEMA, n)
     return per_cell.groupBy("doc_id", "step_idx", "step_name").agg(
         F.sum("n_roads").alias("n_roads"),
         F.sum("n_intersections").alias("n_intersections"))

@@ -69,7 +69,7 @@ def recompute_doc_features(spark: SparkSession, docs: DataFrame,
                            cfg: MapConfig = DEFAULT_CONFIG) -> DataFrame:
     """Delta recompute: run the full pipeline on ONE document."""
     one = docs.where(F.col("doc_id") == doc_id)
-    net = build_street_network(spark, one, cfg, docs_hint=1)
+    net = build_street_network(spark, one, cfg, n_docs=1)
     return net["features"].select(
         "doc_id", "feature_type", "feature_id", "feature_json",
         "tile_z", "tile_x", "tile_y", "quadkey")

@@ -288,7 +288,7 @@ def run_reference_parity(spark, areas: list[str] | None = None) -> dict:
             spark, docs,
             cfg=MapConfig(driving_side=side, inferred_sidewalks=False,
                           remove_disconnected=False),
-            docs_hint=len(group))
+            n_docs=len(group))
         feats = (net["features"]
                  .select("doc_id", "feature_json")
                  .groupBy("doc_id")

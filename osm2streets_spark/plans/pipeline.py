@@ -38,6 +38,7 @@ from ..operators.geometry_update import (
 from ..operators.transforms import run_transforms
 from ..operators.render import render_roads, render_intersections
 from ..operators.tiles import with_tile, quadkey
+from ..session import _env_int, partition_count
 
 
 _TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
@@ -71,32 +72,13 @@ def load_documents(spark: SparkSession, fixture_dir: str) -> DataFrame:
     """Read + spread documents across the cluster. A fixture is one
     small parquet file (1 input split); the pipeline's cost is Python
     geometry CPU per doc, so parallelism must come from an explicit
-    doc_id repartition, not input size. (At 100 TB the Iceberg table is
-    bucketed by doc_id and this becomes a no-op read-time distribution.)"""
+    doc_id repartition, not input size, sized from the parquet footer's
+    row count (no Spark job). (At 100 TB the Iceberg table is bucketed
+    by doc_id and this becomes a no-op read-time distribution.)"""
     path = f"{fixture_dir}/documents.parquet"
-    docs = spark.read.parquet(path)
-    # publish the corpus size for kernel_partitions (parquet footer
-    # read, no Spark job): partition counts scale with data, not just
-    # cores, so small corpora stop paying empty-task overhead
-    n_docs = _count_parquet_rows(path)
-    spark.conf.set("spark_graft.docs_hint", str(n_docs))
-    cores = spark.sparkContext.defaultParallelism
-    if n_docs:
-        # data-proportional with a floor at the core count: enough
-        # tasks to keep every core busy, but no finer than ~64 docs
-        # per task once the corpus is large enough (same sizing rule
-        # as kernel_partitions — measured ~6 s faster at sf0.1 than
-        # the old flat cores*2)
-        from osm2streets_spark.session import DOCS_PER_KERNEL_PARTITION
-        n = max(1, min(cores * 2, n_docs,
-                       max(cores, -(-n_docs // DOCS_PER_KERNEL_PARTITION))))
-    else:
-        n = cores * 2
-    out = docs.repartition(n, "doc_id")
-    # hint travels WITH the frame (read by build_street_network), not
-    # only via session conf — see build_street_network docs_hint
-    out._spark_graft_docs_hint = n_docs or None
-    return out
+    n = partition_count("docs", _count_parquet_rows(path),
+                        spark.sparkContext.defaultParallelism)
+    return spark.read.parquet(path).repartition(n, "doc_id")
 
 
 def parse_stage(docs: DataFrame):
@@ -154,43 +136,32 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
                          cfg: MapConfig = DEFAULT_CONFIG,
                          transforms: bool = True,
                          two_pass_t6: bool = True,
-                         docs_hint: int | None = None,
+                         n_docs: int | None = None,
                          debug_steps: bool = False) -> dict:
     """Returns a dict of DataFrames: roads, intersections, road_features,
     intersection_features, features (union), output_documents (span
     passthrough).
 
-    docs_hint: corpus size for kernel_partitions scaling. Defaults to
-    the hint load_documents attached to the docs frame itself
-    (`_spark_graft_docs_hint`); the session conf is SET or UNSET here
-    at pipeline entry either way, so a docs frame that didn't come
-    through load_documents (PBF reads, a second larger corpus in the
-    same session) can't inherit a stale small hint and silently cap
-    the kernel shuffles at `cores` partitions (round-5 ADVICE:
-    invisible cross-module coupling via mutable session state)."""
+    n_docs: corpus size, which sizes the kernel shuffles (T6,
+    transforms). Defaults to the row count in the parquet footers of
+    the frame's input files: a driver-side metadata walk (no Spark job)
+    that survives filters and projections, and overestimates a
+    filtered frame, which is fine for partition sizing. A non-parquet
+    source (PBF parses) gives no count, and the kernels get the
+    cores×4 cap. SPARK_GRAFT_KERNEL_PARTITIONS pins the kernel
+    partition count regardless of core count: the data-proportional
+    sizing of scaling-criterion runs, where a cluster of any size runs
+    the same task list in more or fewer waves."""
     debug_steps_df = None  # set when debug_steps and transforms run
-    if docs_hint is None:
-        docs_hint = getattr(docs, "_spark_graft_docs_hint", None)
-    if docs_hint is None:
-        # The attribute is best-effort (any .where/.select between
-        # load_documents and here returns a NEW DataFrame and drops
-        # it — round-6 ADVICE). Recover the hint from the underlying
-        # parquet scan's footers: inputFiles() is a driver-side
-        # metadata walk (no Spark job) that survives intervening
-        # transformations. A filtered frame overestimates — fine for
-        # a partition-sizing hint. Non-parquet sources (PBF parses)
-        # yield nothing and keep the unset-conf behavior.
+    if n_docs is None:
         try:
-            docs_hint = sum(
+            n_docs = sum(
                 _count_parquet_rows(f.removeprefix("file:"))
-                for f in docs.inputFiles() if f.endswith(".parquet")
-            ) or None
+                for f in docs.inputFiles() if f.endswith(".parquet"))
         except Exception:
-            docs_hint = None
-    if docs_hint:
-        spark.conf.set("spark_graft.docs_hint", str(int(docs_hint)))
-    else:
-        spark.conf.unset("spark_graft.docs_hint")
+            n_docs = None
+    n = _env_int("SPARK_GRAFT_KERNEL_PARTITIONS", 0) or partition_count(
+        "kernel", n_docs, spark.sparkContext.defaultParallelism)
     _tick("start")
     nodes, ways, relations = parse_stage(docs)
     # nodes re-cached as a COLUMNAR layer on top of its checkpoint:
@@ -302,7 +273,7 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
             # happens INSIDE t6_process so one exchange serves the whole
             # pass and the sequential replay shares it bit-for-bit.
             ends1 = build_road_ends(roads, None, cfg.driving_side)
-            trims1 = run_t6(ends1, trims_only=True)
+            trims1 = run_t6(ends1, trims_only=True, n=n)
             roads = apply_trim_flags(roads, trims1)
         restricted_roads = resolved.select(
             "doc_id", F.explode(F.array("from_road", "to_road"))
@@ -348,11 +319,12 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
             from ..operators.transforms import run_transform_steps
             debug_steps_df = run_transform_steps(
                 roads, cfg.zip_sidepaths, cfg.remove_disconnected,
-                cfg.transform_split_threshold, cfg.transform_split_zoom)
+                cfg.transform_split_threshold, cfg.transform_split_zoom,
+                n)
         tout = run_transforms(roads, cfg.zip_sidepaths,
                               cfg.remove_disconnected,
                               cfg.transform_split_threshold,
-                              cfg.transform_split_zoom) \
+                              cfg.transform_split_zoom, n) \
             .localCheckpoint(eager=False)
         _tick("transforms checkpoint (t6 pass1 + fixpoint kernel)")
         roads = tout.where(F.col("row_kind") == "road").drop("row_kind")
@@ -382,7 +354,7 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     # time. A checkpoint truncates the lineage to a LogicalRDD at call
     # time (toRdd paid once here, on an already-shallow tree), so the
     # render fan-out analyzes ~20-node trees instead.
-    trims = run_t6(ends).localCheckpoint(eager=False)
+    trims = run_t6(ends, n=n).localCheckpoint(eager=False)
     _tick("trims checkpoint (t6 pass2)")
     roads_final = apply_trims(roads, trims).localCheckpoint(eager=False)
     _tick("roads_final checkpoint (apply_trims)")

@@ -630,16 +630,17 @@ def queries() -> Q:
         ONE small parquet file, so the file-split scan would run the
         whole UDF on a single core (r8 plan audit: ArrowEvalPython
         directly over a 1-split scan). Data-proportional doc_id
-        repartition — same rule as the flagship's load_documents; at
+        repartition, sized by session.partition_count("text", ...); at
         100 TB the table is bucketed by doc_id and this is a no-op.
         The pure-Catalyst ta_*/dd_exact queries deliberately stay on
         the plain scan: the r8 interleaved A/B measured the extra
         exchange costing them 0.06-0.7 s with nothing to parallelize
         (their string expressions are cheap relative to the shuffle)."""
-        from ..session import docs_partitions
+        from ..session import partition_count
         from .pipeline import _count_parquet_rows
-        n = docs_partitions(
-            spark, _count_parquet_rows(f"{sf_dir}/documents.parquet"))
+        n = partition_count(
+            "text", _count_parquet_rows(f"{sf_dir}/documents.parquet"),
+            spark.sparkContext.defaultParallelism)
         return _driver_docs(spark, sf_dir).repartition(n, "doc_id")
 
     q.update({

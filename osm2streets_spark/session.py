@@ -12,10 +12,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _env_int(name: str, default: int) -> int:
+    """Positive integer env knob. Unset, non-integer and non-positive
+    values give `default`, so a mistyped knob cannot crash session
+    build or reach a Spark conf verbatim."""
+    try:
+        v = int(os.environ.get(name, ""))
+    except ValueError:
+        return default
+    return v if v > 0 else default
+
+
 def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cores = _env_int("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
         # 1x cores: our shuffles are byte-small, so AQE's coalesce
         # floor (minPartitionNum=cores) is where every over-provisioned
@@ -25,10 +36,10 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # skew split still raises it when a partition is genuinely
         # hot). On a real cluster SPARK_GRAFT_SHUFFLE_PARTITIONS pins
         # it data-proportionally instead (scaling-criterion runs: same
-        # task list at every cluster size — see kernel_partitions).
-        shuffle_partitions = (
-            int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"))
-            or cores)
+        # task list at every cluster size, like
+        # SPARK_GRAFT_KERNEL_PARTITIONS in plans.pipeline).
+        shuffle_partitions = _env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+                                      cores)
     builder = (
         SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -50,7 +61,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
+                str(_env_int("SPARK_GRAFT_ARROW_BATCH", 2048)))
         .config("spark.sql.session.timeZone", "UTC")
         # static conf, must be set at session build: the default
         # 100-entry codegen class cache thrashes on the flagship's ~236
@@ -62,7 +73,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # bounded (~2k classes); it caches compiled bytecode, never
         # data or results.
         .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
+                str(_env_int("SPARK_GRAFT_CODEGEN_CACHE", 2000)))
         # PySpark 4 wraps every DataFrame op in a call-site capture
         # (2+ Py4J RPCs per op, for richer error messages). The
         # flagship's deep plans issue ~700 ops per build; the capture
@@ -79,86 +90,37 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
     return builder.getOrCreate()
 
 
-# target docs per kernel task: big enough to amortize the fixed
-# per-task cost, small enough that a straggler partition can't hold a
-# whole stage (measured sweet spot at the sf0.1 bench corpus)
-DOCS_PER_KERNEL_PARTITION = 64
-
-# target docs per task for the lighter text-analysis/dedup pandas UDFs
-# (shingles, fingerprints): r8 interleaved sweep at sf0.1 — see
-# docs_partitions below
-DOCS_PER_TEXT_PARTITION = 128
-
-
-def docs_partitions(spark: SparkSession, n_docs: int,
-                    factor: int = 4) -> int:
-    """Partition count for Python-CPU-heavy scans of a documents table
-    (shingle/fingerprint pandas UDFs). Same sizing rule as
-    kernel_partitions — data-proportional (≥ DOCS_PER_KERNEL_PARTITION
-    docs per task) with a floor at the core count and a cores×factor
-    cap — but takes the row count directly (parquet footer) instead of
-    the session-conf hint. Rationale (r8): the driver's documents table
-    is ONE small parquet file, so the file-split scan runs the whole
-    shingle/fingerprint UDF on a single core; an explicit doc_id
-    repartition sized to the data restores cluster-width parallelism
-    for the Python stage while costing one shuffle of the text bytes
-    (at 100 TB the table is bucketed by doc_id and the shuffle
-    disappears; SPARK_GRAFT_DOC_PARTITIONS pins the count for
-    criterion runs, like the other two knobs)."""
-    pinned = int(os.environ.get("SPARK_GRAFT_DOC_PARTITIONS", "0"))
-    if pinned > 0:
-        return pinned
-    cores = spark.sparkContext.defaultParallelism
-    if n_docs <= 0:
-        return cores * 2
-    # NO cores floor, unlike kernel_partitions: these text UDFs are
-    # ~10× lighter per doc than the geometry kernels, so the fixed
-    # per-task cost dominates sooner. Interleaved sweep at sf0.1
-    # (2,100 docs, r8): 0 parts (1-task scan) / 8 / 16 / 33 gave
-    # minhash 2.59/1.72/1.70/2.11 s, jaccard 3.27/1.76/1.50/2.31 s,
-    # fingerprints 0.82/0.54/0.53/0.72 s — ~128 docs/task is the
-    # plateau, and the cores floor (33 → a 2-wave straggler) gives
-    # back half the win.
-    return max(1, min(cores * factor,
-                      -(-n_docs // DOCS_PER_TEXT_PARTITION)))
+# Partition sizing for the Python-CPU-heavy shuffles, one rule for
+# every use: ~rows_per_task rows per task to amortize the fixed per-task
+# cost (scheduler + Python worker round trip, ~30-60 ms here), never
+# more tasks than rows (a 128-partition shuffle over a 21-doc corpus is
+# ~107 empty tasks), at least `floor` tasks so every core has work, at
+# most `cap` tasks for load balance. At deployment scale n/rows_per_task
+# >> cap and the cap binds. Argument sets per use, as
+# (rows per task, cap in cores, floor in cores):
+#   docs   — load_documents' doc_id spread of the flagship input;
+#   kernel — the geometry-kernel shuffles (T6, transforms). Measured at
+#            sf0.1 (2,100 docs): 16 docs/task ran the flagship ~6 s
+#            slower than 64;
+#   text   — the text-analysis/dedup pandas UDF scans (shingles,
+#            fingerprints). ~10x lighter per doc than the geometry
+#            kernels, so no cores floor: an r8 interleaved sweep at sf0.1
+#            found ~128 docs/task the plateau, and a cores floor (33
+#            tasks on 32 cores, a 2-wave straggler) gave back half the
+#            win. Floor 0 still yields >= 1 task, as ceil(n/128) >= 1.
+SIZING = {
+    "docs": (64, 2, 1),
+    "kernel": (64, 4, 1),
+    "text": (128, 4, 0),
+}
 
 
-def kernel_partitions(spark: SparkSession, factor: int = 4) -> int:
-    """Partition count for the Python-CPU-heavy kernel repartitions.
-
-    cores×factor for load balance (heavy groups must spread), but never
-    more than the document count: a 128-partition shuffle over a
-    21-doc test corpus is ~107 empty tasks, each paying the
-    python-worker round trip — measured as the dominant fixed cost of
-    small runs. The doc count comes from `spark_graft.docs_hint`, set
-    by load_documents from the parquet footer (no job). At deployment
-    scale the hint is >> cores×factor and this is exactly cores×factor.
-
-    DATA-PROPORTIONAL override: SPARK_GRAFT_KERNEL_PARTITIONS pins the
-    kernel partition count regardless of core count — the 100 TB-style
-    sizing (partitions follow data, a cluster of any size runs the same
-    task list in more or fewer waves). The round-6 scaling diagnosis
-    measured the cores×factor default paying ~3.8× the per-task fixed
-    JVM cost at 16c vs 4c for the same corpus, a pure asymmetry that
-    the criterion measurement eliminates by pinning."""
-    pinned = int(os.environ.get("SPARK_GRAFT_KERNEL_PARTITIONS", "0"))
-    if pinned > 0:
-        return pinned
-    cores = spark.sparkContext.defaultParallelism
-    n = cores * factor
-    try:
-        hint = int(spark.conf.get("spark_graft.docs_hint", "0"))
-    except Exception:
-        hint = 0
-    if hint > 0:
-        # data-proportional: aim for >= DOCS_PER_KERNEL_PARTITION docs
-        # per task so the per-task fixed cost (scheduler + python
-        # worker round trip, ~30-60 ms here) stays amortized. Measured
-        # at sf0.1 (2,100 docs): 128 partitions -> 16 docs/task ran the
-        # flagship ~6 s slower than 32 partitions; at deployment scale
-        # hint/target >> cores*factor and the cores*factor cap binds,
-        # so balance across a big cluster is unchanged.
-        n = max(cores, min(n, hint,
-                           -(-hint // DOCS_PER_KERNEL_PARTITION)))
-        n = min(n, hint)
-    return n
+def partition_count(use: str, n: int | None, cores: int) -> int:
+    """min(cap, n, max(floor, ceil(n / rows_per_task))) with the
+    SIZING argument set of `use`; `cap` when the row count n is
+    unknown (None or 0)."""
+    rows_per_task, cap, floor = SIZING[use]
+    cap *= cores
+    if not n:
+        return cap
+    return min(cap, n, max(floor * cores, -(-n // rows_per_task)))

@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm2streets_spark.plans.parity import run_reference_parity
+from osm2streets_spark.sources.reference_fixtures import REF_SRC
 
 AREAS = [
     "tiny_loop",            # loop street + clip
@@ -27,6 +28,8 @@ AREAS = [
 
 @pytest.fixture(scope="module")
 def results(spark):
+    if not os.path.isdir(REF_SRC):
+        pytest.skip("reference fixtures not present")
     return run_reference_parity(spark, AREAS)
 
 
@@ -94,15 +97,17 @@ def test_parity_byte_exactness_ratchet():
     assert tot_ex / tot >= 0.91, f"overall exact {tot_ex}/{tot}"
 
 
-def test_span_sequence_passthrough(spark):
-    """north_rule per-row invariant on REAL payloads: the output
-    document table preserves the input span sequence exactly."""
-    from osm2streets_spark.sources.reference_fixtures import (
-        reference_documents)
-    from osm2streets_spark.plans.pipeline import build_street_network
+def test_span_sequence_passthrough(spark, fixture_dir):
+    """north_rule per-row invariant: the output document table
+    preserves every input span sequence exactly (synthetic corpus, so
+    it runs without the reference fixtures)."""
+    from osm2streets_spark.plans.pipeline import (
+        build_street_network, load_documents,
+    )
 
-    docs = reference_documents(spark, ["tiny_loop"])
+    docs = load_documents(spark, fixture_dir)
     net = build_street_network(spark, docs)
-    inp = docs.collect()[0]
-    out = net["output_documents"].collect()[0]
-    assert [tuple(s) for s in inp.spans] == [tuple(s) for s in out.spans]
+    inp = {r.doc_id: [tuple(s) for s in r.spans] for r in docs.collect()}
+    out = {r.doc_id: [tuple(s) for s in r.spans]
+           for r in net["output_documents"].collect()}
+    assert inp and out == inp

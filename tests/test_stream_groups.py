@@ -5,7 +5,9 @@ Forcing tiny Arrow batches must not change any result."""
 import pandas as pd
 import pytest
 
-from osm2streets_spark.operators.geometry_update import stream_groups
+from osm2streets_spark.operators.geometry_update import (
+    map_groups, stream_groups,
+)
 
 
 def test_stream_groups_complete_and_bounded():
@@ -33,6 +35,27 @@ def test_stream_groups_complete_and_bounded():
     assert sorted(seen_groups) == list(range(10))
     # bounded: one batch (6) + one carried group (<=7) minus the held key
     assert max(seen_sizes) <= 6 + 7
+
+
+def test_map_groups_hands_fn_complete_groups(spark):
+    """map_groups shuffles and sorts for stream_groups itself: with
+    16-record Arrow batches, every group of 70 unsorted rows still
+    reaches fn whole, exactly once."""
+    df = spark.range(700).selectExpr("id % 10 AS k", "id AS v")
+
+    def fn(pdf):
+        return pdf.groupby("k")["v"].agg(["size", "sum"]).reset_index() \
+            .rename(columns={"size": "n", "sum": "s"})
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+        rows = map_groups(df, ["k"], fn, "k long, n long, s long",
+                          3).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert sorted((r.k, r.n, r.s) for r in rows) == [
+        (k, 70, sum(range(k, 700, 10))) for k in range(10)]
 
 
 def test_tiny_arrow_batches_identical_pipeline_output(spark, fixture_dir):
@@ -69,6 +92,51 @@ def test_tiny_arrow_batches_identical_pipeline_output(spark, fixture_dir):
     assert base == tiny
 
 
+def test_tiny_arrow_batches_identical_grouped_renders(spark, fixture_dir):
+    """way_geometry and movement_arrows group per (doc, way) and per
+    (doc, junction), render_sidewalk_corners per (doc, junction). A
+    group split across two Arrow batches must still be processed whole,
+    so 16-record batches must not change a single row."""
+    from osm2streets_spark.operators.debug_api import (
+        movement_arrows, way_geometry,
+    )
+    from osm2streets_spark.operators.intersection_markings import (
+        render_sidewalk_corners,
+    )
+    from osm2streets_spark.plans.pipeline import (
+        load_documents, build_street_network,
+    )
+    from osm2streets_spark.sources.osm_xml import doc_bounds
+
+    spark.catalog.clearCache()
+    net = build_street_network(spark, load_documents(spark, fixture_dir))
+    anchors = doc_bounds(net["nodes"])
+    ops = {
+        "way_geometry": lambda: way_geometry(
+            net["ways"], net["nodes"], net["roads"], anchors),
+        "movement_arrows": lambda: movement_arrows(
+            net["roads"], net["intersections"], anchors),
+        "sidewalk_corners": lambda: render_sidewalk_corners(
+            net["roads"], net["intersections"]),
+    }
+
+    def snapshot():
+        return {name: sorted(tuple(r) for r in op().collect())
+                for name, op in ops.items()}
+
+    base = snapshot()
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+        tiny = snapshot()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    for name in ops:
+        assert base[name], name
+        assert len(tiny[name]) == len(base[name]), name
+        assert tiny[name] == base[name], name
+
+
 @pytest.mark.parametrize("qname", [
     "g_shortest_dists", "g_simple_paths", "s_multipolygons",
     "g_blocks", "sn_dc_side_lengths",
@@ -99,3 +167,29 @@ def test_tiny_batches_identical_per_doc_operators(spark, qname):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     pd.testing.assert_frame_equal(base, tiny)
+
+
+def test_no_hand_rolled_group_streaming():
+    """Every grouped kernel goes through map_groups, which sorts for
+    stream_groups: neither name may appear in operators/ outside the
+    two helper definitions, so a hand-rolled copy of the shuffle cannot
+    come back."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] \
+        / "osm2streets_spark" / "operators"
+    offenders = []
+    for path in sorted(ops.glob("*.py")):
+        src = path.read_text()
+        lines = src.splitlines()
+        if path.name == "geometry_update.py":
+            for node in ast.parse(src).body:
+                if isinstance(node, ast.FunctionDef) \
+                        and node.name in ("stream_groups", "map_groups"):
+                    lines[node.lineno - 1:node.end_lineno] = \
+                        [""] * (node.end_lineno - node.lineno + 1)
+        offenders += [f"{path.name}:{i}" for i, line in enumerate(lines, 1)
+                      if "stream_groups" in line
+                      or "sortWithinPartitions" in line]
+    assert not offenders, offenders
