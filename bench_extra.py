@@ -15,6 +15,13 @@ Modes (first CLI arg):
                                plans/r08/<q>_<suffix>.txt
                                (suffix from SPARK_GRAFT_PLAN_SUFFIX,
                                default "before")
+  udf_tax                    — per-task cost of the Python UDF runner:
+                               the same sum-of-lengths aggregate over
+                               spark.range-generated text rows, as
+                               Catalyst and as a pandas UDF, at
+                               UDF_TAX_PARTITIONS tasks; prints both
+                               medians per count and the extra core-ms
+                               per pandas-UDF task (no fixtures needed)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_RUNS (default 3).
@@ -28,6 +35,10 @@ import statistics
 import sys
 import time
 
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from osm2streets_spark.session import get_spark
@@ -37,6 +48,51 @@ from osm2streets_spark.plans import registry
 
 DEFAULT_QUERIES = ["q_street_pipeline", "dd_minhash_lsh", "sim_ann_topk",
                    "ta_quality", "ta_fingerprint", "ev_window", "dd_exact"]
+UDF_TAX_ROWS = 5000
+UDF_TAX_PARTITIONS = (4, 16, 64)
+
+
+def udf_tax(spark, cpus: int, n_timed: int) -> None:
+    """Both plans read the same rows in one task per partition, so the
+    pandas-UDF minus Catalyst wall grows by the Python runner's fixed
+    per-task cost per added task, spread over `cpus` cores: the slope
+    between the smallest and largest partition count, times cpus, is
+    that cost in core-ms."""
+    @pandas_udf("long")
+    def py_len(s: pd.Series) -> pd.Series:
+        return s.str.len()
+
+    def text(p):
+        ids = F.col("id").cast("string")
+        return spark.range(0, UDF_TAX_ROWS, 1, p).select(
+            F.concat_ws(" ", F.lit("doc"), ids, F.sha1(ids)).alias("text"))
+
+    plans = {"catalyst": lambda p: text(p).agg(F.sum(F.length("text"))),
+             "pandas_udf": lambda p: text(p).agg(F.sum(py_len("text")))}
+    out = {}
+    for p in UDF_TAX_PARTITIONS:
+        # a fresh DataFrame per run: collecting one twice skips its
+        # shuffle-map stage, whose outputs are still there
+        answers = {name: plan(p).collect()[0][0]
+                   for name, plan in plans.items()}
+        assert len(set(answers.values())) == 1, answers   # + warm-up
+        runs = {name: [] for name in plans}
+        for _ in range(n_timed):            # interleaved
+            for name, plan in plans.items():
+                df = plan(p)
+                t0 = time.perf_counter()
+                df.collect()
+                runs[name].append(time.perf_counter() - t0)
+        out[p] = {name: round(statistics.median(r), 3)
+                  for name, r in runs.items()}
+        print(f"{p} tasks: {out[p]}", flush=True)
+    lo, hi = UDF_TAX_PARTITIONS[0], UDF_TAX_PARTITIONS[-1]
+    extra = [out[p]["pandas_udf"] - out[p]["catalyst"] for p in (lo, hi)]
+    ms_per_task = (extra[1] - extra[0]) / (hi - lo) * cpus * 1000
+    print(json.dumps({"mode": "udf_tax", "rows": UDF_TAX_ROWS, "cpus": cpus,
+                      "runs": n_timed, "loadavg": os.getloadavg()[0],
+                      "medians_s": out,
+                      "udf_task_overhead_ms": round(ms_per_task, 1)}))
 
 
 def main() -> None:
@@ -48,6 +104,9 @@ def main() -> None:
 
     spark = get_spark("osm2streets-bench-extra", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    if mode == "udf_tax":
+        udf_tax(spark, cpus, n_timed)
+        return
     fix = ensure_fixtures(os.path.basename(os.path.normpath(sf_dir)))
 
     q = registry.queries()

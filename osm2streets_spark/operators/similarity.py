@@ -21,7 +21,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
+from ..session import input_rows
+
 DIM = 64
+
+# cosine_pairs compares every row with every other: n²/2 DIM-wide dot
+# products. 2,000 rows (sf0.1) took ~28 s on 4 cores, so the ceiling's
+# 100x the pairs is ~45 min there; a larger input fails up front
+# instead of running for hours. Use ann_topk_lsh at that scale.
+COSINE_PAIRS_MAX_ROWS = 20_000
 
 
 def _dot(a, b):
@@ -40,7 +48,16 @@ def _norm(a):
 
 def cosine_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """All-pairs cosine ≥ threshold. O(n²) — the verifier/baseline; the
-    LSH variant prunes the join at scale."""
+    LSH variant prunes the join at scale. Raises ValueError when the
+    frame's parquet inputs hold more than COSINE_PAIRS_MAX_ROWS rows
+    (footer counts, no Spark job; a filtered frame is judged by its
+    inputs). A frame with no parquet input is not checked."""
+    n = input_rows(emb)
+    if n > COSINE_PAIRS_MAX_ROWS:
+        raise ValueError(
+            f"cosine_pairs: {n} input rows exceed COSINE_PAIRS_MAX_ROWS="
+            f"{COSINE_PAIRS_MAX_ROWS}; the all-pairs join would compare "
+            f"{n * (n - 1) // 2} pairs. Use ann_topk_lsh at this scale.")
     v = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     a = v.alias("a")

@@ -38,7 +38,7 @@ from ..operators.geometry_update import (
 from ..operators.transforms import run_transforms
 from ..operators.render import render_roads, render_intersections
 from ..operators.tiles import with_tile, quadkey
-from ..session import _env_int, partition_count
+from ..session import _env_int, input_rows, parquet_rows, partition_count
 
 
 _TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
@@ -56,18 +56,6 @@ def _tick(label: str, _t0: list = [0.0]) -> None:
         _t0[0] = now
 
 
-def _count_parquet_rows(path: str) -> int:
-    """Row count from parquet footers — metadata only, zero Spark jobs."""
-    try:
-        import glob
-        import pyarrow.parquet as pq
-        files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
-                 if os.path.isdir(path) else [path])
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return 0
-
-
 def load_documents(spark: SparkSession, fixture_dir: str) -> DataFrame:
     """Read + spread documents across the cluster. A fixture is one
     small parquet file (1 input split); the pipeline's cost is Python
@@ -76,7 +64,7 @@ def load_documents(spark: SparkSession, fixture_dir: str) -> DataFrame:
     row count (no Spark job). (At 100 TB the Iceberg table is bucketed
     by doc_id and this becomes a no-op read-time distribution.)"""
     path = f"{fixture_dir}/documents.parquet"
-    n = partition_count("docs", _count_parquet_rows(path),
+    n = partition_count("docs", parquet_rows(path),
                         spark.sparkContext.defaultParallelism)
     return spark.read.parquet(path).repartition(n, "doc_id")
 
@@ -143,23 +131,17 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     passthrough).
 
     n_docs: corpus size, which sizes the kernel shuffles (T6,
-    transforms). Defaults to the row count in the parquet footers of
-    the frame's input files: a driver-side metadata walk (no Spark job)
-    that survives filters and projections, and overestimates a
-    filtered frame, which is fine for partition sizing. A non-parquet
-    source (PBF parses) gives no count, and the kernels get the
-    cores×4 cap. SPARK_GRAFT_KERNEL_PARTITIONS pins the kernel
-    partition count regardless of core count: the data-proportional
-    sizing of scaling-criterion runs, where a cluster of any size runs
-    the same task list in more or fewer waves."""
+    transforms). Defaults to session.input_rows(docs), the footer row
+    count of its parquet inputs, which overestimates a filtered frame
+    (fine for partition sizing). A non-parquet source (PBF parses)
+    gives no count, and the kernels get the cores×4 cap.
+    SPARK_GRAFT_KERNEL_PARTITIONS pins the kernel partition count
+    regardless of core count: the data-proportional sizing of
+    scaling-criterion runs, where a cluster of any size runs the same
+    task list in more or fewer waves."""
     debug_steps_df = None  # set when debug_steps and transforms run
     if n_docs is None:
-        try:
-            n_docs = sum(
-                _count_parquet_rows(f.removeprefix("file:"))
-                for f in docs.inputFiles() if f.endswith(".parquet"))
-        except Exception:
-            n_docs = None
+        n_docs = input_rows(docs)
     n = _env_int("SPARK_GRAFT_KERNEL_PARTITIONS", 0) or partition_count(
         "kernel", n_docs, spark.sparkContext.defaultParallelism)
     _tick("start")

@@ -636,10 +636,9 @@ def queries() -> Q:
         the plain scan: the r8 interleaved A/B measured the extra
         exchange costing them 0.06-0.7 s with nothing to parallelize
         (their string expressions are cheap relative to the shuffle)."""
-        from ..session import partition_count
-        from .pipeline import _count_parquet_rows
+        from ..session import parquet_rows, partition_count
         n = partition_count(
-            "text", _count_parquet_rows(f"{sf_dir}/documents.parquet"),
+            "text", parquet_rows(f"{sf_dir}/documents.parquet"),
             spark.sparkContext.defaultParallelism)
         return _driver_docs(spark, sf_dir).repartition(n, "doc_id")
 

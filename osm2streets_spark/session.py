@@ -11,6 +11,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory (a checkout) or archive (a --py-files zip) this package
+# imports from. Python workers start as `python -m
+# osm2streets_spark.worker_daemon` before Spark ships any --py-files,
+# so this root goes first on their PYTHONPATH; run from another cwd,
+# they would fail every UDF with "No module named 'osm2streets_spark'"
+# without it.
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _env_int(name: str, default: int) -> int:
     """Positive integer env knob. Unset, non-integer and non-positive
@@ -84,10 +92,23 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # SPARK_GRAFT_UI=1 turns it on for REST-API stage forensics
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
+        # Python workers fork from worker_daemon, which stops each task
+        # re-reading Spark's zip archives (~190 -> ~55 ms per task; see
+        # its docstring)
+        .config("spark.python.daemon.module",
+                "osm2streets_spark.worker_daemon")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # sc.environment holds the spark.executorEnv.* values every Python
+    # UDF ships to its workers; prepend to the PYTHONPATH found there so
+    # a user-given spark.executorEnv.PYTHONPATH is kept
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if IMPORT_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([IMPORT_ROOT] + paths)
+    return spark
 
 
 # Partition sizing for the Python-CPU-heavy shuffles, one rule for
@@ -124,3 +145,28 @@ def partition_count(use: str, n: int | None, cores: int) -> int:
     if not n:
         return cap
     return min(cap, n, max(floor * cores, -(-n // rows_per_task)))
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file or directory from its footers:
+    metadata only, no Spark job. 0 when it cannot be read."""
+    try:
+        import glob
+        import pyarrow.parquet as pq
+        files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
+                 if os.path.isdir(path) else [path])
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except Exception:
+        return 0
+
+
+def input_rows(df) -> int:
+    """Footer row count of the parquet files a frame reads: a
+    driver-side metadata walk (no Spark job) that survives filters and
+    projections, and so overestimates a filtered frame. 0 for a frame
+    with no parquet input (e.g. PBF parses, in-memory data)."""
+    try:
+        return sum(parquet_rows(f.removeprefix("file:"))
+                   for f in df.inputFiles() if f.endswith(".parquet"))
+    except Exception:
+        return 0

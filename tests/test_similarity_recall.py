@@ -50,3 +50,27 @@ def test_ann_lsh_recall_random_corpus(spark):
     # by construction. The floor catches index regressions (e.g. broken
     # probes -> near zero), not data hardness.
     assert r >= 0.05, f"LSH recall collapsed: {r:.3f}"
+
+
+def test_cosine_pairs_row_ceiling(spark, tmp_path, monkeypatch):
+    """sim_cosine_pairs, the one all-pairs join, refuses an input over
+    COSINE_PAIRS_MAX_ROWS before any Spark job runs; at the ceiling it
+    plans and answers as before."""
+    import pandas as pd
+    from osm2streets_spark.operators import similarity
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(40, similarity.DIM)).astype("float32")
+    vecs[1] = vecs[0]                        # one exact pair
+    path = str(tmp_path / "embeddings.parquet")
+    pd.DataFrame({"vec_id": np.arange(40, dtype="int64"),
+                  "embedding": list(vecs)}).to_parquet(path)
+    emb = spark.read.parquet(path)
+
+    monkeypatch.setattr(similarity, "COSINE_PAIRS_MAX_ROWS", 39)
+    with pytest.raises(ValueError, match="COSINE_PAIRS_MAX_ROWS=39"):
+        similarity.cosine_pairs(emb)
+    monkeypatch.setattr(similarity, "COSINE_PAIRS_MAX_ROWS", 40)
+    pairs = {(r["vec_a"], r["vec_b"])
+             for r in similarity.cosine_pairs(emb, 0.999).collect()}
+    assert (0, 1) in pairs
