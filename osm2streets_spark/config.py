@@ -4,21 +4,21 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
 class MapConfig:
     """Per-run import options.
 
-    Mirrors reference MapConfig (osm2lanes/src/lib.rs:546-597): country
-    code, driving side, sidewalk inference, plus our engine's cell/tile
-    knobs (north_star: H3/S2-style cell encoding — we use web-mercator
-    quadkey cells, same hierarchical role).
+    Mirrors reference MapConfig (osm2lanes/src/lib.rs:546-597): driving
+    side, sidewalk inference, plus our engine's transform toggles and
+    cell/tile knobs (north_star: H3/S2-style cell encoding — we use
+    web-mercator quadkey cells, same hierarchical role). Every field is
+    read by the engine; tests/test_session.py checks that.
     """
 
     driving_side: str = "right"  # "right" | "left"
-    country_code: str = "US"
     inferred_sidewalks: bool = True
     # T3 sidepath zipping is opt-in, matching the reference's
     # experimental toggle (osm2streets-py/src/lib.rs:90-99)
@@ -27,18 +27,8 @@ class MapConfig:
     # remove disconnected roads (transform/mod.rs:21-29) — golden-parity
     # runs set False; the corpus default keeps the cleanup on
     remove_disconnected: bool = True
-    # quantization for point-equality joins (reference uses exact f64 bit
-    # hashing, streets_reader/src/split_ways.rs:26; we quantize lon/lat to
-    # 1e-7 deg = OSM native precision so both sides of every join agree)
-    pt_quantum: float = 1e7
-    # RDP simplification epsilons (reference: split_ways.rs:330-341 uses
-    # 0.5 m on split; collapse_intersection.rs:71-74 uses 1.0 m)
-    rdp_epsilon_split_m: float = 0.5
-    rdp_epsilon_collapse_m: float = 1.0
-    # tile/cell index
-    cell_zoom: int = 16           # base cell resolution (quadkey zoom)
-    dense_cell_threshold: int = 512   # points per cell before adaptive split
-    max_cell_zoom: int = 20
+    # tile/cell index: feature tile and quadkey resolution
+    cell_zoom: int = 16
     # per-doc transform kernel: a doc with more roads than this splits
     # into ~10 km quadkey cells (zoom 12) with frozen-seam guards, so a
     # single megacity document cannot pin one task (north_rule skew

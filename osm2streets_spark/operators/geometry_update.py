@@ -562,16 +562,16 @@ def apply_trim_flags(roads: DataFrame, trims: DataFrame) -> DataFrame:
 
 
 def finalize_intersections(ints: DataFrame, trims: DataFrame,
-                           features: DataFrame | None = None,
-                           imerges: DataFrame | None = None,
-                           ints_v0: DataFrame | None = None,
-                           signalled_is: DataFrame | None = None
+                           features: DataFrame, imerges: DataFrame,
+                           ints_v0: DataFrame, signalled_is: DataFrame
                            ) -> DataFrame:
     """Assemble the final intersections table: polygon/kind/movements
     from the T6 kernel + control from feature nodes (J3 at-node case:
-    signals on the junction node → Signalled, split_ways.rs:221-259).
+    signals on the junction node → Signalled, split_ways.rs:221-259)
+    and from `signalled_is`, the junctions a way-tagged signal points
+    at.
 
-    With `imerges` (absorbed→surviving from T1) and `ints_v0`, a
+    Through `imerges` (absorbed→surviving from T1) and `ints_v0`, a
     surviving intersection unions the OSM node ids of everything merged
     into it (collapse_short_road.rs:66-84: keep.osm_ids.extend) and
     takes the strongest control/crossing across the merged set
@@ -582,33 +582,24 @@ def finalize_intersections(ints: DataFrame, trims: DataFrame,
 
     # node roster per final intersection: its own node + absorbed nodes
     roster = out.select("doc_id", "i_id", "osm_node_id")
-    if imerges is not None and ints_v0 is not None:
-        # T1 merges are sparse → broadcast; ints_v0 is never shuffled
-        absorbed_nodes = ints_v0.select(
-            "doc_id", F.col("i_id").alias("absorbed_i"), "osm_node_id",
-        ).join(imerges, ["doc_id", "absorbed_i"]) \
-         .select("doc_id", F.col("surviving_i").alias("i_id"),
-                 "osm_node_id")
-        roster = roster.unionByName(absorbed_nodes)
+    # T1 merges are sparse → broadcast; ints_v0 is never shuffled
+    absorbed_nodes = ints_v0.select(
+        "doc_id", F.col("i_id").alias("absorbed_i"), "osm_node_id",
+    ).join(imerges, ["doc_id", "absorbed_i"]) \
+     .select("doc_id", F.col("surviving_i").alias("i_id"), "osm_node_id")
+    roster = roster.unionByName(absorbed_nodes)
     roster = roster.where(
         F.col("osm_node_id").isNotNull() & (F.col("osm_node_id") > 0))
 
-    if features is not None:
-        sig = features.select(
-            "doc_id", F.col("node_id").alias("osm_node_id"),
-            (F.col("feature") == "traffic_signals").alias("has_signal"),
-            F.when(F.col("feature") == "crossing", F.col("crossing_kind"))
-             .alias("crossing_kind"),
-            "crossing_island",
-        )
-        # signal/crossing nodes are sparse → broadcast lookup
-        roster = roster.join(sig,
-                             ["doc_id", "osm_node_id"], "left")
-    else:
-        roster = roster.withColumns({
-            "has_signal": F.lit(False),
-            "crossing_kind": F.lit(None).cast("string"),
-            "crossing_island": F.lit(None).cast("boolean")})
+    sig = features.select(
+        "doc_id", F.col("node_id").alias("osm_node_id"),
+        (F.col("feature") == "traffic_signals").alias("has_signal"),
+        F.when(F.col("feature") == "crossing", F.col("crossing_kind"))
+         .alias("crossing_kind"),
+        "crossing_island",
+    )
+    # signal/crossing nodes are sparse → broadcast lookup
+    roster = roster.join(sig, ["doc_id", "osm_node_id"], "left")
 
     # merge_crossings kind-max order: Signalized > Marked > Unmarked
     kind_rank = (F.when(F.col("crossing_kind") == "Signalized", 3)
@@ -630,13 +621,8 @@ def finalize_intersections(ints: DataFrame, trims: DataFrame,
     out = out.withColumn(
         "osm_node_ids",
         F.coalesce("osm_node_ids", F.array().cast("array<long>")))
-    if signalled_is is not None:
-        out = out.join(
-            signalled_is.withColumn("_way_signal",
-                                                F.lit(True)),
-            ["doc_id", "i_id"], "left")
-    else:
-        out = out.withColumn("_way_signal", F.lit(None).cast("boolean"))
+    out = out.join(signalled_is.withColumn("_way_signal", F.lit(True)),
+                   ["doc_id", "i_id"], "left")
 
     # split_ways.rs:53-61 + :216-241: synthetic clip point (MapEdge) →
     # Uncontrolled; traffic signal at any merged node, or tagged on an

@@ -24,7 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+    ArrayType, BooleanType, DoubleType, LongType, StringType,
     StructField, StructType,
 )
 
@@ -629,9 +629,12 @@ _ROAD_FIELDS = [
     ("src_frozen", BooleanType()), ("dst_frozen", BooleanType()),
 ]
 
-# output = roads (+pretrim memos) UNION intersection-merge records:
-# row_kind='road' carries road fields; row_kind='imerge' carries
-# src_i=survivor, dst_i=absorbed and nulls elsewhere
+# output = roads (+pretrim memos) UNION intersection-merge records
+# UNION stepwise-debugging snapshots: row_kind='road' carries road
+# fields; row_kind='imerge' carries src_i=survivor, dst_i=absorbed;
+# row_kind='step' carries road_id=step index, name=step name,
+# src_i=n_roads, dst_i=n_intersections (one row per pass per kernel
+# group); nulls elsewhere
 _OUT_EXTRA = [
     ("row_kind", StringType()),
     ("pretrim_src", DoubleType()), ("pretrim_dst", DoubleType()),
@@ -648,9 +651,11 @@ def _transform_doc_core(doc_id: str, rows: list[dict],
                         with_remove_disconnected: bool = True,
                         doc_split: bool = False):
     """One document's transform fixpoint over plain dict rows →
-    (surviving road dicts, imerges). Dict rows, not a pandas frame: the
-    per-doc to_dict("records") + per-doc output-frame construction was
-    the majority of the whole transforms stage's CPU at sf0.1."""
+    (surviving road dicts, imerges, steps), steps being the
+    stepwise-debugging snapshots of apply_standard_transforms. Dict
+    rows, not a pandas frame: the per-doc to_dict("records") + per-doc
+    output-frame construction was the majority of the whole transforms
+    stage's CPU at sf0.1."""
     # Arrow batch row order is nondeterministic; kernels must not depend
     # on it (e.g. T2 keeps the FIRST road's id) — sort by road_id first
     rows.sort(key=lambda r: r["road_id"])
@@ -666,9 +671,10 @@ def _transform_doc_core(doc_id: str, rows: list[dict],
         else:
             r["osm_way_ids"] = list(r["osm_way_ids"])
     imerges: dict[int, int] = {}
+    steps: list = []
     roads = apply_standard_transforms(rows, with_sidepath_zip, imerges,
-                                      with_remove_disconnected)
-    return roads, imerges
+                                      with_remove_disconnected, steps)
+    return roads, imerges, steps
 
 
 def _transform_batch(pdf: pd.DataFrame, with_sidepath_zip: bool,
@@ -693,25 +699,21 @@ def _transform_batch(pdf: pd.DataFrame, with_sidepath_zip: bool,
         run = order[s0:e0]
         rows = [{c: col[c][j] for c in names} for j in run]
         doc_id = rows[0]["doc_id"]
-        roads, imerges = _transform_doc_core(
+        roads, imerges, steps = _transform_doc_core(
             doc_id, rows, with_sidepath_zip, with_remove_disconnected,
             doc_split=bool(tcell[run[0]]))
-        nr, ni = len(roads), len(imerges)
-        data["doc_id"].extend([doc_id] * (nr + ni))
-        im = sorted(imerges.items())
+        # imerge and step rows as sparse dicts (see _OUT_EXTRA)
+        extra = [{"row_kind": "imerge", "src_i": surv, "dst_i": absd}
+                 for absd, surv in sorted(imerges.items())]
+        extra += [{"row_kind": "step", "road_id": k, "name": name,
+                   "src_i": n_roads, "dst_i": n_is}
+                  for k, (name, n_roads, n_is) in enumerate(steps)]
+        data["doc_id"].extend([doc_id] * (len(roads) + len(extra)))
+        data["row_kind"].extend(["road"] * len(roads))
         for c in out_cols[1:]:
-            lst = data[c]
-            if c == "row_kind":
-                lst.extend(["road"] * nr)
-                lst.extend(["imerge"] * ni)
-                continue
-            lst.extend(r.get(c) for r in roads)
-            if c == "src_i":
-                lst.extend(surv for _, surv in im)
-            elif c == "dst_i":
-                lst.extend(absd for absd, _ in im)
-            else:
-                lst.extend([None] * ni)
+            if c != "row_kind":
+                data[c].extend(r.get(c) for r in roads)
+            data[c].extend(e.get(c) for e in extra)
     for c in long_cols:
         # nullable Int64: mixing None (imerge rows) with int64 ids in
         # an object->float64 column silently mangles xxhash64 ids
@@ -731,8 +733,13 @@ def run_transforms(roads: DataFrame,
                    n: int | None = None) -> DataFrame:
     """Per-doc T4[+T3]+T1+T2+T1. Input needs the columns in _ROAD_FIELDS
     (per-end metadata columns optional — filled with nulls). Output has
-    row_kind='road' rows (the surviving roads, with pretrim memos) and
-    row_kind='imerge' rows (src_i=surviving i, dst_i=absorbed i).
+    row_kind='road' rows (the surviving roads, with pretrim memos),
+    row_kind='imerge' rows (src_i=surviving i, dst_i=absorbed i) and
+    row_kind='step' rows: the reference's
+    apply_transformations_stepwise_debugging (transform/mod.rs:94-109)
+    network sizes per pass, "original" first, per (doc, cell) group
+    (road_id=step index, name=step name, src_i=n_roads,
+    dst_i=n_intersections).
 
     Skew: documents are the unit of parallelism, so a single megacity
     doc would otherwise pin one task. Docs with more than
@@ -754,10 +761,10 @@ def run_transforms(roads: DataFrame,
 
 def _prep_transform_cells(roads: DataFrame, split_threshold: int,
                           split_zoom: int) -> DataFrame:
-    """Shared input prep for run_transforms / run_transform_steps:
-    default-fill optional per-end metadata columns, assign dense docs
-    their quadkey transform cell (_tcell; 0 = unsplit sentinel) and
-    flag frozen seam intersections."""
+    """Input prep for run_transforms: default-fill optional per-end
+    metadata columns, assign dense docs their quadkey transform cell
+    (_tcell; 0 = unsplit sentinel) and flag frozen seam
+    intersections."""
     src = roads
     if "osm_way_ids" not in src.columns:
         src = src.withColumn("osm_way_ids", F.array("way_id"))
@@ -815,68 +822,3 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
     else:
         src = src.withColumn("_tcell", F.lit(0))
     return src
-
-
-STEPS_SCHEMA = StructType(
-    [StructField("doc_id", StringType()),
-     StructField("step_idx", IntegerType()),
-     StructField("step_name", StringType()),
-     StructField("n_roads", LongType()),
-     StructField("n_intersections", LongType())])
-
-
-def run_transform_steps(roads: DataFrame,
-                        with_sidepath_zip: bool = False,
-                        with_remove_disconnected: bool = True,
-                        split_threshold: int = 4000,
-                        split_zoom: int = 12,
-                        n: int | None = None) -> DataFrame:
-    """Stepwise transformation debugging — the Spark counterpart of the
-    reference's apply_transformations_stepwise_debugging
-    (transform/mod.rs:94-109): a network-size snapshot per
-    transformation pass, "original" first, step names per
-    Transformation::name(). Like the reference's, a separate (more
-    expensive) entry point from run_transforms — it re-runs the
-    transform kernels to record the per-pass states.
-
-    Output: (doc_id, step_idx, step_name, n_roads, n_intersections).
-    For quadkey-split dense docs the counts are summed over cells
-    (frozen seam intersections count once per cell they touch — the
-    sequential replay aggregates identically)."""
-    src = _prep_transform_cells(roads, split_threshold, split_zoom)
-    cols = ["doc_id", "_tcell"] + [c for c, _ in _ROAD_FIELDS]
-
-    def _steps_doc(doc_id, pdf, doc_split):
-        pdf = pdf.sort_values("road_id")
-        rec = pdf.to_dict("records")
-        for r in rec:
-            r["xy"] = list(r["xy"])
-            if r.get("osm_way_ids") is None:
-                r["osm_way_ids"] = [r["way_id"]]
-            else:
-                r["osm_way_ids"] = list(r["osm_way_ids"])
-        steps: list = []
-        apply_standard_transforms(
-            rec, with_sidepath_zip, None,
-            with_remove_disconnected and not doc_split, steps=steps)
-        return pd.DataFrame({
-            "doc_id": [doc_id] * len(steps),
-            "step_idx": list(range(len(steps))),
-            "step_name": [s[0] for s in steps],
-            "n_roads": [s[1] for s in steps],
-            "n_intersections": [s[2] for s in steps],
-        })
-
-    def _process(pdf):
-        outs = [
-            _steps_doc(doc_id, g.drop(columns=["_tcell"]), bool(cell))
-            for (doc_id, cell), g in pdf.groupby(["doc_id", "_tcell"],
-                                                 sort=False)
-        ]
-        return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
-
-    per_cell = map_groups(src.select(*cols), ["doc_id", "_tcell"],
-                          _process, STEPS_SCHEMA, n)
-    return per_cell.groupBy("doc_id", "step_idx", "step_name").agg(
-        F.sum("n_roads").alias("n_roads"),
-        F.sum("n_intersections").alias("n_intersections"))

@@ -369,10 +369,15 @@ def queries() -> Q:
         gt_debug_steps.parquet is absent."""
         ensure_debug_steps_gt(fixture_dir_for(sf_dir))
         docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs, debug_steps=True)
-        return net["debug_steps"].select(
-            "doc_id", F.col("step_idx").cast("int").alias("step_idx"),
-            "step_name", "n_roads", "n_intersections")
+        net = build_street_network(spark, docs)
+        # step rows come one per transform-kernel group: a quadkey-split
+        # dense doc sums its cells (frozen seam intersections count once
+        # per cell they touch, as in the sequential replay)
+        return net["debug_steps"].groupBy(
+            "doc_id", F.col("road_id").cast("int").alias("step_idx"),
+            F.col("name").alias("step_name"),
+        ).agg(F.sum("src_i").alias("n_roads"),
+              F.sum("dst_i").alias("n_intersections"))
 
     def sn_feature_snap(spark, sf_dir):
         nodes, ways, _ = _parsed(spark, sf_dir)

@@ -531,7 +531,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
             r["_tcell"] = 0
             r["src_frozen"] = r["dst_frozen"] = None
     out_roads: list[dict] = []
-    # stepwise-debug twin (run_transform_steps): per-pass counts summed
+    # stepwise-debug twin (s_debug_steps): per-pass counts summed
     # over cells, keyed (step_idx, step_name)
     step_acc: dict[tuple[int, str], list[int]] = {}
     for cell in sorted({r["_tcell"] for r in roads}):

@@ -51,15 +51,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
     builder = (
         SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # normalize the env value (r7 ADVICE): 0/false/no/off → false,
-        # anything else → true; the raw string previously reached
-        # spark.sql.adaptive.enabled verbatim and any non-boolean value
-        # (e.g. SPARK_GRAFT_AQE=1) threw IllegalArgumentException at
-        # session build
-        .config("spark.sql.adaptive.enabled",
-                "false" if os.environ.get("SPARK_GRAFT_AQE", "true")
-                .strip().lower() in ("0", "false", "no", "off")
-                else "true")
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # our shuffles are byte-small but Python-CPU-heavy (geometry
         # kernels); don't let AQE coalesce below the core count or the
@@ -68,8 +60,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
                 str(cores))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(_env_int("SPARK_GRAFT_ARROW_BATCH", 2048)))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         # static conf, must be set at session build: the default
         # 100-entry codegen class cache thrashes on the flagship's ~236
@@ -80,18 +71,16 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # a bigger class cache helps any repeated-plan workload and is
         # bounded (~2k classes); it caches compiled bytecode, never
         # data or results.
-        .config("spark.sql.codegen.cache.maxEntries",
-                str(_env_int("SPARK_GRAFT_CODEGEN_CACHE", 2000)))
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # PySpark 4 wraps every DataFrame op in a call-site capture
         # (2+ Py4J RPCs per op, for richer error messages). The
         # flagship's deep plans issue ~700 ops per build; the capture
         # alone measured ~1.6 s of the driver's DAG-construction time
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # UI off by default (costs listener/jetty overhead in benches);
-        # SPARK_GRAFT_UI=1 turns it on for REST-API stage forensics
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
+        # UI off (costs listener/jetty overhead in benches); the Spark
+        # event log gives the same stage and task records without it
+        .config("spark.ui.enabled", "false")
         # Python workers fork from worker_daemon, which stops each task
         # re-reading Spark's zip archives (~190 -> ~55 ms per task; see
         # its docstring)

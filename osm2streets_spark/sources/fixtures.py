@@ -681,7 +681,7 @@ def generate(n_docs: int, seed: int = 42, heavy: bool = False):
 
 
 def _write_debug_steps(out_dir: str, dbg_rows: list[dict]) -> str:
-    """gt twin of run_transform_steps (the reference's
+    """gt twin of s_debug_steps (the reference's
     apply_transformations_stepwise_debugging, transform/mod.rs:94-109):
     per-doc per-pass network sizes from the sequential replay."""
     path = os.path.join(out_dir, "gt_debug_steps.parquet")

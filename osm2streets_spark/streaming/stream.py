@@ -33,10 +33,10 @@ SPANS_SCHEMA = StructType([
 
 
 def stream_street_network(spark: SparkSession, input_dir: str,
-                          output_dir: str, checkpoint_dir: str,
-                          trigger_available_now: bool = True):
+                          output_dir: str, checkpoint_dir: str):
     """Incrementally convert arriving document files into rendered
-    feature parquet. Each micro-batch runs the full batch pipeline —
+    feature parquet: one availableNow trigger over the files present,
+    4 files per micro-batch. Each micro-batch runs the full batch pipeline —
     correct because no operator crosses documents."""
     stream = (
         spark.readStream.schema(SPANS_SCHEMA)
@@ -53,13 +53,12 @@ def stream_street_network(spark: SparkSession, input_dir: str,
                  "tile_z", "tile_x", "tile_y", "quadkey")
          .write.mode("append").parquet(output_dir))
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_event_windows(spark: SparkSession, input_dir: str,

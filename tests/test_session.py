@@ -1,8 +1,12 @@
-"""Session knobs, the one partition-sizing rule and the worker daemon's
-zipimport guard; the last tests start Spark sessions."""
+"""Session knobs, the settings inventory, the one partition-sizing rule
+and the worker daemon's zipimport guard; the last tests start Spark
+sessions."""
 
+import ast
+import dataclasses
 import importlib.util
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -12,7 +16,10 @@ import zipimport
 import pytest
 
 from osm2streets_spark import worker_daemon
+from osm2streets_spark.config import MapConfig
 from osm2streets_spark.session import _env_int, partition_count
+
+PKG = os.path.dirname(os.path.abspath(worker_daemon.__file__))
 
 # (cores, n_docs) -> partitions per use, as the three sizing rules the
 # one rule replaced (load_documents' doc spread, kernel_partitions,
@@ -54,6 +61,50 @@ def test_env_int_reads_positive_int(monkeypatch):
     assert _env_int("SPARK_GRAFT_TEST_KNOB", 7) == 12
     monkeypatch.delenv("SPARK_GRAFT_TEST_KNOB")
     assert _env_int("SPARK_GRAFT_TEST_KNOB", 7) == 7
+
+
+# --- settings inventory -------------------------------------------------
+
+# Every environment variable the package reads. Adding one is a
+# deliberate edit here, like the query list in test_plan_shape.
+KEPT_ENV = {
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_KERNEL_PARTITIONS", "SPARK_DRIVER_MEM",
+    "SPARK_GRAFT_ON_CLUSTER", "OSM2STREETS_FIXTURE_ROOT",
+}
+
+
+def _package_trees():
+    for root, _, files in os.walk(PKG):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    yield path, ast.parse(fh.read(), path)
+
+
+def test_env_settings_inventory():
+    names = {
+        node.value
+        for _, tree in _package_trees() for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and re.fullmatch(r"(SPARK|OSM2STREETS)_[A-Z0-9_]+", node.value)
+    }
+    assert names == KEPT_ENV
+
+
+def test_every_map_config_field_is_read():
+    """A MapConfig field nothing reads is a setting that silently does
+    nothing."""
+    read = {
+        node.attr
+        for path, tree in _package_trees()
+        if os.path.basename(path) != "config.py"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)
+    }
+    fields = {f.name for f in dataclasses.fields(MapConfig)}
+    assert fields - read == set()
 
 
 # --- worker_daemon: the stat-guarded zipimport --------------------------
