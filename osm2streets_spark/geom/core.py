@@ -15,6 +15,7 @@ our parallelism is across documents/cells).
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -43,6 +44,35 @@ def xy_to_lonlat(xy: np.ndarray, lon0: float, lat0: float) -> np.ndarray:
     out[:, 0] = xy[:, 0] / (M_PER_DEG * scale) + lon0
     out[:, 1] = xy[:, 1] / M_PER_DEG + lat0
     return out
+
+
+# ---------------------------------------------------------------------------
+# GeoJSON (reference render/mod.rs:48-108 to_geojson): every rendered
+# feature is one compact string — lon/lat rounded to 9 digits, keys in
+# type/geometry/properties order, no whitespace
+# ---------------------------------------------------------------------------
+
+def feature_dumps(geometry_type: str, coordinates, props: dict) -> str:
+    """The compact Feature string for already-lon/lat coordinates."""
+    return json.dumps({
+        "type": "Feature",
+        "geometry": {"type": geometry_type, "coordinates": coordinates},
+        "properties": props,
+    }, separators=(",", ":"))
+
+
+def geojson_feature(geometry_type: str, xy, lon0: float, lat0: float,
+                    props: dict) -> str:
+    """A Point, LineString or Polygon (one ring) feature from local
+    meters-plane points anchored at (lon0, lat0)."""
+    ll = xy_to_lonlat(np.asarray(xy, dtype=float).reshape(-1, 2),
+                      lon0, lat0)
+    coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
+    if geometry_type == "Point":
+        coords = coords[0]
+    elif geometry_type == "Polygon":
+        coords = [coords]
+    return feature_dumps(geometry_type, coords, props)
 
 
 # ---------------------------------------------------------------------------

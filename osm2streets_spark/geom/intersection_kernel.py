@@ -412,15 +412,15 @@ def _node_point(roads_cw: list[dict]) -> np.ndarray:
     return np.asarray(best, dtype=float)
 
 
-# adjacent-vertex fold tolerance for emitted rings (m). Module-level so
-# the forensics sweep (scripts/fold_sweep.py) can probe alternatives;
-# see _ring_or_circle's docstring for the golden-derived semantics.
+# adjacent-vertex fold tolerance for emitted rings (m), swept against
+# the goldens; see _ring_or_circle's docstring for the golden-derived
+# semantics.
 RING_FOLD_EPS = 0.01
 
 # sub-mm guard for corner hits at a re-extended edge tip: hits closer
 # than this to EITHER tip sit inside the reference's 0.1 mm grid
 # jitter band and its quantized segment test drops them (swept against
-# the goldens; see scripts/fold_sweep.py)
+# the goldens)
 TIP_TOUCH_EPS = 0.0005
 
 

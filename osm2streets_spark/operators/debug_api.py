@@ -24,11 +24,10 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..geom.core import (
-    cumulative_lengths, interpolate_along, polyline_length,
-    thicken_polyline, xy_to_lonlat,
+    cumulative_lengths, geojson_feature, interpolate_along, polyline_length,
+    thicken_polyline,
 )
 from .geometry_update import map_groups
 
@@ -81,9 +80,6 @@ def osm_tags_for_way(ways: DataFrame) -> DataFrame:
 # get_geometry_for_way (lib.rs:250-288)
 # ---------------------------------------------------------------------------
 
-_FEATURE = StructType([StructField("feature_json", StringType())])
-
-
 def _rot(v: np.ndarray, deg: float) -> np.ndarray:
     rad = np.deg2rad(deg)
     c, s = np.cos(rad), np.sin(rad)
@@ -117,15 +113,6 @@ def _chevrons(pl: np.ndarray, width: float) -> list[np.ndarray]:
         out.append(thicken_polyline(
             np.array([arm_a, tip, arm_b]), width * 0.2))
     return out
-
-
-def _polygon_feature(ring: np.ndarray, lo: float, la: float,
-                     props: dict) -> dict:
-    ll = xy_to_lonlat(np.asarray(ring, dtype=float), lo, la)
-    coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
-    return {"type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [coords]},
-            "properties": props}
 
 
 def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
@@ -173,17 +160,17 @@ def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
                                  g["lat"].to_numpy()]), lo, la)
             if len(pl) < 2:
                 continue
-            feats = [_polygon_feature(
-                thicken_polyline(pl, 1.5 * w), lo, la,
+            feats = [geojson_feature(
+                "Polygon", thicken_polyline(pl, 1.5 * w), lo, la,
                 {"type": "way_body", "way_id": int(way_id)})]
             feats += [
-                _polygon_feature(c, lo, la,
-                                 {"type": "chevron", "way_id":
-                                  int(way_id), "idx": ci})
+                geojson_feature("Polygon", c, lo, la,
+                                {"type": "chevron", "way_id": int(way_id),
+                                 "idx": ci})
                 for ci, c in enumerate(_chevrons(pl, w))]
-            rows.append((doc_id, int(way_id), json.dumps(
-                {"type": "FeatureCollection", "features": feats},
-                separators=(",", ":"))))
+            rows.append((doc_id, int(way_id),
+                         '{"type":"FeatureCollection","features":[%s]}'
+                         % ",".join(feats)))
         return pd.DataFrame(
             rows, columns=["doc_id", "way_id", "feature_json"])
 
@@ -284,11 +271,9 @@ def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
                 ring = _arrow_ring(road_pts[frm][0], road_pts[to][1])
                 if ring is None:
                     continue
-                feat = _polygon_feature(
-                    ring, lo, la,
-                    {"type": "movement", "from": frm, "to": to})
-                rows.append((doc_id, int(i_id), frm, to,
-                             json.dumps(feat, separators=(",", ":"))))
+                rows.append((doc_id, int(i_id), frm, to, geojson_feature(
+                    "Polygon", ring, lo, la,
+                    {"type": "movement", "from": frm, "to": to})))
         return pd.DataFrame(rows, columns=[
             "doc_id", "i_id", "from_road", "to_road", "arrow_json"])
 
@@ -337,12 +322,13 @@ def roads_connected_to_intersections(roads_final: DataFrame,
                 xy = np.asarray(row.center_xy, dtype=float).reshape(-1, 2)
                 if len(xy) < 2:
                     continue
-                feat = _polygon_feature(
-                    thicken_polyline(xy, float(row.total_width)),
-                    float(row.lon0), float(row.lat0),
-                    {"type": "road", "road_id": int(row.road_id)})
                 rows.append((row.doc_id, int(row.i_id), int(row.road_id),
-                             json.dumps(feat, separators=(",", ":"))))
+                             geojson_feature(
+                                 "Polygon",
+                                 thicken_polyline(xy, float(row.total_width)),
+                                 float(row.lon0), float(row.lat0),
+                                 {"type": "road",
+                                  "road_id": int(row.road_id)})))
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "i_id", "road_id", "feature_json"])
 

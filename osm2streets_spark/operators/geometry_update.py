@@ -384,6 +384,24 @@ def map_groups(df: DataFrame, keys: list[str], fn, schema,
     return parted.sortWithinPartitions(*keys).mapInPandas(batched, schema)
 
 
+def row_udf(kernel, return_type):
+    """A pandas UDF that calls the pure per-row `kernel` once per row
+    of its zipped column Series — the same kernel the sequential
+    replay calls directly. A struct `return_type` takes one tuple per
+    row, anything else one value per row. Plans show the UDF under the
+    kernel's name."""
+    if isinstance(return_type, StructType):
+        def frame(values):
+            return pd.DataFrame(values, columns=return_type.names)
+    else:
+        frame = pd.Series
+
+    def udf(*cols: pd.Series) -> pd.Series:
+        return frame([kernel(*row) for row in zip(*cols)])
+    udf.__name__ = kernel.__name__
+    return F.pandas_udf(udf, return_type)
+
+
 def run_t6(road_ends: DataFrame, trims_only: bool = False,
            n: int | None = None) -> DataFrame:
     """road_ends columns: doc_id, i_id, road_id, is_src_end, xy,

@@ -19,10 +19,10 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
-from ..geom.core import ring_centroid, xy_to_lonlat
+from ..geom.core import geojson_feature, ring_centroid
 from .geometry_update import map_groups
+from .render import explode_features
 
 ZEBRA_BAR_WIDTH = 0.5
 ZEBRA_GAP = 0.5
@@ -31,72 +31,45 @@ ZEBRA_GAP = 0.5
 def crossing_markings_row(raw, kind, lo, la) -> list[str]:
     """S8 per-junction kernel — pure, shared by the Spark UDF and the
     sequential replay."""
-    if True:
-        feats: list[str] = []
-        if raw is None or not isinstance(kind, str) or not kind:
-            return feats
-        ring = np.asarray(raw, dtype=float).reshape(-1, 2)
-        c = ring_centroid(ring)
-        # principal axis of the junction polygon via covariance
-        pts = ring[:-1] - c
-        cov = pts.T @ pts
-        evals, evecs = np.linalg.eigh(cov)
-        major = evecs[:, int(np.argmax(evals))]
-        minor = np.array([-major[1], major[0]])
-        half_len = float(np.abs(pts @ major).max())
-        half_w = float(np.abs(pts @ minor).max())
-        style = {"Marked": "zebra", "Signalized": "zebra",
-                 "Unmarked": "edge"}.get(kind, "edge")
-        if style == "zebra":
-            step = ZEBRA_BAR_WIDTH + ZEBRA_GAP
-            d = -half_len + step
-            while d < half_len - step / 2:
-                p0 = c + major * d - minor * half_w
-                p1 = c + major * d + minor * half_w
-                ll = xy_to_lonlat(np.array([p0, p1]), lo, la)
-                feats.append(json.dumps({
-                    "type": "Feature",
-                    "geometry": {"type": "LineString", "coordinates": [
-                        [round(float(x), 9), round(float(y), 9)]
-                        for x, y in ll]},
-                    "properties": {"type": "zebra bar"},
-                }, separators=(",", ":")))
-                d += step
-        else:
-            for sgn in (-1.0, 1.0):
-                p0 = c - major * half_len + minor * half_w * sgn
-                p1 = c + major * half_len + minor * half_w * sgn
-                ll = xy_to_lonlat(np.array([p0, p1]), lo, la)
-                feats.append(json.dumps({
-                    "type": "Feature",
-                    "geometry": {"type": "LineString", "coordinates": [
-                        [round(float(x), 9), round(float(y), 9)]
-                        for x, y in ll]},
-                    "properties": {"type": "crossing edge"},
-                }, separators=(",", ":")))
+    feats: list[str] = []
+    if raw is None or not isinstance(kind, str) or not kind:
         return feats
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def _crossing_markings(polygon_xy: pd.Series, crossing_kind: pd.Series,
-                       lon0: pd.Series, lat0: pd.Series) -> pd.Series:
-    return pd.Series([
-        crossing_markings_row(raw, kind, lo, la)
-        for raw, kind, lo, la in zip(polygon_xy, crossing_kind,
-                                     lon0, lat0)
-    ])
+    ring = np.asarray(raw, dtype=float).reshape(-1, 2)
+    c = ring_centroid(ring)
+    # principal axis of the junction polygon via covariance
+    pts = ring[:-1] - c
+    cov = pts.T @ pts
+    evals, evecs = np.linalg.eigh(cov)
+    major = evecs[:, int(np.argmax(evals))]
+    minor = np.array([-major[1], major[0]])
+    half_len = float(np.abs(pts @ major).max())
+    half_w = float(np.abs(pts @ minor).max())
+    style = {"Marked": "zebra", "Signalized": "zebra",
+             "Unmarked": "edge"}.get(kind, "edge")
+    if style == "zebra":
+        step = ZEBRA_BAR_WIDTH + ZEBRA_GAP
+        d = -half_len + step
+        while d < half_len - step / 2:
+            p0 = c + major * d - minor * half_w
+            p1 = c + major * d + minor * half_w
+            feats.append(geojson_feature("LineString", np.array([p0, p1]),
+                                         lo, la, {"type": "zebra bar"}))
+            d += step
+    else:
+        for sgn in (-1.0, 1.0):
+            p0 = c - major * half_len + minor * half_w * sgn
+            p1 = c + major * half_len + minor * half_w * sgn
+            feats.append(geojson_feature("LineString", np.array([p0, p1]),
+                                         lo, la, {"type": "crossing edge"}))
+    return feats
 
 
 def render_intersection_markings(ints: DataFrame) -> DataFrame:
     src = ints.where(F.col("polygon_xy").isNotNull()
                      & F.col("crossing_kind").isNotNull())
-    out = src.withColumn(
-        "_m", _crossing_markings("polygon_xy", "crossing_kind",
-                                 "lon0", "lat0"))
-    return out.select(
-        "doc_id", "i_id",
-        F.posexplode("_m").alias("marking_idx", "feature_json"),
-    )
+    return explode_features(src, ["doc_id", "i_id"], crossing_markings_row,
+                            ["polygon_xy", "crossing_kind", "lon0", "lat0"],
+                            "marking_idx")
 
 
 CORNER_SCHEMA = "doc_id string, i_id long, marking_idx int, " \
@@ -155,14 +128,8 @@ def render_sidewalk_corners(roads_final: DataFrame,
                 continue
             for idx, ring_out in enumerate(
                     sidewalk_corners(ends_k, ring)):
-                ll = xy_to_lonlat(ring_out, lo, la)
-                feat = json.dumps({
-                    "type": "Feature",
-                    "geometry": {"type": "Polygon", "coordinates": [[
-                        [round(float(x), 9), round(float(y), 9)]
-                        for x, y in ll]]},
-                    "properties": {"type": "sidewalk corner"},
-                }, separators=(",", ":"))
+                feat = geojson_feature("Polygon", ring_out, lo, la,
+                                       {"type": "sidewalk corner"})
                 rows.append((doc_id, int(i_id), idx, feat))
         return pd.DataFrame(
             rows, columns=["doc_id", "i_id", "marking_idx",

@@ -14,15 +14,16 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType
 
 from ..geom.core import (
     shift_polyline, step_along, slice_between, polyline_length,
-    cumulative_lengths, xy_to_lonlat,
+    cumulative_lengths, geojson_feature,
 )
+from .geometry_update import row_udf
+from .render import ROAD_LAYER_COLS, explode_features
 
 DASH_LEN = 1.0       # reference lane_markings.rs dashed pattern
 DASH_GAP = 1.5
@@ -33,90 +34,59 @@ PARKING_VEHICLE_WIDTH = 3.0  # MapConfig vehicle_width_for_parking_spots
 HATCH_LEG = 1.0              # lane_markings.rs:261 leg_length
 
 
-def _linestring_feature(pl, lon0, lat0, props):
-    ll = xy_to_lonlat(pl, lon0, lat0)
-    coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
-    return json.dumps({
-        "type": "Feature",
-        "geometry": {"type": "LineString", "coordinates": coords},
-        "properties": props,
-    }, separators=(",", ":"))
-
-
-def _point_feature(pt, lon0, lat0, props):
-    ll = xy_to_lonlat(pt[None, :], lon0, lat0)[0]
-    return json.dumps({
-        "type": "Feature",
-        "geometry": {"type": "Point",
-                     "coordinates": [round(float(ll[0]), 9),
-                                     round(float(ll[1]), 9)]},
-        "properties": props,
-    }, separators=(",", ":"))
-
-
 def lane_markings_row(raw, tw, lj, lo, la) -> list[str]:
     """S7 per-road kernel — pure, shared by the Spark UDF and the
     sequential replay."""
-    if True:
-        pl = np.asarray(raw, dtype=float).reshape(-1, 2)
-        specs = json.loads(lj)
-        feats = []
-        if polyline_length(pl) < 1e-6 or len(specs) < 1:
-            return feats
-        # separators between adjacent lanes (W2 adjacent-pair iteration)
-        acc = 0.0
-        for i in range(len(specs) - 1):
-            acc += float(specs[i]["width"])
-            a, b = specs[i], specs[i + 1]
-            offset = acc - float(tw) / 2.0
-            sep = shift_polyline(pl, offset)
-            both_travel = (a["lt"] in ("driving", "bus", "biking")
-                           and b["lt"] in ("driving", "bus", "biking"))
-            if not both_travel:
-                continue
-            if a["dir"] != b["dir"]:
-                # solid center line between opposing flows
-                feats.append(_linestring_feature(
-                    sep, lo, la, {"type": "center line", "style": "solid"}))
-            else:
-                # dashed separator: step along, emit dashes
-                total = polyline_length(sep)
-                d = 0.0
-                while d + DASH_LEN <= total:
-                    feats.append(_linestring_feature(
-                        slice_between(sep, d, d + DASH_LEN), lo, la,
-                        {"type": "lane separator", "style": "dashed"}))
-                    d += DASH_LEN + DASH_GAP
-        # lane arrows every 20 m in each travel lane (W4 step sampling)
-        acc = 0.0
-        for s in specs:
-            w = float(s["width"])
-            offset = acc + w / 2.0 - float(tw) / 2.0
-            acc += w
-            if s["lt"] == "parking":
-                feats.extend(_parking_hatches(
-                    pl, offset, w, s.get("subtype") or "parallel",
-                    s.get("dir", "forward"), lo, la))
-                continue
-            if s["lt"] not in ("driving", "bus", "biking"):
-                continue
-            lane_c = shift_polyline(pl, offset)
-            for pt in step_along(lane_c, ARROW_STEP, ARROW_BUFFER):
-                feats.append(_point_feature(
-                    pt, lo, la, {"type": "lane arrow", "dir": s["dir"],
-                                 "lane": s["lt"]}))
+    pl = np.asarray(raw, dtype=float).reshape(-1, 2)
+    specs = json.loads(lj)
+    feats = []
+    if polyline_length(pl) < 1e-6 or len(specs) < 1:
         return feats
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def _lane_markings(center_xy: pd.Series, total_width: pd.Series,
-                   lane_specs_json: pd.Series, lon0: pd.Series,
-                   lat0: pd.Series) -> pd.Series:
-    return pd.Series([
-        lane_markings_row(raw, tw, lj, lo, la)
-        for raw, tw, lj, lo, la in zip(center_xy, total_width,
-                                       lane_specs_json, lon0, lat0)
-    ])
+    # separators between adjacent lanes (W2 adjacent-pair iteration)
+    acc = 0.0
+    for i in range(len(specs) - 1):
+        acc += float(specs[i]["width"])
+        a, b = specs[i], specs[i + 1]
+        offset = acc - float(tw) / 2.0
+        sep = shift_polyline(pl, offset)
+        both_travel = (a["lt"] in ("driving", "bus", "biking")
+                       and b["lt"] in ("driving", "bus", "biking"))
+        if not both_travel:
+            continue
+        if a["dir"] != b["dir"]:
+            # solid center line between opposing flows
+            feats.append(geojson_feature(
+                "LineString", sep, lo, la,
+                {"type": "center line", "style": "solid"}))
+        else:
+            # dashed separator: step along, emit dashes
+            total = polyline_length(sep)
+            d = 0.0
+            while d + DASH_LEN <= total:
+                feats.append(geojson_feature(
+                    "LineString", slice_between(sep, d, d + DASH_LEN),
+                    lo, la,
+                    {"type": "lane separator", "style": "dashed"}))
+                d += DASH_LEN + DASH_GAP
+    # lane arrows every 20 m in each travel lane (W4 step sampling)
+    acc = 0.0
+    for s in specs:
+        w = float(s["width"])
+        offset = acc + w / 2.0 - float(tw) / 2.0
+        acc += w
+        if s["lt"] == "parking":
+            feats.extend(_parking_hatches(
+                pl, offset, w, s.get("subtype") or "parallel",
+                s.get("dir", "forward"), lo, la))
+            continue
+        if s["lt"] not in ("driving", "bus", "biking"):
+            continue
+        lane_c = shift_polyline(pl, offset)
+        for pt in step_along(lane_c, ARROW_STEP, ARROW_BUFFER):
+            feats.append(geojson_feature(
+                "Point", pt, lo, la,
+                {"type": "lane arrow", "dir": s["dir"], "lane": s["lt"]}))
+    return feats
 
 
 def _parking_hatches(pl, offset, width, orientation, lane_dir, lo, la):
@@ -168,8 +138,8 @@ def _parking_hatches(pl, offset, width, orientation, lane_dir, lo, la):
             inside_pt = t_pt + stroke_dir * (width * 0.9)
             legs = [(t_pt, inside_pt)]
         for a, b in legs:
-            feats.append(_linestring_feature(
-                np.array([a, b]), lo, la,
+            feats.append(geojson_feature(
+                "LineString", np.array([a, b]), lo, la,
                 {"type": "parking hatch", "orientation": orientation}))
     return feats
 
@@ -191,18 +161,7 @@ def stop_line_feature_row(raw, tw, pct, lo, la) -> str:
     perp = np.array([t[1], -t[0]]) / n
     half = float(tw) / 2.0
     seg = np.array([pt + perp * half, pt - perp * half])
-    return _linestring_feature(seg, lo, la, {"type": "stop line"})
-
-
-@F.pandas_udf(StringType())
-def _stop_line_feature(center_xy: pd.Series, total_width: pd.Series,
-                       pct_along: pd.Series, lon0: pd.Series,
-                       lat0: pd.Series) -> pd.Series:
-    return pd.Series([
-        stop_line_feature_row(raw, tw, pct, lo, la)
-        for raw, tw, pct, lo, la in zip(center_xy, total_width,
-                                        pct_along, lon0, lat0)
-    ])
+    return geojson_feature("LineString", seg, lo, la, {"type": "stop line"})
 
 
 def render_stop_lines(stop_lines: DataFrame, roads: DataFrame) -> DataFrame:
@@ -215,16 +174,12 @@ def render_stop_lines(stop_lines: DataFrame, roads: DataFrame) -> DataFrame:
         ["doc_id", "road_id"])
     return j.select(
         "doc_id", "road_id", "node_id", "feature",
-        _stop_line_feature("center_xy", "total_width", "pct_along",
-                           "lon0", "lat0").alias("feature_json"),
+        row_udf(stop_line_feature_row, StringType())(
+            "center_xy", "total_width", "pct_along", "lon0", "lat0",
+        ).alias("feature_json"),
     )
 
 
 def render_lane_markings(roads: DataFrame) -> DataFrame:
-    out = roads.withColumn(
-        "_m", _lane_markings("center_xy", "total_width", "lane_specs_json",
-                             "lon0", "lat0"))
-    return out.select(
-        "doc_id", "road_id",
-        F.posexplode("_m").alias("marking_idx", "feature_json"),
-    )
+    return explode_features(roads, ["doc_id", "road_id"], lane_markings_row,
+                            ROAD_LAYER_COLS, "marking_idx")

@@ -13,8 +13,6 @@ reversing as needed).
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
@@ -23,6 +21,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from ..geom.core import feature_dumps
 from .geometry_update import map_groups
 
 
@@ -111,21 +110,16 @@ def assemble_multipolygons(relations: DataFrame, ways: DataFrame,
                 x, y = arr[:, 0], arr[:, 1]
                 area += abs(0.5 * float(np.dot(x, np.roll(y, -1))
                                         - np.dot(y, np.roll(x, -1))))
-            feat = {
-                "type": "Feature",
-                "geometry": {
-                    "type": "Polygon" if len(rings["outer"]) == 1
-                    else "MultiPolygon",
-                    "coordinates": (
-                        [rings["outer"][0]] + rings["inner"]
-                        if len(rings["outer"]) == 1
-                        else [[o] for o in rings["outer"]]),
-                },
-                "properties": {"type": "multipolygon", "rel_id": int(rel_id)},
-            }
+            if len(rings["outer"]) == 1:
+                kind = "Polygon"
+                coords = [rings["outer"][0]] + rings["inner"]
+            else:
+                kind = "MultiPolygon"
+                coords = [[o] for o in rings["outer"]]
             rows.append((doc_id, int(rel_id), len(rings["outer"]),
                          len(rings["inner"]), round(area, 12),
-                         json.dumps(feat, separators=(",", ":"))))
+                         feature_dumps(kind, coords, {
+                             "type": "multipolygon", "rel_id": int(rel_id)})))
         return pd.DataFrame(rows, columns=[f.name for f in MP_SCHEMA.fields])
 
     return map_groups(joined, ["doc_id", "rel_id"], _process, MP_SCHEMA,

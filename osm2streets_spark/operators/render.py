@@ -17,14 +17,16 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, StringType, StructField, StructType,
 )
 
-from ..geom.core import thicken_polyline, xy_to_lonlat, shift_polyline
+from ..geom.core import (
+    geojson_feature, shift_polyline, thicken_polyline, xy_to_lonlat,
+)
+from .geometry_update import row_udf
 
 ROAD_FEATURE = StructType([
     StructField("feature_json", StringType()),
@@ -33,46 +35,32 @@ ROAD_FEATURE = StructType([
 ])
 
 
-@F.pandas_udf(ROAD_FEATURE)
-def _road_feature(center_xy: pd.Series, total_width: pd.Series,
-                  lon0: pd.Series, lat0: pd.Series,
-                  props_json: pd.Series) -> pd.DataFrame:
-    feats, clons, clats = [], [], []
-    for raw, w, lo, la, pj in zip(center_xy, total_width, lon0, lat0, props_json):
-        pl = np.asarray(raw, dtype=float).reshape(-1, 2)
-        ring = thicken_polyline(pl, float(w))
-        ll = xy_to_lonlat(ring, lo, la)
-        coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
-        feat = {
-            "type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [coords]},
-            "properties": json.loads(pj),
-        }
-        feats.append(json.dumps(feat, separators=(",", ":")))
-        c = ll.mean(axis=0)
-        clons.append(float(c[0]))
-        clats.append(float(c[1]))
-    return pd.DataFrame({"feature_json": feats, "c_lon": clons, "c_lat": clats})
+def _polygon_row(ring, lo, la, pj) -> tuple[str, float, float]:
+    c = xy_to_lonlat(ring, lo, la).mean(axis=0)
+    return (geojson_feature("Polygon", ring, lo, la, json.loads(pj)),
+            float(c[0]), float(c[1]))
 
 
-@F.pandas_udf(ROAD_FEATURE)
-def _intersection_feature(polygon_xy: pd.Series, lon0: pd.Series,
-                          lat0: pd.Series, props_json: pd.Series) -> pd.DataFrame:
-    feats, clons, clats = [], [], []
-    for raw, lo, la, pj in zip(polygon_xy, lon0, lat0, props_json):
-        ring = np.asarray(raw, dtype=float).reshape(-1, 2)
-        ll = xy_to_lonlat(ring, lo, la)
-        coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
-        feat = {
-            "type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [coords]},
-            "properties": json.loads(pj),
-        }
-        feats.append(json.dumps(feat, separators=(",", ":")))
-        c = ll.mean(axis=0)
-        clons.append(float(c[0]))
-        clats.append(float(c[1]))
-    return pd.DataFrame({"feature_json": feats, "c_lon": clons, "c_lat": clats})
+def road_feature_row(raw, w, lo, la, pj) -> tuple[str, float, float]:
+    """S5 per-road kernel: the center line thickened by the total
+    width → (feature_json, centroid lon, centroid lat)."""
+    pl = np.asarray(raw, dtype=float).reshape(-1, 2)
+    return _polygon_row(thicken_polyline(pl, float(w)), lo, la, pj)
+
+
+def intersection_feature_row(raw, lo, la, pj) -> tuple[str, float, float]:
+    """S5 per-junction kernel: the polygon ring as it is."""
+    ring = np.asarray(raw, dtype=float).reshape(-1, 2)
+    return _polygon_row(ring, lo, la, pj)
+
+
+def explode_features(df: DataFrame, keys: list[str], kernel,
+                     cols: list[str], idx: str) -> DataFrame:
+    """One (keys..., idx, feature_json) row per string in the list the
+    per-row kernel returns for each input row."""
+    udf = row_udf(kernel, ArrayType(StringType()))
+    return df.select(*keys,
+                     F.posexplode(udf(*cols)).alias(idx, "feature_json"))
 
 
 def render_roads(roads: DataFrame) -> DataFrame:
@@ -90,9 +78,9 @@ def render_roads(roads: DataFrame) -> DataFrame:
         F.col("lane_chars").alias("lanes_ltr"),
         F.col("dir_chars").alias("dirs_ltr"),
     ))
+    udf = row_udf(road_feature_row, ROAD_FEATURE)
     out = roads.withColumn(
-        "_f", _road_feature("center_xy", "total_width", "lon0", "lat0", props)
-    )
+        "_f", udf("center_xy", "total_width", "lon0", "lat0", props))
     return out.select(
         "doc_id", F.lit("road").alias("feature_type"),
         F.col("road_id").alias("feature_id"),
@@ -113,18 +101,15 @@ def render_intersections(ints: DataFrame) -> DataFrame:
         F.col("movements_json").alias("movements"),
     ))
     withgeom = ints.where(F.col("polygon_xy").isNotNull())
+    udf = row_udf(intersection_feature_row, ROAD_FEATURE)
     out = withgeom.withColumn(
-        "_f", _intersection_feature("polygon_xy", "lon0", "lat0", props)
-    )
+        "_f", udf("polygon_xy", "lon0", "lat0", props))
     return out.select(
         "doc_id", F.lit("intersection").alias("feature_type"),
         F.col("i_id").alias("feature_id"),
         F.col("_f.feature_json").alias("feature_json"),
         F.col("_f.c_lon").alias("c_lon"), F.col("_f.c_lat").alias("c_lat"),
     )
-
-
-LANE_POLY = ArrayType(StringType())
 
 
 def lane_polygons_row(raw, tw, lj, lo, la) -> list[str]:
@@ -142,29 +127,13 @@ def lane_polygons_row(raw, tw, lj, lo, la) -> list[str]:
         # matching shift_polyline's positive-right convention
         offset = acc + w / 2.0 - float(tw) / 2.0
         lane_center = shift_polyline(pl, offset)
-        ring = thicken_polyline(lane_center, w)
-        ll = xy_to_lonlat(ring, lo, la)
-        coords = [[round(float(x), 9), round(float(y), 9)] for x, y in ll]
-        polys.append(json.dumps({
-            "type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [coords]},
-            "properties": {"type": s["lt"], "subtype": s["subtype"],
-                           "direction": s["dir"], "width": w,
-                           "allowed_turns": s["allowed_turns"]},
-        }, separators=(",", ":")))
+        polys.append(geojson_feature(
+            "Polygon", thicken_polyline(lane_center, w), lo, la,
+            {"type": s["lt"], "subtype": s["subtype"],
+             "direction": s["dir"], "width": w,
+             "allowed_turns": s["allowed_turns"]}))
         acc += w
     return polys
-
-
-@F.pandas_udf(LANE_POLY)
-def _lane_polygons(center_xy: pd.Series, total_width: pd.Series,
-                   lane_specs_json: pd.Series, lon0: pd.Series,
-                   lat0: pd.Series) -> pd.Series:
-    return pd.Series([
-        lane_polygons_row(raw, tw, lj, lo, la)
-        for raw, tw, lj, lo, la in zip(center_xy, total_width,
-                                       lane_specs_json, lon0, lat0)
-    ])
 
 
 ROADWAY_TYPES = {"driving", "bus", "biking", "parking", "shoulder",
@@ -197,47 +166,22 @@ def surfaces_row(raw, tw, lj, lo, la) -> list[str]:
     for mat, start, width in runs:
         offset = start + width / 2.0 - float(tw) / 2.0
         center = shift_polyline(pl, offset)
-        ring = thicken_polyline(center, width)
-        ll = xy_to_lonlat(ring, lo, la)
-        coords = [[round(float(x), 9), round(float(y), 9)]
-                  for x, y in ll]
-        feats.append(json.dumps({
-            "type": "Feature",
-            "geometry": {"type": "Polygon", "coordinates": [coords]},
-            "properties": {"type": "surface", "material": mat,
-                           "width": round(width, 3)},
-        }, separators=(",", ":")))
+        feats.append(geojson_feature(
+            "Polygon", thicken_polyline(center, width), lo, la,
+            {"type": "surface", "material": mat,
+             "width": round(width, 3)}))
     return feats
 
 
-@F.pandas_udf(LANE_POLY)
-def _surfaces(center_xy: pd.Series, total_width: pd.Series,
-              lane_specs_json: pd.Series, lon0: pd.Series,
-              lat0: pd.Series) -> pd.Series:
-    return pd.Series([
-        surfaces_row(raw, tw, lj, lo, la)
-        for raw, tw, lj, lo, la in zip(center_xy, total_width,
-                                       lane_specs_json, lon0, lat0)
-    ])
+ROAD_LAYER_COLS = ["center_xy", "total_width", "lane_specs_json", "lon0",
+                   "lat0"]
 
 
 def render_surfaces(roads: DataFrame) -> DataFrame:
-    out = roads.withColumn(
-        "_s", _surfaces("center_xy", "total_width", "lane_specs_json",
-                        "lon0", "lat0"))
-    return out.select(
-        "doc_id", "road_id",
-        F.posexplode("_s").alias("surface_idx", "feature_json"),
-    )
+    return explode_features(roads, ["doc_id", "road_id"], surfaces_row,
+                            ROAD_LAYER_COLS, "surface_idx")
 
 
 def render_lane_polygons(roads: DataFrame) -> DataFrame:
-    out = roads.withColumn(
-        "_polys",
-        _lane_polygons("center_xy", "total_width", "lane_specs_json",
-                       "lon0", "lat0"),
-    )
-    return out.select(
-        "doc_id", F.col("road_id"),
-        F.posexplode("_polys").alias("lane_idx", "feature_json"),
-    )
+    return explode_features(roads, ["doc_id", "road_id"],
+                            lane_polygons_row, ROAD_LAYER_COLS, "lane_idx")

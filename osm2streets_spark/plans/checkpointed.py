@@ -22,7 +22,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import MapConfig, DEFAULT_CONFIG
-from .pipeline import build_street_network
+from .pipeline import FEATURE_COLS, build_street_network
 
 MANIFEST = "_manifest.json"
 
@@ -91,9 +91,7 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
             continue
         df = net[s]
         if s == "features":
-            df = df.select("doc_id", "feature_type", "feature_id",
-                           "feature_json", "tile_z", "tile_x", "tile_y",
-                           "quadkey")
+            df = df.select(FEATURE_COLS)
         elif s == "roads":
             df = df.select("doc_id", "road_id", "way_id", "osm_way_ids",
                            "src_i", "dst_i", "highway_type", "name",

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import MapConfig, DEFAULT_CONFIG
-from .pipeline import build_street_network
+from .pipeline import FEATURE_COLS, build_street_network
 
 
 def overwrite_way_tags(docs: DataFrame, doc_id: str, way_id: int,
@@ -70,9 +70,7 @@ def recompute_doc_features(spark: SparkSession, docs: DataFrame,
     """Delta recompute: run the full pipeline on ONE document."""
     one = docs.where(F.col("doc_id") == doc_id)
     net = build_street_network(spark, one, cfg, n_docs=1)
-    return net["features"].select(
-        "doc_id", "feature_type", "feature_id", "feature_json",
-        "tile_z", "tile_x", "tile_y", "quadkey")
+    return net["features"].select(FEATURE_COLS)
 
 
 def splice_features(prev_features: DataFrame,

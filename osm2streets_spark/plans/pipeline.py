@@ -37,6 +37,10 @@ from ..operators.render import render_roads, render_intersections
 from ..operators.tiles import with_tile, quadkey
 from ..session import _env_int, input_rows, parquet_rows, partition_count
 
+# the rendered feature table every street-network sink writes
+FEATURE_COLS = ["doc_id", "feature_type", "feature_id", "feature_json",
+                "tile_z", "tile_x", "tile_y", "quadkey"]
+
 
 def load_documents(spark: SparkSession, fixture_dir: str) -> DataFrame:
     """Read + spread documents across the cluster. A fixture is one
@@ -347,7 +351,4 @@ def flagship_query(spark: SparkSession, fixture_dir: str) -> DataFrame:
     assignment)."""
     docs = load_documents(spark, fixture_dir)
     net = build_street_network(spark, docs)
-    return net["features"].select(
-        "doc_id", "feature_type", "feature_id", "feature_json",
-        "tile_z", "tile_x", "tile_y", "quadkey",
-    )
+    return net["features"].select(FEATURE_COLS)

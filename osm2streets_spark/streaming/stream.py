@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
-from ..plans.pipeline import build_street_network
+from ..plans.pipeline import FEATURE_COLS, build_street_network
 
 SPANS_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -48,10 +48,8 @@ def stream_street_network(spark: SparkSession, input_dir: str,
         if batch_df.isEmpty():
             return
         net = build_street_network(batch_df.sparkSession, batch_df)
-        (net["features"]
-         .select("doc_id", "feature_type", "feature_id", "feature_json",
-                 "tile_z", "tile_x", "tile_y", "quadkey")
-         .write.mode("append").parquet(output_dir))
+        net["features"].select(FEATURE_COLS) \
+            .write.mode("append").parquet(output_dir)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -248,8 +248,8 @@ Notes:
 * Skew handling active in all runs: per-(doc_id, i_id) hash
   repartition before the geometry kernels, AQE skew-join enabled,
   dense-doc quadkey cell split, hot-bucket caps in the LSH joins.
-* Executor-utilization decomposition (round 3, scripts/
-  scaling_decomposition.py): per-stage executorRunTime shows ≥0.97
+* Executor-utilization decomposition (round 3, per-stage
+  executorRunTime from the Spark UI's REST API): ≥0.97
   utilization at both 8 and 32 threads — no serial bottleneck or
   stragglers; remaining loss is per-core CPU throughput on shared
   silicon, the quantity the hardware-ceiling control measures.

@@ -146,7 +146,7 @@ def kernel_ceiling(sf: str, n_docs: int = 480,
     compute-bound eigvalsh probe reads ~0.99 on this box while the
     kernel itself reads ~0.69 — the workload is memory-allocation-bound
     and the box's DRAM/allocator throughput barely grows 4→16 (stream
-    56→63 GB/s, alloc-churn 4.5→6.5 GB/s — scaling_diag16 probes). On a
+    56→63 GB/s, alloc-churn 4.5→6.5 GB/s — round-6 probes). On a
     real N→4N cluster every added executor brings its own memory
     system, so this single-box ceiling does not transfer to deployment."""
     import kernel_scaling_probe as kp
@@ -278,8 +278,8 @@ session spin-up. The job is the full street-network conversion
 
 Partition counts are PINNED IDENTICALLY at both levels (shuffle 32,
 kernel 64 — the 4N-cluster/data sizing; the 4-core leg runs the same
-task list in more waves). Round 6's per-stage diagnosis
-(scripts/scaling_diag16.py, /tmp/diag16_sf_scale_16x.json) measured the
+task list in more waves). Round 6's per-stage diagnosis (from the
+Spark UI's REST API) measured the
 previous cores-proportional sizing paying ~3.8x the per-task fixed JVM
 cost at 16c (1,584 vs 414 tasks, +1,044 s executor CPU for identical
 data) — a measurement asymmetry that also vanishes on a real cluster,
@@ -301,7 +301,7 @@ one full run each) rules the suspects in/out:
     16-way concurrency — the remaining, dominant term.
 
 That last term is the BOX, not the engine. Measured hardware probes
-(scripts/scaling_diag16.py, scripts/kernel_scaling_probe.py):
+(round 6; the kernel row is scripts/kernel_scaling_probe.py):
 
 | probe | 4 procs | 16 procs | 4->16 ceiling |
 |---|---|---|---|

@@ -107,3 +107,29 @@ def test_step_along():
     pts = step_along(pl, 20.0, 5.0)  # reference arrow spacing
     assert len(pts) == 5
     assert pts[0].tolist() == [5, 0]
+
+
+@pytest.mark.parametrize("geometry_type, xy, anchor, props, want", [
+    ("Point", np.array([10.0, 20.0]), (-120.0, 30.0),
+     {"type": "lane arrow", "dir": "forward"},
+     '{"type":"Feature","geometry":{"type":"Point","coordinates":'
+     '[-119.999896155,30.000179864]},'
+     '"properties":{"type":"lane arrow","dir":"forward"}}'),
+    ("LineString", [[0, 0], [3.5, -1.25]], (-120.0, 30.0),
+     {"type": "stop line"},
+     '{"type":"Feature","geometry":{"type":"LineString","coordinates":'
+     '[[-120.0,30.0],[-119.999963654,29.999988758]]},'
+     '"properties":{"type":"stop line"}}'),
+    ("Polygon", [[0, 0], [1, 0], [1, 1], [0, 0]], (2.35, 48.85),
+     {"type": "road", "id": 7, "name": None},
+     '{"type":"Feature","geometry":{"type":"Polygon","coordinates":'
+     '[[[2.35,48.85],[2.350013667,48.85],[2.350013667,48.850008993],'
+     '[2.35,48.85]]]},"properties":{"type":"road","id":7,"name":null}}'),
+])
+def test_geojson_feature_exact(geometry_type, xy, anchor, props, want):
+    """The one GeoJSON encoder every render uses, byte for byte:
+    9-digit lon/lat rounding, type/geometry/properties key order,
+    compact separators."""
+    from osm2streets_spark.geom.core import geojson_feature
+
+    assert geojson_feature(geometry_type, xy, *anchor, props) == want
