@@ -227,13 +227,8 @@ def ramp_trims(roads_cw: list[dict]) -> dict | None:
     }
 
 
-def compute_trims(roads_cw: list[dict]) -> dict:
-    trims, _ = compute_trims_ex(roads_cw)
-    return trims
-
-
-def compute_trims_ex(roads_cw: list[dict],
-                     edges_full: list | None = None) -> tuple[dict, str]:
+def compute_trims(roads_cw: list[dict],
+                  edges_full: list | None = None) -> tuple[dict, str]:
     """→ ({road_key: trim_meters}, mode). road_key = (road_id,
     is_src_end); mode ∈ {'terminus','degenerate','ramp','general'}.
 
@@ -299,23 +294,6 @@ def _same_endpoints(ra: dict, rb: dict) -> bool:
 # ---------------------------------------------------------------------------
 # intersection polygon (geometry/mod.rs:172-229; terminus.rs; degenerate.rs)
 # ---------------------------------------------------------------------------
-
-def _end_cap_corners(xy: np.ndarray, trim: float, width: float):
-    """Corners of the road's trimmed end cap: point at ``trim`` along the
-    away-pointing polyline, offset ±width/2 along the perpendicular.
-    (Kept for the stop-line/marking callers that genuinely want a
-    perpendicular cross-section; RING EMISSION must use
-    _shift_end_corners instead — see that docstring.)"""
-    pt = interpolate_along(xy, trim)
-    # tangent at trim
-    cl = cumulative_lengths(xy)
-    i = min(int(np.searchsorted(cl, max(trim, 1e-9), side="left")), len(xy) - 1)
-    t = xy[i] - xy[i - 1] if i > 0 else xy[1] - xy[0]
-    norm = math.hypot(t[0], t[1]) or 1.0
-    t = t / norm
-    perp = np.array([t[1], -t[0]])
-    return pt + perp * width / 2.0, pt - perp * width / 2.0, pt, t
-
 
 def _trimmed_center_away(xy: np.ndarray, trim: float) -> np.ndarray:
     """The center polyline after applying ``trim`` at the junction end
@@ -425,11 +403,7 @@ TIP_TOUCH_EPS = 0.0005
 
 
 def _ring_or_circle(endpts: list, roads_cw: list[dict]) -> np.ndarray:
-    return _ring_or_circle_ex(endpts, roads_cw)[0]
-
-
-def _ring_or_circle_ex(endpts: list, roads_cw: list[dict]):
-    """→ (ring, fell_back). Close + clean the emitted ring, mirroring Ring::deduping_new →
+    """Close + clean the emitted ring, mirroring Ring::deduping_new →
     Ring::new (geometry/mod.rs:228) + the caller's failure fallback:
 
       * adjacent vertices within 1 cm fold into one (keep-first) — the
@@ -473,9 +447,9 @@ def _ring_or_circle_ex(endpts: list, roads_cw: list[dict]):
             if exact_dup:
                 break
         if exact_dup:
-            return circle_ring(_node_point(roads_cw), 3.0), True
-        return ring, False
-    return circle_ring(_node_point(roads_cw), 3.0), True
+            return circle_ring(_node_point(roads_cw), 3.0)
+        return ring
+    return circle_ring(_node_point(roads_cw), 3.0)
 
 
 def _cap_corners_ext(xy: np.ndarray, trim: float, width: float):
@@ -488,19 +462,7 @@ def _cap_corners_ext(xy: np.ndarray, trim: float, width: float):
 def intersection_polygon(roads_cw: list[dict], trims: dict,
                          mode: str = "general",
                          edges_full: list | None = None) -> np.ndarray:
-    return intersection_polygon_ex(roads_cw, trims, mode, edges_full)[0]
-
-
-def intersection_polygon_ex(roads_cw: list[dict], trims: dict,
-                            mode: str = "general",
-                            edges_full: list | None = None):
-    """→ (closed ring, fell_back). fell_back mirrors the reference's
-    update_geometry.rs Err branch: Ring construction failed and the
-    node-anchored 3 m circle was kept — the caller must then apply NO
-    trims to the incident roads (ADVICE r6; the Err branch returns an
-    empty trim map, so roads stay untrimmed at that junction).
-
-    Closed ring for the junction area.
+    """Closed ring for the junction area.
 
     n==1: terminus square (terminus.rs — trim handled by caller via
     ``trims``); n==2: degenerate square from the 4 trimmed corner
@@ -516,12 +478,12 @@ def intersection_polygon_ex(roads_cw: list[dict], trims: dict,
         c_r, c_l = _shift_end_corners(_trimmed_center_away(r["xy"], trim), w)
         b_r, b_l = _shift_end_corners(
             _trimmed_center_away(r["xy"], max(trim - w, 0.0)), w)
-        return np.array([c_r, c_l, b_l, b_r, c_r]), False
+        return np.array([c_r, c_l, b_l, b_r, c_r])
     if len(roads_cw) == 2:
         if min(polyline_length(r["xy"]) for r in roads_cw) < 0.2:
             # degenerate.rs:23-26 bails outright on a too-short road —
             # the caller keeps the node-anchored fallback circle
-            return circle_ring(_node_point(roads_cw), 3.0), True
+            return circle_ring(_node_point(roads_cw), 3.0)
         corners = []
         for r in roads_cw:
             trim = trims.get(r["key"], 0.0)
@@ -529,7 +491,7 @@ def intersection_polygon_ex(roads_cw: list[dict], trims: dict,
                 _trimmed_center_away(r["xy"], trim), r["width"])
             corners.append((c_l, c_r))
         (a_l, a_r), (b_l, b_r) = corners
-        return _ring_or_circle_ex([a_l, b_r, b_l, a_r], roads_cw)
+        return _ring_or_circle([a_l, b_r, b_l, a_r], roads_cw)
 
     if mode == "ramp":
         # on_off_ramp.rs:158-175: just the 6 endpoints of the final
@@ -540,7 +502,7 @@ def intersection_polygon_ex(roads_cw: list[dict], trims: dict,
                 r["xy"], trims.get(r["key"], 0.0), r["width"])
             endpts.append(c_l)
             endpts.append(c_r)
-        return _ring_or_circle_ex(endpts, roads_cw)
+        return _ring_or_circle(endpts, roads_cw)
 
     edges = _trimmed_edges(roads_cw, trims, edges_full)
     edges.append(edges[0])
@@ -578,7 +540,7 @@ def intersection_polygon_ex(roads_cw: list[dict], trims: dict,
                        and min(da, db) >= TIP_TOUCH_EPS)
             if not_tip and d_on_trimmed <= exts[0][2] / 2.0:
                 endpts.append(np.asarray(pt, dtype=float))
-    return _ring_or_circle_ex(endpts, roads_cw)
+    return _ring_or_circle(endpts, roads_cw)
 
 
 # ---------------------------------------------------------------------------

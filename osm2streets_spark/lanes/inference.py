@@ -152,8 +152,6 @@ def dirs_to_chars(specs: list[LaneSpec]) -> str:
     return "".join("^" if s.dir == FWD else "v" for s in specs)
 
 
-NON_MOTORIZED = {"footway", "path", "pedestrian", "steps", "track", "cycleway"}
-
 TURN_DIRECTIONS = {
     "left", "slight_left", "sharp_left", "through", "right",
     "slight_right", "sharp_right", "merge_left", "merge_right", "reverse",

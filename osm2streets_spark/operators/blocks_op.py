@@ -11,11 +11,13 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
+    BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
 from ..geom.blocks import find_blocks
-from .geometry_update import map_groups
+from ..geom.core import lonlat_to_xy, point_in_ring, xy_to_lonlat
+from .geometry_update import map_groups, row_udf
+from .tiles import tile_xy
 
 BLOCK_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -33,8 +35,6 @@ def extract_blocks(roads: DataFrame) -> DataFrame:
     highway_type (post-transform network)."""
     src = roads.select("doc_id", "road_id", "src_i", "dst_i", "xy",
                        "name", "highway_type")
-    spark = src.sparkSession
-    n = spark.sparkContext.defaultParallelism * 2
 
     def _process(pdf):
         rows = []
@@ -51,7 +51,28 @@ def extract_blocks(roads: DataFrame) -> DataFrame:
         return pd.DataFrame(rows,
                             columns=[f.name for f in BLOCK_SCHEMA.fields])
 
-    return map_groups(src, ["doc_id"], _process, BLOCK_SCHEMA, n)
+    return map_groups(src, ["doc_id"], _process, BLOCK_SCHEMA)
+
+
+BBOX_SCHEMA = StructType([
+    StructField("min_lon", DoubleType()),
+    StructField("max_lon", DoubleType()),
+    StructField("min_lat", DoubleType()),
+    StructField("max_lat", DoubleType()),
+])
+
+
+def ring_bbox(ring_json, lon0, lat0) -> tuple[float, float, float, float]:
+    """Lon/lat bbox (BBOX_SCHEMA order) of a meters-plane block ring."""
+    ll = xy_to_lonlat(np.asarray(json.loads(ring_json)), lon0, lat0)
+    return (float(ll[:, 0].min()), float(ll[:, 0].max()),
+            float(ll[:, 1].min()), float(ll[:, 1].max()))
+
+
+def in_ring(lon, lat, ring_json, lon0, lat0) -> bool:
+    """Whether the lon/lat point lies inside the meters-plane ring."""
+    pt = lonlat_to_xy(np.array([[lon, lat]]), lon0, lat0)[0]
+    return bool(point_in_ring(pt, np.asarray(json.loads(ring_json))))
 
 
 def assign_features_to_blocks(features: DataFrame, blocks: DataFrame,
@@ -64,36 +85,14 @@ def assign_features_to_blocks(features: DataFrame, blocks: DataFrame,
     covers; equi-join features on (doc_id, tile_x, tile_y) — a plain
     hash join, no geometry.
     Phase 2 (refine): ray-casting PIP on the candidates only, in one
-    Arrow-batched pandas pass.
+    Arrow-batched pass.
     """
-    import numpy as np
-
-    from ..geom.core import point_in_ring, lonlat_to_xy
-    from .tiles import tile_xy
-    from pyspark.sql.types import BooleanType
-
     # block bbox in lon/lat (ring is in meters; convert via doc anchor)
     b = blocks.join(
         anchors.select("doc_id", F.col("min_lon").alias("lon0"),
                        F.col("min_lat").alias("lat0")), "doc_id")
-
-    @F.pandas_udf("min_lon double, max_lon double, min_lat double, "
-                  "max_lat double")
-    def _bbox(ring_json: pd.Series, lon0: pd.Series,
-              lat0: pd.Series) -> pd.DataFrame:
-        from ..geom.core import xy_to_lonlat
-        rows = {"min_lon": [], "max_lon": [], "min_lat": [], "max_lat": []}
-        for rj, lo, la in zip(ring_json, lon0, lat0):
-            ring = np.asarray(json.loads(rj))
-            ll = xy_to_lonlat(ring, lo, la)
-            rows["min_lon"].append(float(ll[:, 0].min()))
-            rows["max_lon"].append(float(ll[:, 0].max()))
-            rows["min_lat"].append(float(ll[:, 1].min()))
-            rows["max_lat"].append(float(ll[:, 1].max()))
-        return pd.DataFrame(rows)
-
-    b = b.withColumn("_bb", _bbox("ring_json", "lon0", "lat0")) \
-         .select("*", "_bb.*").drop("_bb")
+    b = b.withColumn("_bb", row_udf(ring_bbox, BBOX_SCHEMA)(
+        "ring_json", "lon0", "lat0")).select("*", "_bb.*").drop("_bb")
     x0, y0 = tile_xy(F.col("min_lon"), F.col("max_lat"), 16)  # NW corner
     x1, y1 = tile_xy(F.col("max_lon"), F.col("min_lat"), 16)  # SE corner
     cells = b.select(
@@ -108,15 +107,6 @@ def assign_features_to_blocks(features: DataFrame, blocks: DataFrame,
         "tile_x", "tile_y",
     ).join(cells, ["doc_id", "tile_x", "tile_y"])
 
-    @F.pandas_udf(BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, ring_json: pd.Series,
-             lon0: pd.Series, lat0: pd.Series) -> pd.Series:
-        out = []
-        for lo, la, rj, o_lo, o_la in zip(lon, lat, ring_json, lon0, lat0):
-            ring = np.asarray(json.loads(rj))
-            pt = lonlat_to_xy(np.array([[lo, la]]), o_lo, o_la)[0]
-            out.append(bool(point_in_ring(pt, ring)))
-        return pd.Series(out)
-
-    return cand.where(_pip("c_lon", "c_lat", "ring_json", "lon0", "lat0")) \
+    pip = row_udf(in_ring, BooleanType())
+    return cand.where(pip("c_lon", "c_lat", "ring_json", "lon0", "lat0")) \
         .select("doc_id", "feature_type", "feature_id", "block_id", "kind")

@@ -24,12 +24,13 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType
 
 from ..geom.core import (
     cumulative_lengths, geojson_feature, interpolate_along, polyline_length,
     thicken_polyline,
 )
-from .geometry_update import map_groups
+from .geometry_update import map_groups, row_udf
 
 # ---------------------------------------------------------------------------
 # way_to_xml (lib.rs:290-314)
@@ -302,35 +303,33 @@ def movements_from_lane(arrows: DataFrame, roads_final: DataFrame,
 # ---------------------------------------------------------------------------
 
 
+def connected_road_row(road_id, center_xy, total_width, lon0,
+                       lat0) -> str:
+    """One incident road's center line buffered by its total width, as
+    a GeoJSON Polygon feature."""
+    return geojson_feature(
+        "Polygon",
+        thicken_polyline(np.asarray(center_xy, dtype=float).reshape(-1, 2),
+                         float(total_width)),
+        float(lon0), float(lat0), {"type": "road", "road_id": int(road_id)})
+
+
 def roads_connected_to_intersections(roads_final: DataFrame,
                                      anchors: DataFrame) -> DataFrame:
     """Every (intersection, incident road) with the road's center line
     buffered by its total width (lib.rs:213-218: center_line
     .make_polygons(total_width) per road of the intersection). The
     per-id accessor is `.where(i_id = ...)`. Reuses the same
-    thicken_polyline buffering as the S5 road render."""
-    ends = roads_final.select(
+    thicken_polyline buffering as the S5 road render. Center lines
+    under 2 points are dropped in Catalyst before the kernel runs: a
+    filter on the kernel's own output would be pushed below it and run
+    the Python kernel twice."""
+    ends = roads_final.where(F.size("center_xy") >= 4).select(
         "doc_id", "road_id", "center_xy", "total_width",
         F.explode(F.array("src_i", "dst_i")).alias("i_id"),
     ).join(anchors.select("doc_id", F.col("min_lon").alias("lon0"),
                           F.col("min_lat").alias("lat0")), "doc_id")
-
-    def _build(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                xy = np.asarray(row.center_xy, dtype=float).reshape(-1, 2)
-                if len(xy) < 2:
-                    continue
-                rows.append((row.doc_id, int(row.i_id), int(row.road_id),
-                             geojson_feature(
-                                 "Polygon",
-                                 thicken_polyline(xy, float(row.total_width)),
-                                 float(row.lon0), float(row.lat0),
-                                 {"type": "road",
-                                  "road_id": int(row.road_id)})))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "i_id", "road_id", "feature_json"])
-
-    schema = "doc_id string, i_id long, road_id long, feature_json string"
-    return ends.mapInPandas(_build, schema=schema)
+    feature = row_udf(connected_road_row, StringType())(
+        "road_id", "center_xy", "total_width", "lon0", "lat0")
+    return ends.select("doc_id", "i_id", "road_id",
+                       feature.alias("feature_json"))

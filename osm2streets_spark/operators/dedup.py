@@ -18,10 +18,11 @@ MinHash+LSH, SimHash. Designed for 100 TB:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from .geometry_update import row_udf
 
 # shared shingle hashing: base-31 polynomial over characters mod 2^31-1,
 # identical in Spark SQL and DuckDB SQL (see text_analysis.fingerprints)
@@ -50,6 +51,45 @@ def exact_duplicates_oracle_sql(doc_table: str) -> str:
 # word shingles + exact Jaccard (the verifier)
 # ---------------------------------------------------------------------------
 
+# 31^j mod POLY_MOD for j < 512 (the vectorized word-hash fold)
+_P31 = np.array([pow(31, j, POLY_MOD) for j in range(512)], dtype=np.int64)
+
+
+def shingle_row(text, n) -> list[int]:
+    """One document's sorted distinct word n-gram hashes."""
+    M = POLY_MOD
+    n = int(n)
+    words = (text or "").split(" ")
+    whs = np.empty(len(words), dtype=np.int64)
+    for k, w in enumerate(words):
+        L = len(w)
+        if L == 0:
+            whs[k] = 0
+            continue
+        if L <= 512:
+            codes = np.fromiter(map(ord, w), dtype=np.int64, count=L)
+            # vectorized fold: Σ c_j·31^(L-1-j) mod M; terms ≤
+            # 2^31·0x10FFFF ≈ 2^52, sum of ≤512 ≈ 2^61 — safe
+            whs[k] = int((codes * _P31[:L][::-1]).sum() % M)
+        else:
+            h = 0
+            for c in w:
+                h = (h * 31 + ord(c)) % M
+            whs[k] = h
+    size = len(words)
+    if size >= n:
+        # full n-grams: acc folds left-to-right over word hashes
+        g = whs[: size - n + 1].copy()
+        for j in range(1, n):
+            g = (g * 31 + whs[j: size - n + 1 + j]) % M
+    else:
+        h = 0
+        for v in whs:
+            h = (h * 31 + int(v)) % M
+        g = np.array([h], dtype=np.int64)
+    return np.unique(g).tolist()
+
+
 def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, sh: array<long>) — per-doc sorted-distinct shingle set,
     ONE UDF pass. Per-word base-31 char-code hash folded across the
@@ -71,55 +111,8 @@ def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     hashes and gram folds compute as array ops instead of a Catalyst
     higher-order aggregate interpreting one lambda per character —
     this stage dominated every dedup query's wall time."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
-    M = POLY_MOD
-    # 31^j mod M for j < 512, precomputed once per executor
-    _P31 = np.empty(512, dtype=np.int64)
-    v = 1
-    for j in range(512):
-        _P31[j] = v
-        v = (v * 31) % M
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _shingles(texts):
-        out = []
-        for t in texts:
-            words = (t or "").split(" ")
-            whs = np.empty(len(words), dtype=np.int64)
-            for k, w in enumerate(words):
-                L = len(w)
-                if L == 0:
-                    whs[k] = 0
-                    continue
-                if L <= 512:
-                    codes = np.fromiter(map(ord, w), dtype=np.int64,
-                                        count=L)
-                    # vectorized fold: Σ c_j·31^(L-1-j) mod M; terms ≤
-                    # 2^31·0x10FFFF ≈ 2^52, sum of ≤512 ≈ 2^61 — safe
-                    whs[k] = int((codes * _P31[:L][::-1]).sum() % M)
-                else:
-                    h = 0
-                    for c in w:
-                        h = (h * 31 + ord(c)) % M
-                    whs[k] = h
-            size = len(words)
-            if size >= n:
-                # full n-grams: acc folds left-to-right over word hashes
-                g = whs[: size - n + 1].copy()
-                for j in range(1, n):
-                    g = (g * 31 + whs[j: size - n + 1 + j]) % M
-            else:
-                h = 0
-                for v in whs:
-                    h = (h * 31 + int(v)) % M
-                g = np.array([h], dtype=np.int64)
-            out.append(np.unique(g).tolist())
-        return pd.Series(out)
-
-    return docs.select("doc_id", _shingles("text").alias("sh"))
+    shingles = row_udf(shingle_row, ArrayType(LongType()))
+    return docs.select("doc_id", shingles("text", F.lit(n)).alias("sh"))
 
 
 def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -231,18 +224,17 @@ _P = np.uint64(MERSENNE)
 _MASK32 = np.uint64(0xFFFFFFFF)
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def _minhash_sig(shingles: pd.Series) -> pd.Series:
-    out = []
-    for sh in shingles:
-        h = np.asarray(sh, dtype=np.int64).astype(np.uint64) & _MASK32
-        if len(h) == 0:
-            out.append([0] * MINHASH_K)
-            continue
-        # (len(h), K) permuted hashes, min per permutation column
-        m = (h[:, None] * _A[None, :] + _B[None, :]) % _P
-        out.append(m.min(axis=0).astype(np.int64).tolist())
-    return pd.Series(out)
+def minhash_signature(sh) -> list[int]:
+    """MINHASH_K-entry MinHash signature of one shingle set."""
+    h = np.asarray(sh, dtype=np.int64).astype(np.uint64) & _MASK32
+    if len(h) == 0:
+        return [0] * MINHASH_K
+    # (len(h), K) permuted hashes, min per permutation column
+    m = (h[:, None] * _A[None, :] + _B[None, :]) % _P
+    return m.min(axis=0).astype(np.int64).tolist()
+
+
+_minhash_sig = row_udf(minhash_signature, ArrayType(LongType()))
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
@@ -352,31 +344,28 @@ _SM2 = np.uint64(0xBF58476D1CE4E5B9)
 _BITS = np.arange(64, dtype=np.uint64)
 
 
-@F.pandas_udf(LongType())
-def _simhash64(shingles: pd.Series) -> pd.Series:
-    """Vectorized: one uint64 matrix per doc (shingles × 64 bits), no
-    per-shingle Python loop — same shape as the MinHash signature UDF.
-    The splitmix-style mix (public constants) is reproduced verbatim in
-    the DuckDB oracle via HUGEINT modular arithmetic."""
-    out = []
-    one = np.uint64(1)
-    for sh in shingles:
-        if sh is None or len(sh) == 0:
-            out.append(0)
-            continue
-        x = np.asarray(sh, dtype=np.int64).astype(np.uint64)
-        x = x * _SM1                    # uint64 wraps mod 2^64
-        x ^= x >> np.uint64(31)
-        x = x * _SM2
-        x ^= x >> np.uint64(27)
-        bits = (x[:, None] >> _BITS[None, :]) & one      # (n, 64)
-        acc = (bits.astype(np.int64) * 2 - 1).sum(axis=0)
-        h = int(((acc > 0).astype(np.uint64) << _BITS).sum(
-            dtype=np.uint64))
-        if h >= (1 << 63):
-            h -= (1 << 64)              # store as signed 64-bit
-        out.append(h)
-    return pd.Series(out)
+def simhash(sh) -> int:
+    """64-bit SimHash of one shingle set, as a signed long. Vectorized:
+    one uint64 matrix per doc (shingles × 64 bits), no per-shingle
+    Python loop — same shape as minhash_signature. The splitmix-style
+    mix (public constants) is reproduced verbatim in the DuckDB oracle
+    via HUGEINT modular arithmetic."""
+    if sh is None or len(sh) == 0:
+        return 0
+    x = np.asarray(sh, dtype=np.int64).astype(np.uint64)
+    x = x * _SM1                    # uint64 wraps mod 2^64
+    x ^= x >> np.uint64(31)
+    x = x * _SM2
+    x ^= x >> np.uint64(27)
+    bits = (x[:, None] >> _BITS[None, :]) & np.uint64(1)  # (n, 64)
+    acc = (bits.astype(np.int64) * 2 - 1).sum(axis=0)
+    h = int(((acc > 0).astype(np.uint64) << _BITS).sum(dtype=np.uint64))
+    if h >= (1 << 63):
+        h -= (1 << 64)              # store as signed 64-bit
+    return h
+
+
+_simhash64 = row_udf(simhash, LongType())
 
 
 def simhash_pairs(docs: DataFrame, n: int = 3, max_hamming: int = 3) -> DataFrame:

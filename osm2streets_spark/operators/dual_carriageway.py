@@ -101,8 +101,7 @@ def trace_dual_carriageway_sides(roads: DataFrame) -> DataFrame:
         return pd.DataFrame(rows,
                             columns=[f.name for f in SIDE_SCHEMA.fields])
 
-    return map_groups(src, ["doc_id"], _process, SIDE_SCHEMA,
-                      src.sparkSession.sparkContext.defaultParallelism)
+    return map_groups(src, ["doc_id"], _process, SIDE_SCHEMA)
 
 
 def detect_dual_carriageway_endpoints(roads: DataFrame) -> DataFrame:

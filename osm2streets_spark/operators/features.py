@@ -12,12 +12,12 @@ of it, else stays a crossing on the road.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
 
-from ..geom.core import project_onto, polyline_length
+from ..geom.core import lonlat_to_xy, project_onto, polyline_length
+from .geometry_update import row_udf
 
 QUANTUM = 1e7
 
@@ -36,25 +36,15 @@ def snap_features_to_roads(features: DataFrame,
     return f.join(interior_map, ["doc_id", "qx", "qy"], "inner")
 
 
-@F.pandas_udf(DoubleType())
-def _dist_along_pct(xy: pd.Series, lon: pd.Series, lat: pd.Series,
-                    lon0: pd.Series, lat0: pd.Series) -> pd.Series:
+def dist_along_pct(xy, lon, lat, lon0, lat0) -> float:
     """Fraction along the road of the feature point (for the 30%/70%
     snap rule and stop-line placement)."""
-    import math
-
-    from ..geom.core import lonlat_to_xy
-
-    out = []
-    for raw, lo, la, o_lo, o_la in zip(xy, lon, lat, lon0, lat0):
-        pl = np.asarray(raw, dtype=float).reshape(-1, 2)
-        pt = lonlat_to_xy(np.array([[lo, la]]), o_lo, o_la)[0]
-        total = polyline_length(pl)
-        if total <= 0:
-            out.append(0.0)
-            continue
-        out.append(project_onto(pl, pt) / total)
-    return pd.Series(out)
+    pl = np.asarray(xy, dtype=float).reshape(-1, 2)
+    pt = lonlat_to_xy(np.array([[lon, lat]]), lon0, lat0)[0]
+    total = polyline_length(pl)
+    if total <= 0:
+        return 0.0
+    return project_onto(pl, pt) / total
 
 
 def road_stop_lines(snapped: DataFrame, roads: DataFrame) -> DataFrame:
@@ -65,8 +55,8 @@ def road_stop_lines(snapped: DataFrame, roads: DataFrame) -> DataFrame:
         ["doc_id", "road_id"],
     )
     j = j.withColumn(
-        "pct_along", F.round(_dist_along_pct("xy", "lon", "lat",
-                                             "lon0", "lat0"), 4))
+        "pct_along", F.round(row_udf(dist_along_pct, DoubleType())(
+            "xy", "lon", "lat", "lon0", "lat0"), 4))
     return j.select(
         "doc_id", "road_id", "node_id", "feature", "signal_dir",
         "crossing_kind", "crossing_island", "pct_along",

@@ -30,13 +30,12 @@ from pyspark.sql.types import (
 )
 
 from ..geom.core import (
-    lonlat_to_xy, xy_to_lonlat, simplify_rdp, slice_between,
-    extend_to_length, polyline_length,
+    lonlat_to_xy, simplify_rdp, slice_between, extend_to_length,
+    polyline_length, shift_polyline,
 )
 from ..geom.intersection_kernel import (
-    sort_roads_cw, compute_trims_ex, intersection_polygon,
-    intersection_polygon_ex, movements_and_kind, terminus_geometry,
-    _cw_edges,
+    sort_roads_cw, compute_trims, intersection_polygon,
+    movements_and_kind, terminus_geometry, _cw_edges,
 )
 
 M_PER_DEG = 111_194.92664455873
@@ -53,42 +52,33 @@ PROJ_SCHEMA = StructType([
 ])
 
 
-def _project_udf_factory():
-    from ..geom.core import shift_polyline
-
-    @F.pandas_udf(PROJ_SCHEMA)
-    def project_and_simplify(pts: pd.Series, lon0: pd.Series,
-                             lat0: pd.Series,
-                             shift: pd.Series) -> pd.DataFrame:
-        out, lens = [], []
-        for p, lo, la, sh in zip(pts, lon0, lat0, shift):
-            arr = np.array([[q["lon"], q["lat"]] for q in p])
-            xy = lonlat_to_xy(arr, lo, la)
-            xy = simplify_rdp(xy, 0.5)
-            sh = float(sh or 0.0)
-            if abs(sh) > 1e-9:
-                # K3/K6: the mapped way sits at the tagged placement;
-                # shift to the full-width center (road.rs:166-193)
-                xy = shift_polyline(xy, sh)
-            out.append(xy.ravel().tolist())
-            # length of the FINAL reference line: the pass-1 gate and the
-            # trims-only too_short flag compare trims against exactly this
-            lens.append(float(polyline_length(xy)))
-        return pd.DataFrame({"xy": out, "geom_length": lens})
-    return project_and_simplify
+def project_row(pts, lon0, lat0, shift) -> tuple[list, float]:
+    """Lon/lat points → the flat meters-plane reference line (RDP 0.5 m,
+    then the placement shift) and its length."""
+    xy = lonlat_to_xy(np.array([[q["lon"], q["lat"]] for q in pts]),
+                      lon0, lat0)
+    xy = simplify_rdp(xy, 0.5)
+    shift = float(shift or 0.0)
+    if abs(shift) > 1e-9:
+        # K3/K6: the mapped way sits at the tagged placement; shift to
+        # the full-width center (road.rs:166-193)
+        xy = shift_polyline(xy, shift)
+    # length of the FINAL reference line: the pass-1 gate and the
+    # trims-only too_short flag compare trims against exactly this
+    return xy.ravel().tolist(), float(polyline_length(xy))
 
 
 def with_projected_geometry(roads: DataFrame, anchors: DataFrame) -> DataFrame:
     """Join per-doc projection anchors (min corner of the doc bbox) and
     compute the meters-plane reference line (placement-corrected) plus
     its length (consumed by the T6 pass-1 candidate gate)."""
-    udf = _project_udf_factory()
     r = roads.join(anchors.select(
         "doc_id", F.col("min_lon").alias("lon0"), F.col("min_lat").alias("lat0")
     ), "doc_id")
     if "placement_shift" not in r.columns:
         r = r.withColumn("placement_shift", F.lit(0.0))
     # batched: each withColumn is a full plan re-analysis on the driver
+    udf = row_udf(project_row, PROJ_SCHEMA)
     return r.withColumn("_p", udf("pts", "lon0", "lat0", "placement_shift")) \
             .withColumns({"xy": F.col("_p.xy"),
                           "geom_length": F.col("_p.geom_length")}) \
@@ -167,7 +157,7 @@ def _t6_rows(group: list[dict], trims_only: bool) -> list[tuple]:
     else:
         if len(roads_cw) >= 3:
             edges_full = _cw_edges(roads_cw)
-        trims, mode = compute_trims_ex(roads_cw, edges_full)
+        trims, mode = compute_trims(roads_cw, edges_full)
     if trims_only:
         ring = None
         movements, kind = [], None
@@ -180,10 +170,8 @@ def _t6_rows(group: list[dict], trims_only: bool) -> list[tuple]:
         # line). Zeroing trims at fallback junctions was measured
         # WORSE against the goldens (leeds -3 / arizona -2 road rings),
         # so the computed trims are applied as the mirror of that
-        # persistence. intersection_polygon_ex exposes the fell_back
-        # flag for diagnostics.
-        ring, _fell_back = intersection_polygon_ex(
-            roads_cw, trims, mode, edges_full)
+        # persistence.
+        ring = intersection_polygon(roads_cw, trims, mode, edges_full)
         movements, kind = movements_and_kind(roads_cw, driving_side)
 
     rows = []
@@ -370,7 +358,8 @@ def stream_groups(batches, key_cols: list[str], process):
 def map_groups(df: DataFrame, keys: list[str], fn, schema,
                n: int | None = None) -> DataFrame:
     """Run `fn` on complete `keys` groups: hash-repartition on keys
-    (n partitions; spark.sql.shuffle.partitions when None), sort within
+    (n partitions; when None, spark.sql.shuffle.partitions, which AQE
+    may coalesce — only T6 and transforms pass an n), sort within
     partitions on keys, and stream each partition's Arrow batches
     through stream_groups. fn gets a pandas frame of one or more
     complete groups and returns a pandas frame of `schema` — the
@@ -386,10 +375,11 @@ def map_groups(df: DataFrame, keys: list[str], fn, schema,
 
 def row_udf(kernel, return_type):
     """A pandas UDF that calls the pure per-row `kernel` once per row
-    of its zipped column Series — the same kernel the sequential
-    replay calls directly. A struct `return_type` takes one tuple per
-    row, anything else one value per row. Plans show the UDF under the
-    kernel's name."""
+    of its zipped column Series. Every per-row Python kernel of the
+    package crosses into Spark here (similarity._lsh_bucket, a
+    whole-batch fold, is the one other pandas UDF). A struct
+    `return_type` takes one tuple per row, anything else one value per
+    row. Plans show the UDF under the kernel's name."""
     if isinstance(return_type, StructType):
         def frame(values):
             return pd.DataFrame(values, columns=return_type.names)
@@ -521,40 +511,31 @@ def rebuild_center(raw, t0, t1) -> tuple[list, float, bool]:
     return pl.ravel().tolist(), float(polyline_length(pl)), False
 
 
-@F.pandas_udf(CENTER_SCHEMA)
-def _rebuild_center(xy: pd.Series, trim_start: pd.Series,
-                    trim_end: pd.Series) -> pd.DataFrame:
-    centers, lengths, too_short = [], [], []
-    for raw, t0, t1 in zip(xy, trim_start, trim_end):
-        c, ln, short = rebuild_center(raw, t0, t1)
-        centers.append(c)
-        lengths.append(ln)
-        too_short.append(short)
-    return pd.DataFrame({
-        "center_xy": centers, "trimmed_length": lengths,
-        "too_short": too_short,
-    })
+def _join_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
+    """Left-join each road to its trim_start (from its src-end group)
+    and trim_end (from its dst-end group), 0 where no group set one.
+    The two ends are pivoted into one row per road FIRST so the trims
+    subtree is consumed exactly once — referencing it twice (src join
+    + dst join) would re-execute the whole T6 stage twice (no subtree
+    reuse past the exchange)."""
+    t = trims.groupBy("doc_id", "road_id").agg(
+        F.max(F.when(F.col("is_src_end"), F.col("trim"))).alias("trim_start"),
+        F.max(F.when(~F.col("is_src_end"), F.col("trim"))).alias("trim_end"),
+    )
+    return roads.join(t, ["doc_id", "road_id"], "left") \
+                .fillna({"trim_start": 0.0, "trim_end": 0.0})
 
 
 def apply_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
     """Each road takes trim_start from its src-end group and trim_end
     from its dst-end group (two independent groups, mirroring the
-    reference's per-intersection trimming). Physically: pivot the two
-    ends into one row per road FIRST so the trims subtree is consumed
-    exactly once — referencing it twice (src join + dst join) would
-    re-execute the whole T6 stage twice (no subtree reuse past the
-    exchange)."""
-    t = trims.groupBy("doc_id", "road_id").agg(
-        F.max(F.when(F.col("is_src_end"), F.col("trim"))).alias("trim_start"),
-        F.max(F.when(~F.col("is_src_end"), F.col("trim"))).alias("trim_end"),
-    )
-    roads = roads.drop("too_short", "center_xy", "trimmed_length",
-                       "trim_start", "trim_end")
-    r = roads.join(t, ["doc_id", "road_id"], "left") \
-             .fillna({"trim_start": 0.0, "trim_end": 0.0})
+    reference's per-intersection trimming), then rebuilds its center
+    line (K9)."""
+    r = _join_trims(roads.drop("too_short", "center_xy", "trimmed_length",
+                               "trim_start", "trim_end"), trims)
     r = r.withColumn(
-        "_c", _rebuild_center("xy", "trim_start", "trim_end")
-    )
+        "_c", row_udf(rebuild_center, CENTER_SCHEMA)(
+            "xy", "trim_start", "trim_end"))
     return r.select("*", "_c.*").drop("_c")
 
 
@@ -562,17 +543,12 @@ def apply_trim_flags(roads: DataFrame, trims: DataFrame) -> DataFrame:
     """Pass-1 join-back WITHOUT the Python center rebuild: the transform
     stage only consumes trim_start/trim_end (pretrim memo) and too_short
     (collapse candidacy), so a Catalyst comparison against the
-    precomputed geom_length replaces the whole _rebuild_center UDF pass.
+    precomputed geom_length replaces the whole rebuild_center UDF pass.
     Roads at junctions the pass-1 gate skipped get trims of 0 (they
     cannot be annihilated by construction of the gate)."""
-    t = trims.groupBy("doc_id", "road_id").agg(
-        F.max(F.when(F.col("is_src_end"), F.col("trim"))).alias("trim_start"),
-        F.max(F.when(~F.col("is_src_end"), F.col("trim"))).alias("trim_end"),
-    )
-    r = roads.drop("too_short", "trim_start", "trim_end") \
-             .join(t, ["doc_id", "road_id"], "left") \
-             .fillna({"trim_start": 0.0, "trim_end": 0.0})
-    # same predicate as _rebuild_center's annihilation test
+    r = _join_trims(roads.drop("too_short", "trim_start", "trim_end"),
+                    trims)
+    # same predicate as rebuild_center's annihilation test
     # (operations/update_geometry.rs:58-63)
     return r.withColumn(
         "too_short",

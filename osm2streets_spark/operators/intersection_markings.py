@@ -135,5 +135,4 @@ def render_sidewalk_corners(roads_final: DataFrame,
             rows, columns=["doc_id", "i_id", "marking_idx",
                            "feature_json"])
 
-    return map_groups(src, ["doc_id", "i_id"], _corners, CORNER_SCHEMA,
-                      src.sparkSession.sparkContext.defaultParallelism * 4)
+    return map_groups(src, ["doc_id", "i_id"], _corners, CORNER_SCHEMA)

@@ -1,7 +1,7 @@
-"""K1 lane inference as an Arrow-batched pandas UDF.
+"""K1 lane inference as a pure per-row kernel behind `row_udf`.
 
 The reference runs lane inference eagerly in Road::new (road.rs:109).
-Here it is one vectorized pass over the (much smaller) distinct-way
+Here it is one Arrow-batched pass over the (much smaller) distinct-way
 table; road segments of the same way share the result via a join.
 """
 
@@ -9,16 +9,15 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, StringType, StructField, StructType,
+    BooleanType, DoubleType, StringType, StructField, StructType,
 )
 
 from ..lanes import get_lane_specs_ltr, lanes_to_chars, dirs_to_chars
 from ..lanes.inference import oneway_for_driving, DRIVING, car_access_blocked
 from ..lanes.placement import placement_shift
+from .geometry_update import row_udf
 
 LANE_RESULT = StructType([
     StructField("lane_specs_json", StringType()),
@@ -31,13 +30,19 @@ LANE_RESULT = StructType([
 ])
 
 
-def _infer_batch(tags_json: pd.Series, driving_side: pd.Series,
-                 inferred_sidewalks: pd.Series) -> pd.DataFrame:
-    out = {k.name: [] for k in LANE_RESULT.fields}
-    for tj, side, inf_sw in zip(tags_json, driving_side, inferred_sidewalks):
-        tags = json.loads(tj) if tj else {}
-        specs = get_lane_specs_ltr(tags, driving_side=side or "right",
-                                   inferred_sidewalks=bool(inf_sw))
+def lane_row(tags_json, driving_side, inferred_sidewalks) -> tuple:
+    """One way's tags → its LANE_RESULT tuple."""
+    tags = json.loads(tags_json) if tags_json else {}
+    side = driving_side or "right"
+    specs = get_lane_specs_ltr(tags, driving_side=side,
+                               inferred_sidewalks=bool(inferred_sidewalks))
+    return (
+        json.dumps([s.as_dict() for s in specs], separators=(",", ":")),
+        lanes_to_chars(specs),
+        dirs_to_chars(specs),
+        # A2: total width = Σ lane widths (road.rs:303-308)
+        round(sum(s.width for s in specs), 6),
+        any(s.lt == DRIVING for s in specs) and not car_access_blocked(tags),
         # routing direction derives from the LANE DIRECTIONS, exactly
         # like the reference (road.rs:228-254 → LaneSpec::
         # oneway_for_driving, lib.rs:372-393): a road whose driving
@@ -45,30 +50,17 @@ def _infer_batch(tags_json: pd.Series, driving_side: pd.Series,
         # that came from a lanes=1 tag rather than oneway=yes (i5 golden
         # Fork junctions depend on this; the earlier tag-based shortcut
         # mis-classified them as Cross)
-        out["lane_specs_json"].append(
-            json.dumps([s.as_dict() for s in specs], separators=(",", ":"))
-        )
-        out["lane_chars"].append(lanes_to_chars(specs))
-        out["dir_chars"].append(dirs_to_chars(specs))
-        # A2: total width = Σ lane widths (road.rs:303-308)
-        out["total_width"].append(round(sum(s.width for s in specs), 6))
-        out["driveable"].append(
-            any(s.lt == DRIVING for s in specs)
-            and not car_access_blocked(tags))
-        out["oneway_dir"].append(oneway_for_driving(specs) or "")
-        out["placement_shift"].append(
-            round(placement_shift(tags, specs, side or "right"), 6))
-    return pd.DataFrame(out)
-
-
-infer_lanes_udf = F.pandas_udf(_infer_batch, returnType=LANE_RESULT)
+        oneway_for_driving(specs) or "",
+        round(placement_shift(tags, specs, side), 6),
+    )
 
 
 def with_lanes(ways: DataFrame, driving_side: str = "right",
                inferred_sidewalks: bool = True) -> DataFrame:
     """Attach lane columns to the filtered-ways table."""
     res = ways.withColumn(
-        "_lanes", infer_lanes_udf(F.col("tags_json"), F.lit(driving_side),
-                                  F.lit(inferred_sidewalks))
+        "_lanes", row_udf(lane_row, LANE_RESULT)(
+            F.col("tags_json"), F.lit(driving_side),
+            F.lit(inferred_sidewalks))
     )
     return res.select("*", "_lanes.*").drop("_lanes")

@@ -218,14 +218,3 @@ def decode_media(media: DataFrame,
     return sel \
         .repartition("doc_id") \
         .mapInPandas(_decode_batch, schema=DECODE_SCHEMA)
-
-
-def frame_sample(decoded: DataFrame, every_n: int = 4) -> DataFrame:
-    """Frame sampling: one row per sampled frame index — pure Catalyst
-    sequence explode (video analogue of step_along W4)."""
-    return decoded.select(
-        "doc_id", "media_ref", "n_frames",
-        F.explode(F.sequence(
-            F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)),
-            F.lit(every_n))).alias("frame_idx"),
-    )

@@ -122,5 +122,4 @@ def assemble_multipolygons(relations: DataFrame, ways: DataFrame,
                              "type": "multipolygon", "rel_id": int(rel_id)})))
         return pd.DataFrame(rows, columns=[f.name for f in MP_SCHEMA.fields])
 
-    return map_groups(joined, ["doc_id", "rel_id"], _process, MP_SCHEMA,
-                      joined.sparkSession.sparkContext.defaultParallelism)
+    return map_groups(joined, ["doc_id", "rel_id"], _process, MP_SCHEMA)

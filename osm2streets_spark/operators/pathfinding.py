@@ -1,8 +1,9 @@
 """G1-G4: per-document graph algorithms.
 
-Reference osm2streets/src/pathfinding.rs: Dijkstra distance (:14-27),
-A* simple path with zero heuristic = Dijkstra (:31-69), r-hop BFS
-(:72-93). Per-doc graphs are tiny, so these run inside one batched
+Reference osm2streets/src/pathfinding.rs: Dijkstra distance (:14-27)
+and A* simple path with zero heuristic = Dijkstra (:31-69); the r-hop
+BFS (:72-93) is registry's g_rhop self-join over quantized junction
+keys. Per-doc graphs are tiny, so these run inside one batched
 mapInPandas per doc-partition (networkx), like the reference's petgraph
 usage — the distribution axis is documents.
 """
@@ -11,7 +12,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
@@ -47,8 +48,6 @@ def shortest_dists_from_hubs(roads: DataFrame, max_hubs: int = 2) -> DataFrame:
     """G1: single-source Dijkstra from the first max_hubs intersections
     (by id) of each doc to every reachable intersection."""
     src = roads.select("doc_id", "src_i", "dst_i", "length_m")
-    spark = roads.sparkSession
-    n = spark.sparkContext.defaultParallelism * 2
 
     def _process(pdf):
         import networkx as nx
@@ -67,39 +66,7 @@ def shortest_dists_from_hubs(roads: DataFrame, max_hubs: int = 2) -> DataFrame:
                                  round(float(d), 3)))
         return pd.DataFrame(rows, columns=[f.name for f in DIST_SCHEMA.fields])
 
-    return map_groups(src, ["doc_id"], _process, DIST_SCHEMA, n)
-
-
-def r_hop_neighborhood(roads: DataFrame, rounds: int = 3) -> DataFrame:
-    """G3 find_nearby_roads (pathfinding.rs:72-93) expressed
-    relationally: r iterated self-joins frontier⨝edges — the Spark-native
-    BFS (bounded r, default 3 as at collapse_intersection.rs:21)."""
-    edges = roads.select("doc_id", "src_i", "dst_i").distinct()
-    back = edges.select("doc_id", F.col("dst_i").alias("src_i"),
-                        F.col("src_i").alias("dst_i"))
-    undirected = edges.unionByName(back).distinct()
-
-    # seed: minimum intersection id per doc
-    seed = undirected.groupBy("doc_id").agg(F.min("src_i").alias("i_id")) \
-        .withColumn("hop", F.lit(0))
-    frontier = seed
-    visited = seed
-    for r in range(1, rounds + 1):
-        nxt = (
-            frontier.join(
-                undirected,
-                (frontier.doc_id == undirected.doc_id)
-                & (frontier.i_id == undirected.src_i))
-            .select(undirected.doc_id, F.col("dst_i").alias("i_id"))
-            .distinct()
-            .withColumn("hop", F.lit(r))
-        )
-        nxt = nxt.join(visited.select("doc_id", "i_id"),
-                       ["doc_id", "i_id"], "left_anti") \
-                 .withColumn("hop", F.lit(r))
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+    return map_groups(src, ["doc_id"], _process, DIST_SCHEMA)
 
 
 PATH_SCHEMA = StructType([
@@ -132,8 +99,6 @@ def simple_paths(roads: DataFrame,
     profiles = profiles or PROFILES
     src = roads.select("doc_id", "way_id", "src_i", "dst_i", "length_m",
                        "lane_chars", "dir_chars")
-    spark = roads.sparkSession
-    n = spark.sparkContext.defaultParallelism * 2
 
     def _process(pdf):
         import networkx as nx
@@ -177,4 +142,4 @@ def simple_paths(roads: DataFrame,
         return pd.DataFrame(
             rows, columns=[f.name for f in PATH_SCHEMA.fields])
 
-    return map_groups(src, ["doc_id"], _process, PATH_SCHEMA, n)
+    return map_groups(src, ["doc_id"], _process, PATH_SCHEMA)

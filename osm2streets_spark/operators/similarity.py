@@ -156,6 +156,10 @@ _PLANES = _rng.randn(8, DIM)
 
 @F.pandas_udf(IntegerType())
 def _lsh_bucket(embedding: pd.Series) -> pd.Series:
+    """The one pandas UDF not written as a per-row kernel behind
+    `row_udf`: it stacks the whole Arrow batch into one matrix and folds
+    the dimension axis across all rows at once, which a per-row kernel
+    cannot express."""
     mats = np.stack([np.asarray(e, dtype=np.float64) for e in embedding])
     # sequential fold over the dimension axis — NOT a matmul — so each
     # plane dot is computed as ((((0+t1)+t2)+...)+t64) in float64,

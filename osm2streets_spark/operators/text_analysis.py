@@ -9,7 +9,12 @@ at 100 TB everything stays in whole-stage codegen (no Python).
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, LongType
+
+from .geometry_update import row_udf
 
 # language marker words: tiny deterministic stopword lists per language.
 # (A real system ships fasttext/CLD3; the heuristic here is the n-gram/
@@ -190,6 +195,24 @@ FP_MOD = 2147483647   # 2^31 - 1 (fits exactly in doubles/int64 products)
 FP_SAMPLE = 16  # keep hashes ≡ 0 (mod 16)
 
 
+# 31^j mod FP_MOD for the FP_K window positions, highest power first
+_FP_POWERS = ((31 ** np.arange(FP_K - 1, -1, -1, dtype=object))
+              % FP_MOD).astype(np.int64)
+
+
+def fingerprint_row(text) -> list[int]:
+    """One document's sorted distinct sampled k-gram hashes."""
+    text = text or ""
+    n = len(text)
+    if n < FP_K:
+        return []
+    codes = np.fromiter((ord(c) for c in text), dtype=np.int64, count=n)
+    win = np.lib.stride_tricks.sliding_window_view(codes, FP_K)
+    # no overflow: term ≤ 2^31·0x10FFFF ≈ 2^51, sum of 8 ≈ 2^54
+    h = (win * _FP_POWERS[None, :]).sum(axis=1) % FP_MOD
+    return np.unique(h[h % FP_SAMPLE == 0]).tolist()
+
+
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing-style k-gram fingerprints: base-31 polynomial rolling
     hash mod 2^31-1, keeping hashes ≡ 0 (mod 16), distinct per doc.
@@ -201,33 +224,8 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     Catalyst higher-order-aggregate chain this replaces, which paid an
     O(len·k) substring+lambda interpretation per char. The DuckDB
     oracle keeps the per-char fold; the values are identical."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
-    powers = ((31 ** np.arange(FP_K - 1, -1, -1, dtype=object))
-              % FP_MOD)
-    powers = powers.astype(np.int64)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _fp(texts):
-        out = []
-        for t in texts:
-            t = t or ""
-            n = len(t)
-            if n < FP_K:
-                out.append([])
-                continue
-            codes = np.fromiter((ord(c) for c in t), dtype=np.int64,
-                                count=n)
-            win = np.lib.stride_tricks.sliding_window_view(codes, FP_K)
-            # no overflow: term ≤ 2^31·0x10FFFF ≈ 2^51, sum of 8 ≈ 2^54
-            h = (win * powers[None, :]).sum(axis=1) % FP_MOD
-            keep = h[h % FP_SAMPLE == 0]
-            out.append(np.unique(keep).tolist())
-        return pd.Series(out)
-
-    return docs.select("doc_id", F.explode(_fp("text")).alias("fp_hash"))
+    fp = row_udf(fingerprint_row, ArrayType(LongType()))
+    return docs.select("doc_id", F.explode(fp("text")).alias("fp_hash"))
 
 
 def fingerprints_oracle_sql(doc_table: str) -> str:

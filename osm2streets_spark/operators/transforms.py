@@ -45,7 +45,7 @@ def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
     import numpy as np
 
     from ..geom.intersection_kernel import (
-        sort_roads_cw, compute_trims_ex, terminus_geometry,
+        sort_roads_cw, compute_trims, terminus_geometry,
     )
 
     incident: dict[int, list] = {}
@@ -102,7 +102,7 @@ def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
         if any(e["pretrim"] is not None for e in cw):
             trims = {e["key"]: float(e["pretrim"] or 0.0) for e in cw}
         else:
-            trims, _mode = compute_trims_ex(cw)
+            trims, _mode = compute_trims(cw)
         for r, is_src in ends:
             _set(r, is_src, trims[(r["road_id"], is_src)])
 

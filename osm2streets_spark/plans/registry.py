@@ -51,7 +51,7 @@ from ..operators.tiles import tile_xy
 from ..operators.split_ways import interior_point_road_map
 from ..operators.extract import node_features
 from ..operators.features import snap_features_to_roads, road_stop_lines
-from ..operators.pathfinding import shortest_dists_from_hubs, r_hop_neighborhood
+from ..operators.pathfinding import shortest_dists_from_hubs
 from ..operators.render import render_lane_polygons, render_surfaces
 from ..operators.markings import render_lane_markings
 from ..operators.dual_carriageway import detect_dual_carriageway_endpoints

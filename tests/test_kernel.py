@@ -81,15 +81,17 @@ def test_clockwise_order():
 
 def test_trims_two_road_degenerate():
     roads = [road(0, 0), road(1, 180)]
-    trims = compute_trims(sort_roads_cw(roads))
+    trims, mode = compute_trims(sort_roads_cw(roads))
     # 1.0 m ideal (degenerate.rs:8-61)
+    assert mode == "degenerate"
     assert all(abs(t - 1.0) < 1e-9 for t in trims.values())
 
 
 def test_trims_four_way_clear_overlap():
     roads = [road(i, a, width=10.0) for i, a in enumerate([0, 90, 180, 270])]
     cw = sort_roads_cw(roads)
-    trims = compute_trims(cw)
+    trims, mode = compute_trims(cw)
+    assert mode == "general"
     # perpendicular 10 m-wide roads must trim ~5 m to clear each other
     for t in trims.values():
         assert 4.0 < t < 8.0

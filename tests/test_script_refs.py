@@ -1,9 +1,12 @@
 """Every `scripts/<name>.py` or `.sh` that the package, the scripts,
 the tests, the README or the verify skill names must exist, so deleting
-a script also means deleting or rewording what points at it."""
+a script also means deleting or rewording what points at it. And every
+top-level definition of the package must be used somewhere, so code
+that nothing calls is deleted rather than kept."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -27,3 +30,50 @@ def test_named_scripts_exist():
         for name in _REF.findall(p.read_text(encoding="utf-8"))
         if not (ROOT / "scripts" / name).exists())
     assert not missing, missing
+
+
+def _python_files():
+    for d in ("osm2streets_spark", "tests", "scripts", "perfbench"):
+        yield from sorted((ROOT / d).rglob("*.py"))
+    yield from sorted(ROOT.glob("bench*.py"))
+
+
+def _top_level_names(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) \
+                else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        yield n.id
+
+
+def test_every_definition_is_used():
+    """Each top-level function, class and assignment in
+    osm2streets_spark/ (dunders excepted) is loaded by name, read as an
+    attribute or named as an identifier string somewhere in the
+    package, tests/, scripts/, perfbench/ or bench*.py. Import
+    statements do not count as a use."""
+    used, defined = set(), []
+    for p in _python_files():
+        tree = ast.parse(p.read_text(encoding="utf-8"))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                    and n.value.isidentifier():
+                used.add(n.value)
+        if p.is_relative_to(ROOT / "osm2streets_spark"):
+            defined += [(p.relative_to(ROOT), name)
+                        for name in _top_level_names(tree)
+                        if not (name.startswith("__")
+                                and name.endswith("__"))]
+    unused = sorted(f"{p}: {name}" for p, name in defined
+                    if name not in used)
+    assert not unused, unused

@@ -169,11 +169,19 @@ def test_tiny_batches_identical_per_doc_operators(spark, qname):
     pd.testing.assert_frame_equal(base, tiny)
 
 
-def test_no_hand_rolled_group_streaming():
+@pytest.mark.parametrize("tokens,helpers", [
+    (("stream_groups", "sortWithinPartitions"),
+     {"geometry_update.py": ("stream_groups", "map_groups")}),
+    (("pandas_udf",),
+     {"geometry_update.py": ("row_udf",), "similarity.py": ("_lsh_bucket",)}),
+], ids=["stream_groups", "pandas_udf"])
+def test_no_hand_rolled_group_streaming(tokens, helpers):
     """Every grouped kernel goes through map_groups, which sorts for
-    stream_groups: neither name may appear in operators/ outside the
-    two helper definitions, so a hand-rolled copy of the shuffle cannot
-    come back."""
+    stream_groups, and every per-row kernel through row_udf: no token
+    may appear in operators/ outside its helper definitions, so a
+    hand-rolled copy of the shuffle or of the per-row Arrow loop cannot
+    come back. similarity._lsh_bucket folds a whole batch at once and
+    is the one pandas UDF allowed outside row_udf."""
     import ast
     import pathlib
 
@@ -183,13 +191,13 @@ def test_no_hand_rolled_group_streaming():
     for path in sorted(ops.glob("*.py")):
         src = path.read_text()
         lines = src.splitlines()
-        if path.name == "geometry_update.py":
-            for node in ast.parse(src).body:
-                if isinstance(node, ast.FunctionDef) \
-                        and node.name in ("stream_groups", "map_groups"):
-                    lines[node.lineno - 1:node.end_lineno] = \
-                        [""] * (node.end_lineno - node.lineno + 1)
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) \
+                    and node.name in helpers.get(path.name, ()):
+                first = min([node.lineno] + [d.lineno
+                                             for d in node.decorator_list])
+                lines[first - 1:node.end_lineno] = \
+                    [""] * (node.end_lineno - first + 1)
         offenders += [f"{path.name}:{i}" for i, line in enumerate(lines, 1)
-                      if "stream_groups" in line
-                      or "sortWithinPartitions" in line]
+                      if any(t in line for t in tokens)]
     assert not offenders, offenders
