@@ -1,7 +1,7 @@
 """Per-intersection geometry + movement kernel (pure Python/numpy).
 
-Runs inside an ``applyInPandas`` group — one intersection at a time, with
-its incident road end-geometries. This is the Spark re-expression of the
+Runs inside a T6 ``map_groups`` junction group — one intersection at a
+time, with its incident road end-geometries (see road_end). This is the Spark re-expression of the
 reference's update_geometry / update_movements dispatch
 (osm2streets/src/operations/update_geometry.rs:8-65,
  geometry/mod.rs:103-168, intersection.rs:286-447).
@@ -13,7 +13,8 @@ intersection (the reference orients them TOWARD it; reversed here so
 Semantics reproduced (cited), algorithms re-derived:
   * clockwise road ordering via walk-back-by-shortest-road sorting points
     (intersection.rs:224-276, incl. the `as i64` angle-key truncation)
-  * terminus square ≈ road width (geometry/terminus.rs:8-64)
+  * one dispatch per junction: pretrim memo, else terminus square ≈
+    road width (geometry/terminus.rs:8-64), degenerate, ramp, general
   * degenerate 2-road trim: 1.0 m ideal, 0.1 m min (geometry/degenerate.rs)
   * general case: adjacent-edge collision → deepest hit wins per road
     (geometry/general_case.rs:11-128); the corner polygon is the
@@ -227,22 +228,54 @@ def ramp_trims(roads_cw: list[dict]) -> dict | None:
     }
 
 
-def compute_trims(roads_cw: list[dict],
-                  edges_full: list | None = None) -> tuple[dict, str]:
-    """→ ({road_key: trim_meters}, mode). road_key = (road_id,
-    is_src_end); mode ∈ {'terminus','degenerate','ramp','general'}.
+def road_end(road_id: int, is_src_end: bool, xy, width: float,
+             **extras) -> dict:
+    """One road end at a junction in the kernels' away frame: the flat
+    ``xy`` polyline reshaped to points and, at a dst end, reversed so it
+    leaves the junction. ``extras`` (pretrim memo, is_edge, other_i,
+    is_link, movement fields, lane specs) ride along verbatim."""
+    pl = np.asarray(xy, dtype=float).reshape(-1, 2)
+    return {"key": (road_id, is_src_end), "road_id": road_id,
+            "is_src_end": is_src_end, "xy": pl if is_src_end else pl[::-1],
+            "width": float(width), **extras}
 
+
+def compute_trims(roads_cw: list[dict]) -> tuple[dict, str]:
+    """The per-junction trims dispatch (geometry/mod.rs:103-168) →
+    ({road_key: trim_meters}, mode). road_key = (road_id, is_src_end);
+    mode ∈ {'pretrimmed','terminus','degenerate','ramp','general'}.
+
+    pretrimmed.rs:13-65: when any end carries a ``pretrim`` memo (a T1
+    merge recorded where it was already trimmed; None/NaN = unset), the
+    memos are used verbatim, 0 where unset;
+    n==1: terminus.rs:8-31 — a dead end trims its width (0.4×length
+    when short); a MapEdge road shorter than 3×width is extended to
+    3×width before trimming width off, so its net trim, relative to
+    the original center that the center rebuild consumes, is
+    negative below 2×width (an extension);
     n==2: degenerate.rs:8-38 (1.0 m ideal / 0.1 m short / bail <0.2);
     n==3 with a ramp-type road: on_off_ramp.rs (see ramp_trims);
-    n>=3: general_case.rs trim_to_corners — every adjacent clockwise
+    otherwise general_case.rs trim_to_corners — every adjacent clockwise
     pair of road EDGES (facing edges only, not all pairs) collides at
     the hit nearest the intersection; each side projects the hit
     perpendicularly back to its center line and trims to the candidate
     nearest the intersection. Deepest trim per road end wins."""
+    memo = {r["key"]: r.get("pretrim") for r in roads_cw}
+    memo = {k: float(v) for k, v in memo.items() if v is not None and v == v}
+    if memo:
+        return {r["key"]: memo.get(r["key"], 0.0) for r in roads_cw}, \
+            "pretrimmed"
     n = len(roads_cw)
-    trims = {r["key"]: 0.0 for r in roads_cw}
     if n == 1:
-        return trims, "terminus"
+        r = roads_cw[0]
+        w = max(r["width"], 1.0)
+        length = polyline_length(r["xy"])
+        if r.get("is_edge"):
+            trim = length - max(length, 3.0 * w) + w
+        else:
+            trim = w if length > w + 1.0 else 0.4 * length
+        return {r["key"]: float(trim)}, "terminus"
+    trims = {r["key"]: 0.0 for r in roads_cw}
     if n == 2:
         lengths = [polyline_length(r["xy"]) for r in roads_cw]
         if min(lengths) < 0.2:
@@ -255,8 +288,7 @@ def compute_trims(roads_cw: list[dict],
     if rt is not None:
         return rt, "ramp"
 
-    edges = list(edges_full) if edges_full is not None \
-        else _cw_edges(roads_cw)
+    edges = _cw_edges(roads_cw)
     edges.append(edges[0])
     lengths = {r["key"]: polyline_length(r["xy"]) for r in roads_cw}
     for (ra, ea), (rb, eb) in zip(edges, edges[1:]):
@@ -320,58 +352,17 @@ def _shift_end_corners(center_away: np.ndarray, width: float):
             shift_polyline(center_away, -half)[0])
 
 
-def terminus_geometry(xy: np.ndarray, width: float,
-                      is_map_edge: bool) -> tuple[float, np.ndarray]:
-    """geometry/terminus.rs:8-64 → (trim_m, ring). ``xy`` points away
-    from the intersection. MapEdges extend short roads to 3×width
-    before trimming width off (a negative net trim = extension);
-    dead-ends trim width (or 0.4×length when short). Ring corners are
-    shifted-polyline endpoints (see _shift_end_corners)."""
-    w = max(width, 1.0)
-    length = polyline_length(xy)
-    if is_map_edge:
-        # terminus.rs:17-31: a MapEdge road shorter than 3*w is ALWAYS
-        # extended to 3*w first, and the square spans [extended tip,
-        # extended tip + w] — even when the net trim on the ORIGINAL
-        # length is positive (2w < len < 3w), so the square can poke
-        # past the clip boundary (arizona golden: outer edge 7.3 m
-        # beyond the clip node, depth exactly w). Only the ring uses
-        # the extended line; the recorded trim stays relative to the
-        # original center, which the center rebuild consumes.
-        eff_len = max(length, 3.0 * w)
-        trim = length - eff_len + w
-        pl = (extend_to_length(xy[::-1], eff_len)[::-1]
-              if eff_len > length else xy)
-        c_r, c_l = _shift_end_corners(_trimmed_center_away(pl, w), w)
-        b_r, b_l = _shift_end_corners(pl, w)
-    else:
-        trim = cap = w if length > w + 1.0 else 0.4 * length
-        c_r, c_l = _shift_end_corners(_trimmed_center_away(xy, trim), w)
-        b_r, b_l = _shift_end_corners(
-            _trimmed_center_away(xy, max(trim - cap, 0.0)), w)
-    ring = np.array([c_r, c_l, b_l, b_r, c_r])
-    return float(trim), ring
-
-
-def _trimmed_edges(roads_cw: list[dict], trims: dict,
-                   edges_full: list | None = None):
+def _trimmed_edges(roads_cw: list[dict], trims: dict):
     """Edges of the TRIMMED centers in clockwise order, away-pointing,
-    plus per-edge bookkeeping for polygon_from_corners. Reuses the
-    untrimmed edge polylines from the trim pass when the trim is 0."""
+    plus per-edge bookkeeping for polygon_from_corners."""
     out = []
-    for i, r in enumerate(roads_cw):
+    for r in roads_cw:
         half = max(r["width"], 0.5) / 2.0
         length = polyline_length(r["xy"])
         trim = min(trims.get(r["key"], 0.0), length - 0.01)
-        if trim > 0:
-            center = slice_between(r["xy"], trim, length)
-            pls = (shift_polyline(center, -half),
-                   shift_polyline(center, half))
-        elif edges_full is not None:
-            pls = (edges_full[2 * i][1], edges_full[2 * i + 1][1])
-        else:
-            pls = (shift_polyline(r["xy"], -half),
-                   shift_polyline(r["xy"], half))
+        center = slice_between(r["xy"], trim, length) if trim > 0 \
+            else r["xy"]
+        pls = (shift_polyline(center, -half), shift_polyline(center, half))
         for pl in pls:  # right_in then left_in (cw order)
             out.append({"road": r, "pl": pl, "orig_len": length})
     return out
@@ -452,32 +443,34 @@ def _ring_or_circle(endpts: list, roads_cw: list[dict]) -> np.ndarray:
     return circle_ring(_node_point(roads_cw), 3.0)
 
 
-def _cap_corners_ext(xy: np.ndarray, trim: float, width: float):
-    """Shifted-endpoint cap corners honouring a negative trim (extension
-    past the original end — ramp 'other thick' roads,
-    on_off_ramp.rs:143-155). → (right-of-away, left-of-away)."""
-    return _shift_end_corners(_trimmed_center_away(xy, trim), width)
-
-
 def intersection_polygon(roads_cw: list[dict], trims: dict,
-                         mode: str = "general",
-                         edges_full: list | None = None) -> np.ndarray:
-    """Closed ring for the junction area.
+                         mode: str = "general") -> np.ndarray:
+    """The junction-area ring dispatch, fed compute_trims' (trims, mode).
 
-    n==1: terminus square (terminus.rs — trim handled by caller via
-    ``trims``); n==2: degenerate square from the 4 trimmed corner
-    points (degenerate.rs:40-47); n>=3: polygon_from_corners
-    (geometry/mod.rs:172-229) — each trimmed edge contributes its
-    intersection-side endpoint, and adjacent edges of different roads
-    contribute the collision corner of the edges re-extended to their
-    original lengths."""
+    n==1: the square from the trimmed end back toward the junction by
+    up to width (terminus.rs:32-64); a MapEdge terminus puts it on the
+    center line extended to 3×width, [extended tip, + width] — even
+    when the net trim on the ORIGINAL length is positive (2w < len <
+    3w), so the square can poke past the clip boundary (arizona golden:
+    outer edge 7.3 m beyond the clip node, depth exactly w); n==2:
+    degenerate square from the 4 trimmed corner points
+    (degenerate.rs:40-47); ramp: the 6 final center-line endpoints;
+    otherwise polygon_from_corners (geometry/mod.rs:172-229) — each
+    trimmed edge contributes its intersection-side endpoint, and
+    adjacent edges of different roads contribute the collision corner
+    of the edges re-extended to their original lengths. Corner points
+    are shifted-polyline endpoints (see _shift_end_corners)."""
     if len(roads_cw) == 1:
         r = roads_cw[0]
         w = max(r["width"], 1.0)
-        trim = trims.get(r["key"], 0.0)
-        c_r, c_l = _shift_end_corners(_trimmed_center_away(r["xy"], trim), w)
+        xy, trim = r["xy"], trims.get(r["key"], 0.0)
+        if mode == "terminus" and r.get("is_edge"):
+            if polyline_length(xy) < 3.0 * w:
+                xy = extend_to_length(xy[::-1], 3.0 * w)[::-1]
+            trim = w
+        c_r, c_l = _shift_end_corners(_trimmed_center_away(xy, trim), w)
         b_r, b_l = _shift_end_corners(
-            _trimmed_center_away(r["xy"], max(trim - w, 0.0)), w)
+            _trimmed_center_away(xy, max(trim - w, 0.0)), w)
         return np.array([c_r, c_l, b_l, b_r, c_r])
     if len(roads_cw) == 2:
         if min(polyline_length(r["xy"]) for r in roads_cw) < 0.2:
@@ -498,13 +491,13 @@ def intersection_polygon(roads_cw: list[dict], trims: dict,
         # center lines — no corner collisions
         endpts = []
         for r in roads_cw:
-            c_r, c_l = _cap_corners_ext(
-                r["xy"], trims.get(r["key"], 0.0), r["width"])
+            c_r, c_l = _shift_end_corners(_trimmed_center_away(
+                r["xy"], trims.get(r["key"], 0.0)), r["width"])
             endpts.append(c_l)
             endpts.append(c_r)
         return _ring_or_circle(endpts, roads_cw)
 
-    edges = _trimmed_edges(roads_cw, trims, edges_full)
+    edges = _trimmed_edges(roads_cw, trims)
     edges.append(edges[0])
     endpts = []
     for one, two in zip(edges, edges[1:]):

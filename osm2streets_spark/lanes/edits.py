@@ -12,8 +12,7 @@ from __future__ import annotations
 import json
 
 from .inference import (
-    LaneSpec, DRIVING, BIKING, PARKING, SIDEWALK, BUFFER, FWD, BACK,
-    default_width,
+    DRIVING, BIKING, PARKING, BUFFER, FWD, BACK, default_width,
 )
 
 

@@ -18,8 +18,7 @@ from pyspark.sql.types import DoubleType
 
 from ..geom.core import lonlat_to_xy, project_onto, polyline_length
 from .geometry_update import row_udf
-
-QUANTUM = 1e7
+from .split_ways import point_key
 
 
 def snap_features_to_roads(features: DataFrame,
@@ -29,9 +28,7 @@ def snap_features_to_roads(features: DataFrame,
     the reference's HashMap lookup (split_ways.rs:70)."""
     f = features.select(
         "doc_id", "node_id", "feature", "signal_dir", "crossing_kind",
-        "crossing_island", "lon", "lat",
-        F.round(F.col("lon") * QUANTUM).cast("long").alias("qx"),
-        F.round(F.col("lat") * QUANTUM).cast("long").alias("qy"),
+        "crossing_island", "lon", "lat", *point_key(),
     )
     return f.join(interior_map, ["doc_id", "qx", "qy"], "inner")
 

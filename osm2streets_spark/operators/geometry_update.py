@@ -1,12 +1,13 @@
 """T6: per-intersection geometry update + movements, and the road
 center-line rebuild (K6/K9/K10).
 
-This is the heart of the engine (SURVEY.md §2.10 T6): a cogrouped
-applyInPandas over (doc_id, i_id) runs the pure-Python kernel
-(geom/intersection_kernel.py) per junction; the resulting trims join
-back to roads — each road receives trim_start from its src group and
-trim_end from its dst group, two independent groups exactly like the
-reference's per-intersection loop (operations/update_geometry.rs:8-65).
+This is the heart of the engine (SURVEY.md §2.10 T6): one map_groups
+pass over (doc_id, i_id) runs the pure-Python kernel's single dispatch
+(geom/intersection_kernel.py) per junction, whatever its degree; the
+resulting trims join back to roads through one pivot — each road
+receives trim_start from its src group and trim_end from its dst group,
+exactly like the reference's per-intersection loop
+(operations/update_geometry.rs:8-65).
 
 Scale notes: the group key (doc_id, i_id) is maximally fine-grained —
 one junction per group, bounded payload (≤ degree × polyline points),
@@ -18,7 +19,6 @@ partitions. Python crossing is Arrow-batched.
 from __future__ import annotations
 
 import json
-import math
 
 import numpy as np
 import pandas as pd
@@ -35,10 +35,8 @@ from ..geom.core import (
 )
 from ..geom.intersection_kernel import (
     sort_roads_cw, compute_trims, intersection_polygon,
-    movements_and_kind, terminus_geometry, _cw_edges,
+    movements_and_kind, road_end,
 )
-
-M_PER_DEG = 111_194.92664455873
 
 
 # ---------------------------------------------------------------------------
@@ -63,15 +61,15 @@ def project_row(pts, lon0, lat0, shift) -> tuple[list, float]:
         # K3/K6: the mapped way sits at the tagged placement; shift to
         # the full-width center (road.rs:166-193)
         xy = shift_polyline(xy, shift)
-    # length of the FINAL reference line: the pass-1 gate and the
-    # trims-only too_short flag compare trims against exactly this
+    # length of the FINAL reference line: the trims-only too_short flag
+    # compares trims against exactly this
     return xy.ravel().tolist(), float(polyline_length(xy))
 
 
 def with_projected_geometry(roads: DataFrame, anchors: DataFrame) -> DataFrame:
     """Join per-doc projection anchors (min corner of the doc bbox) and
     compute the meters-plane reference line (placement-corrected) plus
-    its length (consumed by the T6 pass-1 candidate gate)."""
+    its length (consumed by apply_trim_flags' too_short flag)."""
     r = roads.join(anchors.select(
         "doc_id", F.col("min_lon").alias("lon0"), F.col("min_lat").alias("lat0")
     ), "doc_id")
@@ -106,62 +104,34 @@ TRIM_SCHEMA = StructType([
 
 def _t6_rows(group: list[dict], trims_only: bool) -> list[tuple]:
     # deterministic input order: angle-sort ties and movement ordering
-    # must not depend on Arrow batch arrival order. Plain dict rows, not
-    # a pandas frame: per-group pandas slicing/itertuples dominated this
-    # kernel's profile (round-7 rewrite; semantics unchanged — the
-    # (road_id, is_src_end) key is unique within a junction group, so
-    # sort stability is irrelevant).
+    # must not depend on Arrow batch arrival order (the (road_id,
+    # is_src_end) key is unique within a junction group, so sort
+    # stability is irrelevant).
     group = sorted(group, key=lambda r: (r["road_id"], r["is_src_end"]))
     doc_id = group[0]["doc_id"]
     i_id = int(group[0]["i_id"])
-    driving_side = group[0]["driving_side"]
     roads = []
     for row in group:
-        xy = np.asarray(row["xy"], dtype=float).reshape(-1, 2)
-        if bool(row["is_src_end"]):
-            xy_away = xy          # src end: polyline already leaves the junction
-        else:
-            xy_away = xy[::-1]    # dst end: reverse so it points away
         banned, only = set(), set()
         rj = row.get("restrictions_json")
         if isinstance(rj, str) and rj:
             for item in json.loads(rj):
                 if item["frm"] == row["road_id"]:
                     (banned if item["rt"] == "Ban" else only).add(item["to"])
-        pre = row.get("pretrim")
-        pre = None if pre is None or (isinstance(pre, float)
-                                      and math.isnan(pre)) else float(pre)
-        roads.append({
-            "key": (int(row["road_id"]), bool(row["is_src_end"])),
-            "road_id": int(row["road_id"]),
-            "is_src_end": bool(row["is_src_end"]),
-            "xy": xy_away,
-            "width": float(row["total_width"]),
-            "driveable": bool(row["driveable"]),
-            "can_out": bool(row["can_out"]),
-            "can_in": bool(row["can_in"]),
-            "is_link": bool(row.get("is_link", False)),
-            "banned_to": banned,
-            "only_to": only,
-            "pretrim": pre,
-            "other_i": int(row.get("other_i", 0) or 0),
-        })
+        roads.append(road_end(
+            int(row["road_id"]), bool(row["is_src_end"]), row["xy"],
+            row["total_width"],
+            driveable=bool(row["driveable"]),
+            can_out=bool(row["can_out"]), can_in=bool(row["can_in"]),
+            is_link=bool(row.get("is_link", False)),
+            banned_to=banned, only_to=only,
+            pretrim=row.get("pretrim"),
+            is_edge=bool(row.get("is_edge", False)),
+            other_i=int(row.get("other_i", 0) or 0)))
     roads_cw = sort_roads_cw(roads)
-    edges_full = None
-    if any(r["pretrim"] is not None for r in roads):
-        # pretrimmed path (geometry/pretrimmed.rs:13-65): a T1 merge
-        # recorded where each incident road was already trimmed — use
-        # those values verbatim instead of colliding edges again
-        trims = {r["key"]: float(r["pretrim"] or 0.0) for r in roads_cw}
-        mode = "general"
-    else:
-        if len(roads_cw) >= 3:
-            edges_full = _cw_edges(roads_cw)
-        trims, mode = compute_trims(roads_cw, edges_full)
-    if trims_only:
-        ring = None
-        movements, kind = [], None
-    else:
+    trims, mode = compute_trims(roads_cw)
+    ring = movements = kind = None
+    if not trims_only:
         # NOTE on the circle fallback (round-7 ADVICE): the reference's
         # update_geometry.rs Err branch does NOT reset trim_start/
         # trim_end — roads keep the values earlier successful passes
@@ -171,160 +141,63 @@ def _t6_rows(group: list[dict], trims_only: bool) -> list[tuple]:
         # WORSE against the goldens (leeds -3 / arizona -2 road rings),
         # so the computed trims are applied as the mirror of that
         # persistence.
-        ring = intersection_polygon(roads_cw, trims, mode, edges_full)
-        movements, kind = movements_and_kind(roads_cw, driving_side)
-
-    rows = []
-    for cw_idx, r in enumerate(roads_cw):
-        first = cw_idx == 0
-        rows.append((
-            doc_id, i_id, r["road_id"], r["is_src_end"],
-            float(trims[r["key"]]),
-            ring.ravel().tolist() if (first and ring is not None) else None,
-            kind if first else None,
-            json.dumps(movements) if (first and not trims_only) else None,
-            cw_idx,
-        ))
-    return rows
+        ring = intersection_polygon(roads_cw, trims, mode).ravel().tolist()
+        movements, kind = movements_and_kind(roads_cw,
+                                             group[0]["driving_side"])
+        movements = json.dumps(movements)
+    return [(doc_id, i_id, r["road_id"], r["is_src_end"],
+             float(trims[r["key"]]),
+             *((ring, kind, movements) if cw_idx == 0 else (None,) * 3),
+             cw_idx)
+            for cw_idx, r in enumerate(roads_cw)]
 
 
-def _group_codes(doc: np.ndarray, iid: np.ndarray) -> np.ndarray:
-    """First-occurrence-ordered group index per row for the (doc_id,
-    i_id) key — the vectorized replacement for the pandas
-    groupby(sort=False) dispatch that dominated this kernel's profile.
-    Handles non-contiguous groups (the sequential replay's ends frame
-    is in road order, not junction order)."""
+def group_runs(doc: np.ndarray, key: np.ndarray) -> list[np.ndarray]:
+    """Row-index arrays of the complete (doc, key) groups of a batch,
+    groups in first-occurrence order (exactly a groupby(sort=False)
+    iteration order), rows in batch order. Vectorized group codes
+    instead of a per-group pandas groupby + frame slices + itertuples,
+    which dominated the grouped kernels' profiles with no geometry in
+    it. Handles non-contiguous groups (the sequential replay's ends
+    frame is in road order, not junction order)."""
     n = len(doc)
     d_codes = pd.factorize(doc)[0].astype(np.int64)
-    arr = np.column_stack([d_codes, iid.astype(np.int64)])
+    arr = np.column_stack([d_codes, key.astype(np.int64)])
     uniq, inv = np.unique(arr, axis=0, return_inverse=True)
     inv = inv.reshape(-1)  # numpy 2.x returns (n,1) with axis=0
     first = np.full(len(uniq), n, dtype=np.int64)
     np.minimum.at(first, inv, np.arange(n, dtype=np.int64))
-    order = np.argsort(first, kind="stable")
     rank = np.empty(len(uniq), dtype=np.int64)
-    rank[order] = np.arange(len(uniq), dtype=np.int64)
-    return rank[inv]
+    rank[np.argsort(first, kind="stable")] = np.arange(len(uniq))
+    gidx = rank[inv]
+    order = np.argsort(gidx, kind="stable")
+    gvals = gidx[order]
+    return np.split(order, np.nonzero(gvals[1:] != gvals[:-1])[0] + 1)
+
+
+def junction_groups(pdf: pd.DataFrame):
+    """Yield the complete (doc_id, i_id) groups of a frame as lists of
+    plain dict rows (see group_runs). A frame without rows (the
+    sequential replay's ends frame of a doc left with no roads has no
+    columns either) has no groups."""
+    if pdf.empty:
+        return
+    col = {c: pdf[c].to_numpy() for c in pdf.columns}
+    for run in group_runs(col["doc_id"], col["i_id"]):
+        yield [{c: v[j] for c, v in col.items()} for j in run]
 
 
 def t6_process(pdf: pd.DataFrame, trims_only: bool = False) -> pd.DataFrame:
     """Pure per-batch T6: one pandas frame of road-ends (complete
-    junction groups) → trim rows. Shared verbatim by the Spark
-    mapInPandas wrapper below and (via t6_rows_core) the single-node
-    sequential replay (plans/sequential.py) so the two engines stay
-    bit-identical."""
-    cols = [f.name for f in TRIM_SCHEMA.fields]
-    col = {c: pdf[c].to_numpy() for c in pdf.columns}
-    return pd.DataFrame(t6_rows_core(col, trims_only), columns=cols)
-
-
-def t6_rows_core(col: dict[str, np.ndarray],
-                 trims_only: bool = False) -> list[tuple]:
-    """The T6 kernel over a dict of column arrays → TRIM_SCHEMA-ordered
-    tuples (doc_id, i_id, road_id, is_src_end, trim, polygon_xy, kind,
-    movements_json, cw_index).
-
-    Round-7 rewrite: the batch is decomposed ONCE into numpy column
-    arrays and dispatched with vectorized group codes; the per-junction
-    kernel gets plain dict rows. The previous pandas-group dispatch
-    (groupby + per-group frame slices + itertuples) was ~60% of the
-    whole T6 stage's CPU at sf0.1 — pure overhead, no geometry."""
-    rows: list[tuple] = []
-    n = len(col["doc_id"]) if col else 0
-    if n == 0:
-        return rows
-    names = list(col)
-    gidx = _group_codes(col["doc_id"], col["i_id"])
-    counts = np.bincount(gidx)[gidx]
-    keep = np.ones(n, dtype=bool)
-    if trims_only and "geom_length" in col:
-        # pass-1 degree split: degree-1 (terminus.rs:8-29) and degree-2
-        # (degenerate.rs:17-38) trims are closed-form arithmetic on
-        # (length, width, is_edge) — vectorized numpy over the whole
-        # batch, no polyline work. Only degree ≥ 3 groups (and any
-        # pretrimmed group) fall through to the per-junction kernel.
-        if "pretrim" in col:
-            has_pre = np.bincount(
-                gidx, weights=(~pd.isna(col["pretrim"])).astype(float),
-                minlength=int(gidx.max()) + 1) > 0
-            pre_ok = ~has_pre[gidx]
-        else:
-            pre_ok = np.ones(n, dtype=bool)
-        easy_mask = (counts <= 2) & pre_ok
-        if easy_mask.any():
-            gl = col["geom_length"][easy_mask].astype(float)
-            w = np.maximum(
-                col["total_width"][easy_mask].astype(float), 1.0)
-            if "is_edge" in col:
-                ie = pd.Series(col["is_edge"][easy_mask]) \
-                    .fillna(False).to_numpy(bool)
-            else:
-                ie = np.zeros(int(easy_mask.sum()), dtype=bool)
-            t1 = np.where(ie,
-                          gl - np.maximum(gl, 3.0 * w) + w,
-                          np.where(gl > w + 1.0, w, 0.4 * gl))
-            gmin = np.full(int(gidx.max()) + 1, np.inf)
-            np.minimum.at(gmin, gidx[easy_mask], gl)
-            minlen = gmin[gidx[easy_mask]]
-            t2 = np.where(minlen < 0.2, 0.0,
-                          np.where(gl > 2.0, 1.0, 0.1))
-            trims_v = np.where(counts[easy_mask] == 1, t1, t2)
-            for d, i, rid, s, t in zip(
-                    col["doc_id"][easy_mask], col["i_id"][easy_mask],
-                    col["road_id"][easy_mask],
-                    col["is_src_end"][easy_mask], trims_v):
-                rows.append((d, int(i), int(rid), bool(s), float(t),
-                             None, None, None, 0))
-        keep = ~easy_mask
-    # fast path: degree-1 junctions (termini — typically the majority
-    # of junction groups) skip the full kernel: trim 0, square end
-    # polygon, no movements (terminus.rs:8-64).
-    kidx = np.nonzero(keep)[0]
-    kcounts = counts[kidx]
-    for j in kidx[kcounts == 1]:
-        pre = col["pretrim"][j] if "pretrim" in col else None
-        pre = None if pre is None or (isinstance(pre, float)
-                                      and math.isnan(pre)) else float(pre)
-        xy = np.asarray(col["xy"][j], dtype=float).reshape(-1, 2)
-        if not bool(col["is_src_end"][j]):
-            xy = xy[::-1]
-        w = max(float(col["total_width"][j]), 1.0)
-        is_edge = bool(col["is_edge"][j]) if "is_edge" in col else False
-        # terminus.rs:8-64: trim by width (MapEdges extend short
-        # roads first); a T1 pretrim memo overrides
-        if pre is not None:
-            trim, ring = pre, None
-            if not trims_only:
-                key = (int(col["road_id"][j]), bool(col["is_src_end"][j]))
-                ring = intersection_polygon(
-                    [{"key": key, "xy": xy, "width": w,
-                      "road_id": int(col["road_id"][j])}], {key: pre})
-        else:
-            trim, ring = terminus_geometry(xy, w, is_edge)
-        if trims_only:
-            rows.append((col["doc_id"][j], int(col["i_id"][j]),
-                         int(col["road_id"][j]),
-                         bool(col["is_src_end"][j]), float(trim),
-                         None, None, None, 0))
-            continue
-        kind = "Terminus" if bool(col["driveable"][j]) else "Connection"
-        rows.append((col["doc_id"][j], int(col["i_id"][j]),
-                     int(col["road_id"][j]),
-                     bool(col["is_src_end"][j]), float(trim),
-                     ring.ravel().tolist(), kind, "[]", 0))
-    multi_j = kidx[kcounts > 1]
-    if len(multi_j):
-        # contiguous runs per group, in first-occurrence order (gidx
-        # ranks groups by first occurrence, so a stable sort on it is
-        # exactly the old groupby(sort=False) iteration order)
-        order = multi_j[np.argsort(gidx[multi_j], kind="stable")]
-        gvals = gidx[order]
-        starts = np.nonzero(np.r_[True, gvals[1:] != gvals[:-1]])[0]
-        bounds = np.r_[starts, len(order)]
-        for s0, e0 in zip(bounds[:-1], bounds[1:]):
-            grp = [{c: col[c][j] for c in names} for j in order[s0:e0]]
-            rows.extend(_t6_rows(grp, trims_only))
-    return rows
+    junction groups) → TRIM_SCHEMA rows (doc_id, i_id, road_id,
+    is_src_end, trim, polygon_xy, kind, movements_json, cw_index).
+    Every junction, whatever its degree, goes through _t6_rows and the
+    kernel's one dispatch. Shared verbatim by the Spark map_groups pass
+    below and the single-node sequential replay (plans/sequential.py)
+    so the two engines stay bit-identical."""
+    rows = [row for grp in junction_groups(pdf)
+            for row in _t6_rows(grp, trims_only)]
+    return pd.DataFrame(rows, columns=[f.name for f in TRIM_SCHEMA.fields])
 
 
 def stream_groups(batches, key_cols: list[str], process):
@@ -443,14 +316,13 @@ def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,
             F.col("src_i").alias("other_i"),
         ),
     )
-    extra = ["geom_length"] if "geom_length" in src.columns else []
     ends = src.select(
-        "doc_id", "road_id", "xy", "total_width", "driveable", *extra,
+        "doc_id", "road_id", "xy", "total_width", "driveable",
         is_link.alias("is_link"), F.explode(both).alias("_e"),
     ).select(
         "doc_id", F.col("_e.i_id").alias("i_id"), "road_id",
         F.col("_e.is_src_end").alias("is_src_end"), "xy", "total_width",
-        "driveable", *extra, F.col("_e.can_out").alias("can_out"),
+        "driveable", F.col("_e.can_out").alias("can_out"),
         F.col("_e.can_in").alias("can_in"), "is_link",
         F.col("_e.pretrim").alias("pretrim"),
         F.col("_e.is_edge").alias("is_edge"),
@@ -544,8 +416,7 @@ def apply_trim_flags(roads: DataFrame, trims: DataFrame) -> DataFrame:
     stage only consumes trim_start/trim_end (pretrim memo) and too_short
     (collapse candidacy), so a Catalyst comparison against the
     precomputed geom_length replaces the whole rebuild_center UDF pass.
-    Roads at junctions the pass-1 gate skipped get trims of 0 (they
-    cannot be annihilated by construction of the gate)."""
+    Roads without a trim row get trims of 0."""
     r = _join_trims(roads.drop("too_short", "trim_start", "trim_end"),
                     trims)
     # same predicate as rebuild_center's annihilation test

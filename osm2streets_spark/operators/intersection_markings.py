@@ -21,7 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..geom.core import geojson_feature, ring_centroid
-from .geometry_update import map_groups
+from ..geom.intersection_kernel import road_end, sidewalk_corners
+from .geometry_update import junction_groups, map_groups
 from .render import explode_features
 
 ZEBRA_BAR_WIDTH = 0.5
@@ -99,38 +100,25 @@ def render_sidewalk_corners(roads_final: DataFrame,
     src = ends.join(polys, ["doc_id", "i_id"])
 
     def _corners(pdf):
-        from ..geom.intersection_kernel import sidewalk_corners
-
         rows = []
-        for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
-                                             sort=False):
-            ring = np.asarray(g["polygon_xy"].iloc[0],
-                              dtype=float).reshape(-1, 2)
-            lo = float(g["lon0"].iloc[0])
-            la = float(g["lat0"].iloc[0])
-            ends_k = []
-            for row in g.sort_values("road_id").itertuples(index=False):
-                xy = np.asarray(row.center_xy,
-                                dtype=float).reshape(-1, 2)
-                if len(xy) < 2:
-                    continue
-                if not bool(row.is_src_end):
-                    xy = xy[::-1]
-                ends_k.append({
-                    "key": (int(row.road_id), bool(row.is_src_end)),
-                    "road_id": int(row.road_id),
-                    "is_src_end": bool(row.is_src_end),
-                    "xy": xy,
-                    "width": float(row.total_width),
-                    "specs": json.loads(row.lane_specs_json),
-                })
-            if len(ends_k) < 2:
+        for grp in junction_groups(pdf):
+            # by road_id, a loop road's src end first (as the sequential
+            # twin orders them)
+            grp.sort(key=lambda r: (r["road_id"], not r["is_src_end"]))
+            ends = [road_end(int(r["road_id"]), bool(r["is_src_end"]),
+                             r["center_xy"], r["total_width"],
+                             specs=json.loads(r["lane_specs_json"]))
+                    for r in grp]
+            ends = [e for e in ends if len(e["xy"]) >= 2]
+            if len(ends) < 2:
                 continue
-            for idx, ring_out in enumerate(
-                    sidewalk_corners(ends_k, ring)):
-                feat = geojson_feature("Polygon", ring_out, lo, la,
+            g = grp[0]
+            ring = np.asarray(g["polygon_xy"], dtype=float).reshape(-1, 2)
+            for idx, ring_out in enumerate(sidewalk_corners(ends, ring)):
+                feat = geojson_feature("Polygon", ring_out, float(g["lon0"]),
+                                       float(g["lat0"]),
                                        {"type": "sidewalk corner"})
-                rows.append((doc_id, int(i_id), idx, feat))
+                rows.append((g["doc_id"], int(g["i_id"]), idx, feat))
         return pd.DataFrame(
             rows, columns=["doc_id", "i_id", "marking_idx",
                            "feature_json"])

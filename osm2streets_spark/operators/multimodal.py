@@ -24,7 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, StringType,
+    ArrayType, FloatType, IntegerType, StringType,
     StructField, StructType,
 )
 

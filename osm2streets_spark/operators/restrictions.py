@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-QUANTUM = 1e7
+from .split_ways import point_key
 
 
 def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
@@ -34,9 +34,7 @@ def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
     # broadcast the (sparse) restriction side: the nodes table is never
     # shuffled for the via lookup
     r = nodes.select(
-        "doc_id", F.col("node_id").alias("via_node"),
-        F.round(F.col("lon") * QUANTUM).cast("long").alias("qx"),
-        F.round(F.col("lat") * QUANTUM).cast("long").alias("qy"),
+        "doc_id", F.col("node_id").alias("via_node"), *point_key(),
     ).join(r, ["doc_id", "via_node"]) \
      .withColumn("i_id", F.xxhash64("doc_id", "qx", "qy"))
     if imerges is not None:

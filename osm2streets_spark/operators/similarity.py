@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import IntegerType
 
 from ..session import input_rows
 

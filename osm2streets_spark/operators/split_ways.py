@@ -32,6 +32,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 QUANTUM = 1e7  # 1e-7 deg
 
 
+def point_key(lon: str = "lon", lat: str = "lat") -> list:
+    """The quantized point key columns (qx, qy): lon/lat rounded to the
+    1e-7 deg grid."""
+    return [F.round(F.col(lon) * QUANTUM).cast("long").alias("qx"),
+            F.round(F.col(lat) * QUANTUM).cast("long").alias("qy")]
+
+
 def way_points(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """Explode filtered ways to one row per (way, position) with node
     coords and quantized point key."""
@@ -45,8 +52,7 @@ def way_points(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     )
     return pts.select(
         "doc_id", "way_id", "pos", "node_id", "lon", "lat", "n_pts",
-        F.round(F.col("lon") * QUANTUM).cast("long").alias("qx"),
-        F.round(F.col("lat") * QUANTUM).cast("long").alias("qy"),
+        *point_key(),
         ((F.col("pos") == 0) | (F.col("pos") == F.col("n_pts") - 1))
         .alias("is_endpoint"),
     )
@@ -163,9 +169,7 @@ def interior_point_road_map(flagged: DataFrame, roads: DataFrame) -> DataFrame:
             "slice(pts, 2, greatest(size(pts) - 2, 0))"
         )).alias("p"),
     ).select(
-        "doc_id", "road_id",
-        F.round(F.col("p.lon") * QUANTUM).cast("long").alias("qx"),
-        F.round(F.col("p.lat") * QUANTUM).cast("long").alias("qy"),
+        "doc_id", "road_id", *point_key("p.lon", "p.lat"),
     )
     ints = flagged.where("is_int").select("doc_id", "qx", "qy").distinct()
     return pt_rows.join(ints, ["doc_id", "qx", "qy"], "left_anti")

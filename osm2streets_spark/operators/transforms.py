@@ -17,8 +17,6 @@ in-memory in a single shuffle. The kernel is pure Python below
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
@@ -28,8 +26,9 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from ..geom.core import simplify_rdp, polyline_length
-from .geometry_update import map_groups
+from ..geom.core import M_PER_DEG, simplify_rdp, polyline_length
+from ..geom.intersection_kernel import compute_trims, road_end, sort_roads_cw
+from .geometry_update import group_runs, map_groups
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
@@ -39,15 +38,7 @@ def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
     recomputed, which can flag newly trim-annihilated roads for the
     SECOND CollapseShortRoads pass (the cascade the goldens encode:
     bristol/taipei crossing stubs only annihilate after their
-    neighbors splice). Runs the same pure kernel as T6."""
-    import math
-
-    import numpy as np
-
-    from ..geom.intersection_kernel import (
-        sort_roads_cw, compute_trims, terminus_geometry,
-    )
-
+    neighbors splice). Runs T6's own per-junction dispatch."""
     incident: dict[int, list] = {}
     for r in roads:
         if r["src_i"] in i_ids:
@@ -55,56 +46,22 @@ def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
         if r["dst_i"] in i_ids:
             incident.setdefault(r["dst_i"], []).append((r, False))
 
-    def _pre(r, is_src):
-        v = r.get("pretrim_src") if is_src else r.get("pretrim_dst")
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return None
-        return float(v)
-
-    def _set(r, is_src, t):
-        if is_src:
-            r["trim_start"] = float(t)
-        else:
-            r["trim_end"] = float(t)
-
     touched: dict[int, dict] = {}
-    for i, ends in incident.items():
-        if len(ends) == 1:
-            r, is_src = ends[0]
-            pre = _pre(r, is_src)
-            if pre is not None:
-                _set(r, is_src, pre)
-            else:
-                xy = np.asarray(r["xy"], dtype=float).reshape(-1, 2)
-                if not is_src:
-                    xy = xy[::-1]
-                is_edge = bool((r.get("src_is_edge") if is_src
-                                else r.get("dst_is_edge")) or False)
-                t, _ = terminus_geometry(
-                    xy, max(float(r["total_width"]), 1.0), is_edge)
-                _set(r, is_src, t)
-            touched[id(r)] = r
-            continue
+    for ends in incident.values():
         kends = []
         for r, is_src in ends:
-            xy = np.asarray(r["xy"], dtype=float).reshape(-1, 2)
             hw = str(r.get("highway_type") or "")
-            kends.append({
-                "key": (r["road_id"], is_src), "road_id": r["road_id"],
-                "is_src_end": is_src, "xy": xy if is_src else xy[::-1],
-                "width": float(r["total_width"]),
-                "is_link": hw.endswith("_link") or hw == "motorway",
-                "pretrim": _pre(r, is_src),
-                "other_i": r["dst_i"] if is_src else r["src_i"],
-            })
+            kends.append(road_end(
+                r["road_id"], is_src, r["xy"], r["total_width"],
+                is_link=hw.endswith("_link") or hw == "motorway",
+                pretrim=r.get("pretrim_src" if is_src else "pretrim_dst"),
+                is_edge=bool(r.get("src_is_edge" if is_src
+                                   else "dst_is_edge") or False),
+                other_i=r["dst_i"] if is_src else r["src_i"]))
             touched[id(r)] = r
-        cw = sort_roads_cw(kends)
-        if any(e["pretrim"] is not None for e in cw):
-            trims = {e["key"]: float(e["pretrim"] or 0.0) for e in cw}
-        else:
-            trims, _mode = compute_trims(cw)
-        for r, is_src in ends:
-            _set(r, is_src, trims[(r["road_id"], is_src)])
+        trims, _mode = compute_trims(sort_roads_cw(kends))
+        for (r, is_src), e in zip(ends, kends):
+            r["trim_start" if is_src else "trim_end"] = float(trims[e["key"]])
 
     for r in touched.values():
         length = polyline_length(
@@ -683,20 +640,13 @@ def _transform_batch(pdf: pd.DataFrame, with_sidepath_zip: bool,
     frame. The batch is decomposed ONCE into native-Python column lists
     and dispatched with vectorized group codes (first-occurrence order,
     matching the old groupby(sort=False))."""
-    from .geometry_update import _group_codes
     out_cols = ["doc_id"] + [n for n, _ in _ROAD_FIELDS + _OUT_EXTRA]
     long_cols = {n for n, t in _ROAD_FIELDS if isinstance(t, LongType)}
     col = {c: pdf[c].tolist() for c in pdf.columns if c != "_tcell"}
     names = list(col)
     tcell = pdf["_tcell"].to_numpy()
-    gidx = _group_codes(pdf["doc_id"].to_numpy(), tcell)
-    order = np.argsort(gidx, kind="stable")
-    gvals = gidx[order]
-    starts = np.nonzero(np.r_[True, gvals[1:] != gvals[:-1]])[0]
-    bounds = np.r_[starts, len(order)]
     data: dict[str, list] = {c: [] for c in out_cols}
-    for s0, e0 in zip(bounds[:-1], bounds[1:]):
-        run = order[s0:e0]
+    for run in group_runs(pdf["doc_id"].to_numpy(), tcell):
         rows = [{c: col[c][j] for c in names} for j in run]
         doc_id = rows[0]["doc_id"]
         roads, imerges, steps = _transform_doc_core(
@@ -720,9 +670,6 @@ def _transform_batch(pdf: pd.DataFrame, with_sidepath_zip: bool,
         # beyond 2^53
         data[c] = pd.array(data[c], dtype="Int64")
     return pd.DataFrame(data)
-
-
-M_PER_DEG = 111_194.92664455873
 
 
 def run_transforms(roads: DataFrame,

@@ -19,7 +19,7 @@ import json
 import math
 from collections import defaultdict
 
-M_PER_DEG = 111_194.92664455873
+from ..geom.core import M_PER_DEG
 
 
 def _centroid(ring) -> tuple[float, float]:

@@ -173,12 +173,10 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     # (split_ways.rs:216-241): a signal node interior to a road, with an
     # explicit direction or on a driving-oneway, marks the road's
     # downstream intersection Signalled.
-    from ..operators.split_ways import interior_point_road_map
+    from ..operators.split_ways import interior_point_road_map, point_key
     interior = interior_point_road_map(flagged, roads)
     sig_pts = feats.where(F.col("feature") == "traffic_signals").select(
-        "doc_id", "signal_dir",
-        F.round(F.col("lon") * 1e7).cast("long").alias("qx"),
-        F.round(F.col("lat") * 1e7).cast("long").alias("qy"),
+        "doc_id", "signal_dir", *point_key(),
     )
     # signals are a sparse feature class (~0.1% of nodes): broadcast the
     # signal side so the interior-point explode and the roads table are
@@ -233,10 +231,9 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
 
     # pass 1: trims only, to find trim-annihilated roads
     # (update_geometry.rs:58-63 → CollapseShortRoads candidates) and to
-    # feed the trim_roads_for_merging memo. The degree split
-    # (closed-form deg ≤ 2 trims, kernel only for deg ≥ 3) happens
-    # INSIDE t6_process so one exchange serves the whole pass and the
-    # sequential replay shares it bit-for-bit.
+    # feed the trim_roads_for_merging memo. Every junction goes through
+    # the kernel's one dispatch inside t6_process, with no ring built,
+    # so the sequential replay shares it bit-for-bit.
     ends1 = build_road_ends(roads, None, cfg.driving_side)
     trims1 = run_t6(ends1, trims_only=True, n=n)
     roads = apply_trim_flags(roads, trims1)

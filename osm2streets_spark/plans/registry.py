@@ -43,7 +43,7 @@ from ..operators.extract import (
     filter_ways, with_parsed_road_tags, restriction_relations,
 )
 from ..operators.split_ways import (
-    way_points, flag_intersections, split_to_roads, build_network_v0,
+    way_points, flag_intersections, build_network_v0,
 )
 from ..operators.lanes_udf import with_lanes
 from ..operators import dedup, similarity, text_analysis, multimodal

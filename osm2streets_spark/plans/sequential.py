@@ -94,7 +94,7 @@ def _parse_road_tags(tags: dict) -> dict:
 
 
 def _lane_cols(tags: dict, driving_side: str, inferred_sidewalks: bool) -> dict:
-    """Mirror of lanes_udf._infer_batch for one way."""
+    """Mirror of lanes_udf.lane_row for one way."""
     specs = get_lane_specs_ltr(tags, driving_side=driving_side,
                                inferred_sidewalks=inferred_sidewalks)
     # lane-direction-derived onewayness, mirror of lanes_udf

@@ -665,6 +665,83 @@ MEMBER_TYPE = pa.list_(pa.struct([
     ("role", pa.string()), ("type", pa.string()), ("ref", pa.int64()),
 ]))
 
+# one schema per written table; rows are dicts, extra keys ignored
+_STR, _I32, _I64, _F64 = pa.string(), pa.int32(), pa.int64(), pa.float64()
+DOCUMENTS_SCHEMA = pa.schema([("doc_id", _STR), ("spans", SPAN_TYPE)])
+MEDIA_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("media_ref", _STR), ("width", _I32),
+    ("height", _I32), ("n_frames", _I32)])
+TILE_STORE_SCHEMA = pa.schema([
+    ("z", _I32), ("x", _I32), ("y", _I32), ("png_b64", _STR),
+    ("n_frames", _I32)])
+NODES_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("node_id", _I64), ("lon", _F64), ("lat", _F64),
+    ("tags_json", _STR)])
+WAYS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("way_id", _I64), ("node_ids", pa.list_(_I64)),
+    ("tags_json", _STR), ("highway", _STR), ("railway", _STR),
+    ("name", _STR), ("lane_chars", _STR), ("dir_chars", _STR),
+    ("total_width", _F64)])
+RELATIONS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("rel_id", _I64), ("members", MEMBER_TYPE),
+    ("tags_json", _STR)])
+# gt twin of s_debug_steps (the reference's
+# apply_transformations_stepwise_debugging, transform/mod.rs:94-109):
+# per-doc per-pass network sizes from the sequential replay
+DEBUG_STEPS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("step_idx", _I32), ("step_name", _STR),
+    ("n_roads", _I64), ("n_intersections", _I64)])
+TRANSFORMED_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("way_id", _I64), ("osm_way_ids", _STR),
+    ("trimmed_length", _F64), ("lane_chars", _STR)])
+JUNCTION_MARKING_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("i_id", _I64), ("marking_idx", _I32),
+    ("feature_json", _STR)])
+STOP_LINE_FEATURE_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("road_id", _I64), ("node_id", _I64),
+    ("feature", _STR), ("feature_json", _STR)])
+STOP_LINE_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("road_id", _I64), ("node_id", _I64),
+    ("feature", _STR), ("signal_dir", _STR), ("crossing_kind", _STR),
+    ("crossing_island", pa.bool_()), ("pct_along", _F64),
+    ("snapped_end", _STR)])
+BLOCKS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("block_id", _I64), ("kind", _STR),
+    ("n_roads", _I64), ("n_names", _I64), ("area_m2", _F64),
+    ("ring_json", _STR)])
+MULTIPOLYGON_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("rel_id", _I64), ("n_outer", _I64),
+    ("n_inner", _I64), ("area_deg2", _F64), ("geojson", _STR)])
+DC_SIDES_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("name", _STR), ("side_idx", _I64),
+    ("n_segments", _I64), ("length_m", _F64)])
+FEATURES_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("feature_type", _STR), ("feature_id", _I64),
+    ("feature_json", _STR), ("tile_z", _I32), ("tile_x", _I64),
+    ("tile_y", _I64), ("quadkey", _STR)])
+CW_ORDER_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("qx", _I64), ("qy", _I64), ("road_id", _I64),
+    ("is_src_end", pa.bool_()), ("cw_index", _I64), ("trim_m", _F64)])
+PATHS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("profile", _STR), ("dist_m", _F64)])
+DISTS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("src_i", _I64), ("dst_i", _I64), ("dist_m", _F64)])
+MOVEMENTS_SCHEMA = pa.schema([
+    ("doc_id", _STR), ("qx", _I64), ("qy", _I64), ("kind", _STR),
+    ("control", _STR), ("n_movements", _I64)])
+
+
+def _road_feature_schema(idx_col: str) -> pa.Schema:
+    """Per-road rendered features (lane polygons, surfaces, markings)."""
+    return pa.schema([("doc_id", _STR), ("road_id", _I64),
+                      (idx_col, _I32), ("feature_json", _STR)])
+
+
+def _write_rows(rows: list[dict], schema: pa.Schema, path: str) -> str:
+    """Write dict rows as one parquet table of ``schema``."""
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+    return path
+
 
 def generate(n_docs: int, seed: int = 42, heavy: bool = False):
     docs, nodes, ways, rels, media = [], [], [], [], []
@@ -678,28 +755,6 @@ def generate(n_docs: int, seed: int = 42, heavy: bool = False):
         media.extend(m)
         tiles[(ts["z"], ts["x"], ts["y"])] = ts
     return docs, nodes, ways, rels, media, list(tiles.values())
-
-
-def _write_debug_steps(out_dir: str, dbg_rows: list[dict]) -> str:
-    """gt twin of s_debug_steps (the reference's
-    apply_transformations_stepwise_debugging, transform/mod.rs:94-109):
-    per-doc per-pass network sizes from the sequential replay."""
-    path = os.path.join(out_dir, "gt_debug_steps.parquet")
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in dbg_rows], pa.string()),
-            "step_idx": pa.array([r["step_idx"] for r in dbg_rows],
-                                 pa.int32()),
-            "step_name": pa.array([r["step_name"] for r in dbg_rows],
-                                  pa.string()),
-            "n_roads": pa.array([r["n_roads"] for r in dbg_rows],
-                                pa.int64()),
-            "n_intersections": pa.array(
-                [r["n_intersections"] for r in dbg_rows], pa.int64()),
-        }),
-        path,
-    )
-    return path
 
 
 def ensure_debug_steps_gt(fix_dir: str) -> str | None:
@@ -723,7 +778,7 @@ def ensure_debug_steps_gt(fix_dir: str) -> str | None:
         convert_document(d["doc_id"], d["spans"], debug_sink=sink)
         for s in sink.get("transform_steps", []):
             dbg_rows.append({"doc_id": d["doc_id"], **s})
-    return _write_debug_steps(fix_dir, dbg_rows)
+    return _write_rows(dbg_rows, DEBUG_STEPS_SCHEMA, path)
 
 
 # Quadkey-split CORRECTNESS twin (round-6 verdict ask #7): the default
@@ -773,22 +828,7 @@ def ensure_split_transforms_gt(fix_dir: str) -> str | None:
                 "trimmed_length": tl,
                 "lane_chars": r["lane_chars"],
             })
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in road_rows],
-                               pa.string()),
-            "way_id": pa.array([r["way_id"] for r in road_rows],
-                               pa.int64()),
-            "osm_way_ids": pa.array([r["osm_way_ids"] for r in road_rows],
-                                    pa.string()),
-            "trimmed_length": pa.array(
-                [r["trimmed_length"] for r in road_rows], pa.float64()),
-            "lane_chars": pa.array([r["lane_chars"] for r in road_rows],
-                                   pa.string()),
-        }),
-        path,
-    )
-    return path
+    return _write_rows(road_rows, TRANSFORMED_SCHEMA, path)
 
 
 # Versions whose RAW corpus output (documents/tile_store + the
@@ -816,78 +856,22 @@ def ensure_fixtures(sf_name: str, root: str = FIXTURE_ROOT) -> str:
     os.makedirs(out_dir, exist_ok=True)
     docs, nodes, ways, rels, media, tiles = generate(
         n_docs, heavy=sf_name.startswith("sf_scale"))
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([m["doc_id"] for m in media], pa.string()),
-            "media_ref": pa.array([m["media_ref"] for m in media],
-                                  pa.string()),
-            "width": pa.array([m["width"] for m in media], pa.int32()),
-            "height": pa.array([m["height"] for m in media], pa.int32()),
-            "n_frames": pa.array([m["n_frames"] for m in media],
-                                 pa.int32()),
-        }),
-        os.path.join(out_dir, "gt_media.parquet"),
-    )
-    # the external tile store: real PNG rasters keyed (z, x, y) —
-    # decode_media resolves tile:// refs against it with an equi-join
-    pq.write_table(
-        pa.table({
-            "z": pa.array([t["z"] for t in tiles], pa.int32()),
-            "x": pa.array([t["x"] for t in tiles], pa.int32()),
-            "y": pa.array([t["y"] for t in tiles], pa.int32()),
-            "png_b64": pa.array([t["png_b64"] for t in tiles], pa.string()),
-            "n_frames": pa.array([t["n_frames"] for t in tiles],
-                                 pa.int32()),
-        }),
-        os.path.join(out_dir, "tile_store.parquet"),
-    )
-
-    doc_table = pa.table({
-        "doc_id": pa.array([d["doc_id"] for d in docs], pa.string()),
-        "spans": pa.array([d["spans"] for d in docs], SPAN_TYPE),
-    })
-    pq.write_table(doc_table, os.path.join(out_dir, "documents.parquet"))
-
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in nodes], pa.string()),
-            "node_id": pa.array([r["node_id"] for r in nodes], pa.int64()),
-            "lon": pa.array([r["lon"] for r in nodes], pa.float64()),
-            "lat": pa.array([r["lat"] for r in nodes], pa.float64()),
-            "tags_json": pa.array([r["tags_json"] for r in nodes], pa.string()),
-        }),
-        os.path.join(out_dir, "gt_nodes.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in ways], pa.string()),
-            "way_id": pa.array([r["way_id"] for r in ways], pa.int64()),
-            "node_ids": pa.array([r["node_ids"] for r in ways], pa.list_(pa.int64())),
-            "tags_json": pa.array([r["tags_json"] for r in ways], pa.string()),
-            "highway": pa.array([r["highway"] for r in ways], pa.string()),
-            "railway": pa.array([r["railway"] for r in ways], pa.string()),
-            "name": pa.array([r["name"] for r in ways], pa.string()),
-            "lane_chars": pa.array([r["lane_chars"] for r in ways], pa.string()),
-            "dir_chars": pa.array([r["dir_chars"] for r in ways], pa.string()),
-            "total_width": pa.array([r["total_width"] for r in ways],
-                                    pa.float64()),
-        }),
-        os.path.join(out_dir, "gt_ways.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in rels], pa.string()),
-            "rel_id": pa.array([r["rel_id"] for r in rels], pa.int64()),
-            "members": pa.array([r["members"] for r in rels], MEMBER_TYPE),
-            "tags_json": pa.array([r["tags_json"] for r in rels], pa.string()),
-        }),
-        os.path.join(out_dir, "gt_relations.parquet"),
-    )
+    for rows, schema, fname in (
+            (media, MEDIA_SCHEMA, "gt_media.parquet"),
+            # the external tile store: real PNG rasters keyed (z, x, y) —
+            # decode_media resolves tile:// refs against it with an
+            # equi-join
+            (tiles, TILE_STORE_SCHEMA, "tile_store.parquet"),
+            (docs, DOCUMENTS_SCHEMA, "documents.parquet"),
+            (nodes, NODES_SCHEMA, "gt_nodes.parquet"),
+            (ways, WAYS_SCHEMA, "gt_ways.parquet"),
+            (rels, RELATIONS_SCHEMA, "gt_relations.parquet")):
+        _write_rows(rows, schema, os.path.join(out_dir, fname))
     # gt twin of the TRANSFORMED network: the single-node sequential
     # replay (plans/sequential.py) over the same documents — shared pure
     # kernels, zero Spark. The DuckDB oracles for sn_transformed_roads /
     # sn_movements read these tables, cross-checking all of the
-    # distributed glue (joins, trims pivot, pass-1 gate, imerges).
+    # distributed glue (joins, trims pivot, imerges).
     from ..plans.sequential import convert_documents
     if sf_name.startswith("sf_scale"):
         # scaling-evidence corpora are perf-only (heavy synthetic docs,
@@ -901,191 +885,30 @@ def ensure_fixtures(sf_name: str, root: str = FIXTURE_ROOT) -> str:
      marking_rows, stop_rows, stop_feat_rows, imark_rows,
      corner_rows, dbg_rows) = \
         convert_documents((d["doc_id"], d["spans"]) for d in docs)
-    _write_debug_steps(out_dir, dbg_rows)
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in road_rows], pa.string()),
-            "way_id": pa.array([r["way_id"] for r in road_rows], pa.int64()),
-            "osm_way_ids": pa.array([r["osm_way_ids"] for r in road_rows],
-                                    pa.string()),
-            "trimmed_length": pa.array(
-                [r["trimmed_length"] for r in road_rows], pa.float64()),
-            "lane_chars": pa.array([r["lane_chars"] for r in road_rows],
-                                   pa.string()),
-        }),
-        os.path.join(out_dir, "gt_transformed.parquet"),
-    )
-    for rows, fname in ((imark_rows, "gt_int_markings.parquet"),
-                        (corner_rows, "gt_sidewalk_corners.parquet")):
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array([r["doc_id"] for r in rows],
-                                   pa.string()),
-                "i_id": pa.array([r["i_id"] for r in rows], pa.int64()),
-                "marking_idx": pa.array([r["marking_idx"] for r in rows],
-                                        pa.int32()),
-                "feature_json": pa.array([r["feature_json"] for r in rows],
-                                         pa.string()),
-            }),
-            os.path.join(out_dir, fname),
-        )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in stop_feat_rows],
-                               pa.string()),
-            "road_id": pa.array([r["road_id"] for r in stop_feat_rows],
-                                pa.int64()),
-            "node_id": pa.array([r["node_id"] for r in stop_feat_rows],
-                                pa.int64()),
-            "feature": pa.array([r["feature"] for r in stop_feat_rows],
-                                pa.string()),
-            "feature_json": pa.array(
-                [r["feature_json"] for r in stop_feat_rows], pa.string()),
-        }),
-        os.path.join(out_dir, "gt_stop_line_features.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in stop_rows],
-                               pa.string()),
-            "road_id": pa.array([r["road_id"] for r in stop_rows],
-                                pa.int64()),
-            "node_id": pa.array([r["node_id"] for r in stop_rows],
-                                pa.int64()),
-            "feature": pa.array([r["feature"] for r in stop_rows],
-                                pa.string()),
-            "signal_dir": pa.array([r["signal_dir"] for r in stop_rows],
-                                   pa.string()),
-            "crossing_kind": pa.array(
-                [r["crossing_kind"] for r in stop_rows], pa.string()),
-            "crossing_island": pa.array(
-                [r["crossing_island"] for r in stop_rows], pa.bool_()),
-            "pct_along": pa.array([r["pct_along"] for r in stop_rows],
-                                  pa.float64()),
-            "snapped_end": pa.array([r["snapped_end"] for r in stop_rows],
-                                    pa.string()),
-        }),
-        os.path.join(out_dir, "gt_stop_lines.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in blk_rows], pa.string()),
-            "block_id": pa.array([r["block_id"] for r in blk_rows],
-                                 pa.int64()),
-            "kind": pa.array([r["kind"] for r in blk_rows], pa.string()),
-            "n_roads": pa.array([r["n_roads"] for r in blk_rows], pa.int64()),
-            "n_names": pa.array([r["n_names"] for r in blk_rows], pa.int64()),
-            "area_m2": pa.array([r["area_m2"] for r in blk_rows],
-                                pa.float64()),
-            "ring_json": pa.array([r["ring_json"] for r in blk_rows],
-                                  pa.string()),
-        }),
-        os.path.join(out_dir, "gt_blocks.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in mp_rows], pa.string()),
-            "rel_id": pa.array([r["rel_id"] for r in mp_rows], pa.int64()),
-            "n_outer": pa.array([r["n_outer"] for r in mp_rows], pa.int64()),
-            "n_inner": pa.array([r["n_inner"] for r in mp_rows], pa.int64()),
-            "area_deg2": pa.array([r["area_deg2"] for r in mp_rows],
-                                  pa.float64()),
-            "geojson": pa.array([r["geojson"] for r in mp_rows],
-                                pa.string()),
-        }),
-        os.path.join(out_dir, "gt_multipolygons.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in dc_rows], pa.string()),
-            "name": pa.array([r["name"] for r in dc_rows], pa.string()),
-            "side_idx": pa.array([r["side_idx"] for r in dc_rows],
-                                 pa.int64()),
-            "n_segments": pa.array([r["n_segments"] for r in dc_rows],
-                                   pa.int64()),
-            "length_m": pa.array([r["length_m"] for r in dc_rows],
-                                 pa.float64()),
-        }),
-        os.path.join(out_dir, "gt_dc_sides.parquet"),
-    )
-    for rows, fname, idx_col in (
-            (lanepoly_rows, "gt_lane_polygons.parquet", "lane_idx"),
-            (surface_rows, "gt_surfaces.parquet", "surface_idx"),
-            (marking_rows, "gt_lane_markings.parquet", "marking_idx")):
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array([r["doc_id"] for r in rows], pa.string()),
-                "road_id": pa.array([r["road_id"] for r in rows], pa.int64()),
-                idx_col: pa.array([r[idx_col] for r in rows], pa.int32()),
-                "feature_json": pa.array([r["feature_json"] for r in rows],
-                                         pa.string()),
-            }),
-            os.path.join(out_dir, fname),
-        )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in feat_rows], pa.string()),
-            "feature_type": pa.array([r["feature_type"] for r in feat_rows],
-                                     pa.string()),
-            "feature_id": pa.array([r["feature_id"] for r in feat_rows],
-                                   pa.int64()),
-            "feature_json": pa.array([r["feature_json"] for r in feat_rows],
-                                     pa.string()),
-            "tile_z": pa.array([r["tile_z"] for r in feat_rows], pa.int32()),
-            "tile_x": pa.array([r["tile_x"] for r in feat_rows], pa.int64()),
-            "tile_y": pa.array([r["tile_y"] for r in feat_rows], pa.int64()),
-            "quadkey": pa.array([r["quadkey"] for r in feat_rows],
-                                pa.string()),
-        }),
-        os.path.join(out_dir, "gt_features.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in cw_rows], pa.string()),
-            "qx": pa.array([r["qx"] for r in cw_rows], pa.int64()),
-            "qy": pa.array([r["qy"] for r in cw_rows], pa.int64()),
-            "road_id": pa.array([r["road_id"] for r in cw_rows], pa.int64()),
-            "is_src_end": pa.array([r["is_src_end"] for r in cw_rows],
-                                   pa.bool_()),
-            "cw_index": pa.array([r["cw_index"] for r in cw_rows],
-                                 pa.int64()),
-            "trim_m": pa.array([r["trim_m"] for r in cw_rows], pa.float64()),
-        }),
-        os.path.join(out_dir, "gt_cw_order.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in path_rows], pa.string()),
-            "profile": pa.array([r["profile"] for r in path_rows],
-                                pa.string()),
-            "dist_m": pa.array([r["dist_m"] for r in path_rows],
-                               pa.float64()),
-        }),
-        os.path.join(out_dir, "gt_paths.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in dist_rows], pa.string()),
-            "src_i": pa.array([r["src_i"] for r in dist_rows], pa.int64()),
-            "dst_i": pa.array([r["dst_i"] for r in dist_rows], pa.int64()),
-            "dist_m": pa.array([r["dist_m"] for r in dist_rows],
-                               pa.float64()),
-        }),
-        os.path.join(out_dir, "gt_dists.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r["doc_id"] for r in int_rows], pa.string()),
-            "qx": pa.array([r["qx"] for r in int_rows], pa.int64()),
-            "qy": pa.array([r["qy"] for r in int_rows], pa.int64()),
-            "kind": pa.array([r["kind"] for r in int_rows], pa.string()),
-            "control": pa.array([r["control"] for r in int_rows],
-                                pa.string()),
-            "n_movements": pa.array([r["n_movements"] for r in int_rows],
-                                    pa.int64()),
-        }),
-        os.path.join(out_dir, "gt_movements.parquet"),
-    )
+    for rows, schema, fname in (
+            (dbg_rows, DEBUG_STEPS_SCHEMA, "gt_debug_steps.parquet"),
+            (road_rows, TRANSFORMED_SCHEMA, "gt_transformed.parquet"),
+            (imark_rows, JUNCTION_MARKING_SCHEMA, "gt_int_markings.parquet"),
+            (corner_rows, JUNCTION_MARKING_SCHEMA,
+             "gt_sidewalk_corners.parquet"),
+            (stop_feat_rows, STOP_LINE_FEATURE_SCHEMA,
+             "gt_stop_line_features.parquet"),
+            (stop_rows, STOP_LINE_SCHEMA, "gt_stop_lines.parquet"),
+            (blk_rows, BLOCKS_SCHEMA, "gt_blocks.parquet"),
+            (mp_rows, MULTIPOLYGON_SCHEMA, "gt_multipolygons.parquet"),
+            (dc_rows, DC_SIDES_SCHEMA, "gt_dc_sides.parquet"),
+            (lanepoly_rows, _road_feature_schema("lane_idx"),
+             "gt_lane_polygons.parquet"),
+            (surface_rows, _road_feature_schema("surface_idx"),
+             "gt_surfaces.parquet"),
+            (marking_rows, _road_feature_schema("marking_idx"),
+             "gt_lane_markings.parquet"),
+            (feat_rows, FEATURES_SCHEMA, "gt_features.parquet"),
+            (cw_rows, CW_ORDER_SCHEMA, "gt_cw_order.parquet"),
+            (path_rows, PATHS_SCHEMA, "gt_paths.parquet"),
+            (dist_rows, DISTS_SCHEMA, "gt_dists.parquet"),
+            (int_rows, MOVEMENTS_SCHEMA, "gt_movements.parquet")):
+        _write_rows(rows, schema, os.path.join(out_dir, fname))
     with open(done, "w") as f:
         f.write(GEN_VERSION + "\n")
     return out_dir

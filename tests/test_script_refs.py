@@ -2,7 +2,8 @@
 the tests, the README or the verify skill names must exist, so deleting
 a script also means deleting or rewording what points at it. And every
 top-level definition of the package must be used somewhere, so code
-that nothing calls is deleted rather than kept."""
+that nothing calls is deleted rather than kept; likewise every name a
+package module imports."""
 
 from __future__ import annotations
 
@@ -76,4 +77,28 @@ def test_every_definition_is_used():
                                 and name.endswith("__"))]
     unused = sorted(f"{p}: {name}" for p, name in defined
                     if name not in used)
+    assert not unused, unused
+
+
+def test_every_import_is_used():
+    """Each name a non-__init__ module of osm2streets_spark/ imports
+    (the alias, or the first component of a dotted `import a.b`;
+    `from __future__` excepted) is loaded by name in that module."""
+    unused = []
+    for p in sorted((ROOT / "osm2streets_spark").rglob("*.py")):
+        if p.name == "__init__.py":
+            continue
+        tree = ast.parse(p.read_text(encoding="utf-8"))
+        imported = []
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                imported += [a.asname or a.name.split(".")[0]
+                             for a in n.names]
+            elif isinstance(n, ast.ImportFrom) \
+                    and n.module != "__future__":
+                imported += [a.asname or a.name for a in n.names]
+        loaded = {n.id for n in ast.walk(tree)
+                  if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        unused += [f"{p.relative_to(ROOT)}: {name}" for name in imported
+                   if name not in loaded]
     assert not unused, unused
