@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -36,20 +35,16 @@ def extract_blocks(roads: DataFrame) -> DataFrame:
     src = roads.select("doc_id", "road_id", "src_i", "dst_i", "xy",
                        "name", "highway_type")
 
-    def _process(pdf):
-        rows = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            # deterministic face enumeration regardless of Arrow row
-            # arrival order (block ids come from the walk order)
-            rs = g.sort_values("road_id").to_dict("records")
-            for r in rs:
-                r["xy"] = list(r["xy"])
-            for b in find_blocks(rs):
-                rows.append((doc_id, int(b["block_id"]), b["kind"],
-                             b["n_roads"], b["n_names"], b["area_m2"],
-                             json.dumps(b["ring"], separators=(",", ":"))))
-        return pd.DataFrame(rows,
-                            columns=[f.name for f in BLOCK_SCHEMA.fields])
+    def _process(rows):
+        # deterministic face enumeration regardless of Arrow row
+        # arrival order (block ids come from the walk order)
+        rows.sort(key=lambda r: r["road_id"])
+        for r in rows:
+            r["xy"] = list(r["xy"])
+        return [(rows[0]["doc_id"], int(b["block_id"]), b["kind"],
+                 b["n_roads"], b["n_names"], b["area_m2"],
+                 json.dumps(b["ring"], separators=(",", ":")))
+                for b in find_blocks(rows)]
 
     return map_groups(src, ["doc_id"], _process, BLOCK_SCHEMA)
 

@@ -21,10 +21,9 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..geom.core import (
     cumulative_lengths, geojson_feature, interpolate_along, polyline_length,
@@ -149,33 +148,30 @@ def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
 
     from ..geom.core import lonlat_to_xy
 
-    def _build(pdf):
-        rows = []
-        for (doc_id, way_id), g in pdf.groupby(["doc_id", "way_id"],
-                                               sort=True):
-            g = g.sort_values("pos")
-            lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
-            w = float(g["total_width"].iloc[0])
-            pl = lonlat_to_xy(
-                np.column_stack([g["lon"].to_numpy(),
-                                 g["lat"].to_numpy()]), lo, la)
-            if len(pl) < 2:
-                continue
-            feats = [geojson_feature(
-                "Polygon", thicken_polyline(pl, 1.5 * w), lo, la,
-                {"type": "way_body", "way_id": int(way_id)})]
-            feats += [
-                geojson_feature("Polygon", c, lo, la,
-                                {"type": "chevron", "way_id": int(way_id),
-                                 "idx": ci})
-                for ci, c in enumerate(_chevrons(pl, w))]
-            rows.append((doc_id, int(way_id),
-                         '{"type":"FeatureCollection","features":[%s]}'
-                         % ",".join(feats)))
-        return pd.DataFrame(
-            rows, columns=["doc_id", "way_id", "feature_json"])
+    def _build(rows):
+        rows.sort(key=lambda r: r["pos"])
+        g = rows[0]
+        lo, la = float(g["lon0"]), float(g["lat0"])
+        w, way_id = float(g["total_width"]), int(g["way_id"])
+        pl = lonlat_to_xy(np.array([[r["lon"], r["lat"]] for r in rows]),
+                          lo, la)
+        if len(pl) < 2:
+            return []
+        feats = [geojson_feature(
+            "Polygon", thicken_polyline(pl, 1.5 * w), lo, la,
+            {"type": "way_body", "way_id": way_id})]
+        feats += [
+            geojson_feature("Polygon", c, lo, la,
+                            {"type": "chevron", "way_id": way_id,
+                             "idx": ci})
+            for ci, c in enumerate(_chevrons(pl, w))]
+        return [(g["doc_id"], way_id,
+                 '{"type":"FeatureCollection","features":[%s]}'
+                 % ",".join(feats))]
 
-    schema = "doc_id string, way_id long, feature_json string"
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("way_id", LongType()),
+                         StructField("feature_json", StringType())])
     return map_groups(pts, ["doc_id", "way_id"], _build, schema)
 
 
@@ -236,50 +232,47 @@ def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
 
     off = -1.3 if driving_side == "right" else 1.3
 
-    def _build(pdf):
-        rows = []
-        for (doc_id, i_id), g in pdf.groupby(["doc_id", "i_id"],
-                                             sort=True):
-            lo, la = float(g["lon0"].iloc[0]), float(g["lat0"].iloc[0])
-            road_pts = {}
-            for row in g.itertuples(index=False):
-                xy = np.asarray(row.center_xy,
-                                dtype=float).reshape(-1, 2)
-                if len(xy) < 2:
-                    continue
-                # first center-line segment pointing AWAY from i
-                p0, p1 = ((xy[0], xy[1]) if row.is_src_end
-                          else (xy[-1], xy[-2]))
-                seg = p1 - p0
-                sl = float(np.hypot(*seg))
-                if sl < 1e-9:
-                    continue
-                d = seg / sl
-                n = np.array([d[1], -d[0]])
-                bidi = not (bool(row.driveable)
-                            and row.oneway_dir in ("forward",
-                                                   "backward"))
-                if bidi:
-                    road_pts[int(row.road_id)] = (p0 + n * off,
-                                                  p0 - n * off)
-                else:
-                    road_pts[int(row.road_id)] = (p0, p0)
-            movements = json.loads(g["movements_json"].iloc[0])
-            for frm, to in movements:
-                if frm == to or frm not in road_pts \
-                        or to not in road_pts:
-                    continue
-                ring = _arrow_ring(road_pts[frm][0], road_pts[to][1])
-                if ring is None:
-                    continue
-                rows.append((doc_id, int(i_id), frm, to, geojson_feature(
-                    "Polygon", ring, lo, la,
-                    {"type": "movement", "from": frm, "to": to})))
-        return pd.DataFrame(rows, columns=[
-            "doc_id", "i_id", "from_road", "to_road", "arrow_json"])
+    def _build(rows):
+        g = rows[0]
+        lo, la = float(g["lon0"]), float(g["lat0"])
+        road_pts = {}
+        for row in rows:
+            xy = np.asarray(row["center_xy"], dtype=float).reshape(-1, 2)
+            if len(xy) < 2:
+                continue
+            # first center-line segment pointing AWAY from i
+            p0, p1 = ((xy[0], xy[1]) if row["is_src_end"]
+                      else (xy[-1], xy[-2]))
+            seg = p1 - p0
+            sl = float(np.hypot(*seg))
+            if sl < 1e-9:
+                continue
+            d = seg / sl
+            n = np.array([d[1], -d[0]])
+            bidi = not (bool(row["driveable"])
+                        and row["oneway_dir"] in ("forward", "backward"))
+            if bidi:
+                road_pts[int(row["road_id"])] = (p0 + n * off, p0 - n * off)
+            else:
+                road_pts[int(row["road_id"])] = (p0, p0)
+        out = []
+        for frm, to in json.loads(g["movements_json"]):
+            if frm == to or frm not in road_pts or to not in road_pts:
+                continue
+            ring = _arrow_ring(road_pts[frm][0], road_pts[to][1])
+            if ring is None:
+                continue
+            out.append((g["doc_id"], int(g["i_id"]), frm, to,
+                        geojson_feature(
+                            "Polygon", ring, lo, la,
+                            {"type": "movement", "from": frm, "to": to})))
+        return out
 
-    schema = ("doc_id string, i_id long, from_road long, to_road long, "
-              "arrow_json string")
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("i_id", LongType()),
+                         StructField("from_road", LongType()),
+                         StructField("to_road", LongType()),
+                         StructField("arrow_json", StringType())])
     return map_groups(ends, ["doc_id", "i_id"], _build, schema)
 
 

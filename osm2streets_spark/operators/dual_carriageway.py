@@ -73,8 +73,6 @@ def trace_dual_carriageway_sides(roads: DataFrame) -> DataFrame:
     chains are the carriageway sides; walk each following its oneway
     direction and sum untrimmed lengths. Per-doc kernel (the walk is a
     sequential graph traversal, like the reference)."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
     )
@@ -90,16 +88,11 @@ def trace_dual_carriageway_sides(roads: DataFrame) -> DataFrame:
     src = roads.select("doc_id", "road_id", "src_i", "dst_i", "name",
                        "oneway", "length_m")
 
-    def _process(pdf):
-        rows = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            recs = [
-                (r.road_id, r.src_i, r.dst_i, r.name, r.oneway, r.length_m)
-                for r in g.sort_values("road_id").itertuples(index=False)
-            ]
-            rows.extend(dc_sides_doc(doc_id, recs))
-        return pd.DataFrame(rows,
-                            columns=[f.name for f in SIDE_SCHEMA.fields])
+    def _process(rows):
+        rows.sort(key=lambda r: r["road_id"])
+        return dc_sides_doc(rows[0]["doc_id"], [
+            (r["road_id"], r["src_i"], r["dst_i"], r["name"], r["oneway"],
+             r["length_m"]) for r in rows])
 
     return map_groups(src, ["doc_id"], _process, SIDE_SCHEMA)
 

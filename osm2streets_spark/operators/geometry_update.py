@@ -152,98 +152,93 @@ def _t6_rows(group: list[dict], trims_only: bool) -> list[tuple]:
             for cw_idx, r in enumerate(roads_cw)]
 
 
-def group_runs(doc: np.ndarray, key: np.ndarray) -> list[np.ndarray]:
-    """Row-index arrays of the complete (doc, key) groups of a batch,
-    groups in first-occurrence order (exactly a groupby(sort=False)
-    iteration order), rows in batch order. Vectorized group codes
-    instead of a per-group pandas groupby + frame slices + itertuples,
-    which dominated the grouped kernels' profiles with no geometry in
-    it. Handles non-contiguous groups (the sequential replay's ends
-    frame is in road order, not junction order)."""
-    n = len(doc)
-    d_codes = pd.factorize(doc)[0].astype(np.int64)
-    arr = np.column_stack([d_codes, key.astype(np.int64)])
-    uniq, inv = np.unique(arr, axis=0, return_inverse=True)
-    inv = inv.reshape(-1)  # numpy 2.x returns (n,1) with axis=0
-    first = np.full(len(uniq), n, dtype=np.int64)
-    np.minimum.at(first, inv, np.arange(n, dtype=np.int64))
-    rank = np.empty(len(uniq), dtype=np.int64)
-    rank[np.argsort(first, kind="stable")] = np.arange(len(uniq))
-    gidx = rank[inv]
-    order = np.argsort(gidx, kind="stable")
-    gvals = gidx[order]
-    return np.split(order, np.nonzero(gvals[1:] != gvals[:-1])[0] + 1)
+def t6_process(ends: list[dict], trims_only: bool = False) -> pd.DataFrame:
+    """T6 over the sequential replay's road-end dicts (one document's
+    ends in road order): group them by (doc_id, i_id) in
+    first-occurrence order and run each junction through _t6_rows, the
+    kernel the Spark pass below runs per group, so the two engines stay
+    bit-identical. → a TRIM_SCHEMA frame, built like map_groups'."""
+    groups: dict[tuple, list[dict]] = {}
+    for e in ends:
+        groups.setdefault((e["doc_id"], e["i_id"]), []).append(e)
+    return _group_frame(
+        [row for grp in groups.values() for row in _t6_rows(grp, trims_only)],
+        TRIM_SCHEMA)
 
 
-def junction_groups(pdf: pd.DataFrame):
-    """Yield the complete (doc_id, i_id) groups of a frame as lists of
-    plain dict rows (see group_runs). A frame without rows (the
-    sequential replay's ends frame of a doc left with no roads has no
-    columns either) has no groups."""
-    if pdf.empty:
-        return
-    col = {c: pdf[c].to_numpy() for c in pdf.columns}
-    for run in group_runs(col["doc_id"], col["i_id"]):
-        yield [{c: v[j] for c, v in col.items()} for j in run]
+def group_runs(keys: list[np.ndarray]) -> np.ndarray:
+    """Run boundaries of a key-sorted batch: the start row of every run
+    of equal `keys` values, then the row count, so run i is rows
+    bounds[i]:bounds[i + 1]. Vectorized compares instead of a per-group
+    pandas split, which dominated the grouped kernels' profiles with no
+    geometry in it."""
+    n = len(keys[0])
+    starts = np.zeros(n, dtype=bool)
+    starts[:1] = True
+    for k in keys:
+        starts[1:] |= k[1:] != k[:-1]
+    return np.append(np.flatnonzero(starts), n)
 
 
-def t6_process(pdf: pd.DataFrame, trims_only: bool = False) -> pd.DataFrame:
-    """Pure per-batch T6: one pandas frame of road-ends (complete
-    junction groups) → TRIM_SCHEMA rows (doc_id, i_id, road_id,
-    is_src_end, trim, polygon_xy, kind, movements_json, cw_index).
-    Every junction, whatever its degree, goes through _t6_rows and the
-    kernel's one dispatch. Shared verbatim by the Spark map_groups pass
-    below and the single-node sequential replay (plans/sequential.py)
-    so the two engines stay bit-identical."""
-    rows = [row for grp in junction_groups(pdf)
-            for row in _t6_rows(grp, trims_only)]
-    return pd.DataFrame(rows, columns=[f.name for f in TRIM_SCHEMA.fields])
+def _group_frame(rows: list[tuple], schema: StructType) -> pd.DataFrame:
+    """Kernel output tuples → one frame in `schema` column order. Long
+    columns are nullable Int64: an object column mixing None with int
+    ids would become float64 and mangle xxhash64 ids beyond 2^53."""
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    return pd.DataFrame({
+        f.name: pd.array(c, dtype="Int64")
+        if isinstance(f.dataType, LongType) else list(c)
+        for f, c in zip(schema.fields, cols)})
 
 
-def stream_groups(batches, key_cols: list[str], process):
-    """Process Arrow batches of KEY-SORTED rows with bounded memory:
-    each batch's complete key groups are handled eagerly; only the rows
-    of the batch's final key (possibly continuing into the next batch)
-    carry forward. Peak per-task pandas footprint = one Arrow batch +
-    one group, instead of the whole shuffled partition — the difference
-    between bounded memory and an OOM on a skewed 100 TB partition.
-    Requires key-sorted input; map_groups provides it."""
-    carry = None
+def run_groups(batches, keys: list[str], kernel, schema: StructType):
+    """map_groups' runner over one partition's KEY-SORTED pandas
+    batches: each batch is decomposed once into dict rows of native
+    Python values, its complete groups run through `kernel`, and only
+    the rows of its last key (which may continue in the next batch)
+    carry forward. Peak footprint is one batch plus one group, never
+    the whole shuffled partition — the difference between bounded
+    memory and an OOM on a skewed partition. Yields one output frame
+    per batch that produced rows."""
+    carry: list[dict] = []
+    carry_keys: list[np.ndarray] = []
     for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
         if not len(pdf):
             continue
-        last = pdf.iloc[-1]
-        mask = None
-        for k in key_cols:
-            m = pdf[k] == last[k]
-            mask = m if mask is None else (mask & m)
-        carry = pdf[mask]
-        head = pdf[~mask]
-        if len(head):
-            yield process(head)
-    if carry is not None and len(carry):
-        yield process(carry)
+        names = list(pdf.columns)
+        rows = carry + [dict(zip(names, vals)) for vals in
+                        zip(*(pdf[c].tolist() for c in names))]
+        kcols = [pdf[k].to_numpy() for k in keys]
+        if carry:
+            kcols = [np.concatenate([ck, k])
+                     for ck, k in zip(carry_keys, kcols)]
+        bounds = group_runs(kcols)
+        last = bounds[-2]
+        out = [t for a, b in zip(bounds[:-2], bounds[1:-1])
+               for t in kernel(rows[a:b])]
+        carry, carry_keys = rows[last:], [k[last:] for k in kcols]
+        if out:
+            yield _group_frame(out, schema)
+    if carry:
+        out = kernel(carry)
+        if out:
+            yield _group_frame(out, schema)
 
 
-def map_groups(df: DataFrame, keys: list[str], fn, schema,
+def map_groups(df: DataFrame, keys: list[str], kernel, schema: StructType,
                n: int | None = None) -> DataFrame:
-    """Run `fn` on complete `keys` groups: hash-repartition on keys
-    (n partitions; when None, spark.sql.shuffle.partitions, which AQE
-    may coalesce — only T6 and transforms pass an n), sort within
-    partitions on keys, and stream each partition's Arrow batches
-    through stream_groups. fn gets a pandas frame of one or more
-    complete groups and returns a pandas frame of `schema` — the
-    per-group semantics of groupBy().applyInPandas without its
-    per-group plumbing overhead and without materializing the
-    partition."""
-    def batched(batches):
-        yield from stream_groups(batches, keys, fn)
-
+    """Run `kernel(rows)` once per complete `keys` group, where `rows`
+    is the group's list of dicts of native Python values in arrival
+    order and the kernel returns tuples in `schema` order. Every
+    grouped kernel of the package crosses into Spark here:
+    hash-repartition on keys (n partitions; when None,
+    spark.sql.shuffle.partitions, which AQE may coalesce), sort within
+    partitions on keys, then run_groups over each partition's Arrow
+    batches — groupBy().applyInPandas semantics without its per-group
+    plumbing and without materializing the partition."""
     parted = df.repartition(n, *keys) if n else df.repartition(*keys)
-    return parted.sortWithinPartitions(*keys).mapInPandas(batched, schema)
+    return parted.sortWithinPartitions(*keys).mapInPandas(
+        lambda batches: run_groups(batches, keys, kernel, schema), schema)
 
 
 def row_udf(kernel, return_type):
@@ -272,7 +267,7 @@ def run_t6(road_ends: DataFrame, trims_only: bool = False,
     driving_side. One map_groups pass over (doc_id, i_id) junction
     groups (1-6 rows each) in n partitions."""
     return map_groups(road_ends, ["doc_id", "i_id"],
-                      lambda pdf: t6_process(pdf, trims_only),
+                      lambda rows: _t6_rows(rows, trims_only),
                       TRIM_SCHEMA, n)
 
 

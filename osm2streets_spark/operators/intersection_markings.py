@@ -16,13 +16,15 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ..geom.core import geojson_feature, ring_centroid
 from ..geom.intersection_kernel import road_end, sidewalk_corners
-from .geometry_update import junction_groups, map_groups
+from .geometry_update import map_groups
 from .render import explode_features
 
 ZEBRA_BAR_WIDTH = 0.5
@@ -73,8 +75,32 @@ def render_intersection_markings(ints: DataFrame) -> DataFrame:
                             "marking_idx")
 
 
-CORNER_SCHEMA = "doc_id string, i_id long, marking_idx int, " \
-    "feature_json string"
+CORNER_SCHEMA = StructType([
+    StructField("doc_id", StringType()),
+    StructField("i_id", LongType()),
+    StructField("marking_idx", IntegerType()),
+    StructField("feature_json", StringType()),
+])
+
+
+def sidewalk_corner_rows(grp: list[dict]) -> list[tuple]:
+    """One junction's sidewalk-corner features (CORNER_SCHEMA tuples)."""
+    # by road_id, a loop road's src end first (as the sequential twin
+    # orders them)
+    grp.sort(key=lambda r: (r["road_id"], not r["is_src_end"]))
+    ends = [road_end(int(r["road_id"]), bool(r["is_src_end"]),
+                     r["center_xy"], r["total_width"],
+                     specs=json.loads(r["lane_specs_json"]))
+            for r in grp]
+    ends = [e for e in ends if len(e["xy"]) >= 2]
+    if len(ends) < 2:
+        return []
+    g = grp[0]
+    ring = np.asarray(g["polygon_xy"], dtype=float).reshape(-1, 2)
+    return [(g["doc_id"], int(g["i_id"]), idx,
+             geojson_feature("Polygon", ring_out, float(g["lon0"]),
+                             float(g["lat0"]), {"type": "sidewalk corner"}))
+            for idx, ring_out in enumerate(sidewalk_corners(ends, ring))]
 
 
 def render_sidewalk_corners(roads_final: DataFrame,
@@ -98,29 +124,5 @@ def render_sidewalk_corners(roads_final: DataFrame,
     polys = ints.where(F.col("polygon_xy").isNotNull()).select(
         "doc_id", "i_id", "polygon_xy", "lon0", "lat0")
     src = ends.join(polys, ["doc_id", "i_id"])
-
-    def _corners(pdf):
-        rows = []
-        for grp in junction_groups(pdf):
-            # by road_id, a loop road's src end first (as the sequential
-            # twin orders them)
-            grp.sort(key=lambda r: (r["road_id"], not r["is_src_end"]))
-            ends = [road_end(int(r["road_id"]), bool(r["is_src_end"]),
-                             r["center_xy"], r["total_width"],
-                             specs=json.loads(r["lane_specs_json"]))
-                    for r in grp]
-            ends = [e for e in ends if len(e["xy"]) >= 2]
-            if len(ends) < 2:
-                continue
-            g = grp[0]
-            ring = np.asarray(g["polygon_xy"], dtype=float).reshape(-1, 2)
-            for idx, ring_out in enumerate(sidewalk_corners(ends, ring)):
-                feat = geojson_feature("Polygon", ring_out, float(g["lon0"]),
-                                       float(g["lat0"]),
-                                       {"type": "sidewalk corner"})
-                rows.append((g["doc_id"], int(g["i_id"]), idx, feat))
-        return pd.DataFrame(
-            rows, columns=["doc_id", "i_id", "marking_idx",
-                           "feature_json"])
-
-    return map_groups(src, ["doc_id", "i_id"], _corners, CORNER_SCHEMA)
+    return map_groups(src, ["doc_id", "i_id"], sidewalk_corner_rows,
+                      CORNER_SCHEMA)

@@ -14,7 +14,6 @@ reversing as needed).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -89,37 +88,38 @@ def assemble_multipolygons(relations: DataFrame, ways: DataFrame,
         ["doc_id", "node_id"])
     joined = members.join(way_geoms, ["doc_id", "way_id"])
 
-    def _process(pdf):
-        rows = []
-        for (doc_id, rel_id), g in pdf.groupby(["doc_id", "rel_id"],
-                                               sort=False):
-            way_pts = []
-            for (way_id, role), wg in sorted(
-                    g.groupby(["way_id", "role"], sort=False),
-                    key=lambda t: t[0][0]):
-                wg = wg.sort_values("pos")
-                pts = [[round(float(a), 9), round(float(b), 9)]
-                       for a, b in zip(wg["lon"], wg["lat"])]
-                way_pts.append((pts, role))
-            rings = assemble_rings(way_pts)
-            if not rings["outer"]:
-                continue
-            area = 0.0
-            for ring in rings["outer"]:
-                arr = np.asarray(ring)
-                x, y = arr[:, 0], arr[:, 1]
-                area += abs(0.5 * float(np.dot(x, np.roll(y, -1))
-                                        - np.dot(y, np.roll(x, -1))))
-            if len(rings["outer"]) == 1:
-                kind = "Polygon"
-                coords = [rings["outer"][0]] + rings["inner"]
-            else:
-                kind = "MultiPolygon"
-                coords = [[o] for o in rings["outer"]]
-            rows.append((doc_id, int(rel_id), len(rings["outer"]),
-                         len(rings["inner"]), round(area, 12),
-                         feature_dumps(kind, coords, {
-                             "type": "multipolygon", "rel_id": int(rel_id)})))
-        return pd.DataFrame(rows, columns=[f.name for f in MP_SCHEMA.fields])
+    def _process(rows):
+        # member ways in (way_id, role) first-occurrence order, stably
+        # sorted by way_id; each way's points by position
+        members: dict[tuple, list[dict]] = {}
+        for r in rows:
+            members.setdefault((r["way_id"], r["role"]), []).append(r)
+        way_pts = []
+        for (_, role), wrs in sorted(members.items(),
+                                     key=lambda t: t[0][0]):
+            wrs.sort(key=lambda r: r["pos"])
+            way_pts.append(([[round(float(r["lon"]), 9),
+                              round(float(r["lat"]), 9)] for r in wrs],
+                            role))
+        rings = assemble_rings(way_pts)
+        if not rings["outer"]:
+            return []
+        area = 0.0
+        for ring in rings["outer"]:
+            arr = np.asarray(ring)
+            x, y = arr[:, 0], arr[:, 1]
+            area += abs(0.5 * float(np.dot(x, np.roll(y, -1))
+                                    - np.dot(y, np.roll(x, -1))))
+        if len(rings["outer"]) == 1:
+            kind = "Polygon"
+            coords = [rings["outer"][0]] + rings["inner"]
+        else:
+            kind = "MultiPolygon"
+            coords = [[o] for o in rings["outer"]]
+        rel_id = int(rows[0]["rel_id"])
+        return [(rows[0]["doc_id"], rel_id, len(rings["outer"]),
+                 len(rings["inner"]), round(area, 12),
+                 feature_dumps(kind, coords, {
+                     "type": "multipolygon", "rel_id": rel_id}))]
 
     return map_groups(joined, ["doc_id", "rel_id"], _process, MP_SCHEMA)

@@ -7,7 +7,7 @@ largest connected component.
 
 Spark shape (SURVEY.md §2.10): these rewrites have sequential
 dependencies between nearby collapses, so each document's graph is
-rewritten locally inside ONE applyInPandas group — a doc is small by
+rewritten locally inside ONE map_groups group — a doc is small by
 construction (dense docs are split by cell upstream), and documents are
 the unit of parallelism. A pure-SQL iterate-to-fixpoint would shuffle
 the whole corpus once per round; the per-doc kernel does the fixpoint
@@ -18,7 +18,6 @@ in-memory in a single shuffle. The kernel is pure Python below
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -28,7 +27,7 @@ from pyspark.sql.types import (
 
 from ..geom.core import M_PER_DEG, simplify_rdp, polyline_length
 from ..geom.intersection_kernel import compute_trims, road_end, sort_roads_cw
-from .geometry_update import group_runs, map_groups
+from .geometry_update import map_groups
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
@@ -634,42 +633,24 @@ def _transform_doc_core(doc_id: str, rows: list[dict],
     return roads, imerges, steps
 
 
-def _transform_batch(pdf: pd.DataFrame, with_sidepath_zip: bool,
-                     with_remove_disconnected: bool) -> pd.DataFrame:
-    """One Arrow batch of complete (doc_id, _tcell) groups → one output
-    frame. The batch is decomposed ONCE into native-Python column lists
-    and dispatched with vectorized group codes (first-occurrence order,
-    matching the old groupby(sort=False))."""
-    out_cols = ["doc_id"] + [n for n, _ in _ROAD_FIELDS + _OUT_EXTRA]
-    long_cols = {n for n, t in _ROAD_FIELDS if isinstance(t, LongType)}
-    col = {c: pdf[c].tolist() for c in pdf.columns if c != "_tcell"}
-    names = list(col)
-    tcell = pdf["_tcell"].to_numpy()
-    data: dict[str, list] = {c: [] for c in out_cols}
-    for run in group_runs(pdf["doc_id"].to_numpy(), tcell):
-        rows = [{c: col[c][j] for c in names} for j in run]
-        doc_id = rows[0]["doc_id"]
-        roads, imerges, steps = _transform_doc_core(
-            doc_id, rows, with_sidepath_zip, with_remove_disconnected,
-            doc_split=bool(tcell[run[0]]))
-        # imerge and step rows as sparse dicts (see _OUT_EXTRA)
-        extra = [{"row_kind": "imerge", "src_i": surv, "dst_i": absd}
-                 for absd, surv in sorted(imerges.items())]
-        extra += [{"row_kind": "step", "road_id": k, "name": name,
-                   "src_i": n_roads, "dst_i": n_is}
-                  for k, (name, n_roads, n_is) in enumerate(steps)]
-        data["doc_id"].extend([doc_id] * (len(roads) + len(extra)))
-        data["row_kind"].extend(["road"] * len(roads))
-        for c in out_cols[1:]:
-            if c != "row_kind":
-                data[c].extend(r.get(c) for r in roads)
-            data[c].extend(e.get(c) for e in extra)
-    for c in long_cols:
-        # nullable Int64: mixing None (imerge rows) with int64 ids in
-        # an object->float64 column silently mangles xxhash64 ids
-        # beyond 2^53
-        data[c] = pd.array(data[c], dtype="Int64")
-    return pd.DataFrame(data)
+def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
+                    with_remove_disconnected: bool) -> list[tuple]:
+    """One (doc_id, _tcell) group → TRANSFORM_SCHEMA tuples: the
+    surviving roads, then the imerge and step rows as sparse dicts (see
+    _OUT_EXTRA)."""
+    doc_id = rows[0]["doc_id"]
+    roads, imerges, steps = _transform_doc_core(
+        doc_id, rows, with_sidepath_zip, with_remove_disconnected,
+        doc_split=bool(rows[0]["_tcell"]))
+    for r in roads:
+        r["row_kind"] = "road"
+    extra = [{"row_kind": "imerge", "src_i": surv, "dst_i": absd}
+             for absd, surv in sorted(imerges.items())]
+    extra += [{"row_kind": "step", "road_id": k, "name": name,
+               "src_i": n_roads, "dst_i": n_is}
+              for k, (name, n_roads, n_is) in enumerate(steps)]
+    names = TRANSFORM_SCHEMA.names[1:]
+    return [(doc_id, *map(r.get, names)) for r in roads + extra]
 
 
 def run_transforms(roads: DataFrame,
@@ -701,7 +682,7 @@ def run_transforms(roads: DataFrame,
     cols = ["doc_id", "_tcell"] + [c for c, _ in _ROAD_FIELDS]
     return map_groups(
         src.select(*cols), ["doc_id", "_tcell"],
-        lambda pdf: _transform_batch(pdf, with_sidepath_zip,
+        lambda rows: _transform_rows(rows, with_sidepath_zip,
                                      with_remove_disconnected),
         TRANSFORM_SCHEMA, n)
 

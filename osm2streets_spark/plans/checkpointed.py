@@ -39,12 +39,11 @@ def _write_snapshot(df: DataFrame, path: str, stage: str,
     )
     lineage_path = path + "_lineage"
     lineage.write.mode("overwrite").parquet(lineage_path)
-    rows = out.count()
     parts = [r.asDict() for r in lineage.collect()]
     manifest = {
         "stage": stage,
         "fingerprint": fingerprint,
-        "rows": rows,
+        "rows": sum(p["rows"] for p in parts),
         "n_partitions": len(parts),
         "max_partition_rows": max((p["rows"] for p in parts), default=0),
         "wall_sec": round(time.time() - t0, 3),

@@ -35,9 +35,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import HIGHWAY_WHITELIST, RAILWAY_WHITELIST
-from ..sources.fixtures import (
-    fixture_dir_for, ensure_fixtures, ensure_debug_steps_gt,
-)
+from ..sources.fixtures import fixture_dir_for, ensure_fixtures
 from ..sources.osm_xml import parse_documents, split_entities
 from ..operators.extract import (
     filter_ways, with_parsed_road_tags, restriction_relations,
@@ -362,12 +360,8 @@ def queries() -> Q:
         reference's apply_transformations_stepwise_debugging
         (transform/mod.rs:94-109) snapshots the network before/after
         each pass; this emits the per-pass network sizes per doc.
-        Oracle: the sequential replay's gt_debug_steps twin —
-        backfilled HERE (first use) rather than in oracle_sql(), so
-        merely formatting the SQL strings never pays the full
-        single-threaded sequential replay over a fixture dir whose
-        gt_debug_steps.parquet is absent."""
-        ensure_debug_steps_gt(fixture_dir_for(sf_dir))
+        Oracle: the sequential replay's gt_debug_steps twin, written
+        with the fixtures."""
         docs = load_documents(spark, fixture_dir_for(sf_dir))
         net = build_street_network(spark, docs)
         # step rows come one per transform-kernel group: a quadkey-split
@@ -1070,18 +1064,14 @@ def oracle_sql() -> dict[str, str]:
     """
     # s_split_transforms: the quadkey-split transform path (lowered
     # threshold), replayed sequentially with the identical cfg. The gt
-    # is backfilled lazily by the QUERY fn (first use), like
-    # gt_debug_steps.
+    # is backfilled lazily by the QUERY fn (first use).
     o["s_split_transforms"] = f"""
       select doc_id, way_id, osm_way_ids,
              round(trimmed_length, 2) as trimmed_length, lane_chars
       from read_parquet('{fix}/gt_split_transformed.parquet')
     """
     # s_debug_steps: stepwise-debugging twin — per-pass network sizes
-    # from the sequential replay. Backfilled lazily by the s_debug_steps
-    # QUERY fn (first use), NOT here: oracle_sql() must stay a cheap
-    # string formatter with no minutes-long sequential-replay side
-    # effect for callers that never run this oracle.
+    # from the sequential replay, written with the fixtures.
     o["s_debug_steps"] = f"""
       select doc_id, cast(step_idx as int) as step_idx, step_name,
              cast(n_roads as bigint) as n_roads,

@@ -35,7 +35,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
 
 from ..config import (
     MapConfig, DEFAULT_CONFIG, HIGHWAY_WHITELIST, RAILWAY_WHITELIST,
@@ -195,9 +194,10 @@ def _tile_cell(lon: float, lat: float, zoom: int) -> int:
     return x * (1 << 22) + y
 
 
-def _ends_frame(doc_id: str, roads: list[dict], driving_side: str,
-                restr_json_by_i: dict | None) -> pd.DataFrame:
-    """Mirror of build_road_ends for one document."""
+def _road_ends(doc_id: str, roads: list[dict], driving_side: str,
+               restr_json_by_i: dict | None) -> list[dict]:
+    """Mirror of build_road_ends for one document: its road-end dicts,
+    in road order, as t6_process takes them."""
     rows = []
     for r in roads:
         fwd = r["oneway_dir"] == "forward"
@@ -211,8 +211,6 @@ def _ends_frame(doc_id: str, roads: list[dict], driving_side: str,
             rows.append({
                 "doc_id": doc_id, "i_id": i_id, "road_id": r["road_id"],
                 "is_src_end": is_src, "xy": list(r["xy"]),
-                "geom_length": float(r["geom_length"])
-                if r.get("geom_length") is not None else np.nan,
                 "total_width": r["total_width"],
                 "driveable": bool(r["driveable"]),
                 "can_out": bool(bidi or (back if is_src else fwd)),
@@ -225,7 +223,7 @@ def _ends_frame(doc_id: str, roads: list[dict], driving_side: str,
                 "restrictions_json": (restr_json_by_i or {}).get(i_id),
                 "driving_side": driving_side,
             })
-    return pd.DataFrame(rows)
+    return rows
 
 
 def _resolve_restrictions(restrictions: list, node_q: dict,
@@ -483,7 +481,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
 
     # T6 pass 1 (trims only, ungated — the distributed gate must be a
     # no-op; divergence here would redden the oracle)
-    ends1 = _ends_frame(doc_id, roads, cfg.driving_side, None)
+    ends1 = _road_ends(doc_id, roads, cfg.driving_side, None)
     trims1 = t6_process(ends1, trims_only=True)
     tmap = {}
     for t in trims1.itertuples(index=False):
@@ -565,7 +563,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
             {"rt": x["restriction_type"], "frm": x["from_road"],
              "to": x["to_road"]})
     restr_by_i = {i: json.dumps(v) for i, v in by_i.items()}
-    ends2 = _ends_frame(doc_id, roads, cfg.driving_side, restr_by_i)
+    ends2 = _road_ends(doc_id, roads, cfg.driving_side, restr_by_i)
     trims2 = t6_process(ends2, trims_only=False)
 
     tmap2, meta, cw_rows, rings = {}, {}, [], {}

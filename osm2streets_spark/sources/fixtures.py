@@ -757,30 +757,6 @@ def generate(n_docs: int, seed: int = 42, heavy: bool = False):
     return docs, nodes, ways, rels, media, list(tiles.values())
 
 
-def ensure_debug_steps_gt(fix_dir: str) -> str | None:
-    """Lazily backfill gt_debug_steps.parquet into an already-generated
-    fixture dir (the table was added in round 6; backfilling avoids a
-    GEN_VERSION bump, which would force regenerating the perf-only
-    scaling corpora for a table they never carry). No-op for sf_scale
-    dirs (never oracled) and when the file already exists."""
-    if os.path.basename(os.path.normpath(fix_dir)).startswith("sf_scale"):
-        return None
-    path = os.path.join(fix_dir, "gt_debug_steps.parquet")
-    if os.path.exists(path):
-        return path
-    from ..plans.sequential import convert_document
-    docs = pq.read_table(
-        os.path.join(fix_dir, "documents.parquet"),
-        columns=["doc_id", "spans"]).to_pylist()
-    dbg_rows: list[dict] = []
-    for d in docs:
-        sink: dict = {}
-        convert_document(d["doc_id"], d["spans"], debug_sink=sink)
-        for s in sink.get("transform_steps", []):
-            dbg_rows.append({"doc_id": d["doc_id"], **s})
-    return _write_rows(dbg_rows, DEBUG_STEPS_SCHEMA, path)
-
-
 # Quadkey-split CORRECTNESS twin (round-6 verdict ask #7): the default
 # transform_split_threshold (4000 roads/doc) never fires on the small
 # correctness fixtures, so the split machinery — per-cell transform
@@ -797,8 +773,8 @@ SPLIT_GT_ZOOM = 18
 def ensure_split_transforms_gt(fix_dir: str) -> str | None:
     """Lazily backfill gt_split_transformed.parquet (same shape as
     gt_transformed, computed with the lowered split threshold) into an
-    already-generated fixture dir — like ensure_debug_steps_gt, no
-    GEN_VERSION churn. No-op for sf_scale dirs (never oracled)."""
+    already-generated fixture dir, with no GEN_VERSION churn. No-op for
+    sf_scale dirs (never oracled)."""
     if os.path.basename(os.path.normpath(fix_dir)).startswith("sf_scale"):
         return None
     path = os.path.join(fix_dir, "gt_split_transformed.parquet")

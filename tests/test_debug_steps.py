@@ -14,12 +14,10 @@ from osm2streets_spark.plans import registry
 from osm2streets_spark.plans.pipeline import (
     build_street_network, load_documents,
 )
-from osm2streets_spark.sources.fixtures import ensure_debug_steps_gt
 
 
 def test_debug_steps_match_sequential_replay(spark, fixture_dir):
-    gt_path = ensure_debug_steps_gt(fixture_dir)
-    gt = pd.read_parquet(gt_path)
+    gt = pd.read_parquet(os.path.join(fixture_dir, "gt_debug_steps.parquet"))
     got = (registry.queries()["s_debug_steps"](spark, fixture_dir)
            .toPandas())
 

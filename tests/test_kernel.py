@@ -2,7 +2,6 @@
 lattice, movements, clockwise ordering, trims, polygons — no Spark."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from osm2streets_spark.geom.intersection_kernel import (
@@ -225,7 +224,7 @@ def test_transforms_refresh_agrees_with_t6():
                 "is_edge": r["src_is_edge" if is_src else "dst_is_edge"],
                 "other_i": r["dst_i" if is_src else "src_i"],
                 "restrictions_json": None, "driving_side": "right"})
-    t6 = t6_process(pd.DataFrame(rows), trims_only=True)
+    t6 = t6_process(rows, trims_only=True)
     want = {(t.road_id, t.is_src_end): t.trim for t in t6.itertuples()}
     got = {(r["road_id"], s): r["trim_start" if s else "trim_end"]
            for r in roads for s in (True, False)}
@@ -237,8 +236,8 @@ def test_transforms_refresh_agrees_with_t6():
 
 
 def test_t6_of_no_ends_is_empty():
-    """A doc left with no roads hands T6 a frame without rows or
-    columns; it yields no trim rows rather than failing."""
+    """A doc left with no roads hands T6 no ends; it yields no trim
+    rows rather than failing."""
     for trims_only in (True, False):
-        out = t6_process(pd.DataFrame([]), trims_only)
+        out = t6_process([], trims_only)
         assert out.empty and "trim" in out.columns

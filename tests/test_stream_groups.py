@@ -1,13 +1,16 @@
-"""Bounded-memory group streaming (stream_groups): per-task pandas
-footprint is one Arrow batch + one carried group, not the partition.
-Forcing tiny Arrow batches must not change any result."""
+"""Bounded-memory group streaming (map_groups' runner, run_groups):
+per-task footprint is one Arrow batch + one carried group, not the
+partition. Forcing tiny Arrow batches must not change any result."""
 
 import pandas as pd
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 from osm2streets_spark.operators.geometry_update import (
-    map_groups, stream_groups,
+    map_groups, run_groups,
 )
+
+KNS = StructType([StructField(c, LongType()) for c in ("k", "n", "s")])
 
 
 def test_stream_groups_complete_and_bounded():
@@ -17,41 +20,47 @@ def test_stream_groups_complete_and_bounded():
     pdf = pd.DataFrame(rows)
     batches = [pdf.iloc[i:i + 6] for i in range(0, len(pdf), 6)]
 
-    seen_sizes = []
     seen_groups = []
+    count = {"in": 0, "done": 0}
+    held = []
 
-    def process(chunk):
-        seen_sizes.append(len(chunk))
-        out = chunk.groupby("k")["v"].sum().reset_index()
-        # every group handed to process must be COMPLETE
-        counts = chunk.groupby("k").size()
-        assert (counts == 7).all(), counts
-        seen_groups.extend(counts.index.tolist())
-        return out
+    def kernel(group):
+        # every group handed to the kernel must be COMPLETE
+        assert len(group) == 7 and {r["k"] for r in group} == \
+            {group[0]["k"]}, group
+        seen_groups.append(group[0]["k"])
+        count["done"] += len(group)
+        return [(group[0]["k"], len(group), sum(r["v"] for r in group))]
 
-    outs = list(stream_groups(iter(batches), ["k"], process))
+    def feed():
+        for b in batches:
+            # rows the runner holds once it has this batch: the rows
+            # it took in minus those its kernel calls already consumed
+            count["in"] += len(b)
+            held.append(count["in"] - count["done"])
+            yield b
+
+    outs = list(run_groups(feed(), ["k"], kernel, KNS))
     got = pd.concat(outs, ignore_index=True).sort_values("k")
-    assert got["v"].tolist() == [21] * 10
+    assert got["s"].tolist() == [21] * 10
     assert sorted(seen_groups) == list(range(10))
     # bounded: one batch (6) + one carried group (<=7) minus the held key
-    assert max(seen_sizes) <= 6 + 7
+    assert max(held) <= 6 + 7
 
 
 def test_map_groups_hands_fn_complete_groups(spark):
-    """map_groups shuffles and sorts for stream_groups itself: with
+    """map_groups shuffles and sorts for its runner itself: with
     16-record Arrow batches, every group of 70 unsorted rows still
-    reaches fn whole, exactly once."""
+    reaches the kernel whole, exactly once."""
     df = spark.range(700).selectExpr("id % 10 AS k", "id AS v")
 
-    def fn(pdf):
-        return pdf.groupby("k")["v"].agg(["size", "sum"]).reset_index() \
-            .rename(columns={"size": "n", "sum": "s"})
+    def fn(rows):
+        return [(rows[0]["k"], len(rows), sum(r["v"] for r in rows))]
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-        rows = map_groups(df, ["k"], fn, "k long, n long, s long",
-                          3).collect()
+        rows = map_groups(df, ["k"], fn, KNS, 3).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert sorted((r.k, r.n, r.s) for r in rows) == [
@@ -171,17 +180,20 @@ def test_tiny_batches_identical_per_doc_operators(spark, qname):
 
 @pytest.mark.parametrize("tokens,helpers", [
     (("stream_groups", "sortWithinPartitions"),
-     {"geometry_update.py": ("stream_groups", "map_groups")}),
+     {"geometry_update.py": ("map_groups",)}),
     (("pandas_udf",),
      {"geometry_update.py": ("row_udf",), "similarity.py": ("_lsh_bucket",)}),
-], ids=["stream_groups", "pandas_udf"])
+    ((".groupby(", "itertuples"),
+     {"geometry_update.py": ("group_runs", "run_groups")}),
+], ids=["stream_groups", "pandas_udf", "pandas_groupby"])
 def test_no_hand_rolled_group_streaming(tokens, helpers):
     """Every grouped kernel goes through map_groups, which sorts for
-    stream_groups, and every per-row kernel through row_udf: no token
-    may appear in operators/ outside its helper definitions, so a
-    hand-rolled copy of the shuffle or of the per-row Arrow loop cannot
-    come back. similarity._lsh_bucket folds a whole batch at once and
-    is the one pandas UDF allowed outside row_udf."""
+    its runner and hands each kernel one complete group, and every
+    per-row kernel through row_udf: no token may appear in operators/
+    outside its helper definitions, so a hand-rolled copy of the
+    shuffle, of the per-row Arrow loop or of a per-caller pandas group
+    split cannot come back. similarity._lsh_bucket folds a whole batch
+    at once and is the one pandas UDF allowed outside row_udf."""
     import ast
     import pathlib
 
