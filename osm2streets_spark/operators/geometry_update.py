@@ -44,15 +44,12 @@ from ..geom.intersection_kernel import (
 # with RDP ε=0.5 m (split_ways.rs:330-341)
 # ---------------------------------------------------------------------------
 
-PROJ_SCHEMA = StructType([
-    StructField("xy", ArrayType(DoubleType())),
-    StructField("geom_length", DoubleType()),
-])
+PROJ_SCHEMA = ArrayType(DoubleType())
 
 
-def project_row(pts, lon0, lat0, shift) -> tuple[list, float]:
+def project_row(pts, lon0, lat0, shift) -> list:
     """Lon/lat points → the flat meters-plane reference line (RDP 0.5 m,
-    then the placement shift) and its length."""
+    then the placement shift)."""
     xy = lonlat_to_xy(np.array([[q["lon"], q["lat"]] for q in pts]),
                       lon0, lat0)
     xy = simplify_rdp(xy, 0.5)
@@ -61,26 +58,19 @@ def project_row(pts, lon0, lat0, shift) -> tuple[list, float]:
         # K3/K6: the mapped way sits at the tagged placement; shift to
         # the full-width center (road.rs:166-193)
         xy = shift_polyline(xy, shift)
-    # length of the FINAL reference line: the trims-only too_short flag
-    # compares trims against exactly this
-    return xy.ravel().tolist(), float(polyline_length(xy))
+    return xy.ravel().tolist()
 
 
 def with_projected_geometry(roads: DataFrame, anchors: DataFrame) -> DataFrame:
     """Join per-doc projection anchors (min corner of the doc bbox) and
-    compute the meters-plane reference line (placement-corrected) plus
-    its length (consumed by apply_trim_flags' too_short flag)."""
+    compute the meters-plane reference line (placement-corrected)."""
     r = roads.join(anchors.select(
         "doc_id", F.col("min_lon").alias("lon0"), F.col("min_lat").alias("lat0")
     ), "doc_id")
     if "placement_shift" not in r.columns:
         r = r.withColumn("placement_shift", F.lit(0.0))
-    # batched: each withColumn is a full plan re-analysis on the driver
-    udf = row_udf(project_row, PROJ_SCHEMA)
-    return r.withColumn("_p", udf("pts", "lon0", "lat0", "placement_shift")) \
-            .withColumns({"xy": F.col("_p.xy"),
-                          "geom_length": F.col("_p.geom_length")}) \
-            .drop("_p")
+    return r.withColumn("xy", row_udf(project_row, PROJ_SCHEMA)(
+        "pts", "lon0", "lat0", "placement_shift"))
 
 
 # ---------------------------------------------------------------------------
@@ -260,18 +250,17 @@ def row_udf(kernel, return_type):
     return F.pandas_udf(udf, return_type)
 
 
-def run_t6(road_ends: DataFrame, trims_only: bool = False,
-           n: int | None = None) -> DataFrame:
+def run_t6(road_ends: DataFrame, n: int | None = None) -> DataFrame:
     """road_ends columns: doc_id, i_id, road_id, is_src_end, xy,
     total_width, driveable, can_out, can_in, restrictions_json,
     driving_side. One map_groups pass over (doc_id, i_id) junction
-    groups (1-6 rows each) in n partitions."""
+    groups (1-6 rows each) in n partitions: trims, ring, movements and
+    kind per junction."""
     return map_groups(road_ends, ["doc_id", "i_id"],
-                      lambda rows: _t6_rows(rows, trims_only),
-                      TRIM_SCHEMA, n)
+                      lambda rows: _t6_rows(rows, False), TRIM_SCHEMA, n)
 
 
-def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,
+def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame,
                     driving_side: str = "right") -> DataFrame:
     """Explode each road to its two intersection ends with drivability
     per end (road.rs:232-254: a oneway road can only exit via its dst
@@ -286,15 +275,6 @@ def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,
     # explode-of-two-structs instead of a union: one pass over roads,
     # one plan subtree (a union doubles the upstream subtree and the
     # stage count)
-    src = roads
-    missing = {c: F.lit(None).cast("double")
-               for c in ("pretrim_src", "pretrim_dst")
-               if c not in src.columns}
-    missing.update({c: F.lit(None).cast("boolean")
-                    for c in ("src_is_edge", "dst_is_edge")
-                    if c not in src.columns})
-    if missing:
-        src = src.withColumns(missing)
     both = F.array(
         F.struct(
             F.col("src_i").alias("i_id"), F.lit(True).alias("is_src_end"),
@@ -311,7 +291,7 @@ def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,
             F.col("src_i").alias("other_i"),
         ),
     )
-    ends = src.select(
+    ends = roads.select(
         "doc_id", "road_id", "xy", "total_width", "driveable",
         is_link.alias("is_link"), F.explode(both).alias("_e"),
     ).select(
@@ -323,13 +303,10 @@ def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame | None,
         F.col("_e.is_edge").alias("is_edge"),
         F.col("_e.other_i").alias("other_i"),
     )
-    if restrictions_by_i is not None:
-        # restrictions are sparse but corpus-proportional — a plain hash
-        # join (NOT broadcast: it would not survive a 100 TB corpus);
-        # AQE picks broadcast at runtime when the side is actually tiny
-        ends = ends.join(restrictions_by_i, ["doc_id", "i_id"], "left")
-    else:
-        ends = ends.withColumn("restrictions_json", F.lit(None).cast("string"))
+    # restrictions are sparse but corpus-proportional — a plain hash
+    # join (NOT broadcast: it would not survive a 100 TB corpus); AQE
+    # picks broadcast at runtime when the side is actually tiny
+    ends = ends.join(restrictions_by_i, ["doc_id", "i_id"], "left")
     return ends.withColumn("driving_side", F.lit(driving_side))
 
 
@@ -378,47 +355,24 @@ def rebuild_center(raw, t0, t1) -> tuple[list, float, bool]:
     return pl.ravel().tolist(), float(polyline_length(pl)), False
 
 
-def _join_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
-    """Left-join each road to its trim_start (from its src-end group)
-    and trim_end (from its dst-end group), 0 where no group set one.
-    The two ends are pivoted into one row per road FIRST so the trims
-    subtree is consumed exactly once — referencing it twice (src join
-    + dst join) would re-execute the whole T6 stage twice (no subtree
-    reuse past the exchange)."""
+def apply_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
+    """Each road takes trim_start from its src-end group and trim_end
+    from its dst-end group (two independent groups, mirroring the
+    reference's per-intersection trimming), 0 where no group set one,
+    then rebuilds its center line (K9). The two ends are pivoted into
+    one row per road FIRST so the trims subtree is consumed exactly
+    once — referencing it twice (src join + dst join) would re-execute
+    the whole T6 stage twice (no subtree reuse past the exchange)."""
     t = trims.groupBy("doc_id", "road_id").agg(
         F.max(F.when(F.col("is_src_end"), F.col("trim"))).alias("trim_start"),
         F.max(F.when(~F.col("is_src_end"), F.col("trim"))).alias("trim_end"),
     )
-    return roads.join(t, ["doc_id", "road_id"], "left") \
-                .fillna({"trim_start": 0.0, "trim_end": 0.0})
-
-
-def apply_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
-    """Each road takes trim_start from its src-end group and trim_end
-    from its dst-end group (two independent groups, mirroring the
-    reference's per-intersection trimming), then rebuilds its center
-    line (K9)."""
-    r = _join_trims(roads.drop("too_short", "center_xy", "trimmed_length",
-                               "trim_start", "trim_end"), trims)
+    r = roads.join(t, ["doc_id", "road_id"], "left") \
+             .fillna({"trim_start": 0.0, "trim_end": 0.0})
     r = r.withColumn(
         "_c", row_udf(rebuild_center, CENTER_SCHEMA)(
             "xy", "trim_start", "trim_end"))
     return r.select("*", "_c.*").drop("_c")
-
-
-def apply_trim_flags(roads: DataFrame, trims: DataFrame) -> DataFrame:
-    """Pass-1 join-back WITHOUT the Python center rebuild: the transform
-    stage only consumes trim_start/trim_end (pretrim memo) and too_short
-    (collapse candidacy), so a Catalyst comparison against the
-    precomputed geom_length replaces the whole rebuild_center UDF pass.
-    Roads without a trim row get trims of 0."""
-    r = _join_trims(roads.drop("too_short", "trim_start", "trim_end"),
-                    trims)
-    # same predicate as rebuild_center's annihilation test
-    # (operations/update_geometry.rs:58-63)
-    return r.withColumn(
-        "too_short",
-        (F.col("trim_start") + F.col("trim_end")) >= F.col("geom_length"))
 
 
 def finalize_intersections(ints: DataFrame, trims: DataFrame,

@@ -31,13 +31,17 @@ from .geometry_update import map_groups
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
-    """Eager per-junction trim refresh, mirroring the reference's
-    update_i calls from insert_road/remove_road (lib.rs:99-121): after a
-    T2 splice, both endpoints of the new road get their geometry
-    recomputed, which can flag newly trim-annihilated roads for the
-    SECOND CollapseShortRoads pass (the cascade the goldens encode:
-    bristol/taipei crossing stubs only annihilate after their
-    neighbors splice). Runs T6's own per-junction dispatch."""
+    """Per-junction trim computation over transforms road dicts: sets
+    trim_start/trim_end at the `i_ids` ends and too_short on every road
+    touching them. The kernel runs it once over every junction before
+    the transforms (split_ways.rs:313-322), then eagerly after each T2
+    splice, mirroring the reference's update_i calls from
+    insert_road/remove_road (lib.rs:99-121): both endpoints of the new
+    road get their geometry recomputed, which can flag newly
+    trim-annihilated roads for the SECOND CollapseShortRoads pass (the
+    cascade the goldens encode: bristol/taipei crossing stubs only
+    annihilate after their neighbors splice). Runs T6's own
+    per-junction dispatch."""
     incident: dict[int, list] = {}
     for r in roads:
         if r["src_i"] in i_ids:
@@ -566,18 +570,15 @@ _ROAD_FIELDS = [
     ("lane_chars", StringType()), ("dir_chars", StringType()),
     ("total_width", DoubleType()), ("driveable", BooleanType()),
     ("internal_junction_road", BooleanType()),
-    ("too_short", BooleanType()),
     ("osm_way_ids", ArrayType(LongType())),
     ("lon0", DoubleType()), ("lat0", DoubleType()),
     # per-end metadata consumed by the kernels (all nullable):
-    # MapEdge guard, T2 crossing guard, T2 placement guard, pass-1
-    # trims feeding the trim_roads_for_merging memo
+    # MapEdge guard, T2 crossing guard, T2 placement guard
     ("src_is_edge", BooleanType()), ("dst_is_edge", BooleanType()),
     ("src_has_crossing", BooleanType()),
     ("dst_has_crossing", BooleanType()),
     ("has_restriction", BooleanType()),
     ("placement_shift", DoubleType()),
-    ("trim_start", DoubleType()), ("trim_end", DoubleType()),
     ("lane_fingerprint", StringType()),
     # dense-doc cell split: frozen-seam flags (an intersection whose
     # incident roads span transform cells must not be collapsed — its
@@ -626,6 +627,14 @@ def _transform_doc_core(doc_id: str, rows: list[dict],
             r["osm_way_ids"] = [r["way_id"]]
         else:
             r["osm_way_ids"] = list(r["osm_way_ids"])
+    # the initial geometry of every junction, before any transform
+    # (split_ways.rs:313-322): trim_start/trim_end feed the
+    # trim_roads_for_merging memo, too_short the CollapseShortRoads
+    # candidates. A frozen seam junction sees only this cell's roads;
+    # its trims are never used (no collapse or splice touches it, and
+    # T6 pass 2 recomputes every trim).
+    _recompute_trims_at(rows, {i for r in rows for i in (r["src_i"],
+                                                        r["dst_i"])})
     imerges: dict[int, int] = {}
     steps: list = []
     roads = apply_standard_transforms(rows, with_sidepath_zip, imerges,
@@ -697,15 +706,12 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
     if "osm_way_ids" not in src.columns:
         src = src.withColumn("osm_way_ids", F.array("way_id"))
     defaults = {
-        "too_short": F.lit(False),
         "src_is_edge": F.lit(None).cast("boolean"),
         "dst_is_edge": F.lit(None).cast("boolean"),
         "src_has_crossing": F.lit(None).cast("boolean"),
         "dst_has_crossing": F.lit(None).cast("boolean"),
         "has_restriction": F.lit(None).cast("boolean"),
         "placement_shift": F.lit(None).cast("double"),
-        "trim_start": F.lit(None).cast("double"),
-        "trim_end": F.lit(None).cast("double"),
         "lane_fingerprint": F.lit(None).cast("string"),
         "src_frozen": F.lit(None).cast("boolean"),
         "dst_frozen": F.lit(None).cast("boolean"),

@@ -70,23 +70,18 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
     reused (resume-from-checkpoint); change the fingerprint to force
     recompute. Returns {stage: manifest}."""
     os.makedirs(out_root, exist_ok=True)
-    manifests: dict[str, dict] = {}
-
     stages = ["roads", "intersections", "features"]
-    done = {}
+    manifests: dict[str, dict] = {}
     for s in stages:
         m = _load_manifest(os.path.join(out_root, s))
         if m and m.get("fingerprint") == fingerprint:
-            done[s] = m
-    if len(done) == len(stages):
-        return done  # fully resumable — nothing to do
+            manifests[s] = m
+    if len(manifests) == len(stages):
+        return manifests  # fully resumable — nothing to do
 
     net = build_street_network(spark, docs, cfg)
     for s in stages:
-        path = os.path.join(out_root, s)
-        m = _load_manifest(path)
-        if m and m.get("fingerprint") == fingerprint:
-            manifests[s] = m
+        if s in manifests:
             continue
         df = net[s]
         if s == "features":
@@ -99,5 +94,6 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
         else:
             df = df.select("doc_id", "i_id", "qx", "qy", "kind", "control",
                            "movements_json", "polygon_xy")
-        manifests[s] = _write_snapshot(df, path, s, fingerprint)
+        manifests[s] = _write_snapshot(df, os.path.join(out_root, s), s,
+                                       fingerprint)
     return manifests

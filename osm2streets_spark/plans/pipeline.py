@@ -3,8 +3,7 @@
 documents ──parse──▶ nodes/ways/relations
   ─F2 filter─▶ ways ─K1 lanes─▶ way attrs
   ─J1 point agg─▶ intersections(v0)   ─W1 window split─▶ roads(v0)
-  ─T6 pass 1 (trims only)─▶ too_short flags
-  ─T4/T1/T2/T1 per-doc rewrite─▶ roads(v1)
+  ─T4/T1/T2/T1 per-doc rewrite (initial trims in-kernel)─▶ roads(v1)
   ─T6 pass 2─▶ trims + polygons + movements/kind
   ─K9 join-back─▶ roads(v2, trimmed center lines)
   ─S5 render─▶ features + tile assignment + span passthrough
@@ -30,7 +29,7 @@ from ..operators.restrictions import (
 )
 from ..operators.geometry_update import (
     with_projected_geometry, build_road_ends, run_t6, apply_trims,
-    apply_trim_flags, finalize_intersections,
+    finalize_intersections,
 )
 from ..operators.transforms import run_transforms
 from ..operators.render import render_roads, render_intersections
@@ -156,9 +155,8 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
         "osm_way_ids",
         F.array(F.when(F.col("way_id") < 0,
                        ((-F.col("way_id") - 1) / 100).cast("long"))
-                 .otherwise(F.col("way_id")))) \
-                 .withColumn("too_short", F.lit(False))
-    # roads feeds T6 pass 1 (×2 ends), restrictions resolution and the
+                 .otherwise(F.col("way_id"))))
+    # roads feeds restrictions resolution, the signal lookup and the
     # transforms — persist to stop the split/lane chain recomputing per
     # consumer (this was the dominant cost before caching).
     roads = roads.persist()
@@ -229,14 +227,6 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     # Iceberg table; locally the checkpoint plays that role.
     roads = roads.drop("_src_node", "_dst_node").localCheckpoint(eager=False)
 
-    # pass 1: trims only, to find trim-annihilated roads
-    # (update_geometry.rs:58-63 → CollapseShortRoads candidates) and to
-    # feed the trim_roads_for_merging memo. Every junction goes through
-    # the kernel's one dispatch inside t6_process, with no ring built,
-    # so the sequential replay shares it bit-for-bit.
-    ends1 = build_road_ends(roads, None, cfg.driving_side)
-    trims1 = run_t6(ends1, trims_only=True, n=n)
-    roads = apply_trim_flags(roads, trims1)
     restricted_roads = resolved.select(
         "doc_id", F.explode(F.array("from_road", "to_road"))
         .alias("road_id")).distinct() \
@@ -271,6 +261,8 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
             | ((k == "maxheight")
                & v.rlike(r"^\d+(\.\d+)?\s*m?$")),
         )))
+    # the transforms kernel computes each group's initial trims itself
+    # (trim-annihilated roads, the trim_roads_for_merging memo)
     tout = run_transforms(roads, cfg.zip_sidepaths,
                           cfg.remove_disconnected,
                           cfg.transform_split_threshold,

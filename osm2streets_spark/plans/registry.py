@@ -1055,8 +1055,9 @@ def oracle_sql() -> dict[str, str]:
     # single-node sequential replay (plans/sequential.py — same pure
     # kernels, zero Spark), written as gt parquet at fixture-generation
     # time. This cross-checks every piece of distributed glue: joins,
-    # windows, the trims pivot, the pass-1 candidate gate, imerge
-    # plumbing, id hashing, Arrow batch boundaries.
+    # windows, the trims pivot, the in-kernel initial trims (against
+    # the replay's own T6 pass 1), imerge plumbing, id hashing, Arrow
+    # batch boundaries.
     o["sn_transformed_roads"] = f"""
       select doc_id, way_id, osm_way_ids,
              round(trimmed_length, 2) as trimmed_length, lane_chars

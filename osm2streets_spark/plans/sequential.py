@@ -479,8 +479,9 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
                 "feature_json": stop_line_feature_row(
                     r["xy"], r["total_width"], pcts, lon0, lat0)})
 
-    # T6 pass 1 (trims only, ungated — the distributed gate must be a
-    # no-op; divergence here would redden the oracle)
+    # T6 pass 1 (trims only): the independent reference for the
+    # initial trims the Spark transforms kernel computes per (doc, cell)
+    # group; divergence here would redden the oracle
     ends1 = _road_ends(doc_id, roads, cfg.driving_side, None)
     trims1 = t6_process(ends1, trims_only=True)
     tmap = {}
@@ -492,16 +493,6 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
         r["trim_end"] = tmap.get((r["road_id"], False), 0.0)
         r["too_short"] = (r["trim_start"] + r["trim_end"]
                           >= r["geom_length"])
-    if debug_sink is not None:
-        # forensics hook: pass-1 annihilation inputs per road
-        debug_sink["pass1"] = [
-            {k: r[k] for k in ("road_id", "way_id", "seg_idx",
-                               "geom_length", "trim_start", "trim_end",
-                               "too_short", "src_i", "dst_i", "xy",
-                               "total_width", "highway_type",
-                               "lon0", "lat0")}
-            for r in roads]
-        debug_sink["ends1"] = ends1
 
     # transforms (T4+T1+T2+T1) with the dense-doc cell split mirrored
     imerges: dict[int, int] = {}

@@ -189,8 +189,9 @@ def test_dispatch_pretrimmed():
 
 
 def _network():
-    """A 4-way junction (1) joined to a T junction (2), the other ends
-    dead ends (one a short MapEdge) — as transforms road dicts."""
+    """A 4-way junction (1) joined to a T junction (2) that also has a
+    loop road, the other ends dead ends (one a short MapEdge) — as
+    transforms road dicts."""
     def r(rid, src, dst, xy, width, edge=False):
         return {"road_id": rid, "src_i": src, "dst_i": dst,
                 "xy": [c for p in xy for c in p], "total_width": width,
@@ -204,12 +205,17 @@ def _network():
         r(4, 1, 12, [(0, 0), (3, -45)], 6.0, edge=True),
         r(5, 2, 13, [(60, 0), (60, 8)], 8.0, edge=True),
         r(6, 2, 14, [(60, 0), (110, 10)], 9.0),
+        # a loop: both ends at the T junction
+        r(7, 2, 2, [(60, 0), (80, -20), (60, -40), (40, -20), (60, 0)],
+          5.0),
     ]
 
 
 def test_transforms_refresh_agrees_with_t6():
-    """The T2 eager refresh and T6 pass 1 run one dispatch: equal trims
-    on every end of a 4-way plus a T junction and their dead ends."""
+    """The transforms kernel's trims and the twin's T6 pass 1 run one
+    dispatch: equal trims on every end of a 4-way plus a T junction,
+    their dead ends and a loop road (both ends in one group, so the end
+    order is pinned too)."""
     roads = _network()
     _recompute_trims_at(roads, {1, 2, 10, 11, 12, 13, 14})
     rows = []

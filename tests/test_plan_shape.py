@@ -28,6 +28,11 @@ from osm2streets_spark.plans.pipeline import (
 # node type, one extra actual boundary (the parse materialization).
 # `roads` and `trims` are plain reads of their own checkpoint: 0
 # exchanges and 1 boundary scan, measured 2026-10 (were (4, 2)).
+# Re-measured 2026-10 after T6 pass 1 left the Spark plan (the
+# transforms kernel computes the initial trims): all four stages are
+# unchanged, because pass 1 ran upstream of the transforms checkpoint,
+# which truncates the lineage these plans see. The dropped jobs and
+# exchanges show in perfbench's traced build counts instead.
 _CEILINGS = {
     "features": (52, 35),
     "roads": (0, 1),

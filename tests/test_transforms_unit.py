@@ -3,8 +3,8 @@
 import json
 
 from osm2streets_spark.operators.transforms import (
-    remove_disconnected, collapse_short_roads, collapse_degenerate,
-    zip_sidepaths,
+    TRANSFORM_SCHEMA, remove_disconnected, collapse_short_roads,
+    collapse_degenerate, zip_sidepaths, _transform_rows,
 )
 
 
@@ -26,7 +26,7 @@ def mk_road(rid, src, dst, xy, hw="residential", lanes="s|dd|s",
         "lane_chars": lanes, "dir_chars": "^" * len(lanes),
         "total_width": sum(s["width"] for s in specs),
         "driveable": driveable, "internal_junction_road": False,
-        "too_short": False, "osm_way_ids": [rid],
+        "osm_way_ids": [rid],
         "lon0": 0.0, "lat0": 0.0,
     }
     r.update(kw)
@@ -53,6 +53,31 @@ def test_collapse_short_road_merges_endpoints():
     assert sorted(r["road_id"] for r in out) == [1, 3]
     r3 = next(r for r in out if r["road_id"] == 3)
     assert r3["src_i"] == 11  # dst of candidate merged into its src
+
+
+def test_kernel_finds_trim_annihilated_roads_itself():
+    """The transforms kernel computes every junction's initial trims
+    itself: given no too_short or trim inputs, an 8 m link between two
+    4-way junctions of 9.2 m wide roads is trimmed 4.6 m at each end,
+    so it is collapsed, and its dst junction reported merged into its
+    src."""
+    roads = [
+        mk_road(1, 1, 2, [0, 0, 8, 0]),
+        mk_road(2, 10, 1, [-100, 0, 0, 0]),
+        mk_road(3, 1, 11, [0, 0, 0, 100]),
+        mk_road(4, 1, 12, [0, 0, 0, -100]),
+        mk_road(5, 2, 13, [8, 0, 108, 0]),
+        mk_road(6, 2, 14, [8, 0, 8, 100]),
+        mk_road(7, 2, 15, [8, 0, 8, -100]),
+    ]
+    rows = [dict(r, doc_id="d", _tcell=0) for r in roads]
+    out = [dict(zip(TRANSFORM_SCHEMA.names, t))
+           for t in _transform_rows(rows, False, True)]
+    kept = {o["road_id"]: o for o in out if o["row_kind"] == "road"}
+    assert sorted(kept) == [2, 3, 4, 5, 6, 7]
+    assert {kept[k]["src_i"] for k in (5, 6, 7)} == {1}
+    assert [(o["src_i"], o["dst_i"]) for o in out
+            if o["row_kind"] == "imerge"] == [(1, 2)]
 
 
 def test_collapse_degenerate_splices():
