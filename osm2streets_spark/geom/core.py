@@ -284,7 +284,7 @@ def shift_polyline(pl: np.ndarray, offset: float,
     b_off = pl[1:] + normals
     out = [a_off[0]]
     for i in range(len(seg) - 1):
-        p = _line_line_intersection(a_off[i], b_off[i], a_off[i + 1], b_off[i + 1])
+        p = line_line_intersection(a_off[i], b_off[i], a_off[i + 1], b_off[i + 1])
         if p is None or math.hypot(p[0] - pl[i + 1][0], p[1] - pl[i + 1][1]) > miter_threshold_m:
             # near-parallel or spiky miter: bevel via both endpoints
             out.append(b_off[i])
@@ -295,7 +295,7 @@ def shift_polyline(pl: np.ndarray, offset: float,
     return dedupe_consecutive(np.asarray(out))
 
 
-def _line_line_intersection(p1, p2, p3, p4):
+def line_line_intersection(p1, p2, p3, p4):
     """Intersection of infinite lines p1p2 and p3p4, or None if parallel."""
     d1 = p2 - p1
     d2 = p4 - p3

@@ -36,7 +36,8 @@ import numpy as np
 from .core import (
     cumulative_lengths, interpolate_along, first_intersection,
     normalized_degrees, polyline_length, shift_polyline, circle_ring,
-    dedupe_consecutive, extend_to_length, slice_between,
+    dedupe_consecutive, extend_to_length, line_line_intersection,
+    slice_between,
 )
 
 UNCONTESTED, DIVERGE, MERGE, CROSS = 0, 1, 2, 3
@@ -610,16 +611,6 @@ def _point_in_ring(ring: np.ndarray, pt) -> bool:
     return inside
 
 
-def _infinite_lines_meet(p0, p1, q0, q1):
-    d0 = p1 - p0
-    d1 = q1 - q0
-    denom = d0[0] * d1[1] - d0[1] * d1[0]
-    if abs(denom) < 1e-12:
-        return None
-    t = ((q0[0] - p0[0]) * d1[1] - (q0[1] - p0[1]) * d1[0]) / denom
-    return p0 + d0 * t
-
-
 WALKABLE = ("sidewalk", "shoulder")
 
 
@@ -674,8 +665,8 @@ def sidewalk_corners(ends: list[dict], ring: np.ndarray) -> list[np.ndarray]:
         inner2 = shift_polyline(two["r"]["xy"], two["side"] * (h2 - w2))
         if len(inner1) < 2 or len(inner2) < 2:
             continue
-        meet = _infinite_lines_meet(inner1[1], inner1[0],
-                                    inner2[1], inner2[0])
+        meet = line_line_intersection(inner1[1], inner1[0],
+                                      inner2[1], inner2[0])
         poly = list(pts) + [inner2[0]]
         if meet is not None and _point_in_ring(ring, meet):
             poly.append(meet)

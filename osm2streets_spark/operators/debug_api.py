@@ -29,7 +29,7 @@ from ..geom.core import (
     cumulative_lengths, geojson_feature, interpolate_along, polyline_length,
     thicken_polyline,
 )
-from .geometry_update import map_groups, row_udf
+from .geometry_update import map_groups, road_ends, row_udf
 
 # ---------------------------------------------------------------------------
 # way_to_xml (lib.rs:290-314)
@@ -115,8 +115,8 @@ def _chevrons(pl: np.ndarray, width: float) -> list[np.ndarray]:
     return out
 
 
-def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
-                 anchors: DataFrame) -> DataFrame:
+def way_geometry(ways: DataFrame, nodes: DataFrame,
+                 roads: DataFrame) -> DataFrame:
     """get_geometry_for_way (lib.rs:250-288): the RAW way polyline
     (streets_reader ways — pre-split, pre-trim) buffered to 1.5x the
     road's total width, plus direction chevrons. → (doc_id, way_id,
@@ -129,22 +129,20 @@ def way_geometry(ways: DataFrame, nodes: DataFrame, roads: DataFrame,
     visual (chevrons drawn over the body) without a polygon boolean
     kernel. Width comes from the minimum-road_id road derived from the
     way (reference: first road in BTreeMap order, lib.rs:253-258);
-    ways that produced no road carry no row, like the unwrap panic."""
+    ways that produced no road carry no row, like the unwrap panic.
+    The projection anchor is the roads' own (one per doc)."""
     width_per_way = roads.select(
         F.col("doc_id"), F.element_at("osm_way_ids", 1).alias("way_id"),
-        "road_id", "total_width",
+        "road_id", "total_width", "lon0", "lat0",
     ).groupBy("doc_id", "way_id").agg(
-        F.min_by("total_width", "road_id").alias("total_width"))
+        F.min_by("total_width", "road_id").alias("total_width"),
+        F.min("lon0").alias("lon0"), F.min("lat0").alias("lat0"))
 
     pts = ways.select(
         "doc_id", "way_id", F.posexplode("node_ids").alias("pos", "node_id"),
     ).join(nodes.select("doc_id", "node_id", "lon", "lat"),
            ["doc_id", "node_id"])
-    pts = pts.join(width_per_way, ["doc_id", "way_id"]) \
-             .join(anchors.select("doc_id",
-                                  F.col("min_lon").alias("lon0"),
-                                  F.col("min_lat").alias("lat0")),
-                   "doc_id")
+    pts = pts.join(width_per_way, ["doc_id", "way_id"])
 
     from ..geom.core import lonlat_to_xy
 
@@ -202,7 +200,6 @@ def _arrow_ring(a: np.ndarray, b: np.ndarray, thickness: float = 0.5
 
 
 def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
-                    anchors: DataFrame,
                     driving_side: str = "right") -> DataFrame:
     """One arrow polygon per movement per intersection
     (render/mod.rs:218-273): the arrow runs from where it LEAVES the
@@ -212,23 +209,12 @@ def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
     arrows don't overlap (mod.rs:226-259).
 
     → (doc_id, i_id, from_road, to_road, arrow_json)."""
-    ends = roads_final.select(
-        "doc_id", "road_id", "center_xy", "oneway_dir", "driveable",
-        F.explode(F.array(
-            F.struct(F.col("src_i").alias("i_id"),
-                     F.lit(True).alias("is_src_end")),
-            F.struct(F.col("dst_i").alias("i_id"),
-                     F.lit(False).alias("is_src_end")),
-        )).alias("_e"),
-    ).select("doc_id", "road_id", "center_xy", "oneway_dir", "driveable",
-             F.col("_e.i_id").alias("i_id"),
-             F.col("_e.is_src_end").alias("is_src_end"))
-    ends = ends.join(
+    ends = road_ends(
+        roads_final, "center_xy", "oneway_dir", "driveable", "lon0", "lat0",
+    ).join(
         ints_final.where(F.col("movements_json").isNotNull()).select(
             "doc_id", "i_id", "movements_json"),
-        ["doc_id", "i_id"]) \
-        .join(anchors.select("doc_id", F.col("min_lon").alias("lon0"),
-                             F.col("min_lat").alias("lat0")), "doc_id")
+        ["doc_id", "i_id"])
 
     off = -1.3 if driving_side == "right" else 1.3
 
@@ -307,8 +293,7 @@ def connected_road_row(road_id, center_xy, total_width, lon0,
         float(lon0), float(lat0), {"type": "road", "road_id": int(road_id)})
 
 
-def roads_connected_to_intersections(roads_final: DataFrame,
-                                     anchors: DataFrame) -> DataFrame:
+def roads_connected_to_intersections(roads_final: DataFrame) -> DataFrame:
     """Every (intersection, incident road) with the road's center line
     buffered by its total width (lib.rs:213-218: center_line
     .make_polygons(total_width) per road of the intersection). The
@@ -317,11 +302,8 @@ def roads_connected_to_intersections(roads_final: DataFrame,
     under 2 points are dropped in Catalyst before the kernel runs: a
     filter on the kernel's own output would be pushed below it and run
     the Python kernel twice."""
-    ends = roads_final.where(F.size("center_xy") >= 4).select(
-        "doc_id", "road_id", "center_xy", "total_width",
-        F.explode(F.array("src_i", "dst_i")).alias("i_id"),
-    ).join(anchors.select("doc_id", F.col("min_lon").alias("lon0"),
-                          F.col("min_lat").alias("lat0")), "doc_id")
+    ends = road_ends(roads_final.where(F.size("center_xy") >= 4),
+                     "center_xy", "total_width", "lon0", "lat0")
     feature = row_udf(connected_road_row, StringType())(
         "road_id", "center_xy", "total_width", "lon0", "lat0")
     return ends.select("doc_id", "i_id", "road_id",

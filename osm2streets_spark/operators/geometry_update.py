@@ -250,58 +250,63 @@ def row_udf(kernel, return_type):
     return F.pandas_udf(udf, return_type)
 
 
-def run_t6(road_ends: DataFrame, n: int | None = None) -> DataFrame:
-    """road_ends columns: doc_id, i_id, road_id, is_src_end, xy,
-    total_width, driveable, can_out, can_in, restrictions_json,
-    driving_side. One map_groups pass over (doc_id, i_id) junction
+def run_t6(ends: DataFrame, n: int | None = None) -> DataFrame:
+    """`ends` (build_road_ends) columns: doc_id, i_id, road_id,
+    is_src_end, xy, total_width, driveable, can_out, can_in,
+    restrictions_json, driving_side. One map_groups pass over (doc_id, i_id) junction
     groups (1-6 rows each) in n partitions: trims, ring, movements and
     kind per junction."""
-    return map_groups(road_ends, ["doc_id", "i_id"],
+    return map_groups(ends, ["doc_id", "i_id"],
                       lambda rows: _t6_rows(rows, False), TRIM_SCHEMA, n)
+
+
+def road_ends(roads: DataFrame, *cols: str) -> DataFrame:
+    """Explode each road to its two ends (road.rs:22-23: src_i, dst_i)
+    → (doc_id, i_id, is_src_end, road_id, *cols), src end first. One
+    explode of two structs, not a union: one pass over roads, one plan
+    subtree (a union doubles the upstream subtree and the stage
+    count)."""
+    both = F.array(
+        F.struct(F.col("src_i").alias("i_id"),
+                 F.lit(True).alias("is_src_end")),
+        F.struct(F.col("dst_i").alias("i_id"),
+                 F.lit(False).alias("is_src_end")),
+    )
+    return roads.select("doc_id", "road_id", *cols,
+                        F.explode(both).alias("_e")).select(
+        "doc_id", "_e.i_id", "_e.is_src_end", "road_id", *cols)
 
 
 def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame,
                     driving_side: str = "right") -> DataFrame:
-    """Explode each road to its two intersection ends with drivability
-    per end (road.rs:232-254: a oneway road can only exit via its dst
-    and enter via its src)."""
+    """Each road's two intersection ends with drivability per end
+    (road.rs:232-254: a oneway road can only exit via its dst and enter
+    via its src)."""
+    src = F.col("is_src_end")
     fwd = F.col("oneway_dir") == "forward"
     back = F.col("oneway_dir") == "backward"
     bidi = F.col("oneway_dir") == ""
+
+    def per_end(src_col, dst_col):
+        return F.when(src, src_col).otherwise(dst_col)
+
     # ramp-eligible types (on_off_ramp.rs:26-37): the *_link kinds plus
     # motorway mainline
     is_link = (F.col("highway_type").endswith("_link")
                | (F.col("highway_type") == "motorway"))
-    # explode-of-two-structs instead of a union: one pass over roads,
-    # one plan subtree (a union doubles the upstream subtree and the
-    # stage count)
-    both = F.array(
-        F.struct(
-            F.col("src_i").alias("i_id"), F.lit(True).alias("is_src_end"),
-            (bidi | back).alias("can_out"), (bidi | fwd).alias("can_in"),
-            F.col("pretrim_src").alias("pretrim"),
-            F.coalesce("src_is_edge", F.lit(False)).alias("is_edge"),
-            F.col("dst_i").alias("other_i"),
-        ),
-        F.struct(
-            F.col("dst_i").alias("i_id"), F.lit(False).alias("is_src_end"),
-            (bidi | fwd).alias("can_out"), (bidi | back).alias("can_in"),
-            F.col("pretrim_dst").alias("pretrim"),
-            F.coalesce("dst_is_edge", F.lit(False)).alias("is_edge"),
-            F.col("src_i").alias("other_i"),
-        ),
-    )
-    ends = roads.select(
-        "doc_id", "road_id", "xy", "total_width", "driveable",
-        is_link.alias("is_link"), F.explode(both).alias("_e"),
+    ends = road_ends(
+        roads, "xy", "total_width", "driveable", "oneway_dir",
+        "highway_type", "pretrim_src", "pretrim_dst", "src_is_edge",
+        "dst_is_edge", "src_i", "dst_i",
     ).select(
-        "doc_id", F.col("_e.i_id").alias("i_id"), "road_id",
-        F.col("_e.is_src_end").alias("is_src_end"), "xy", "total_width",
-        "driveable", F.col("_e.can_out").alias("can_out"),
-        F.col("_e.can_in").alias("can_in"), "is_link",
-        F.col("_e.pretrim").alias("pretrim"),
-        F.col("_e.is_edge").alias("is_edge"),
-        F.col("_e.other_i").alias("other_i"),
+        "doc_id", "i_id", "road_id", "is_src_end", "xy", "total_width",
+        "driveable", (bidi | per_end(back, fwd)).alias("can_out"),
+        (bidi | per_end(fwd, back)).alias("can_in"),
+        is_link.alias("is_link"),
+        per_end(F.col("pretrim_src"), F.col("pretrim_dst")).alias("pretrim"),
+        F.coalesce(per_end(F.col("src_is_edge"), F.col("dst_is_edge")),
+                   F.lit(False)).alias("is_edge"),
+        per_end(F.col("dst_i"), F.col("src_i")).alias("other_i"),
     )
     # restrictions are sparse but corpus-proportional — a plain hash
     # join (NOT broadcast: it would not survive a 100 TB corpus); AQE

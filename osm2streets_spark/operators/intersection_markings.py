@@ -2,13 +2,14 @@
 
 Reference osm2streets/src/render/intersection_markings.rs:10-39
 (zebra / unmarked crossing outlines across the junction) and
-make_sidewalk_corners (:43+). Arrow-batched pandas UDF over the
-finalized intersections table; pure per-row geometry.
+make_sidewalk_corners (:43-135).
 
-Round-1 scope: crossing outlines (zebra bars for Marked/Signalized, edge
-dashes for Unmarked) across the intersection polygon's minor axis;
-sidewalk corner filling is approximated by the polygon ring itself
-(divergence noted in STATUS.md).
+Crossing outlines (zebra bars for Marked/Signalized, edge dashes for
+Unmarked) run across the intersection polygon's minor axis, one per-row
+kernel over the finalized intersections table. Sidewalk corners are
+make_sidewalk_corners' corner polygons where two sidewalk-edged roads
+meet (geom/intersection_kernel.sidewalk_corners), one map_groups pass
+over each junction's road ends.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql.types import (
 
 from ..geom.core import geojson_feature, ring_centroid
 from ..geom.intersection_kernel import road_end, sidewalk_corners
-from .geometry_update import map_groups
+from .geometry_update import map_groups, road_ends
 from .render import explode_features
 
 ZEBRA_BAR_WIDTH = 0.5
@@ -109,18 +110,8 @@ def render_sidewalk_corners(roads_final: DataFrame,
     render/intersection_markings.rs:43-135): per junction, corner
     polygons where two sidewalk-edged roads meet. One map_groups pass
     over (doc_id, i_id) junction groups, like run_t6."""
-    both = F.array(
-        F.struct(F.col("src_i").alias("i_id"), F.lit(True).alias("is_src_end")),
-        F.struct(F.col("dst_i").alias("i_id"), F.lit(False).alias("is_src_end")),
-    )
-    ends = roads_final.select(
-        "doc_id", "road_id", "center_xy", "total_width",
-        "lane_specs_json", F.explode(both).alias("_e"),
-    ).select(
-        "doc_id", F.col("_e.i_id").alias("i_id"), "road_id",
-        F.col("_e.is_src_end").alias("is_src_end"),
-        "center_xy", "total_width", "lane_specs_json",
-    )
+    ends = road_ends(roads_final, "center_xy", "total_width",
+                     "lane_specs_json")
     polys = ints.where(F.col("polygon_xy").isNotNull()).select(
         "doc_id", "i_id", "polygon_xy", "lon0", "lat0")
     src = ends.join(polys, ["doc_id", "i_id"])

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .geometry_update import road_ends
 from .split_ways import point_key
 
 
@@ -25,11 +26,11 @@ def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
                          imerges: DataFrame | None = None) -> DataFrame:
     """→ (doc_id, i_id, restriction_type, from_road, to_road).
 
-    Works pre- OR post-transform: when `roads` carries `osm_way_ids`
-    (post-T2 splices), a road matches every constituent way; when
-    `imerges` is given (post-T1 merges, columns doc_id / surviving_i /
-    absorbed_i), a via node whose intersection was absorbed resolves to
-    the surviving intersection."""
+    Works pre- OR post-transform: a road matches every constituent way
+    of its `osm_way_ids` (several after T2 splices); when `imerges` is
+    given (post-T1 merges, columns doc_id / surviving_i / absorbed_i),
+    a via node whose intersection was absorbed resolves to the
+    surviving intersection."""
     r = restrictions.where(F.col("via_node").isNotNull())
     # broadcast the (sparse) restriction side: the nodes table is never
     # shuffled for the via lookup
@@ -45,18 +46,9 @@ def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
             "i_id", F.coalesce("surviving_i", "i_id")
         ).drop("surviving_i")
 
-    if "osm_way_ids" in roads.columns:
-        incident = roads.select(
-            "doc_id", "road_id",
-            F.explode("osm_way_ids").alias("way_id"),
-            F.array("src_i", "dst_i").alias("_is"),
-        ).select("doc_id", "road_id", "way_id",
-                 F.explode("_is").alias("i_id"))
-    else:
-        incident = roads.select(
-            "doc_id", "road_id", "way_id",
-            F.explode(F.array("src_i", "dst_i")).alias("i_id"),
-        )
+    incident = road_ends(roads, "osm_way_ids").select(
+        "doc_id", "i_id", "road_id",
+        F.explode("osm_way_ids").alias("way_id"))
     frm = incident.select(
         "doc_id", "i_id", F.col("way_id").alias("from_way"),
         F.col("road_id").alias("from_road"))
@@ -98,10 +90,7 @@ def resolve_via_way_restrictions(restrictions: DataFrame,
         ["doc_id", "via_way"],
     )
 
-    incident = roads.select(
-        "doc_id", "road_id", "way_id",
-        F.explode(F.array("src_i", "dst_i")).alias("i_id"),
-    )
+    incident = road_ends(roads, "way_id")
     frm = incident.select(
         "doc_id", F.col("way_id").alias("from_way"),
         F.col("road_id").alias("from_road"), F.col("i_id").alias("from_i"))

@@ -27,7 +27,7 @@ from pyspark.sql.types import (
 
 from ..geom.core import M_PER_DEG, simplify_rdp, polyline_length
 from ..geom.intersection_kernel import compute_trims, road_end, sort_roads_cw
-from .geometry_update import map_groups
+from .geometry_update import map_groups, road_ends
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
@@ -519,12 +519,7 @@ def apply_standard_transforms(roads: list[dict],
             steps.append((name, len(rs), len(live)))
 
     _snap("original", roads)
-    # a cell-split dense doc must not run T4 per cell: components span
-    # cells. (At scale, component pruning for split docs is a separate
-    # doc-level pass over the edge list — cheap relative to geometry.)
-    doc_split = any(r.get("src_frozen") or r.get("dst_frozen")
-                    for r in roads)
-    if with_remove_disconnected and not doc_split:
+    if with_remove_disconnected:
         roads = remove_disconnected(roads)
         _snap("remove disconnected roads", roads)
     if with_sidepath_zip:
@@ -603,24 +598,25 @@ TRANSFORM_SCHEMA = StructType(
 )
 
 
-def _transform_doc_core(doc_id: str, rows: list[dict],
-                        with_sidepath_zip: bool = False,
-                        with_remove_disconnected: bool = True,
-                        doc_split: bool = False):
-    """One document's transform fixpoint over plain dict rows →
-    (surviving road dicts, imerges, steps), steps being the
-    stepwise-debugging snapshots of apply_standard_transforms. Dict
-    rows, not a pandas frame: the per-doc to_dict("records") + per-doc
+def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
+                    with_remove_disconnected: bool) -> list[tuple]:
+    """One (doc_id, _tcell) group's transform fixpoint over plain dict
+    rows → TRANSFORM_SCHEMA tuples: the surviving roads, then the
+    imerge and step rows as sparse dicts (see _OUT_EXTRA). Dict rows,
+    not a pandas frame: the per-doc to_dict("records") + per-doc
     output-frame construction was the majority of the whole transforms
     stage's CPU at sf0.1."""
+    doc_id = rows[0]["doc_id"]
+    if rows[0]["_tcell"]:
+        # a cell of a split doc must never run T4: components span
+        # cells, and a cell with no frozen seam (fully disconnected
+        # interior roads) would otherwise prune per-cell. (At scale,
+        # component pruning for split docs is a separate doc-level pass
+        # over the edge list — cheap relative to geometry.)
+        with_remove_disconnected = False
     # Arrow batch row order is nondeterministic; kernels must not depend
     # on it (e.g. T2 keeps the FIRST road's id) — sort by road_id first
     rows.sort(key=lambda r: r["road_id"])
-    if doc_split:
-        # a cell of a split doc must never run T4: components span
-        # cells, and a cell with no frozen seam (fully disconnected
-        # interior roads) would otherwise prune per-cell
-        with_remove_disconnected = False
     for r in rows:
         r["xy"] = list(r["xy"])
         if r.get("osm_way_ids") is None:
@@ -639,18 +635,6 @@ def _transform_doc_core(doc_id: str, rows: list[dict],
     steps: list = []
     roads = apply_standard_transforms(rows, with_sidepath_zip, imerges,
                                       with_remove_disconnected, steps)
-    return roads, imerges, steps
-
-
-def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
-                    with_remove_disconnected: bool) -> list[tuple]:
-    """One (doc_id, _tcell) group → TRANSFORM_SCHEMA tuples: the
-    surviving roads, then the imerge and step rows as sparse dicts (see
-    _OUT_EXTRA)."""
-    doc_id = rows[0]["doc_id"]
-    roads, imerges, steps = _transform_doc_core(
-        doc_id, rows, with_sidepath_zip, with_remove_disconnected,
-        doc_split=bool(rows[0]["_tcell"]))
     for r in roads:
         r["row_kind"] = "road"
     extra = [{"row_kind": "imerge", "src_i": surv, "dst_i": absd}
@@ -734,7 +718,7 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
         tx, ty = tile_xy(lon, lat, split_zoom)
         # +1 keeps split cells strictly positive: cell 0 is reserved as
         # the unsplit sentinel, so tile (0,0) at clamped extremes can
-        # never be mistaken for "unsplit" by the doc_split inference
+        # never be mistaken for "unsplit" by the kernel's T4 guard
         src = src.withColumn(
             "_tcell",
             F.when(F.col("_nd") > split_threshold,
@@ -742,15 +726,11 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
                     + F.lit(1)))
              .otherwise(F.lit(0))).drop("_nd")
         # frozen seams: intersections whose incident roads span cells
-        endcells = src.select("doc_id", F.explode(F.array(
-            F.struct(F.col("src_i").alias("i"), F.col("_tcell").alias("c")),
-            F.struct(F.col("dst_i").alias("i"), F.col("_tcell").alias("c")),
-        )).alias("e")).select("doc_id", "e.i", "e.c")
-        frozen = endcells.groupBy("doc_id", "i").agg(
-            F.count_distinct("c").alias("_nc")).where(F.col("_nc") > 1)
+        frozen = road_ends(src, "_tcell").groupBy("doc_id", "i_id").agg(
+            F.count_distinct("_tcell").alias("_nc")).where(F.col("_nc") > 1)
         for side, col in (("src", "src_i"), ("dst", "dst_i")):
             src = src.drop(f"{side}_frozen").join(
-                frozen.select("doc_id", F.col("i").alias(col),
+                frozen.select("doc_id", F.col("i_id").alias(col),
                               F.lit(True).alias(f"{side}_frozen")),
                 ["doc_id", col], "left")
     else:

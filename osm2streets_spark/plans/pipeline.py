@@ -28,8 +28,8 @@ from ..operators.restrictions import (
     resolve_restrictions, restrictions_by_intersection,
 )
 from ..operators.geometry_update import (
-    with_projected_geometry, build_road_ends, run_t6, apply_trims,
-    finalize_intersections,
+    with_projected_geometry, build_road_ends, road_ends, run_t6,
+    apply_trims, finalize_intersections,
 )
 from ..operators.transforms import run_transforms
 from ..operators.render import render_roads, render_intersections
@@ -298,9 +298,7 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     roads_final = apply_trims(roads, trims).localCheckpoint(eager=False)
 
     # intersections surviving the transforms = endpoints of final roads
-    live_is = roads_final.select(
-        "doc_id", F.explode(F.array("src_i", "dst_i")).alias("i_id")
-    ).distinct()
+    live_is = road_ends(roads_final).select("doc_id", "i_id").distinct()
     ints = ints_v0.join(live_is, ["doc_id", "i_id"], "left_semi")
     ints = ints.join(
         anchors.select("doc_id", F.col("min_lon").alias("lon0"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import math
 import re
+from decimal import Decimal, ROUND_HALF_UP
 
 import numpy as np
 
@@ -181,17 +182,6 @@ def _multipolygon_rows(doc_id: str, nodes: dict, way_rows: list,
                     "area_deg2": round(area, 12),
                     "geojson": json.dumps(feat, separators=(",", ":"))})
     return out
-
-
-def _tile_cell(lon: float, lat: float, zoom: int) -> int:
-    n = float(2 ** zoom)
-    x = math.floor((lon + 180.0) / 360.0 * n)
-    lr = math.radians(lat)
-    y = math.floor((1.0 - math.log(math.tan(lr) + 1.0 / math.cos(lr))
-                    / 3.141592653589793) / 2.0 * n)
-    x = max(0, min(int(x), int(n) - 1))
-    y = max(0, min(int(y), int(n) - 1))
-    return x * (1 << 22) + y
 
 
 def _road_ends(doc_id: str, roads: list[dict], driving_side: str,
@@ -506,7 +496,8 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
             lat = lat0 + my / M_PER_DEG
             lon = lon0 + mx / (M_PER_DEG * math.cos(math.radians(lat0)))
             # +1: cell 0 is the unsplit sentinel (mirrors run_transforms)
-            r["_tcell"] = _tile_cell(lon, lat, cfg.transform_split_zoom) + 1
+            tx, ty = _tile_xy(lon, lat, cfg.transform_split_zoom)
+            r["_tcell"] = tx * (1 << 22) + ty + 1
         cells_of_i: dict[int, set] = {}
         for r in roads:
             cells_of_i.setdefault(r["src_i"], set()).add(r["_tcell"])
@@ -527,7 +518,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
         group = sorted((r for r in roads if r["_tcell"] == cell),
                        key=lambda r: r["road_id"])
         # split docs (nonzero cell) never run T4 — components span
-        # cells (mirrors _transform_doc's doc_split guard)
+        # cells (mirrors _transform_rows' _tcell guard)
         cell_steps: list = []
         out_roads.extend(apply_standard_transforms(
             group, cfg.zip_sidepaths, imerges,
@@ -901,12 +892,24 @@ def profile_path_rows(doc_id: str, roads: list[dict]) -> list[dict]:
     return out
 
 
+def transformed_road_rows(doc_id: str, roads: list[dict]) -> list[dict]:
+    """One document's final roads → gt_transformed rows (way_id, the
+    comma-joined osm_way_ids, trimmed_length, lane_chars)."""
+    # same rounding as Spark F.round(col, 2): HALF_UP over the shortest
+    # decimal representation of the double
+    return [{"doc_id": doc_id, "way_id": r["way_id"],
+             "osm_way_ids": ",".join(str(w) for w in r["osm_way_ids"]),
+             "trimmed_length": float(
+                 Decimal(repr(float(r["trimmed_length"])))
+                 .quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)),
+             "lane_chars": r["lane_chars"]}
+            for r in roads]
+
+
 def convert_documents(doc_rows, cfg: MapConfig = DEFAULT_CONFIG):
     """Iterate (doc_id, spans) pairs → (transformed_road_rows,
     movement_rows, dist_rows, cw_rows, path_rows) ready for parquet —
     the gt tables the oracles read."""
-    from decimal import Decimal, ROUND_HALF_UP
-
     road_rows, int_rows, dist_rows, cw_rows, path_rows, feat_rows = \
         [], [], [], [], [], []
     lanepoly_rows, surface_rows, dc_rows, mp_rows, blk_rows = \
@@ -937,18 +940,7 @@ def convert_documents(doc_rows, cfg: MapConfig = DEFAULT_CONFIG):
         corner_rows.extend(jc)
         for c in cws:
             cw_rows.append({"doc_id": doc_id, **c})
-        for r in roads:
-            # same rounding as Spark F.round(col, 2): HALF_UP over the
-            # shortest decimal representation of the double
-            tl = float(Decimal(repr(float(r["trimmed_length"])))
-                       .quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-            road_rows.append({
-                "doc_id": doc_id, "way_id": r["way_id"],
-                "osm_way_ids": ",".join(
-                    str(w) for w in r["osm_way_ids"]),
-                "trimmed_length": tl,
-                "lane_chars": r["lane_chars"],
-            })
+        road_rows.extend(transformed_road_rows(doc_id, roads))
         for i in ints:
             int_rows.append({"doc_id": doc_id, **i})
     return (road_rows, int_rows, dist_rows, cw_rows, path_rows,

@@ -781,10 +781,9 @@ def ensure_split_transforms_gt(fix_dir: str) -> str | None:
     if os.path.exists(path):
         return path
     from dataclasses import replace
-    from decimal import Decimal, ROUND_HALF_UP
 
     from ..config import DEFAULT_CONFIG
-    from ..plans.sequential import convert_document
+    from ..plans.sequential import convert_document, transformed_road_rows
 
     cfg = replace(DEFAULT_CONFIG,
                   transform_split_threshold=SPLIT_GT_THRESHOLD,
@@ -794,16 +793,8 @@ def ensure_split_transforms_gt(fix_dir: str) -> str | None:
         columns=["doc_id", "spans"]).to_pylist()
     road_rows: list[dict] = []
     for d in docs:
-        roads, _ints, *_ = convert_document(d["doc_id"], d["spans"], cfg)
-        for r in roads:
-            tl = float(Decimal(repr(float(r["trimmed_length"])))
-                       .quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-            road_rows.append({
-                "doc_id": d["doc_id"], "way_id": r["way_id"],
-                "osm_way_ids": ",".join(str(w) for w in r["osm_way_ids"]),
-                "trimmed_length": tl,
-                "lane_chars": r["lane_chars"],
-            })
+        roads, *_ = convert_document(d["doc_id"], d["spans"], cfg)
+        road_rows.extend(transformed_road_rows(d["doc_id"], roads))
     return _write_rows(road_rows, TRANSFORMED_SCHEMA, path)
 
 

@@ -44,7 +44,7 @@ def stream_street_network(spark: SparkSession, input_dir: str,
         .parquet(input_dir)
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         net = build_street_network(batch_df.sparkSession, batch_df)

@@ -17,7 +17,7 @@ from osm2streets_spark.plans.pipeline import (
     build_street_network, load_documents,
 )
 from osm2streets_spark.sources.osm_xml import (
-    doc_bounds, parse_documents, split_entities,
+    parse_documents, split_entities,
 )
 
 
@@ -62,8 +62,7 @@ def test_osm_tags_lookup(parsed):
 
 def test_way_geometry_chevrons(net, parsed):
     nodes, ways, _ = parsed
-    anchors = doc_bounds(nodes)
-    out = way_geometry(ways, nodes, net["roads"], anchors).collect()
+    out = way_geometry(ways, nodes, net["roads"]).collect()
     assert out
     for row in out[:10]:
         fc = json.loads(row.feature_json)
@@ -77,13 +76,8 @@ def test_way_geometry_chevrons(net, parsed):
             assert ring[0] == ring[-1] and len(ring) >= 4
 
 
-def test_movement_arrows(net, spark, fixture_dir):
-    docs = load_documents(spark, fixture_dir)
-    one = docs.where(F.col("doc_id").startswith("grid"))
-    nodes, _, _ = split_entities(parse_documents(one))
-    anchors = doc_bounds(nodes)
-    arrows = movement_arrows(net["roads"], net["intersections"],
-                             anchors).collect()
+def test_movement_arrows(net):
+    arrows = movement_arrows(net["roads"], net["intersections"]).collect()
     assert arrows
     # every arrow's (from, to) pair is in that intersection's movements
     mv = {(r.doc_id, r.i_id): set(map(tuple, json.loads(r.movements_json)))
@@ -95,12 +89,8 @@ def test_movement_arrows(net, spark, fixture_dir):
         assert ring[0] == ring[-1] and len(ring) == 8  # arrow heptagon
 
 
-def test_movements_from_lane(net, spark, fixture_dir):
-    docs = load_documents(spark, fixture_dir)
-    one = docs.where(F.col("doc_id").startswith("grid"))
-    nodes, _, _ = split_entities(parse_documents(one))
-    anchors = doc_bounds(nodes)
-    arrows = movement_arrows(net["roads"], net["intersections"], anchors)
+def test_movements_from_lane(net):
+    arrows = movement_arrows(net["roads"], net["intersections"])
     # pick a road that has outgoing movements at its forward end
     some = arrows.first()
     road = net["roads"].where(F.col("road_id") == some.from_road).first()
@@ -112,14 +102,10 @@ def test_movements_from_lane(net, spark, fixture_dir):
         assert g.from_road == some.from_road and g.i_id == want_i
 
 
-def test_roads_connected_matches_render(net, spark, fixture_dir):
+def test_roads_connected_matches_render(net):
     """The per-intersection road polygons ARE the S5 road polygons
     (same center line buffered by the same width, lib.rs:213-218)."""
-    docs = load_documents(spark, fixture_dir)
-    one = docs.where(F.col("doc_id").startswith("grid"))
-    nodes, _, _ = split_entities(parse_documents(one))
-    anchors = doc_bounds(nodes)
-    conn = roads_connected_to_intersections(net["roads"], anchors)
+    conn = roads_connected_to_intersections(net["roads"])
     rows = conn.collect()
     assert rows
     # every road appears once per end

@@ -41,15 +41,48 @@ _CEILINGS = {
 }
 
 
+# Max Exchange nodes in the executed plan of each frame the build
+# checkpoints, in call order: the parse slices (nodes, ways, relations),
+# roads, the transforms output, the T6 trims and the final roads.
+# The stage ceilings above start at these checkpoints, so an exchange
+# added upstream of one (parse, graph, the transforms input) shows only
+# here. Measured 2026-10 at sf0.001, the same over two builds.
+_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 44, 12, 2]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module")
-def net(spark, fixture_dir):
+def traced_build(spark, fixture_dir):
+    """One build with DataFrame.localCheckpoint wrapped (as perfbench's
+    SegmentTracer does) to record the Exchange count of every
+    checkpointed frame's executed plan. Reading the plan first costs
+    nothing extra: the checkpoint executes that same QueryExecution."""
     spark.catalog.clearCache()
-    return build_street_network(spark, load_documents(spark, fixture_dir))
+    # PySpark 4 instantiates a subclass of pyspark.sql.DataFrame
+    df_class = type(spark.range(0))
+    orig = df_class.localCheckpoint
+    exchanges = []
+
+    def local_checkpoint(df, *a, **kw):
+        exchanges.append(_executed_plan(df).count("Exchange"))
+        return orig(df, *a, **kw)
+
+    df_class.localCheckpoint = local_checkpoint
+    try:
+        net = build_street_network(spark,
+                                   load_documents(spark, fixture_dir))
+    finally:
+        df_class.localCheckpoint = orig
+    return net, exchanges
 
 
 @pytest.mark.parametrize("stage", list(_CEILINGS))
-def test_flagship_plan_shape(net, stage):
-    plan = net[stage]._jdf.queryExecution().executedPlan().toString()
+def test_flagship_plan_shape(traced_build, stage):
+    net, _ = traced_build
+    plan = _executed_plan(net[stage])
     max_exchanges, max_rdd_scans = _CEILINGS[stage]
     assert "CartesianProduct" not in plan, f"{stage}: cartesian product"
     assert "BroadcastNestedLoopJoin" not in plan, f"{stage}: BNLJ"
@@ -61,6 +94,19 @@ def test_flagship_plan_shape(net, stage):
     assert n_rdd <= max_rdd_scans, (
         f"{stage}: {n_rdd} checkpoint-boundary scans > ceiling "
         f"{max_rdd_scans} — extra localCheckpoint/persist boundary added")
+
+
+def test_checkpoint_exchanges(traced_build):
+    _, exchanges = traced_build
+    assert len(exchanges) == len(_CHECKPOINT_CEILINGS), (
+        f"{len(exchanges)} checkpoints, expected "
+        f"{len(_CHECKPOINT_CEILINGS)}: {exchanges}")
+    over = [(i, n, c) for i, (n, c)
+            in enumerate(zip(exchanges, _CHECKPOINT_CEILINGS)) if n > c]
+    assert not over, (
+        f"checkpoint Exchange counts {exchanges} exceed the ceilings "
+        f"{_CHECKPOINT_CEILINGS} at (index, count, ceiling) {over} — a "
+        f"refactor added shuffles upstream of a checkpoint")
 
 
 def test_registry_first50_composition():

@@ -3,7 +3,8 @@ the tests, the README or the verify skill names must exist, so deleting
 a script also means deleting or rewording what points at it. And every
 top-level definition of the package must be used somewhere, so code
 that nothing calls is deleted rather than kept; likewise every name a
-package module imports."""
+package module imports, and every parameter a package function takes
+must be read."""
 
 from __future__ import annotations
 
@@ -77,6 +78,30 @@ def test_every_definition_is_used():
                                 and name.endswith("__"))]
     unused = sorted(f"{p}: {name}" for p, name in defined
                     if name not in used)
+    assert not unused, unused
+
+
+def test_every_parameter_is_read():
+    """Each parameter of every function and lambda in osm2streets_spark/
+    is loaded by name somewhere in its body (nested functions
+    included). A leading underscore marks a parameter that a callback
+    signature requires but the body does not need."""
+    unused = []
+    for p in sorted((ROOT / "osm2streets_spark").rglob("*.py")):
+        for fn in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                   ast.Lambda)):
+                continue
+            a = fn.args
+            params = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs
+                      + [a.vararg, a.kwarg] if x]
+            body = fn.body if isinstance(fn.body, list) else [fn.body]
+            read = {n.id for b in body for n in ast.walk(b)
+                    if isinstance(n, ast.Name)
+                    and isinstance(n.ctx, ast.Load)}
+            unused += [f"{p.relative_to(ROOT)}:{fn.lineno}: {name}"
+                       for name in params
+                       if name not in read and not name.startswith("_")]
     assert not unused, unused
 
 

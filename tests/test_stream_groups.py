@@ -115,16 +115,14 @@ def test_tiny_arrow_batches_identical_grouped_renders(spark, fixture_dir):
     from osm2streets_spark.plans.pipeline import (
         load_documents, build_street_network,
     )
-    from osm2streets_spark.sources.osm_xml import doc_bounds
 
     spark.catalog.clearCache()
     net = build_street_network(spark, load_documents(spark, fixture_dir))
-    anchors = doc_bounds(net["nodes"])
     ops = {
         "way_geometry": lambda: way_geometry(
-            net["ways"], net["nodes"], net["roads"], anchors),
+            net["ways"], net["nodes"], net["roads"]),
         "movement_arrows": lambda: movement_arrows(
-            net["roads"], net["intersections"], anchors),
+            net["roads"], net["intersections"]),
         "sidewalk_corners": lambda: render_sidewalk_corners(
             net["roads"], net["intersections"]),
     }
