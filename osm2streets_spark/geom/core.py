@@ -248,13 +248,15 @@ def simplify_rdp(pl: np.ndarray, epsilon: float) -> np.ndarray:
 # consecutive offset lines; miter clamped to avoid spikes.
 # ---------------------------------------------------------------------------
 
-def shift_polyline(pl: np.ndarray, offset: float,
-                   miter_threshold_m: float = 500.0) -> np.ndarray:
+MITER_THRESHOLD_M = 500.0
+
+
+def shift_polyline(pl: np.ndarray, offset: float) -> np.ndarray:
     """Offset polyline. Positive offset shifts to the RIGHT of travel
     direction (matching geom shift_right semantics; shift_left = negative).
 
     Corner handling mirrors the reference geom crate: miter ALWAYS
-    except when the miter point lands further than MITER_THRESHOLD
+    except when the miter point lands further than MITER_THRESHOLD_M
     (500 m — an absolute distance, not a ratio) from the original
     vertex, in which case both offset endpoints are kept (bevel).
     An aggressive ratio-based miter limit here produced corner
@@ -285,7 +287,8 @@ def shift_polyline(pl: np.ndarray, offset: float,
     out = [a_off[0]]
     for i in range(len(seg) - 1):
         p = line_line_intersection(a_off[i], b_off[i], a_off[i + 1], b_off[i + 1])
-        if p is None or math.hypot(p[0] - pl[i + 1][0], p[1] - pl[i + 1][1]) > miter_threshold_m:
+        if p is None or math.hypot(p[0] - pl[i + 1][0], p[1] - pl[i + 1][1]) \
+                > MITER_THRESHOLD_M:
             # near-parallel or spiky miter: bevel via both endpoints
             out.append(b_off[i])
             out.append(a_off[i + 1])
@@ -368,14 +371,14 @@ def thicken_polyline(pl: np.ndarray, width: float) -> np.ndarray:
     return dedupe_consecutive(ring)
 
 
-def circle_ring(center: np.ndarray, radius: float, n: int = 60) -> np.ndarray:
+def circle_ring(center: np.ndarray, radius: float) -> np.ndarray:
     """Closed circular ring — the reference's placeholder/fallback
     intersection polygon is a 3 m circle (intersection.rs:208,
     operations/update_geometry.rs Err branch). The geom crate's
     Circle::to_polygon emits 60 vertices starting at angle 0 stepping
     clockwise (−6° in the y-up frame) — measured byte-for-byte from the
     leeds_cycleway golden's fallback rings."""
-    ang = -np.linspace(0, 2 * math.pi, n, endpoint=False)
+    ang = -np.linspace(0, 2 * math.pi, 60, endpoint=False)
     pts = np.stack([center[0] + radius * np.cos(ang), center[1] + radius * np.sin(ang)], axis=1)
     return np.vstack([pts, pts[0][None, :]])
 

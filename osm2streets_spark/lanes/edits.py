@@ -24,8 +24,14 @@ def _dumps(specs: list[dict]) -> str:
     return json.dumps(specs, separators=(",", ":"))
 
 
-def maybe_add_bike_lanes(lane_specs_json: str, buffer_type: str = "flex_posts",
-                         highway_type: str = "residential") -> str:
+def _lane(lt: str, direction: str, subtype: str = "") -> dict:
+    """A new lane spec, as wide as on a residential road."""
+    return {"lt": lt, "dir": direction,
+            "width": default_width(lt, subtype, "residential"),
+            "subtype": subtype, "allowed_turns": []}
+
+
+def maybe_add_bike_lanes(lane_specs_json: str) -> str:
     """Convert the outermost driving (or parking) lane on each side into
     a bike lane + buffer where the road has ≥2 driving lanes in that
     direction (semantics of edit/add_bike_lanes.rs: keep at least one
@@ -42,13 +48,8 @@ def maybe_add_bike_lanes(lane_specs_json: str, buffer_type: str = "flex_posts",
         for i in idx_iter:
             s = specs[i]
             if s["lt"] == DRIVING and s["dir"] == direction:
-                bike = {"lt": BIKING, "dir": direction,
-                        "width": default_width(BIKING, "", highway_type),
-                        "subtype": "", "allowed_turns": []}
-                buf = {"lt": BUFFER, "dir": direction,
-                       "width": default_width(BUFFER, buffer_type,
-                                              highway_type),
-                       "subtype": buffer_type, "allowed_turns": []}
+                bike = _lane(BIKING, direction)
+                buf = _lane(BUFFER, direction, "flex_posts")
                 if direction == BACK:
                     specs[i:i + 1] = [bike, buf]
                 else:
@@ -57,14 +58,11 @@ def maybe_add_bike_lanes(lane_specs_json: str, buffer_type: str = "flex_posts",
     return _dumps(specs)
 
 
-def add_new_lane(lane_specs_json: str, lt: str, dir: str = FWD,
-                 highway_type: str = "residential") -> str:
+def add_new_lane(lane_specs_json: str, lt: str, dir: str = FWD) -> str:
     """Insert a lane of the given type at the edge of the roadway on its
     direction's side (edit/add_new_lane.rs semantics simplified)."""
     specs = _loads(lane_specs_json)
-    new = {"lt": lt, "dir": dir,
-           "width": default_width(lt, "", highway_type),
-           "subtype": "", "allowed_turns": []}
+    new = _lane(lt, dir)
     # find insertion point: before the first FWD driving lane run's end
     # for forward, after the last BACK run's start for backward
     roadway = [i for i, s in enumerate(specs)

@@ -302,8 +302,7 @@ def _apply_width_tag(specs: list["LaneSpec"], tags: dict) -> None:
 
 
 def get_lane_specs_ltr(tags: dict, driving_side: str = "right",
-                       inferred_sidewalks: bool = True,
-                       inferred_kerbs: bool = True) -> list[LaneSpec]:
+                       inferred_sidewalks: bool = True) -> list[LaneSpec]:
     tags = dict(tags)
     hw = tags.get("highway", "")
     railway = tags.get("railway", "")
@@ -448,15 +447,11 @@ def get_lane_specs_ltr(tags: dict, driving_side: str = "right",
             w_sw = default_width(SIDEWALK, "", hw)
             w_curb = default_width(BUFFER, "curb", hw)
             if sw_l:
-                specs = ([LaneSpec(SIDEWALK, l_dir, w_sw)]
-                         + ([LaneSpec(BUFFER, l_dir, w_curb, "curb")]
-                            if inferred_kerbs else [])
-                         + specs)
+                specs = [LaneSpec(SIDEWALK, l_dir, w_sw),
+                         LaneSpec(BUFFER, l_dir, w_curb, "curb")] + specs
             if sw_r:
-                specs = (specs
-                         + ([LaneSpec(BUFFER, r_dir, w_curb, "curb")]
-                            if inferred_kerbs else [])
-                         + [LaneSpec(SIDEWALK, r_dir, w_sw)])
+                specs = specs + [LaneSpec(BUFFER, r_dir, w_curb, "curb"),
+                                 LaneSpec(SIDEWALK, r_dir, w_sw)]
     if specs is not None:
         _apply_width_tag(specs, tags)
         if construction:
@@ -921,10 +916,10 @@ def get_lane_specs_ltr(tags: dict, driving_side: str = "right",
     kerb_w = default_width(BUFFER, "curb", hw)
     specs = []
     specs += left_zone
-    if inferred_kerbs and left_zone and roadway:
+    if left_zone and roadway:
         specs.append(LaneSpec(BUFFER, FWD, kerb_w, subtype="curb"))
     specs += roadway
-    if inferred_kerbs and right_zone and roadway:
+    if right_zone and roadway:
         specs.append(LaneSpec(BUFFER, FWD, kerb_w, subtype="curb"))
     specs += right_zone
 

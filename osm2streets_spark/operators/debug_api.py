@@ -178,20 +178,22 @@ def way_geometry(ways: DataFrame, nodes: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def _arrow_ring(a: np.ndarray, b: np.ndarray, thickness: float = 0.5
-                ) -> np.ndarray | None:
+ARROW_THICKNESS = 0.5
+
+
+def _arrow_ring(a: np.ndarray, b: np.ndarray) -> np.ndarray | None:
     """Straight arrow a→b, triangle cap at b (make_arrow semantics
-    re-derived: shaft ``thickness`` wide, head 2x as wide and 2x
-    ``thickness`` long)."""
+    re-derived: shaft ARROW_THICKNESS wide, head 2x as wide and 2x
+    ARROW_THICKNESS long)."""
     v = b - a
     length = float(np.hypot(*v))
     if length < 1e-9:
         return None
     d = v / length
     n = np.array([d[1], -d[0]])  # right-hand normal
-    head_len = min(2.0 * thickness, 0.5 * length)
+    head_len = min(2.0 * ARROW_THICKNESS, 0.5 * length)
     base = b - d * head_len
-    t2, h2 = thickness / 2.0, thickness
+    t2, h2 = ARROW_THICKNESS / 2.0, ARROW_THICKNESS
     ring = np.array([
         a + n * t2, base + n * t2, base + n * h2, b,
         base - n * h2, base - n * t2, a - n * t2, a + n * t2,
@@ -200,7 +202,7 @@ def _arrow_ring(a: np.ndarray, b: np.ndarray, thickness: float = 0.5
 
 
 def movement_arrows(roads_final: DataFrame, ints_final: DataFrame,
-                    driving_side: str = "right") -> DataFrame:
+                    driving_side: str) -> DataFrame:
     """One arrow polygon per movement per intersection
     (render/mod.rs:218-273): the arrow runs from where it LEAVES the
     source road to where it ENTERS the destination road — the at-

@@ -28,6 +28,12 @@ from .geometry_update import row_udf
 # identical in Spark SQL and DuckDB SQL (see text_analysis.fingerprints)
 POLY_MOD = 2147483647
 
+# the parameters each operator shares with its DuckDB oracle: word
+# n-gram size, Jaccard threshold and SimHash Hamming radius
+SHINGLE_N = 3
+JACCARD_THRESHOLD = 0.5
+MAX_HAMMING = 3
+
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical texts (hash-groupBy)."""
@@ -90,7 +96,7 @@ def shingle_row(text, n) -> list[int]:
     return np.unique(g).tolist()
 
 
-def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_arrays(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, sh: array<long>) — per-doc sorted-distinct shingle set,
     ONE UDF pass. Per-word base-31 char-code hash folded across the
     n-gram; identical arithmetic on the DuckDB side
@@ -115,13 +121,13 @@ def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     return docs.select("doc_id", shingles("text", F.lit(n)).alias("sh"))
 
 
-def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+def word_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, shingle) distinct rows — explode of shingle_arrays."""
     return shingle_arrays(docs, n).select(
         "doc_id", F.explode("sh").alias("shingle"))
 
 
-def shingles_oracle_cte(doc_table: str, n: int = 3) -> str:
+def shingles_oracle_cte(doc_table: str) -> str:
     """DuckDB CTE producing the identical (doc_id, shingle) rows."""
     word_hash = (
         f"case when length(words[j]) = 0 then cast(0 as bigint) else "
@@ -138,18 +144,19 @@ def shingles_oracle_cte(doc_table: str, n: int = 3) -> str:
         select doc_id, unnest(list_distinct([
           list_reduce(
             [cast(0 as bigint)] || [{word_hash}
-             for j in generate_series(i, least(i + {n} - 1, len(words)))],
+             for j in generate_series(i, least(i + {SHINGLE_N} - 1,
+                                               len(words)))],
             (acc, h) -> (acc * 31 + h) % {POLY_MOD})
-          for i in generate_series(1, greatest(len(words) - {n} + 1, 1))]))
+          for i in generate_series(
+            1, greatest(len(words) - {SHINGLE_N} + 1, 1))]))
           as shingle
         from w
       )
     """
 
 
-def jaccard_pairs(docs: DataFrame, n: int = 3,
-                  threshold: float = 0.5) -> DataFrame:
-    """All-pairs n-gram Jaccard ≥ threshold (exact, via shingle
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """All-pairs n-gram Jaccard ≥ JACCARD_THRESHOLD (exact, via shingle
     self-join). At 100 TB this runs only behind an LSH prefilter.
 
     r8: shingles compute ONCE (persisted per-doc array frame) instead of
@@ -157,7 +164,7 @@ def jaccard_pairs(docs: DataFrame, n: int = 3,
     off the same frame, and the self-join's two sides scan the cache
     (guide §5 caching: reused AND expensive to recompute; the persist
     lives inside the query plan, recomputed fresh every invocation)."""
-    sh_arr = shingle_arrays(docs, n).persist()
+    sh_arr = shingle_arrays(docs).persist()
     sh = sh_arr.select("doc_id", F.explode("sh").alias("shingle"))
     sizes = sh_arr.select(
         "doc_id", F.size("sh").cast("long").alias("n_sh"))
@@ -179,15 +186,14 @@ def jaccard_pairs(docs: DataFrame, n: int = 3,
             "jaccard",
             F.round(F.col("n_common")
                     / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
     return out
 
 
-def jaccard_pairs_oracle_sql(doc_table: str, n: int = 3,
-                             threshold: float = 0.5) -> str:
-    return shingles_oracle_cte(doc_table, n) + f"""
+def jaccard_pairs_oracle_sql(doc_table: str) -> str:
+    return shingles_oracle_cte(doc_table) + f"""
       , sizes as (select doc_id, count(*) as n_sh from sh group by 1),
       inter as (
         select a.doc_id as doc_a, b.doc_id as doc_b, count(*) as n_common
@@ -201,7 +207,7 @@ def jaccard_pairs_oracle_sql(doc_table: str, n: int = 3,
       join sizes sa on sa.doc_id = i.doc_a
       join sizes sb on sb.doc_id = i.doc_b
       where round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 4)
-            >= {threshold}
+            >= {JACCARD_THRESHOLD}
     """
 
 
@@ -236,9 +242,39 @@ def minhash_signature(sh) -> list[int]:
 
 _minhash_sig = row_udf(minhash_signature, ArrayType(LongType()))
 
+# Candidate pairs come from ONE hash aggregation per band bucket instead
+# of a bands⋈bands self-join: half the shuffles, and the skew story
+# becomes explicit. A hot bucket (boilerplate text shared by thousands
+# of docs) would make the self-join quadratic in a single task; here
+# buckets larger than MAX_BUCKET switch to representative pairing —
+# every member pairs with the bucket's min member (n-1 edges).
+# Downstream connected-component clustering recovers the identical
+# duplicate clusters, without the n²/2 edge blow-up. Buckets at test
+# scale are far below the cap, so the verified output is unchanged vs
+# the exact oracles.
+MAX_BUCKET = 256
 
-def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
-                      threshold: float = 0.5) -> DataFrame:
+
+def _bucket_pairs(bands: DataFrame, bucket_cols: list[str],
+                  member) -> DataFrame:
+    """One row per member pair of each band bucket, as a struct column
+    `p` = (a, b) with a < b: all pairs in a bucket of at most
+    MAX_BUCKET members, else each member paired with the minimum."""
+    buckets = bands.groupBy(*bucket_cols).agg(
+        F.sort_array(F.collect_set(member)).alias("ids"))
+    pairs = F.when(
+        F.size("ids") <= MAX_BUCKET,
+        F.expr("flatten(transform(ids, (x, i) -> "
+               "transform(slice(ids, i + 2, size(ids)), y -> "
+               "struct(x as a, y as b))))"),
+    ).otherwise(
+        F.expr("transform(slice(ids, 2, size(ids)), y -> "
+               "struct(ids[0] as a, y as b))"))
+    return buckets.where(F.size("ids") >= 2) \
+        .select(F.explode(pairs).alias("p"))
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """LSH candidate generation + exact-Jaccard verification.
 
     With k=32, b=16, r=2: P(candidate) = 1-(1-s²)^16 → ≥0.99 at s=0.5,
@@ -267,7 +303,7 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
     frame, computing exact Jaccard per pair via array_intersect (set
     semantics — both arrays are distinct) instead of re-deriving
     shingles from raw text on four more scans."""
-    sh_arr = shingle_arrays(docs, n).persist()
+    sh_arr = shingle_arrays(docs).persist()
     sigs = sh_arr.select("doc_id", _minhash_sig("sh").alias("sig"))
     r = MINHASH_K // LSH_BANDS
     bands = sigs.select(
@@ -277,32 +313,9 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
                    f"hash(slice(sig, b * {r} + 1, {r})))")
         ).alias("band_idx", "band_hash"),
     )
-    # Candidate pairs per band bucket via ONE hash aggregation instead
-    # of a bands⋈bands self-join: half the shuffles, and the skew story
-    # becomes explicit. A hot band_hash (boilerplate text shared by
-    # thousands of docs) would make the self-join quadratic in a single
-    # task; here buckets larger than MAX_BUCKET switch to
-    # representative pairing — every member pairs with the bucket's
-    # min doc_id (n-1 edges). Downstream connected-component clustering
-    # recovers the identical duplicate clusters, without the n²/2 edge
-    # blow-up. Buckets at test scale are far below the cap, so the
-    # verified output is unchanged vs the exact oracle.
-    MAX_BUCKET = 256
-    buckets = bands.groupBy("band_idx", "band_hash").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ids"))
-    buckets = buckets.where(F.size("ids") >= 2)
-    pairs = F.when(
-        F.size("ids") <= MAX_BUCKET,
-        F.expr("flatten(transform(ids, (x, i) -> "
-               "transform(slice(ids, i + 2, size(ids)), y -> "
-               "struct(x as doc_a, y as doc_b))))"),
-    ).otherwise(
-        F.expr("transform(slice(ids, 2, size(ids)), y -> "
-               "struct(ids[0] as doc_a, y as doc_b))"))
     cand = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"),
-                F.col("p.doc_b").alias("doc_b"))
+        _bucket_pairs(bands, ["band_idx", "band_hash"], "doc_id")
+        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
     )
     # verify candidates with exact jaccard over the persisted sets
@@ -320,17 +333,16 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
                     / (F.size("sh_a").cast("long")
                        + F.size("sh_b").cast("long")
                        - F.col("n_common")), 4))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
     return out
 
 
-def minhash_lsh_oracle_sql(doc_table: str, n: int = 3,
-                           threshold: float = 0.5) -> str:
+def minhash_lsh_oracle_sql(doc_table: str) -> str:
     """Oracle = exact threshold pairs (LSH recall ≈ 1 by parameter
     choice; verification removes all false positives)."""
-    return jaccard_pairs_oracle_sql(doc_table, n, threshold).replace(
+    return jaccard_pairs_oracle_sql(doc_table).replace(
         "select i.doc_a, i.doc_b, i.n_common,",
         "select i.doc_a, i.doc_b,", 1)
 
@@ -368,8 +380,8 @@ def simhash(sh) -> int:
 _simhash64 = row_udf(simhash, LongType())
 
 
-def simhash_pairs(docs: DataFrame, n: int = 3, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, found
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ MAX_HAMMING, found
     via 4×16-bit bands (pigeonhole: any pair within distance 3 agrees on
     ≥1 of 4 bands). Candidates come from ONE hash aggregation per
     bucket — not a bands⋈bands self-join — with the same MAX_BUCKET
@@ -385,7 +397,7 @@ def simhash_pairs(docs: DataFrame, n: int = 3, max_hamming: int = 3) -> DataFram
     UDF pass (no explode → shuffle → collect_list round-trip), and the
     small/big bucket branches are one when/otherwise projection, so the
     whole upstream executes once instead of twice (guide §2.4)."""
-    sh_arr = shingle_arrays(docs, n)
+    sh_arr = shingle_arrays(docs)
     sigs = sh_arr.select("doc_id", _simhash64("sh").alias("sim"))
     bands = sigs.select(
         "doc_id", "sim",
@@ -395,33 +407,22 @@ def simhash_pairs(docs: DataFrame, n: int = 3, max_hamming: int = 3) -> DataFram
             "shiftright(sim, b * 16) & 65535 as band_val))"
         )).alias("band"),
     ).select("doc_id", "sim", "band.band_idx", "band.band_val")
-    MAX_BUCKET = 256
-    buckets = bands.groupBy("band_idx", "band_val").agg(
-        F.sort_array(F.collect_set(F.struct("doc_id", "sim"))).alias("ids"))
-    buckets = buckets.where(F.size("ids") >= 2)
-    pair = ("struct(x.doc_id as doc_a, x.sim as sim_a, "
-            "y.doc_id as doc_b, y.sim as sim_b)")
-    pairs = F.when(
-        F.size("ids") <= MAX_BUCKET,
-        F.expr(f"flatten(transform(ids, (x, i) -> "
-               f"transform(slice(ids, i + 2, size(ids)), y -> {pair})))"),
-    ).otherwise(
-        F.expr(f"transform(slice(ids, 2, size(ids)), y -> "
-               f"struct(ids[0].doc_id as doc_a, ids[0].sim as sim_a, "
-               f"y.doc_id as doc_b, y.sim as sim_b))"))
     cand = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.sim_a", "p.sim_b")
+        _bucket_pairs(bands, ["band_idx", "band_val"],
+                      F.struct("doc_id", "sim"))
+        .select(F.col("p.a.doc_id").alias("doc_a"),
+                F.col("p.b.doc_id").alias("doc_b"),
+                F.col("p.a.sim").alias("sim_a"),
+                F.col("p.b.sim").alias("sim_b"))
         .distinct()
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return cand.withColumn("hamming", hamming) \
-               .where(F.col("hamming") <= max_hamming) \
+               .where(F.col("hamming") <= MAX_HAMMING) \
                .select("doc_a", "doc_b", "hamming")
 
 
-def simhash_oracle_sql(doc_table: str, n: int = 3,
-                       max_hamming: int = 3) -> str:
+def simhash_oracle_sql(doc_table: str) -> str:
     """Exact DuckDB twin: the 4-band pigeonhole search is EXACT for
     Hamming ≤ 3 (below the hot-bucket cap), so brute-force XOR popcount
     over per-doc signatures — recomputed from the same shingles with
@@ -436,7 +437,7 @@ def simhash_oracle_sql(doc_table: str, n: int = 3,
     mul2 = ("((((v * 3210233709::hugeint) % 4294967296::hugeint)"
             " * 4294967296::hugeint + v * 484763065::hugeint)"
             f" % {m}::hugeint)")
-    return shingles_oracle_cte(doc_table, n) + f"""
+    return shingles_oracle_cte(doc_table) + f"""
       , mixed as (
         select doc_id,
                xor(x2, x2 >> 27) as mx
@@ -469,5 +470,5 @@ def simhash_oracle_sql(doc_table: str, n: int = 3,
       where bit_count(cast(xor(a.sim, b.sim) >> 32 as bigint))
             + bit_count(cast(xor(a.sim, b.sim)
                              & 4294967295::hugeint as bigint))
-            <= {max_hamming}
+            <= {MAX_HAMMING}
     """

@@ -2,15 +2,15 @@
 
 Reference streets_reader/src/lib.rs:50-77: the first boundary-polygon
 point is looked up in a country-boundaries dataset; the country decides
-the driving side, with a config override.
+the driving side.
 
 Spark-first shape: a tiny broadcast lookup table of country bounding
 boxes (coarse, deterministic, public CIA-factbook-style side data for
 the left-driving countries we care about) joined to each doc's anchor
 point. Coarse boxes are fine: a doc is assigned by its bbox center, and
 ties resolve by list order — at corpus scale this is THE textbook
-broadcast-join-small-dim pattern. `override_driving_side` (MapConfig)
-wins when set, matching the reference.
+broadcast-join-small-dim pattern. The reference's config override has
+no counterpart here: every doc's side comes from its boxes.
 """
 
 from __future__ import annotations
@@ -31,11 +31,9 @@ LEFT_DRIVING_BOXES = [
 ]
 
 
-def with_driving_side(anchors: DataFrame, override: str | None = None) -> DataFrame:
+def with_driving_side(anchors: DataFrame) -> DataFrame:
     """anchors: (doc_id, min_lon, max_lon, min_lat, max_lat) →
     + driving_side column."""
-    if override:
-        return anchors.withColumn("driving_side", F.lit(override))
     spark = anchors.sparkSession
     boxes = spark.createDataFrame(
         LEFT_DRIVING_BOXES,

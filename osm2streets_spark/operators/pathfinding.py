@@ -43,8 +43,8 @@ def _doc_graph(rows: list[dict]):
     return g
 
 
-def shortest_dists_from_hubs(roads: DataFrame, max_hubs: int = 2) -> DataFrame:
-    """G1: single-source Dijkstra from the first max_hubs intersections
+def shortest_dists_from_hubs(roads: DataFrame) -> DataFrame:
+    """G1: single-source Dijkstra from the first two intersections
     (by id) of each doc to every reachable intersection."""
     src = roads.select("doc_id", "src_i", "dst_i", "length_m")
 
@@ -54,7 +54,7 @@ def shortest_dists_from_hubs(roads: DataFrame, max_hubs: int = 2) -> DataFrame:
         doc_id = rows[0]["doc_id"]
         g = _doc_graph(rows)
         out = []
-        for hub in sorted(g.nodes())[:max_hubs]:
+        for hub in sorted(g.nodes())[:2]:
             # distance only — the reference's path_dist_to returns a
             # Distance (pathfinding.rs:14-27); hop counts are
             # tie-unstable across equal-length paths
@@ -85,15 +85,13 @@ PROFILES = {
 }
 
 
-def simple_paths(roads: DataFrame,
-                 profiles: dict[str, set] | None = None) -> DataFrame:
+def simple_paths(roads: DataFrame) -> DataFrame:
     """G2 simple_path (pathfinding.rs:31-69): A* (zero heuristic ⇒
     Dijkstra) over a DIRECTED graph that only includes a road direction
     when one of the requested lane types travels that way — a
     footway-only profile routes through footways a driving profile
     cannot use. One deterministic (min-id → max-id) path per doc per
     profile; way_path records the way ids crossed."""
-    profiles = profiles or PROFILES
     src = roads.select("doc_id", "way_id", "src_i", "dst_i", "length_m",
                        "lane_chars", "dir_chars")
 
@@ -102,7 +100,7 @@ def simple_paths(roads: DataFrame,
 
         doc_id = rows[0]["doc_id"]
         out = []
-        for prof, lane_set in sorted(profiles.items()):
+        for prof, lane_set in sorted(PROFILES.items()):
             g = nx.DiGraph()
             for row in rows:
                 fwd = back = False

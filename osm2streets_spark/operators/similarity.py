@@ -18,12 +18,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType
 
 from ..session import input_rows
 
 DIM = 64
+
+# the parameters each operator shares with its DuckDB oracle: the
+# near-duplicate cosine threshold, the neighbors kept per query and the
+# query count (vec_id < N_QUERIES)
+COSINE_THRESHOLD = 0.9
+TOP_K = 5
+N_QUERIES = 32
 
 # cosine_pairs compares every row with every other: n²/2 DIM-wide dot
 # products. 2,000 rows (sf0.1) took ~28 s on 4 cores, so the ceiling's
@@ -46,7 +53,8 @@ def _norm(a):
     ))
 
 
-def cosine_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
+def cosine_pairs(emb: DataFrame,
+                 threshold: float = COSINE_THRESHOLD) -> DataFrame:
     """All-pairs cosine ≥ threshold. O(n²) — the verifier/baseline; the
     LSH variant prunes the join at scale. Raises ValueError when the
     frame's parquet inputs hold more than COSINE_PAIRS_MAX_ROWS rows
@@ -73,48 +81,41 @@ def cosine_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     )
 
 
-def cosine_pairs_oracle_sql(emb_table: str, threshold: float = 0.9) -> str:
-    dot = ("list_reduce([0.0] || [cast(a.embedding[i] as double) * "
-           "cast(b.embedding[i] as double) for i in generate_series(1, "
-           f"{DIM})], (x, y) -> x + y)")
-    nrm = ("sqrt(list_reduce([0.0] || [cast({t}.embedding[i] as double) * "
-           "cast({t}.embedding[i] as double) for i in generate_series(1, "
-           f"{DIM})], (x, y) -> x + y))")
-    return f"""
-      select a.vec_id as vec_a, b.vec_id as vec_b,
-             round({dot} / ({nrm.format(t='a')} * {nrm.format(t='b')}), 6)
-                 as cosine
-      from {emb_table} a join {emb_table} b on a.vec_id < b.vec_id
-      where round({dot} / ({nrm.format(t='a')} * {nrm.format(t='b')}), 6)
-            >= {threshold}
+def _cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of the Spark side's rounded cosine of two array
+    columns: dot and norms folded in index order in float64."""
+    def fold(x: str, y: str) -> str:
+        return (f"list_reduce([0.0] || [cast({x}[i] as double) * "
+                f"cast({y}[i] as double) for i in generate_series(1, "
+                f"{DIM})], (x, y) -> x + y)")
+    return (f"round({fold(a, b)} / (sqrt({fold(a, a)}) * "
+            f"sqrt({fold(b, b)})), 6)")
+
+
+# DuckDB twin of _top_k over a `scored` CTE
+_TOP_K_SQL = f"""
+      ranked as (
+        select *, row_number() over (partition by query_id
+                   order by cosine desc, neighbor_id asc) as rank
+        from scored
+      )
+      select query_id, rank, neighbor_id, cosine from ranked
+      where rank <= {TOP_K}
     """
 
 
-def ann_topk(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
-    """Brute-force cosine top-k of the first n_queries vectors against
-    the corpus. Scores rounded to 6 dp before ranking; ties broken by
-    neighbor id — fully deterministic across engines."""
-    from pyspark.sql import Window
+def cosine_pairs_oracle_sql(emb_table: str) -> str:
+    cos = _cosine_sql("a.embedding", "b.embedding")
+    return f"""
+      select a.vec_id as vec_a, b.vec_id as vec_b, {cos} as cosine
+      from {emb_table} a join {emb_table} b on a.vec_id < b.vec_id
+      where {cos} >= {COSINE_THRESHOLD}
+    """
 
-    # r8: norms hoisted into the per-SIDE projections (n_queries + n
-    # rows) instead of the per-PAIR expression (n_queries × n rows) —
-    # the interpreted higher-order-function fold was the per-pair cost,
-    # and 2/3 of it was recomputing the two norms for every pair
-    # (guide §1.2 "per-task work"). Same expression over the same
-    # array, so the float64 result is bitwise identical.
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"))
-    v = emb.select(F.col("vec_id").alias("neighbor_id"),
-                   F.col("embedding").alias("n_emb"),
-                   _norm(F.col("embedding")).alias("n_nrm"))
-    cos = _dot(F.col("q_emb"), F.col("n_emb")) \
-        / (F.col("q_nrm") * F.col("n_nrm"))
-    scored = (
-        F.broadcast(q).join(v, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cos, 6).alias("cosine"))
-    )
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, neighbor_id, cosine) rows per query, ranked
+    by cosine with ties broken by neighbor id."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -124,29 +125,39 @@ def ann_topk(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
     )
 
 
-def ann_topk_oracle_sql(emb_table: str, k: int = 5, n_queries: int = 32) -> str:
-    dot = ("list_reduce([0.0] || [cast(q.embedding[i] as double) * "
-           "cast(v.embedding[i] as double) for i in generate_series(1, "
-           f"{DIM})], (x, y) -> x + y)")
-    nrm = ("sqrt(list_reduce([0.0] || [cast({t}.embedding[i] as double) * "
-           "cast({t}.embedding[i] as double) for i in generate_series(1, "
-           f"{DIM})], (x, y) -> x + y))")
+def ann_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Brute-force cosine top-k of the first N_QUERIES vectors against
+    the corpus. Scores rounded to 6 dp before ranking; ties broken by
+    neighbor id — fully deterministic across engines."""
+    # r8: norms hoisted into the per-SIDE projections (N_QUERIES + n
+    # rows) instead of the per-PAIR expression (N_QUERIES × n rows) —
+    # the interpreted higher-order-function fold was the per-pair cost,
+    # and 2/3 of it was recomputing the two norms for every pair
+    # (guide §1.2 "per-task work"). Same expression over the same
+    # array, so the float64 result is bitwise identical.
+    q = emb.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        _norm(F.col("embedding")).alias("q_nrm"))
+    v = emb.select(F.col("vec_id").alias("neighbor_id"),
+                   F.col("embedding").alias("n_emb"),
+                   _norm(F.col("embedding")).alias("n_nrm"))
+    cos = _dot(F.col("q_emb"), F.col("n_emb")) \
+        / (F.col("q_nrm") * F.col("n_nrm"))
+    return _top_k(
+        F.broadcast(q).join(v, F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.round(cos, 6).alias("cosine")),
+        k)
+
+
+def ann_topk_oracle_sql(emb_table: str) -> str:
     return f"""
       with scored as (
         select q.vec_id as query_id, v.vec_id as neighbor_id,
-               round({dot} / ({nrm.format(t='q')} * {nrm.format(t='v')}), 6)
-                   as cosine
+               {_cosine_sql("q.embedding", "v.embedding")} as cosine
         from {emb_table} q join {emb_table} v on q.vec_id != v.vec_id
-        where q.vec_id < {n_queries}
-      ),
-      ranked as (
-        select *, row_number() over (partition by query_id
-                   order by cosine desc, neighbor_id asc) as rank
-        from scored
-      )
-      select query_id, rank, neighbor_id, cosine from ranked
-      where rank <= {k}
-    """
+        where q.vec_id < {N_QUERIES}
+      ),{_TOP_K_SQL}"""
 
 
 # deterministic random hyperplanes for the LSH variant
@@ -180,7 +191,7 @@ def ann_lsh_buckets(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", _lsh_bucket("embedding").alias("bucket"))
 
 
-def ann_lsh_oracle_sql(emb_table: str, k: int = 5, n_queries: int = 32) -> str:
+def ann_lsh_oracle_sql(emb_table: str) -> str:
     """Exact DuckDB twin of ann_topk_lsh: the seed-7 hyperplane matrix
     is embedded as float64 literals (repr = round-trip exact), bucket =
     Σ 2^i·[dot_i > 0] with the dot folded sequentially — bitwise equal
@@ -201,15 +212,6 @@ def ann_lsh_oracle_sql(emb_table: str, k: int = 5, n_queries: int = 32) -> str:
         for i in range(8))
     probes = ", ".join(
         ["bucket"] + [f"xor(bucket, {1 << i})" for i in range(8)])
-    dot = ("list_reduce([0.0] || [cast(q.q_emb[i] as double) * "
-           "cast(v.embedding[i] as double) for i in generate_series(1, "
-           f"{DIM})], (x, y) -> x + y)")
-    nrm_q = ("sqrt(list_reduce([0.0] || [cast(q.q_emb[i] as double) * "
-             "cast(q.q_emb[i] as double) for i in generate_series(1, "
-             f"{DIM})], (x, y) -> x + y))")
-    nrm_v = ("sqrt(list_reduce([0.0] || [cast(v.embedding[i] as double) * "
-             "cast(v.embedding[i] as double) for i in generate_series(1, "
-             f"{DIM})], (x, y) -> x + y))")
     return f"""
       with bucketed as (
         select vec_id, embedding, {bucket} as bucket
@@ -218,25 +220,17 @@ def ann_lsh_oracle_sql(emb_table: str, k: int = 5, n_queries: int = 32) -> str:
       probes as (
         select vec_id as query_id, embedding as q_emb,
                unnest([{probes}]) as bucket
-        from bucketed where vec_id < {n_queries}
+        from bucketed where vec_id < {N_QUERIES}
       ),
       scored as (
         select q.query_id, v.vec_id as neighbor_id,
-               round({dot} / ({nrm_q} * {nrm_v}), 6) as cosine
+               {_cosine_sql("q.q_emb", "v.embedding")} as cosine
         from probes q join bucketed v using (bucket)
         where q.query_id != v.vec_id
-      ),
-      ranked as (
-        select *, row_number() over (partition by query_id
-                   order by cosine desc, neighbor_id asc) as rank
-        from scored
-      )
-      select query_id, rank, neighbor_id, cosine from ranked
-      where rank <= {k}
-    """
+      ),{_TOP_K_SQL}"""
 
 
-def ann_topk_lsh(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
+def ann_topk_lsh(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     """Bucketed ANN: exact cosine re-rank over candidates from the
     query's own bucket plus all 8 Hamming-distance-1 probes (classic
     multiprobe LSH — a sign flip on one hyperplane is the most likely
@@ -244,8 +238,6 @@ def ann_topk_lsh(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
     in tests/test_similarity_recall.py: high on clustered embeddings,
     intrinsically low on uniform-random vectors whose "neighbors" are
     near-orthogonal (that is the data, not the index)."""
-    from pyspark.sql import Window
-
     # r8: bucket + norm computed once per vector as extra COLUMNS (the
     # old vec_id self-join re-ran the bucket UDF and the scan for both
     # join sides); the tiny bucketed frame is persisted so the q and v
@@ -259,7 +251,7 @@ def ann_topk_lsh(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
         [F.col("bucket")] +
         [F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(8)]
     ))
-    q = e.where(F.col("vec_id") < n_queries).select(
+    q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
         F.explode(probes).alias("bucket"))
@@ -268,15 +260,8 @@ def ann_topk_lsh(emb: DataFrame, k: int = 5, n_queries: int = 32) -> DataFrame:
                  F.col("nrm").alias("n_nrm"), F.col("bucket"))
     cos = _dot(F.col("q_emb"), F.col("n_emb")) \
         / (F.col("q_nrm") * F.col("n_nrm"))
-    scored = (
+    return _top_k(
         q.join(v, ["bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cos, 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+        .select("query_id", "neighbor_id", F.round(cos, 6).alias("cosine")),
+        k)

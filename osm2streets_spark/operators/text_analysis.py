@@ -161,16 +161,16 @@ def token_stats_oracle_sql(doc_table: str) -> str:
     """
 
 
-def vocab_counts_salted(docs: DataFrame, n_salts: int = 16) -> DataFrame:
+def vocab_counts_salted(docs: DataFrame) -> DataFrame:
     """Corpus vocabulary counts with EXPLICIT key salting (north_rule):
     token frequencies are Zipf-skewed — 'the' lands on one reducer at
     10^12 docs. Two-level aggregation: partial counts on (token, salt)
-    — salt derived from doc_id so the hot key spreads over n_salts
+    — salt derived from doc_id so the hot key spreads over 16
     reducers — then final sum on token. Result is exactly the unsalted
     count (oracle: plain GROUP BY in DuckDB)."""
     toks = docs.select(
         F.explode(F.split("text", " ")).alias("token"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).alias("salt"),
+        F.pmod(F.xxhash64("doc_id"), F.lit(16)).alias("salt"),
     ).where(F.col("token") != "")
     partial = toks.groupBy("token", "salt").agg(
         F.count(F.lit(1)).alias("_n"))

@@ -211,7 +211,7 @@ def collapse_short_roads(roads: list[dict],
     return out
 
 
-def collapse_degenerate(roads: list[dict], rdp_eps: float = 1.0,
+def collapse_degenerate(roads: list[dict],
                         touched_is: set | None = None) -> list[dict]:
     """T2 (transform/collapse_intersections.rs:9-87): splice the two
     roads of a 2-road intersection into one when lane specs, name,
@@ -302,7 +302,7 @@ def collapse_degenerate(roads: list[dict], rdp_eps: float = 1.0,
         if ow_a != ow_b and not (ow_a == "" or ow_b == ""):
             continue
         new_xy = np.vstack([xy_a, xy_b[1:]])
-        new_xy = simplify_rdp(new_xy, rdp_eps)
+        new_xy = simplify_rdp(new_xy, 1.0)
         merged = dict(a)
         merged["dst_i"] = b["dst_i"]
         # the merged road's dst end is b's dst end — carry its
@@ -333,7 +333,7 @@ def collapse_degenerate(roads: list[dict], rdp_eps: float = 1.0,
     return list(by_id.values())
 
 
-def zip_sidepaths(roads: list[dict], connector_max_m: float = 10.0) -> list[dict]:
+def zip_sidepaths(roads: list[dict]) -> list[dict]:
     """T3 (operations/zip_sidepath.rs:28-202), faithful connector walk:
 
     1. a separately-mapped cycleway is a zip candidate when EACH of its
@@ -427,7 +427,7 @@ def zip_sidepaths(roads: list[dict], connector_max_m: float = 10.0) -> list[dict
             cands = [o for o in incident.get(i, ())
                      if o["road_id"] != sp["road_id"]
                      and o["road_id"] in by_id
-                     and length(o) < connector_max_m]
+                     and length(o) < 10.0]
             if len(cands) == 1:
                 c = cands[0]
                 main_ends.append(c["dst_i"] if c["src_i"] == i

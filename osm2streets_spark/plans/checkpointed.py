@@ -21,7 +21,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import MapConfig, DEFAULT_CONFIG
 from .pipeline import FEATURE_COLS, build_street_network
 
 MANIFEST = "_manifest.json"
@@ -63,7 +62,6 @@ def _load_manifest(path: str) -> dict | None:
 
 
 def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
-                     cfg: MapConfig = DEFAULT_CONFIG,
                      fingerprint: str = "v1") -> dict:
     """Run the full street-network pipeline, snapshotting each output
     table. On re-run with the same fingerprint, completed snapshots are
@@ -79,7 +77,7 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
     if len(manifests) == len(stages):
         return manifests  # fully resumable — nothing to do
 
-    net = build_street_network(spark, docs, cfg)
+    net = build_street_network(spark, docs)
     for s in stages:
         if s in manifests:
             continue

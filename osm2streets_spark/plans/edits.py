@@ -17,7 +17,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import MapConfig, DEFAULT_CONFIG
 from .pipeline import FEATURE_COLS, build_street_network
 
 
@@ -65,11 +64,10 @@ def overwrite_way_tags(docs: DataFrame, doc_id: str, way_id: int,
 
 
 def recompute_doc_features(spark: SparkSession, docs: DataFrame,
-                           doc_id: str,
-                           cfg: MapConfig = DEFAULT_CONFIG) -> DataFrame:
+                           doc_id: str) -> DataFrame:
     """Delta recompute: run the full pipeline on ONE document."""
     one = docs.where(F.col("doc_id") == doc_id)
-    net = build_street_network(spark, one, cfg, n_docs=1)
+    net = build_street_network(spark, one, n_docs=1)
     return net["features"].select(FEATURE_COLS)
 
 

@@ -66,9 +66,12 @@ def _ring_area_m2(ring) -> float:
     return abs(s) / 2.0
 
 
-def _ring_geom_exact(g_ring, o_ring, tol_m: float = 0.01) -> bool:
+RING_TOL_M = 0.01
+
+
+def _ring_geom_exact(g_ring, o_ring) -> bool:
     """True geometric exactness for the parity gate's OR-branch: same
-    vertex count AND every vertex within tol_m (default 1 cm) of its
+    vertex count AND every vertex within RING_TOL_M (1 cm) of its
     counterpart, after canonicalizing both rings (closing duplicate
     dropped, rotation to the lexicographically smallest vertex, both
     orientations tried). 1 cm ≈ 1e-7 deg — far below any real
@@ -79,7 +82,7 @@ def _ring_geom_exact(g_ring, o_ring, tol_m: float = 0.01) -> bool:
         pts = [tuple(p) for p in ring]
         if len(pts) > 1 and pts[0] == pts[-1]:
             pts = pts[:-1]
-        # Fold adjacent vertices closer than tol_m into one (wrap-around
+        # Fold adjacent vertices closer than RING_TOL_M into one (wrap-around
         # included). The two engines dedupe ring vertices at different
         # thresholds — the reference keeps points one 0.1 mm quantum
         # apart (Pt2D exact equality), ours folds float-noise dupes — so
@@ -87,10 +90,10 @@ def _ring_geom_exact(g_ring, o_ring, tol_m: float = 0.01) -> bool:
         # sub-tolerance bookkeeping vertex fails the whole ring on count.
         folded = []
         for p in pts:
-            if folded and _dist_m(p, folded[-1]) <= tol_m:
+            if folded and _dist_m(p, folded[-1]) <= RING_TOL_M:
                 continue
             folded.append(p)
-        if len(folded) > 1 and _dist_m(folded[0], folded[-1]) <= tol_m:
+        if len(folded) > 1 and _dist_m(folded[0], folded[-1]) <= RING_TOL_M:
             folded.pop()
         pts = folded
         if not pts:
@@ -103,7 +106,7 @@ def _ring_geom_exact(g_ring, o_ring, tol_m: float = 0.01) -> bool:
         b = canon(cand)
         if len(a) != len(b) or not a:
             continue
-        if all(_dist_m(p, q) <= tol_m for p, q in zip(a, b)):
+        if all(_dist_m(p, q) <= RING_TOL_M for p, q in zip(a, b)):
             return True
     return False
 

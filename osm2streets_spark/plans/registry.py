@@ -34,22 +34,20 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import HIGHWAY_WHITELIST, RAILWAY_WHITELIST
+from ..config import DEFAULT_CONFIG, HIGHWAY_WHITELIST, RAILWAY_WHITELIST
 from ..sources.fixtures import fixture_dir_for, ensure_fixtures
 from ..sources.osm_xml import parse_documents, split_entities
 from ..operators.extract import (
     filter_ways, with_parsed_road_tags, restriction_relations,
 )
-from ..operators.split_ways import (
-    way_points, flag_intersections, build_network_v0,
-)
+from ..operators.split_ways import build_network_v0
 from ..operators.lanes_udf import with_lanes
 from ..operators import dedup, similarity, text_analysis, multimodal
 from ..operators.tiles import tile_xy
 from ..operators.split_ways import interior_point_road_map
 from ..operators.extract import node_features
 from ..operators.features import snap_features_to_roads, road_stop_lines
-from ..operators.pathfinding import shortest_dists_from_hubs
+from ..operators.pathfinding import shortest_dists_from_hubs, simple_paths
 from ..operators.render import render_lane_polygons, render_surfaces
 from ..operators.markings import render_lane_markings
 from ..operators.dual_carriageway import detect_dual_carriageway_endpoints
@@ -68,6 +66,35 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _parsed(spark, sf_dir):
     return split_entities(parse_documents(_docs(spark, sf_dir)))
+
+
+def _v0(spark, sf_dir) -> dict:
+    """The parsed nodes and relations plus the pre-transform network
+    (J1+W1) of the filtered ways: roads, intersections and the flagged
+    way points."""
+    nodes, ways, relations = _parsed(spark, sf_dir)
+    roads, ints, flagged = build_network_v0(filter_ways(ways), nodes)
+    return {"nodes": nodes, "relations": relations, "roads": roads,
+            "intersections": ints, "flagged": flagged}
+
+
+def _net(spark, sf_dir, cfg=DEFAULT_CONFIG) -> dict:
+    """The street network built from the sf's fixture documents."""
+    return build_street_network(
+        spark, load_documents(spark, fixture_dir_for(sf_dir)), cfg)
+
+
+def _transformed_roads(net: dict) -> DataFrame:
+    # osm_way_ids serialized to a CSV string: the oracle harness
+    # canonicalizes columns by factorizing values and cannot hash raw
+    # array<long> cells (round-1 `unhashable type: 'list'` crash).
+    return net["roads"].select(
+        "doc_id", "way_id",
+        F.array_join(F.transform("osm_way_ids",
+                                 lambda x: x.cast("string")),
+                     ",").alias("osm_way_ids"),
+        F.round("trimmed_length", 2).alias("trimmed_length"),
+        "lane_chars")
 
 
 # --- oracle SQL building blocks (DuckDB dialect) --------------------------
@@ -196,10 +223,8 @@ def queries() -> Q:
                        F.lit("")).alias("highway"))
 
     def sn_intersections(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        flagged = flag_intersections(way_points(filter_ways(ways), nodes))
         return (
-            flagged.where("is_int")
+            _v0(spark, sf_dir)["flagged"].where("is_int")
             .groupBy("doc_id", "qx", "qy")
             .agg(F.count(F.lit(1)).alias("n_uses"),
                  F.max(F.col("is_endpoint").cast("int")).cast("long")
@@ -207,22 +232,17 @@ def queries() -> Q:
         )
 
     def sn_split_segments(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, _, _ = build_network_v0(filter_ways(ways), nodes)
-        return roads.groupBy("doc_id", "way_id").agg(
+        return _v0(spark, sf_dir)["roads"].groupBy("doc_id", "way_id").agg(
             F.count(F.lit(1)).alias("n_segments"))
 
     def sn_roads(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, _, _ = build_network_v0(filter_ways(ways), nodes)
-        return roads.select(
+        return _v0(spark, sf_dir)["roads"].select(
             "doc_id", "way_id", F.col("seg_idx").cast("long").alias("seg_idx"),
             F.col("n_pts").cast("long").alias("n_pts"),
             "src_qx", "src_qy", "dst_qx", "dst_qy")
 
     def sn_intersection_degree(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, _, _ = build_network_v0(filter_ways(ways), nodes)
+        roads = _v0(spark, sf_dir)["roads"]
         ends = roads.select(
             "doc_id", F.col("src_qx").alias("qx"), F.col("src_qy").alias("qy")
         ).unionAll(roads.select(
@@ -243,8 +263,7 @@ def queries() -> Q:
                         F.col("layer").cast("long").alias("layer"))
 
     def sn_tile_assignment(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        flagged = flag_intersections(way_points(filter_ways(ways), nodes))
+        flagged = _v0(spark, sf_dir)["flagged"]
         ints = flagged.where("is_int").groupBy("doc_id", "qx", "qy").agg(
             F.first("lon").alias("lon"), F.first("lat").alias("lat"))
         x, y = tile_xy(F.col("lon"), F.col("lat"), 16)
@@ -252,15 +271,13 @@ def queries() -> Q:
                            y.alias("tile_y"))
 
     def sn_span_passthrough(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        net = {"output_documents": docs.select("doc_id", "spans")}
         sig = F.md5(F.array_join(F.transform(
             "spans",
             lambda s: F.concat_ws(":", s["kind"],
                                   s["offset"].cast("string"),
                                   F.md5(s["text"]), s["media_ref"]),
         ), "|"))
-        return net["output_documents"].select(
+        return _docs(spark, sf_dir).select(
             "doc_id", sig.alias("span_sig"),
             F.size("spans").cast("long").alias("n_spans"))
 
@@ -271,10 +288,11 @@ def queries() -> Q:
                         "from_way", "via_node", "to_way")
 
     def sn_network_summary(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, ints, _ = build_network_v0(filter_ways(ways), nodes)
-        r = roads.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_roads"))
-        i = ints.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_intersections"))
+        v0 = _v0(spark, sf_dir)
+        r = v0["roads"].groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_roads"))
+        i = v0["intersections"].groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_intersections"))
         return r.join(i, "doc_id")
 
     q.update({
@@ -304,27 +322,10 @@ def queries() -> Q:
         inside movements_json are xxhash64, which DuckDB can't derive).
         Oracle: the single-node sequential replay's gt_movements table
         (plans/sequential.py)."""
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
-        i = net["intersections"]
-        return i.select(
+        return _net(spark, sf_dir)["intersections"].select(
             "doc_id", "qx", "qy", "kind", "control",
             F.coalesce(F.json_array_length("movements_json"),
                        F.lit(0)).cast("long").alias("n_movements"))
-
-    def sn_transformed_roads(spark, sf_dir):
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
-        # osm_way_ids serialized to a CSV string: the driver's oracle harness
-        # canonicalizes columns by factorizing values and cannot hash raw
-        # array<long> cells (round-1 `unhashable type: 'list'` crash).
-        return net["roads"].select(
-            "doc_id", "way_id",
-            F.array_join(F.transform("osm_way_ids",
-                                     lambda x: x.cast("string")),
-                         ",").alias("osm_way_ids"),
-            F.round("trimmed_length", 2).alias("trimmed_length"),
-            "lane_chars")
 
     def s_split_transforms(spark, sf_dir):
         """The dense-doc quadkey SPLIT path under a CORRECTNESS gate
@@ -337,7 +338,6 @@ def queries() -> Q:
         (gt_split_transformed, lazily backfilled)."""
         from dataclasses import replace
 
-        from ..config import DEFAULT_CONFIG
         from ..sources.fixtures import (
             SPLIT_GT_THRESHOLD, SPLIT_GT_ZOOM, ensure_split_transforms_gt,
         )
@@ -345,15 +345,7 @@ def queries() -> Q:
         cfg = replace(DEFAULT_CONFIG,
                       transform_split_threshold=SPLIT_GT_THRESHOLD,
                       transform_split_zoom=SPLIT_GT_ZOOM)
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs, cfg=cfg)
-        return net["roads"].select(
-            "doc_id", "way_id",
-            F.array_join(F.transform("osm_way_ids",
-                                     lambda x: x.cast("string")),
-                         ",").alias("osm_way_ids"),
-            F.round("trimmed_length", 2).alias("trimmed_length"),
-            "lane_chars")
+        return _transformed_roads(_net(spark, sf_dir, cfg))
 
     def s_debug_steps(spark, sf_dir):
         """Stepwise transformation debugging (S11 debug layers): the
@@ -362,22 +354,20 @@ def queries() -> Q:
         each pass; this emits the per-pass network sizes per doc.
         Oracle: the sequential replay's gt_debug_steps twin, written
         with the fixtures."""
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
         # step rows come one per transform-kernel group: a quadkey-split
         # dense doc sums its cells (frozen seam intersections count once
         # per cell they touch, as in the sequential replay)
-        return net["debug_steps"].groupBy(
+        return _net(spark, sf_dir)["debug_steps"].groupBy(
             "doc_id", F.col("road_id").cast("int").alias("step_idx"),
             F.col("name").alias("step_name"),
         ).agg(F.sum("src_i").alias("n_roads"),
               F.sum("dst_i").alias("n_intersections"))
 
     def sn_feature_snap(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, _, flagged = build_network_v0(filter_ways(ways), nodes)
-        interior = interior_point_road_map(flagged, roads)
-        feats = node_features(nodes)
+        v0 = _v0(spark, sf_dir)
+        roads = v0["roads"]
+        interior = interior_point_road_map(v0["flagged"], roads)
+        feats = node_features(v0["nodes"])
         snapped = snap_features_to_roads(feats, interior)
         return snapped.join(
             roads.select("doc_id", "road_id", "way_id",
@@ -386,10 +376,8 @@ def queries() -> Q:
         ).select("doc_id", "node_id", "feature", "way_id", "seg_idx")
 
     def g_rhop(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        roads, _, _ = build_network_v0(filter_ways(ways), nodes)
         # express over quantized keys so the oracle can reproduce ids
-        edges = roads.select(
+        edges = _v0(spark, sf_dir)["roads"].select(
             "doc_id", F.col("src_qx").alias("sx"), F.col("src_qy").alias("sy"),
             F.col("dst_qx").alias("dx"), F.col("dst_qy").alias("dy"),
         ).distinct()
@@ -423,7 +411,7 @@ def queries() -> Q:
     q.update({
         "sn_geojson_features": sn_geojson_features,
         "sn_movements": sn_movements,
-        "sn_transformed_roads": sn_transformed_roads,
+        "sn_transformed_roads": lambda s, d: _transformed_roads(_net(s, d)),
         "s_split_transforms": s_split_transforms,
         "s_debug_steps": s_debug_steps,
         "sn_feature_snap": sn_feature_snap,
@@ -432,28 +420,25 @@ def queries() -> Q:
 
     # geometry-UDF renders + per-doc graph algorithms (rows-only checks)
     def _net_roads(spark, sf_dir):
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
-        return net["roads"].withColumn(
+        return _net(spark, sf_dir)["roads"].withColumn(
             "length_m", F.col("trimmed_length"))
 
     def sn_stop_lines(spark, sf_dir):
-        nodes, ways, _ = _parsed(spark, sf_dir)
-        fways = filter_ways(ways)
-        roads, _, flagged = build_network_v0(fways, nodes)
         from ..sources.osm_xml import doc_bounds
         from ..operators.geometry_update import with_projected_geometry
-        roads = with_projected_geometry(roads, doc_bounds(nodes))
-        interior = interior_point_road_map(flagged, roads)
+        v0 = _v0(spark, sf_dir)
+        nodes = v0["nodes"]
+        roads = with_projected_geometry(v0["roads"], doc_bounds(nodes))
+        interior = interior_point_road_map(v0["flagged"], roads)
         feats = node_features(nodes)
         snapped = snap_features_to_roads(feats, interior)
         return road_stop_lines(snapped, roads)
 
     def sn_via_way_restrictions(spark, sf_dir):
-        nodes, ways, relations = _parsed(spark, sf_dir)
-        roads, _, _ = build_network_v0(filter_ways(ways), nodes)
         from ..operators.restrictions import resolve_via_way_restrictions
-        r = restriction_relations(relations)
+        v0 = _v0(spark, sf_dir)
+        roads = v0["roads"]
+        r = restriction_relations(v0["relations"])
         resolved = resolve_via_way_restrictions(r, roads)
         seg = roads.select("doc_id", "road_id", "way_id",
                            F.col("seg_idx").cast("long").alias("seg_idx"))
@@ -486,19 +471,17 @@ def queries() -> Q:
             "doc_id", "driving_side")
 
     def s_intersection_markings(spark, sf_dir):
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
         from ..operators.intersection_markings import (
             render_intersection_markings,
         )
-        return render_intersection_markings(net["intersections"])
+        return render_intersection_markings(
+            _net(spark, sf_dir)["intersections"])
 
     def s_sidewalk_corners(spark, sf_dir):
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
         from ..operators.intersection_markings import (
             render_sidewalk_corners,
         )
+        net = _net(spark, sf_dir)
         return render_sidewalk_corners(net["roads"], net["intersections"])
 
     q.update({
@@ -517,9 +500,7 @@ def queries() -> Q:
         # A*; natural-key projection (xxhash i_ids dropped)
         # projection keeps only tie-stable columns (equal-length paths
         # make way ids nondeterministic; distances are unique)
-        "g_simple_paths": lambda s, d: __import__(
-            "osm2streets_spark.operators.pathfinding",
-            fromlist=["simple_paths"]).simple_paths(_net_roads(s, d))
+        "g_simple_paths": lambda s, d: simple_paths(_net_roads(s, d))
             .select("doc_id", "profile", "dist_m"),
     })
 
@@ -600,8 +581,7 @@ def queries() -> Q:
     def s_debug_cw_order(spark, sf_dir):
         """S11 debug sink (render/mod.rs:156-274): per-junction clockwise
         road ordering labels — natural keys so the layer is joinable."""
-        docs = load_documents(spark, fixture_dir_for(sf_dir))
-        net = build_street_network(spark, docs)
+        net = _net(spark, sf_dir)
         ints = net["intersections"].select("doc_id", "i_id", "qx", "qy")
         trims = net["trims"]
         return trims.join(ints, ["doc_id", "i_id"]).select(

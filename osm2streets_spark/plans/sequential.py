@@ -622,12 +622,11 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
     return roads, ints_out, cw_rows, mp_rows, stop_rows, stop_feat_rows
 
 
-def shortest_dist_rows(doc_id: str, roads: list[dict],
-                       max_hubs: int = 2) -> list[dict]:
+def shortest_dist_rows(doc_id: str, roads: list[dict]) -> list[dict]:
     """Sequential twin of operators/pathfinding.shortest_dists_from_hubs
     over the FINAL (post-transform, trimmed) road graph: undirected,
-    parallel edges keep the min weight, distances from the first
-    max_hubs node ids."""
+    parallel edges keep the min weight, distances from the first two
+    node ids."""
     import networkx as nx
 
     g = nx.Graph()
@@ -638,7 +637,7 @@ def shortest_dist_rows(doc_id: str, roads: list[dict],
             w = min(w, g[a][b]["weight"])
         g.add_edge(a, b, weight=w)
     out = []
-    for hub in sorted(g.nodes())[:max_hubs]:
+    for hub in sorted(g.nodes())[:2]:
         dist = nx.single_source_dijkstra_path_length(g, hub)
         for node, d in dist.items():
             out.append({"doc_id": doc_id, "src_i": hub,
@@ -906,7 +905,7 @@ def transformed_road_rows(doc_id: str, roads: list[dict]) -> list[dict]:
             for r in roads]
 
 
-def convert_documents(doc_rows, cfg: MapConfig = DEFAULT_CONFIG):
+def convert_documents(doc_rows):
     """Iterate (doc_id, spans) pairs → (transformed_road_rows,
     movement_rows, dist_rows, cw_rows, path_rows) ready for parquet —
     the gt tables the oracles read."""
@@ -920,7 +919,7 @@ def convert_documents(doc_rows, cfg: MapConfig = DEFAULT_CONFIG):
     for doc_id, spans in doc_rows:
         sink: dict = {}
         roads, ints, cws, mps, sls, sfs = \
-            convert_document(doc_id, spans, cfg, debug_sink=sink)
+            convert_document(doc_id, spans, debug_sink=sink)
         for s in sink.get("transform_steps", []):
             dbg_rows.append({"doc_id": doc_id, **s})
         mp_rows.extend(mps)
@@ -928,7 +927,8 @@ def convert_documents(doc_rows, cfg: MapConfig = DEFAULT_CONFIG):
         stop_feat_rows.extend(sfs)
         dist_rows.extend(shortest_dist_rows(doc_id, roads))
         path_rows.extend(profile_path_rows(doc_id, roads))
-        feat_rows.extend(feature_rows(doc_id, roads, ints, cfg.cell_zoom))
+        feat_rows.extend(feature_rows(doc_id, roads, ints,
+                                       DEFAULT_CONFIG.cell_zoom))
         lp, sf_, mk = layer_rows(doc_id, roads)
         lanepoly_rows.extend(lp)
         surface_rows.extend(sf_)

@@ -37,7 +37,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         cores = _env_int("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
         # 1x cores: our shuffles are byte-small, so AQE's coalesce
-        # floor (minPartitionNum=cores) is where every over-provisioned
+        # floor (default parallelism) is where every over-provisioned
         # shuffle lands anyway — provisioning 2x cores just paid the
         # extra map/reduce task fixed costs first (interleaved A/B at
         # sf0.1: 2x-cores flagship ~20-22 s vs 1x-cores ~13-15 s; AQE
@@ -52,12 +52,11 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # our shuffles are byte-small but Python-CPU-heavy (geometry
-        # kernels); don't let AQE coalesce below the core count or the
-        # UDF stages serialize onto one task
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-                str(cores))
+        # kernels), so AQE must not coalesce below the core count or the
+        # UDF stages serialize onto one task; its default floor is the
+        # default parallelism, `cores` under local[cores]
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

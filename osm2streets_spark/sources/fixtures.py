@@ -32,9 +32,10 @@ from ..xxh import xxhash64
 
 M_PER_DEG = 111_319.490793
 
-FIXTURE_ROOT = os.environ.get(
-    "OSM2STREETS_FIXTURE_ROOT", "/root/repo/fixtures"
-)
+# default: fixtures/ beside the imported package, one per checkout
+FIXTURE_ROOT = os.environ.get("OSM2STREETS_FIXTURE_ROOT", os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))), "fixtures"))
 
 # documents per scale factor (street docs are heavier than TPC-H rows)
 # bump when generator output changes — cached fixture dirs regenerate
@@ -743,11 +744,11 @@ def _write_rows(rows: list[dict], schema: pa.Schema, path: str) -> str:
     return path
 
 
-def generate(n_docs: int, seed: int = 42, heavy: bool = False):
+def generate(n_docs: int, heavy: bool = False):
     docs, nodes, ways, rels, media = [], [], [], [], []
     tiles: dict[tuple, dict] = {}   # dedupe store rows by (z, x, y)
     for i in range(n_docs):
-        d, n, w, r, m, ts = build_document(i, seed, heavy)
+        d, n, w, r, m, ts = build_document(i, heavy=heavy)
         docs.append(d)
         nodes.extend(n)
         ways.extend(w)
@@ -806,9 +807,9 @@ def ensure_split_transforms_gt(fix_dir: str) -> str | None:
 SCALE_DATA_COMPAT = {"v31", GEN_VERSION}
 
 
-def ensure_fixtures(sf_name: str, root: str = FIXTURE_ROOT) -> str:
+def ensure_fixtures(sf_name: str) -> str:
     """Write fixture parquet for the given scale if missing; returns dir."""
-    out_dir = os.path.join(root, sf_name)
+    out_dir = os.path.join(FIXTURE_ROOT, sf_name)
     done = os.path.join(out_dir, "_SUCCESS")
     if os.path.exists(done):
         with open(done) as fh:

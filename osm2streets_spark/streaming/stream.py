@@ -60,10 +60,10 @@ def stream_street_network(spark: SparkSession, input_dir: str,
 
 
 def stream_event_windows(spark: SparkSession, input_dir: str,
-                         checkpoint_dir: str, watermark: str = "1 hour",
-                         window: str = "1 hour"):
-    """Watermarked tumbling-window event counts — late data beyond the
-    watermark is dropped, state is bounded (the standard pattern)."""
+                         checkpoint_dir: str):
+    """Watermarked 1-hour tumbling-window event counts — data later than
+    the 1-hour watermark is dropped, state is bounded (the standard
+    pattern)."""
     ev_schema = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
     stream = (
@@ -72,8 +72,8 @@ def stream_event_windows(spark: SparkSession, input_dir: str,
         .parquet(input_dir)
     )
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type",

@@ -20,7 +20,8 @@ from osm2streets_spark.session import get_spark
 from osm2streets_spark.operators import dedup, similarity
 
 
-def bucket_stats(buckets_sizes: list[int], n_items: int, cap: int = 256):
+def bucket_stats(buckets_sizes: list[int], n_items: int):
+    cap = dedup.MAX_BUCKET
     s = np.array(buckets_sizes or [0])
     cand = int(np.where(s <= cap, s * (s - 1) // 2, s - 1).sum())
     allp = n_items * (n_items - 1) // 2

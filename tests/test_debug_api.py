@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from osm2streets_spark.config import DEFAULT_CONFIG
 from osm2streets_spark.operators.debug_api import (
     movement_arrows, movements_from_lane, osm_tags_for_way,
     roads_connected_to_intersections, way_geometry, way_xml,
@@ -77,7 +78,8 @@ def test_way_geometry_chevrons(net, parsed):
 
 
 def test_movement_arrows(net):
-    arrows = movement_arrows(net["roads"], net["intersections"]).collect()
+    arrows = movement_arrows(net["roads"], net["intersections"],
+                             DEFAULT_CONFIG.driving_side).collect()
     assert arrows
     # every arrow's (from, to) pair is in that intersection's movements
     mv = {(r.doc_id, r.i_id): set(map(tuple, json.loads(r.movements_json)))
@@ -90,7 +92,8 @@ def test_movement_arrows(net):
 
 
 def test_movements_from_lane(net):
-    arrows = movement_arrows(net["roads"], net["intersections"])
+    arrows = movement_arrows(net["roads"], net["intersections"],
+                             DEFAULT_CONFIG.driving_side)
     # pick a road that has outgoing movements at its forward end
     some = arrows.first()
     road = net["roads"].where(F.col("road_id") == some.from_road).first()

@@ -127,3 +127,67 @@ def test_every_import_is_used():
         unused += [f"{p.relative_to(ROOT)}: {name}" for name in imported
                    if name not in loaded]
     assert not unused, unused
+
+
+# Defaulted parameters kept although nothing in the scanned trees passes
+# them, each with the reason it stays a parameter.
+DEFAULT_EXEMPT = {
+    ("sources/reference_fixtures.py", "src"):
+        "locates the external osm2streets checkout, a deployment path",
+}
+
+
+def _defaulted(fn):
+    """(position or None if keyword-only, name) per defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    for i in range(len(pos) - len(a.defaults), len(pos)):
+        yield i, pos[i].arg
+    for x, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield None, x.arg
+
+
+def _called_name(call):
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else \
+        f.attr if isinstance(f, ast.Attribute) else None
+
+
+def test_every_default_is_overridden():
+    """For each defaulted parameter of every function in
+    osm2streets_spark/, some call of a function by that name (bare or
+    as an attribute) in the package, tests/, scripts/, perfbench/,
+    bench*.py or __spark_entry__.py passes it, by keyword or at its
+    position; a call with `*args` or `**kwargs` passes everything. A
+    default that no caller overrides is an option with one value, so
+    it is a constant instead."""
+    passed = {}  # name -> set of positions and keywords passed
+    files = [*_python_files(), ROOT / "__spark_entry__.py"]
+    trees = {p: ast.parse(p.read_text(encoding="utf-8")) for p in files}
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call) \
+                    or (name := _called_name(call)) is None:
+                continue
+            got = passed.setdefault(name, set())
+            if any(isinstance(x, ast.Starred) for x in call.args) \
+                    or any(k.arg is None for k in call.keywords):
+                got.add("*")
+            got.update(range(len(call.args)))
+            got.update(k.arg for k in call.keywords)
+    unset = []
+    for p, tree in trees.items():
+        if not p.is_relative_to(ROOT / "osm2streets_spark"):
+            continue
+        rel = p.relative_to(ROOT / "osm2streets_spark").as_posix()
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            got = passed.get(fn.name, set())
+            unset += [f"{rel}:{fn.lineno}: {fn.name}({arg})"
+                      for i, arg in _defaulted(fn)
+                      if "*" not in got and arg not in got
+                      and (i is None or i not in got)
+                      and (rel, arg) not in DEFAULT_EXEMPT]
+    assert not unset, unset

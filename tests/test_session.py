@@ -107,6 +107,23 @@ def test_every_map_config_field_is_read():
     assert fields - read == set()
 
 
+def test_fixture_root_follows_the_checkout(tmp_path):
+    """Without OSM2STREETS_FIXTURE_ROOT, fixtures live in fixtures/
+    beside the osm2streets_spark package that was imported, so a second
+    checkout reads and writes its own."""
+    shutil.copytree(PKG, tmp_path / "osm2streets_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("OSM2STREETS_FIXTURE_ROOT", "PYTHONPATH")}
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from osm2streets_spark.sources import fixtures; "
+         "print(fixtures.FIXTURE_ROOT)"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip() == str(tmp_path / "fixtures")
+
+
 # --- worker_daemon: the stat-guarded zipimport --------------------------
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -204,6 +221,27 @@ def test_every_udf_task_runs_guarded(spark):
     got = {r[0] for r in spark.range(0, 4 * n, 1, n)
            .select(method_name("id")).distinct().collect()}
     assert got == {f"{i}:guarded_invalidate_caches" for i in range(n)}
+
+
+def _get_spark_conf_keys():
+    """The literal keys of every `.config(key, ...)` call in session.py."""
+    with open(os.path.join(PKG, "session.py")) as fh:
+        tree = ast.parse(fh.read())
+    return {c.args[0].value for c in ast.walk(tree)
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "config" and c.args
+            and isinstance(c.args[0], ast.Constant)}
+
+
+def test_no_deprecated_spark_conf(spark):
+    """get_spark sets no SQL conf that this Spark lists as deprecated:
+    each one logs a deprecation warning again and again."""
+    sql_conf = getattr(spark._jvm.org.apache.spark.sql.internal, "SQLConf$")
+    deprecated = set(getattr(sql_conf, "MODULE$").deprecatedSQLConfigs()
+                     .keys().mkString("\n").split("\n"))
+    keys = _get_spark_conf_keys()
+    assert "spark.sql.shuffle.partitions" in keys and deprecated
+    assert keys & deprecated == set()
 
 
 SUBMIT_SMOKE = '''

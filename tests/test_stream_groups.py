@@ -106,6 +106,7 @@ def test_tiny_arrow_batches_identical_grouped_renders(spark, fixture_dir):
     (doc, junction), render_sidewalk_corners per (doc, junction). A
     group split across two Arrow batches must still be processed whole,
     so 16-record batches must not change a single row."""
+    from osm2streets_spark.config import DEFAULT_CONFIG
     from osm2streets_spark.operators.debug_api import (
         movement_arrows, way_geometry,
     )
@@ -122,7 +123,7 @@ def test_tiny_arrow_batches_identical_grouped_renders(spark, fixture_dir):
         "way_geometry": lambda: way_geometry(
             net["ways"], net["nodes"], net["roads"]),
         "movement_arrows": lambda: movement_arrows(
-            net["roads"], net["intersections"]),
+            net["roads"], net["intersections"], DEFAULT_CONFIG.driving_side),
         "sidewalk_corners": lambda: render_sidewalk_corners(
             net["roads"], net["intersections"]),
     }
