@@ -2,8 +2,9 @@
 road containing them, and derive stop-line positions.
 
 Reference split_ways.rs:221-311: a feature node either coincides with an
-intersection (handled in finalize_intersections) or lies on a road's
-interior — matched via the interior-point→road map (J5), then projected
+intersection (its roster, in geometry_update.finish_junction) or lies on
+a road's interior — matched via the interior-point→road map (J5), then
+projected
 to a distance along the road. The 30%/70% rule (split_ways.rs:300-308):
 an undirected mid-road crossing snaps to the nearer end when within 30%
 of it, else stays a crossing on the road.

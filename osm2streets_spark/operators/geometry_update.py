@@ -1,19 +1,18 @@
-"""T6: per-intersection geometry update + movements, and the road
-center-line rebuild (K6/K9/K10).
+"""T6: per-intersection geometry update + movements, the final
+intersection row, and the road center-line rebuild (K6/K9/K10).
 
-This is the heart of the engine (SURVEY.md §2.10 T6): one map_groups
-pass over (doc_id, i_id) runs the pure-Python kernel's single dispatch
-(geom/intersection_kernel.py) per junction, whatever its degree; the
-resulting trims join back to roads through one pivot — each road
-receives trim_start from its src group and trim_end from its dst group,
+This is the heart of the engine (SURVEY.md §2.10 T6): `finish_junction`
+runs the pure-Python kernel's single dispatch (geom/intersection_kernel.py)
+for one junction, whatever its degree, over the final roads' ends there,
 exactly like the reference's per-intersection loop
-(operations/update_geometry.rs:8-65).
+(operations/update_geometry.rs:8-65), then assembles the junction's
+node roster and control. The transforms kernel calls it for every
+junction whose roads all sit in its (doc, cell) group, and the frozen-seam
+pass for the rest; each road then takes trim_start from its src junction
+and trim_end from its dst junction and rebuilds its center line.
 
-Scale notes: the group key (doc_id, i_id) is maximally fine-grained —
-one junction per group, bounded payload (≤ degree × polyline points),
-so no group can blow executor memory even on a dense megacity doc.
-The shuffle is one exchange on the group key; AQE coalesces small
-partitions. Python crossing is Arrow-batched.
+Also here: the map_groups / row_udf crossings every grouped and per-row
+Python kernel of the package goes through, and the road-end explode.
 """
 
 from __future__ import annotations
@@ -146,7 +145,7 @@ def t6_process(ends: list[dict], trims_only: bool = False) -> pd.DataFrame:
     """T6 over the sequential replay's road-end dicts (one document's
     ends in road order): group them by (doc_id, i_id) in
     first-occurrence order and run each junction through _t6_rows, the
-    kernel the Spark pass below runs per group, so the two engines stay
+    kernel finish_junction runs per junction, so the two engines stay
     bit-identical. → a TRIM_SCHEMA frame, built like map_groups'."""
     groups: dict[tuple, list[dict]] = {}
     for e in ends:
@@ -154,6 +153,108 @@ def t6_process(ends: list[dict], trims_only: bool = False) -> pd.DataFrame:
     return _group_frame(
         [row for grp in groups.values() for row in _t6_rows(grp, trims_only)],
         TRIM_SCHEMA)
+
+
+# merge_crossings kind-max order: Signalized > Marked > Unmarked
+_CROSSING_RANK = {"Signalized": 3, "Marked": 2, "Unmarked": 1}
+
+
+def end_row(road: dict, is_src: bool) -> dict:
+    """One road end as _t6_rows takes it (road.rs:232-254: a oneway road
+    can only exit via its dst and enter via its src), from a transforms
+    road dict."""
+    ow = road.get("oneway_dir")
+    bidi, fwd, back = ow == "", ow == "forward", ow == "backward"
+    # ramp-eligible types (on_off_ramp.rs:26-37): the *_link kinds plus
+    # motorway mainline
+    hw = str(road.get("highway_type") or "")
+    return {
+        "road_id": road["road_id"], "is_src_end": is_src, "xy": road["xy"],
+        "total_width": road["total_width"],
+        "driveable": road.get("driveable"),
+        "can_out": bidi or (back if is_src else fwd),
+        "can_in": bidi or (fwd if is_src else back),
+        "is_link": hw.endswith("_link") or hw == "motorway",
+        "pretrim": road.get("pretrim_src" if is_src else "pretrim_dst"),
+        "is_edge": bool(road.get("src_is_edge" if is_src
+                                 else "dst_is_edge") or False),
+        "other_i": road["dst_i"] if is_src else road["src_i"],
+    }
+
+
+def finish_junction(doc_id: str, i_id: int, ends: list[tuple[dict, bool]],
+                    inputs: list[dict], driving_side: str) -> list[dict]:
+    """T6 pass 2 and the final intersection row of one junction, over
+    `ends`, (road dict, is_src_end) for every final road end there.
+    `inputs`: the junction, restriction and signal_target rows of this
+    junction and of those T1 merged into it (their i_id). Restrictions
+    resolve against the final roads (J4, split_ways.rs:123-160: a road
+    matches every way of its osm_way_ids, so T2 splices keep their
+    bans). → a 'trim' row per road end (its clockwise position and
+    trim), then the 'intersection' row unless no junction row is this
+    junction's own."""
+    kinds: dict[str, list] = {}
+    for x in inputs:
+        kinds.setdefault(x["row_kind"], []).append(x)
+    restrictions = [(x["restriction_type"], x["from_way"], x["to_way"])
+                    for x in kinds.get("restriction", [])]
+    own = [j for j in kinds.get("junction", []) if j["i_id"] == i_id]
+    resolved = sorted({(rt, int(f["road_id"]), int(t["road_id"]))
+                       for rt, from_way, to_way in restrictions
+                       for f, _ in ends if from_way in f["osm_way_ids"]
+                       for t, _ in ends if to_way in t["osm_way_ids"]})
+    rj = json.dumps([{"rt": rt, "frm": f, "to": t}
+                     for rt, f, t in resolved]) if resolved else None
+    t6 = _t6_rows([dict(end_row(road, is_src), doc_id=doc_id, i_id=i_id,
+                        restrictions_json=rj, driving_side=driving_side)
+                   for road, is_src in ends], False)
+    rows = [{"row_kind": "trim", "i_id": i_id, "road_id": road_id,
+             "is_src_end": is_src, "trim": trim, "cw_index": cw_index}
+            for _doc, _i, road_id, is_src, trim, *_, cw_index in t6]
+    if not own:
+        return rows
+    # the node roster: the junction's own node plus every absorbed one
+    # (collapse_short_road.rs:66-84: keep.osm_ids.extend); synthetic
+    # clip points (ids <= 0) are not nodes
+    roster = [j for j in kinds["junction"]
+              if j["osm_node_id"] is not None and j["osm_node_id"] > 0]
+    node_ids = sorted({int(j["osm_node_id"]) for j in roster})
+    # Signalled wins across the merged set (:72-76); merge_crossings
+    # (:164-176) keeps the strongest crossing kind
+    any_signal = any(bool(j["has_signal"]) for j in roster)
+    crossings = [j["crossing_kind"] for j in roster
+                 if j["crossing_kind"] in _CROSSING_RANK]
+    hint = own[0]["kind_hint"]
+    # split_ways.rs:53-61 + :216-241: synthetic clip point (MapEdge) →
+    # Uncontrolled; a traffic signal at any merged node, or tagged on an
+    # incoming way pointing here → Signalled; every other real node →
+    # Signed (the default for ordinary junctions — NOT Uncontrolled)
+    if hint == "MapEdge":
+        control = "Uncontrolled"
+    elif any_signal or "signal_target" in kinds:
+        control = "Signalled"
+    else:
+        control = "Signed" if node_ids else "Uncontrolled"
+    ring, kind, movements = t6[0][5:8]
+    road = ends[0][0]
+    return rows + [{
+        **{k: own[0][k] for k in ("qx", "qy", "n_uses", "osm_node_id",
+                                  "lon", "lat", "kind_hint")},
+        "row_kind": "intersection", "i_id": i_id,
+        "lon0": road["lon0"], "lat0": road["lat0"],
+        "polygon_xy": ring, "movements_json": movements,
+        # MapEdge wins over the kernel's classification (the reference
+        # skips movement/kind updates for map edges,
+        # intersection.rs:286-290)
+        "kind": "MapEdge" if hint == "MapEdge"
+        else hint if kind is None else kind,
+        "osm_node_ids": node_ids,
+        "crossing_island": any(bool(j["crossing_island"]) for j in roster)
+        if roster else None,
+        "crossing_kind": max(crossings, key=_CROSSING_RANK.get,
+                             default=None),
+        "control": control,
+    }]
 
 
 def group_runs(keys: list[np.ndarray]) -> np.ndarray:
@@ -250,16 +351,6 @@ def row_udf(kernel, return_type):
     return F.pandas_udf(udf, return_type)
 
 
-def run_t6(ends: DataFrame, n: int | None = None) -> DataFrame:
-    """`ends` (build_road_ends) columns: doc_id, i_id, road_id,
-    is_src_end, xy, total_width, driveable, can_out, can_in,
-    restrictions_json, driving_side. One map_groups pass over (doc_id, i_id) junction
-    groups (1-6 rows each) in n partitions: trims, ring, movements and
-    kind per junction."""
-    return map_groups(ends, ["doc_id", "i_id"],
-                      lambda rows: _t6_rows(rows, False), TRIM_SCHEMA, n)
-
-
 def road_ends(roads: DataFrame, *cols: str) -> DataFrame:
     """Explode each road to its two ends (road.rs:22-23: src_i, dst_i)
     → (doc_id, i_id, is_src_end, road_id, *cols), src end first. One
@@ -277,54 +368,9 @@ def road_ends(roads: DataFrame, *cols: str) -> DataFrame:
         "doc_id", "_e.i_id", "_e.is_src_end", "road_id", *cols)
 
 
-def build_road_ends(roads: DataFrame, restrictions_by_i: DataFrame,
-                    driving_side: str = "right") -> DataFrame:
-    """Each road's two intersection ends with drivability per end
-    (road.rs:232-254: a oneway road can only exit via its dst and enter
-    via its src)."""
-    src = F.col("is_src_end")
-    fwd = F.col("oneway_dir") == "forward"
-    back = F.col("oneway_dir") == "backward"
-    bidi = F.col("oneway_dir") == ""
-
-    def per_end(src_col, dst_col):
-        return F.when(src, src_col).otherwise(dst_col)
-
-    # ramp-eligible types (on_off_ramp.rs:26-37): the *_link kinds plus
-    # motorway mainline
-    is_link = (F.col("highway_type").endswith("_link")
-               | (F.col("highway_type") == "motorway"))
-    ends = road_ends(
-        roads, "xy", "total_width", "driveable", "oneway_dir",
-        "highway_type", "pretrim_src", "pretrim_dst", "src_is_edge",
-        "dst_is_edge", "src_i", "dst_i",
-    ).select(
-        "doc_id", "i_id", "road_id", "is_src_end", "xy", "total_width",
-        "driveable", (bidi | per_end(back, fwd)).alias("can_out"),
-        (bidi | per_end(fwd, back)).alias("can_in"),
-        is_link.alias("is_link"),
-        per_end(F.col("pretrim_src"), F.col("pretrim_dst")).alias("pretrim"),
-        F.coalesce(per_end(F.col("src_is_edge"), F.col("dst_is_edge")),
-                   F.lit(False)).alias("is_edge"),
-        per_end(F.col("dst_i"), F.col("src_i")).alias("other_i"),
-    )
-    # restrictions are sparse but corpus-proportional — a plain hash
-    # join (NOT broadcast: it would not survive a 100 TB corpus); AQE
-    # picks broadcast at runtime when the side is actually tiny
-    ends = ends.join(restrictions_by_i, ["doc_id", "i_id"], "left")
-    return ends.withColumn("driving_side", F.lit(driving_side))
-
-
 # ---------------------------------------------------------------------------
-# trim join-back + center-line rebuild (K9: road.rs:496-527)
+# center-line rebuild (K9: road.rs:496-527)
 # ---------------------------------------------------------------------------
-
-CENTER_SCHEMA = StructType([
-    StructField("center_xy", ArrayType(DoubleType())),
-    StructField("trimmed_length", DoubleType()),
-    StructField("too_short", BooleanType()),
-])
-
 
 def rebuild_center(raw, t0, t1) -> tuple[list, float, bool]:
     """K9 (road.rs:496-527): trim a flat xy polyline by (t0, t1) meters;
@@ -358,109 +404,3 @@ def rebuild_center(raw, t0, t1) -> tuple[list, float, bool]:
     elif t1 < 0:
         pl = extend_to_length(pl, total - t1)
     return pl.ravel().tolist(), float(polyline_length(pl)), False
-
-
-def apply_trims(roads: DataFrame, trims: DataFrame) -> DataFrame:
-    """Each road takes trim_start from its src-end group and trim_end
-    from its dst-end group (two independent groups, mirroring the
-    reference's per-intersection trimming), 0 where no group set one,
-    then rebuilds its center line (K9). The two ends are pivoted into
-    one row per road FIRST so the trims subtree is consumed exactly
-    once — referencing it twice (src join + dst join) would re-execute
-    the whole T6 stage twice (no subtree reuse past the exchange)."""
-    t = trims.groupBy("doc_id", "road_id").agg(
-        F.max(F.when(F.col("is_src_end"), F.col("trim"))).alias("trim_start"),
-        F.max(F.when(~F.col("is_src_end"), F.col("trim"))).alias("trim_end"),
-    )
-    r = roads.join(t, ["doc_id", "road_id"], "left") \
-             .fillna({"trim_start": 0.0, "trim_end": 0.0})
-    r = r.withColumn(
-        "_c", row_udf(rebuild_center, CENTER_SCHEMA)(
-            "xy", "trim_start", "trim_end"))
-    return r.select("*", "_c.*").drop("_c")
-
-
-def finalize_intersections(ints: DataFrame, trims: DataFrame,
-                           features: DataFrame, imerges: DataFrame,
-                           ints_v0: DataFrame, signalled_is: DataFrame
-                           ) -> DataFrame:
-    """Assemble the final intersections table: polygon/kind/movements
-    from the T6 kernel + control from feature nodes (J3 at-node case:
-    signals on the junction node → Signalled, split_ways.rs:221-259)
-    and from `signalled_is`, the junctions a way-tagged signal points
-    at.
-
-    Through `imerges` (absorbed→surviving from T1) and `ints_v0`, a
-    surviving intersection unions the OSM node ids of everything merged
-    into it (collapse_short_road.rs:66-84: keep.osm_ids.extend) and
-    takes the strongest control/crossing across the merged set
-    (:72-76 Signalled wins; merge_crossings :164-176 kind-max)."""
-    meta = trims.where(F.col("polygon_xy").isNotNull()).select(
-        "doc_id", "i_id", "polygon_xy", "kind", "movements_json")
-    out = ints.join(meta, ["doc_id", "i_id"], "left")
-
-    # node roster per final intersection: its own node + absorbed nodes
-    roster = out.select("doc_id", "i_id", "osm_node_id")
-    # T1 merges are sparse → broadcast; ints_v0 is never shuffled
-    absorbed_nodes = ints_v0.select(
-        "doc_id", F.col("i_id").alias("absorbed_i"), "osm_node_id",
-    ).join(imerges, ["doc_id", "absorbed_i"]) \
-     .select("doc_id", F.col("surviving_i").alias("i_id"), "osm_node_id")
-    roster = roster.unionByName(absorbed_nodes)
-    roster = roster.where(
-        F.col("osm_node_id").isNotNull() & (F.col("osm_node_id") > 0))
-
-    sig = features.select(
-        "doc_id", F.col("node_id").alias("osm_node_id"),
-        (F.col("feature") == "traffic_signals").alias("has_signal"),
-        F.when(F.col("feature") == "crossing", F.col("crossing_kind"))
-         .alias("crossing_kind"),
-        "crossing_island",
-    )
-    # signal/crossing nodes are sparse → broadcast lookup
-    roster = roster.join(sig, ["doc_id", "osm_node_id"], "left")
-
-    # merge_crossings kind-max order: Signalized > Marked > Unmarked
-    kind_rank = (F.when(F.col("crossing_kind") == "Signalized", 3)
-                  .when(F.col("crossing_kind") == "Marked", 2)
-                  .when(F.col("crossing_kind") == "Unmarked", 1))
-    agg = roster.groupBy("doc_id", "i_id").agg(
-        F.sort_array(F.collect_set("osm_node_id")).alias("osm_node_ids"),
-        F.max(F.coalesce("has_signal", F.lit(False))).alias("_any_signal"),
-        F.max(kind_rank).alias("_kind_rank"),
-        F.max(F.coalesce("crossing_island", F.lit(False)))
-         .alias("crossing_island"),
-    ).withColumn(
-        "crossing_kind",
-        F.when(F.col("_kind_rank") == 3, "Signalized")
-         .when(F.col("_kind_rank") == 2, "Marked")
-         .when(F.col("_kind_rank") == 1, "Unmarked"),
-    ).drop("_kind_rank")
-    out = out.join(agg, ["doc_id", "i_id"], "left")
-    out = out.withColumn(
-        "osm_node_ids",
-        F.coalesce("osm_node_ids", F.array().cast("array<long>")))
-    out = out.join(signalled_is.withColumn("_way_signal", F.lit(True)),
-                   ["doc_id", "i_id"], "left")
-
-    # split_ways.rs:53-61 + :216-241: synthetic clip point (MapEdge) →
-    # Uncontrolled; traffic signal at any merged node, or tagged on an
-    # incoming way pointing here → Signalled; every other real node →
-    # Signed (the default for ordinary junctions — NOT Uncontrolled)
-    out = out.withColumn(
-        "control",
-        F.when(F.col("kind_hint") == "MapEdge", F.lit("Uncontrolled"))
-         .when(F.coalesce("_any_signal", F.lit(False))
-               | F.coalesce("_way_signal", F.lit(False)), F.lit("Signalled"))
-         .when(F.size("osm_node_ids") == 0, F.lit("Uncontrolled"))
-         .otherwise(F.lit("Signed")),
-    ).drop("_any_signal", "_way_signal")
-    # MapEdge wins over the kernel's classification (the reference skips
-    # movement/kind updates for map edges, intersection.rs:286-290);
-    # junctions with no surviving roads keep their hint
-    out = out.withColumn(
-        "kind",
-        F.when(F.col("kind_hint") == "MapEdge", F.lit("MapEdge"))
-         .otherwise(F.coalesce("kind", "kind_hint")),
-    )
-    return out

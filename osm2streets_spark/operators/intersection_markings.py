@@ -109,7 +109,7 @@ def render_sidewalk_corners(roads_final: DataFrame,
     """S8 sidewalk corners (make_sidewalk_corners,
     render/intersection_markings.rs:43-135): per junction, corner
     polygons where two sidewalk-edged roads meet. One map_groups pass
-    over (doc_id, i_id) junction groups, like run_t6."""
+    over (doc_id, i_id) junction groups, like transforms.finish_seams."""
     ends = road_ends(roads_final, "center_xy", "total_width",
                      "lane_specs_json")
     polys = ints.where(F.col("polygon_xy").isNotNull()).select(

@@ -7,7 +7,10 @@ either way was filtered out or doesn't touch the via node.
 Spark expression: two hash joins — restriction×nodes (via coords →
 i_id), then restriction×roads twice (from / to side), each constrained
 to roads incident to the via intersection. All equi-joins on
-(doc_id, key); the restrictions side is tiny → broadcast.
+(doc_id, key); the restrictions side is tiny → broadcast. That
+resolution against the v0 graph only feeds T2's has_restriction guard;
+the final one runs per junction inside the transforms kernel
+(geometry_update.finish_junction), against the roads T1 and T2 left.
 
 Via-way restrictions (J6, split_ways.rs:163-213) are resolved by
 ``resolve_via_way_restrictions`` below.
@@ -21,31 +24,26 @@ from .geometry_update import road_ends
 from .split_ways import point_key
 
 
-def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
-                         roads: DataFrame,
-                         imerges: DataFrame | None = None) -> DataFrame:
-    """→ (doc_id, i_id, restriction_type, from_road, to_road).
-
-    Works pre- OR post-transform: a road matches every constituent way
-    of its `osm_way_ids` (several after T2 splices); when `imerges` is
-    given (post-T1 merges, columns doc_id / surviving_i / absorbed_i),
-    a via node whose intersection was absorbed resolves to the
-    surviving intersection."""
+def restriction_vias(restrictions: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The first half of J4: each via-node restriction's via point as an
+    intersection id → (doc_id, i_id, restriction_type, from_way,
+    to_way). The transforms kernel takes these rows as they are and
+    matches from/to ways against its final roads; resolve_restrictions
+    matches them against the v0 roads."""
     r = restrictions.where(F.col("via_node").isNotNull())
     # broadcast the (sparse) restriction side: the nodes table is never
     # shuffled for the via lookup
-    r = nodes.select(
+    return nodes.select(
         "doc_id", F.col("node_id").alias("via_node"), *point_key(),
-    ).join(r, ["doc_id", "via_node"]) \
-     .withColumn("i_id", F.xxhash64("doc_id", "qx", "qy"))
-    if imerges is not None:
-        r = r.join(
-            imerges.withColumnRenamed("absorbed_i", "i_id"),
-            ["doc_id", "i_id"], "left",
-        ).withColumn(
-            "i_id", F.coalesce("surviving_i", "i_id")
-        ).drop("surviving_i")
+    ).join(r, ["doc_id", "via_node"]).select(
+        "doc_id", F.xxhash64("doc_id", "qx", "qy").alias("i_id"),
+        "restriction_type", "from_way", "to_way")
 
+
+def resolve_restrictions(vias: DataFrame, roads: DataFrame) -> DataFrame:
+    """`vias` (restriction_vias) matched against the v0 roads incident
+    to each via → (doc_id, i_id, restriction_type, from_road, to_road).
+    A road matches every constituent way of its `osm_way_ids`."""
     incident = road_ends(roads, "osm_way_ids").select(
         "doc_id", "i_id", "road_id",
         F.explode("osm_way_ids").alias("way_id"))
@@ -60,13 +58,12 @@ def resolve_restrictions(restrictions: DataFrame, nodes: DataFrame,
     # the exploded incident frame (corpus-sized) is never shuffled —
     # both joins run map-side over `incident`. (At 100 TB:
     # doc_id-bucketed co-partitioned join instead.)
-    half = frm.join(r, ["doc_id", "i_id", "from_way"])
-    out = (
+    half = frm.join(vias, ["doc_id", "i_id", "from_way"])
+    return (
         to.join(half, ["doc_id", "i_id", "to_way"])
         .select("doc_id", "i_id", "restriction_type", "from_road", "to_road")
         .dropDuplicates()
     )
-    return out
 
 
 def resolve_via_way_restrictions(restrictions: DataFrame,
@@ -111,18 +108,3 @@ def resolve_via_way_restrictions(restrictions: DataFrame,
         .dropDuplicates()
     )
     return out
-
-
-def restrictions_by_intersection(resolved: DataFrame) -> DataFrame:
-    """Aggregate to one JSON payload per intersection for the T6 kernel."""
-    return resolved.groupBy("doc_id", "i_id").agg(
-        F.to_json(
-            F.collect_list(
-                F.struct(
-                    F.col("restriction_type").alias("rt"),
-                    F.col("from_road").alias("frm"),
-                    F.col("to_road").alias("to"),
-                )
-            )
-        ).alias("restrictions_json")
-    )

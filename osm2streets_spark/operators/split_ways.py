@@ -160,19 +160,22 @@ def split_to_roads(flagged: DataFrame) -> DataFrame:
     )
 
 
-def interior_point_road_map(flagged: DataFrame, roads: DataFrame) -> DataFrame:
+def interior_point_road_map(ints: DataFrame, roads: DataFrame,
+                            *cols: str) -> DataFrame:
     """J5 (split_ways.rs:70,88-94): every non-intersection point of each
-    surviving road → road_id, for the feature snap join J3."""
+    surviving road → (doc_id, road_id, *cols of the road, qx, qy), for
+    the feature snap join J3. `ints`: the v0 intersections
+    (intersections_v0), one row per point key."""
     pt_rows = roads.select(
-        "doc_id", "road_id",
+        "doc_id", "road_id", *cols,
         F.explode(F.expr(
             "slice(pts, 2, greatest(size(pts) - 2, 0))"
         )).alias("p"),
     ).select(
-        "doc_id", "road_id", *point_key("p.lon", "p.lat"),
+        "doc_id", "road_id", *cols, *point_key("p.lon", "p.lat"),
     )
-    ints = flagged.where("is_int").select("doc_id", "qx", "qy").distinct()
-    return pt_rows.join(ints, ["doc_id", "qx", "qy"], "left_anti")
+    return pt_rows.join(ints.select("doc_id", "qx", "qy"),
+                        ["doc_id", "qx", "qy"], "left_anti")
 
 
 def build_network_v0(ways: DataFrame, nodes: DataFrame):

@@ -366,7 +366,7 @@ def queries() -> Q:
     def sn_feature_snap(spark, sf_dir):
         v0 = _v0(spark, sf_dir)
         roads = v0["roads"]
-        interior = interior_point_road_map(v0["flagged"], roads)
+        interior = interior_point_road_map(v0["intersections"], roads)
         feats = node_features(v0["nodes"])
         snapped = snap_features_to_roads(feats, interior)
         return snapped.join(
@@ -429,7 +429,7 @@ def queries() -> Q:
         v0 = _v0(spark, sf_dir)
         nodes = v0["nodes"]
         roads = with_projected_geometry(v0["roads"], doc_bounds(nodes))
-        interior = interior_point_road_map(v0["flagged"], roads)
+        interior = interior_point_road_map(v0["intersections"], roads)
         feats = node_features(nodes)
         snapped = snap_features_to_roads(feats, interior)
         return road_stop_lines(snapped, roads)
@@ -564,13 +564,13 @@ def queries() -> Q:
         from ..operators.geometry_update import with_projected_geometry
         nodes, ways, _ = _parsed(spark, sf_dir)
         fways = with_lanes(filter_ways(ways))
-        roads, _, flagged = build_network_v0(fways, nodes)
+        roads, ints, _ = build_network_v0(fways, nodes)
         roads = roads.join(
             fways.select("doc_id", "way_id", "total_width",
                          "placement_shift"),
             ["doc_id", "way_id"])
         roads = with_projected_geometry(roads, doc_bounds(nodes))
-        interior = interior_point_road_map(flagged, roads)
+        interior = interior_point_road_map(ints, roads)
         snapped = snap_features_to_roads(node_features(nodes), interior)
         sl = road_stop_lines(snapped, roads)
         # untrimmed center for the marking position (render runs on the

@@ -26,28 +26,41 @@ from osm2streets_spark.plans.pipeline import (
 # (25→35): every former InMemoryRelation reference to the parse frame is
 # now a checkpoint-boundary scan — same count of references, different
 # node type, one extra actual boundary (the parse materialization).
-# `roads` and `trims` are plain reads of their own checkpoint: 0
-# exchanges and 1 boundary scan, measured 2026-10 (were (4, 2)).
-# Re-measured 2026-10 after T6 pass 1 left the Spark plan (the
-# transforms kernel computes the initial trims): all four stages are
-# unchanged, because pass 1 ran upstream of the transforms checkpoint,
-# which truncates the lineage these plans see. The dropped jobs and
-# exchanges show in perfbench's traced build counts instead.
+# Re-measured 2026-10 after the transforms kernel took over T6 pass 2,
+# the restriction re-resolve and the intersection finalize: every stage
+# is a filter of the transforms checkpoint plus the frozen-seam pass
+# (transforms.finish_seams), which reads no rows unless a doc exceeds
+# the split threshold. features 52→3 and intersections 52→1 exchanges
+# (the finalize joins and the live-junction semi-join are gone);
+# roads 0→2 and trims 0→1 exchanges, and one more checkpoint scan each
+# (1→2): the seam junction pass and the seam road pass, each one
+# map_groups shuffle, both reading zero rows here.
 _CEILINGS = {
-    "features": (52, 35),
-    "roads": (0, 1),
-    "trims": (0, 1),
-    "intersections": (52, 34),
+    "features": (3, 4),
+    "roads": (2, 2),
+    "trims": (1, 2),
+    "intersections": (1, 2),
 }
 
 
 # Max Exchange nodes in the executed plan of each frame the build
 # checkpoints, in call order: the parse slices (nodes, ways, relations),
-# roads, the transforms output, the T6 trims and the final roads.
-# The stage ceilings above start at these checkpoints, so an exchange
-# added upstream of one (parse, graph, the transforms input) shows only
-# here. Measured 2026-10 at sf0.001, the same over two builds.
-_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 44, 12, 2]
+# roads and the transforms output. The stage ceilings above start at
+# these checkpoints, so an exchange added upstream of one (parse, graph,
+# the transforms input) shows only here. Measured 2026-10 at sf0.001,
+# the same over two builds. The transforms output went 44→35 while
+# taking in the junction, restriction and signal_target rows: the
+# has_restriction resolve and the way-signal lookup now read roads
+# through its checkpoint instead of embedding the persisted graph
+# subtree; the T6 trims (12) and final roads (2) checkpoints are gone.
+_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 35]
+
+# Max Spark jobs of one build sunk to the noop format, counted through
+# a job group. Measured 2026-10 at sf0.001 over 9 builds: 46-48 (AQE
+# submits a few small stages as separate jobs or not, build to build;
+# 78-80 before the transforms kernel finished junctions itself). The
+# ceiling is the maximum seen plus one job of that spread.
+_JOB_CEILING = 49
 
 
 def _executed_plan(df) -> str:
@@ -58,8 +71,10 @@ def _executed_plan(df) -> str:
 def traced_build(spark, fixture_dir):
     """One build with DataFrame.localCheckpoint wrapped (as perfbench's
     SegmentTracer does) to record the Exchange count of every
-    checkpointed frame's executed plan. Reading the plan first costs
-    nothing extra: the checkpoint executes that same QueryExecution."""
+    checkpointed frame's executed plan, then its features sunk to the
+    noop format, all in one job group. Reading the plan first costs
+    nothing extra: the checkpoint executes that same QueryExecution.
+    → (net, checkpoint exchange counts, job count)."""
     spark.catalog.clearCache()
     # PySpark 4 instantiates a subclass of pyspark.sql.DataFrame
     df_class = type(spark.range(0))
@@ -70,18 +85,24 @@ def traced_build(spark, fixture_dir):
         exchanges.append(_executed_plan(df).count("Exchange"))
         return orig(df, *a, **kw)
 
+    sc = spark.sparkContext
+    group = "test_plan_shape.build"
     df_class.localCheckpoint = local_checkpoint
+    sc.setJobGroup(group, "one flagship build")
     try:
         net = build_street_network(spark,
                                    load_documents(spark, fixture_dir))
+        net["features"].write.format("noop").mode("overwrite").save()
     finally:
         df_class.localCheckpoint = orig
-    return net, exchanges
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return net, exchanges, jobs
 
 
 @pytest.mark.parametrize("stage", list(_CEILINGS))
 def test_flagship_plan_shape(traced_build, stage):
-    net, _ = traced_build
+    net, _, _ = traced_build
     plan = _executed_plan(net[stage])
     max_exchanges, max_rdd_scans = _CEILINGS[stage]
     assert "CartesianProduct" not in plan, f"{stage}: cartesian product"
@@ -97,7 +118,7 @@ def test_flagship_plan_shape(traced_build, stage):
 
 
 def test_checkpoint_exchanges(traced_build):
-    _, exchanges = traced_build
+    _, exchanges, _ = traced_build
     assert len(exchanges) == len(_CHECKPOINT_CEILINGS), (
         f"{len(exchanges)} checkpoints, expected "
         f"{len(_CHECKPOINT_CEILINGS)}: {exchanges}")
@@ -107,6 +128,13 @@ def test_checkpoint_exchanges(traced_build):
         f"checkpoint Exchange counts {exchanges} exceed the ceilings "
         f"{_CHECKPOINT_CEILINGS} at (index, count, ceiling) {over} — a "
         f"refactor added shuffles upstream of a checkpoint")
+
+
+def test_build_job_count(traced_build):
+    _, _, jobs = traced_build
+    assert jobs <= _JOB_CEILING, (
+        f"one build ran {jobs} Spark jobs > ceiling {_JOB_CEILING} — a "
+        f"refactor added actions, checkpoints or shuffle stages")
 
 
 def test_registry_first50_composition():

@@ -110,3 +110,57 @@ def test_dense_doc_transform_split(spark):
     # path skips T4 entirely and keeps all 300 (documented semantics)
     assert len(got_whole) == 1
     assert got_split == set(range(300))
+
+
+def test_split_path_finishes_like_the_twin(spark, fixture_dir):
+    """The quadkey-split path gives the dense_cell docs the final roads
+    and intersections of the sequential twin run with the same cfg:
+    each road's trimmed_length and center_xy, each intersection's kind,
+    control, movement count, osm_node_ids and polygon_xy. The split
+    runs the per-cell kernels, and the starburst hub, whose spokes
+    span cells, is a frozen seam that finish_seams completes.
+    s_split_transforms checks only five road columns."""
+    from dataclasses import replace
+
+    import pyarrow.parquet as pq
+
+    from osm2streets_spark.config import DEFAULT_CONFIG
+    from osm2streets_spark.plans.sequential import convert_document
+    from osm2streets_spark.sources.fixtures import (
+        SPLIT_GT_THRESHOLD, SPLIT_GT_ZOOM,
+    )
+
+    cfg = replace(DEFAULT_CONFIG,
+                  transform_split_threshold=SPLIT_GT_THRESHOLD,
+                  transform_split_zoom=SPLIT_GT_ZOOM)
+    dense = F.col("doc_id").startswith("dense_cell")
+    net = build_street_network(
+        spark, load_documents(spark, fixture_dir).where(dense), cfg)
+    # more than one kernel group per doc: the split fired
+    assert net["debug_steps"].where("name = 'original'").count() > 1
+
+    def n_moves(movements_json):
+        return len(json.loads(movements_json)) if movements_json else 0
+
+    got_roads = {(r.doc_id, r.road_id): (r.trimmed_length,
+                                         list(r.center_xy))
+                 for r in net["roads"].collect()}
+    got_ints = {(r.doc_id, r.i_id): (r.kind, r.control,
+                                     n_moves(r.movements_json),
+                                     list(r.osm_node_ids),
+                                     list(r.polygon_xy))
+                for r in net["intersections"].collect()}
+    want_roads, want_ints = {}, {}
+    for d in pq.read_table(f"{fixture_dir}/documents.parquet",
+                           columns=["doc_id", "spans"]).to_pylist():
+        if not d["doc_id"].startswith("dense_cell"):
+            continue
+        roads, ints, *_ = convert_document(d["doc_id"], d["spans"], cfg)
+        want_roads.update({(d["doc_id"], r["road_id"]): (
+            r["trimmed_length"], list(r["center_xy"])) for r in roads})
+        want_ints.update({(d["doc_id"], i["i_id"]): (
+            i["kind"], i["control"], i["n_movements"], i["osm_node_ids"],
+            i["polygon_xy"]) for i in ints})
+    assert want_roads and want_ints
+    assert got_roads == want_roads
+    assert got_ints == want_ints

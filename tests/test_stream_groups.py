@@ -70,7 +70,7 @@ def test_map_groups_hands_fn_complete_groups(spark):
 def test_tiny_arrow_batches_identical_pipeline_output(spark, fixture_dir):
     """The flagship network must be byte-identical when Arrow batches
     are forced down to 64 records (maximum batch-boundary group
-    splitting in run_t6 / run_transforms)."""
+    splitting in run_transforms / finish_seams)."""
     from pyspark.sql import functions as F
 
     from osm2streets_spark.plans.pipeline import (

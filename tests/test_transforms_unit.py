@@ -167,3 +167,57 @@ def test_split_gt_actually_splits(fixture_dir):
               select * from a))
     """).fetchone()[0]
     assert same == 0, "sparse docs must be unaffected by the threshold"
+
+
+def _junction(i_id, node_id):
+    return {"doc_id": "d", "_tcell": 0, "row_kind": "junction",
+            "i_id": i_id, "qx": i_id, "qy": 0, "n_uses": 2,
+            "osm_node_id": node_id, "lon": 0.0, "lat": 0.0,
+            "kind_hint": "Unknown", "has_signal": None,
+            "crossing_kind": None, "crossing_island": None}
+
+
+def test_kernel_resolves_restrictions_on_the_final_roads():
+    """A ban (from way 1000, via junction 2, to way 2000) whose via
+    junction T1 absorbs (the internal road 5 merges 2 into 1) and whose
+    from-road T2 splices (roads 100 + 101 at the degree-2 junction 11
+    become road 100, ways [1000, 1000]). Against the v0 graph the ban
+    resolves to nothing: way 1000 never touches junction 2. Against the
+    final roads it is the west → north turn at junction 1, so the
+    survivor's movements must omit 100 → 102, and its roster holds both
+    nodes."""
+    roads = [
+        mk_road(100, 10, 11, [-200, 0, -100, 0], way_id=1000,
+                osm_way_ids=[1000]),
+        mk_road(101, 11, 1, [-100, 0, 0, 0], way_id=1000,
+                osm_way_ids=[1000]),
+        mk_road(5, 1, 2, [0, 0, 3, 0], way_id=5, osm_way_ids=[5],
+                internal_junction_road=True),
+        mk_road(102, 2, 12, [3, 0, 3, 100], way_id=2000,
+                osm_way_ids=[2000]),
+        mk_road(103, 2, 13, [3, 0, 103, 0], way_id=3000,
+                osm_way_ids=[3000]),
+        mk_road(104, 1, 14, [0, 0, 0, -100], way_id=4000,
+                osm_way_ids=[4000]),
+    ]
+    ban = {"doc_id": "d", "_tcell": 0, "row_kind": "restriction",
+           "i_id": 2, "restriction_type": "Ban", "from_way": 1000,
+           "to_way": 2000}
+
+    def survivor(with_ban):
+        rows = [dict(r, doc_id="d", _tcell=0) for r in roads]
+        rows += [_junction(1, 501), _junction(2, 502)]
+        rows += [dict(ban)] if with_ban else []
+        out = [dict(zip(TRANSFORM_SCHEMA.names, t))
+               for t in _transform_rows(rows, False, False)]
+        kept = {o["road_id"] for o in out if o["row_kind"] == "road"}
+        assert kept == {100, 102, 103, 104}
+        (i,) = [o for o in out if o["row_kind"] == "intersection"
+                and o["i_id"] == 1]
+        assert i["osm_node_ids"] == [501, 502]
+        return {tuple(m) for m in json.loads(i["movements_json"])}
+
+    assert (100, 102) in survivor(False)
+    moves = survivor(True)
+    assert (100, 102) not in moves
+    assert (100, 103) in moves
