@@ -19,7 +19,7 @@ as osm2streets finishes an area in one in-memory pass: T6 pass 2, the
 turn restrictions resolved against the final roads, the intersection
 row (geometry_update.finish_junction) and each road's center line. The
 frozen seam junctions of a split doc are finished per junction by
-finish_seams.
+finish_seams, and their roads by seam_roads.
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
-from ..config import DEFAULT_CONFIG
 from ..geom.core import M_PER_DEG, simplify_rdp, polyline_length
 from ..geom.intersection_kernel import compute_trims, road_end, sort_roads_cw
 from .geometry_update import (
@@ -587,10 +586,9 @@ _ROAD_FIELDS = [
 ]
 
 # output rows by row_kind, nulls elsewhere: 'road' (finished: pass-2
-# trims and center line), 'intersection', 'trim' (one road end),
-# 'imerge' (src_i = survivor, dst_i = absorbed) and 'step' (road_id =
-# step index, name, src_i = n_roads, dst_i = n_intersections, per pass
-# per group); for frozen seams only, 'seam_end' (a road with a frozen
+# trims and center line), 'intersection', 'trim' (one road end) and
+# 'step' (road_id = step index, name, src_i = n_roads, dst_i =
+# n_intersections, per pass per group); for frozen seams only, 'seam_end' (a road with a frozen
 # end: its row, its unfrozen-end trims, i_id / is_src_end of the frozen
 # end) and the seam junction's input rows, passed through
 _OUT_EXTRA = [
@@ -682,8 +680,7 @@ def _finish_cell(doc_id: str, roads: list[dict], imerges: dict,
 
 def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
                     with_remove_disconnected: bool,
-                    driving_side: str = DEFAULT_CONFIG.driving_side
-                    ) -> list[tuple]:
+                    driving_side: str) -> list[tuple]:
     """One (doc_id, _tcell) group's transform fixpoint, then its
     finish (_finish_cell), over plain dict rows → TRANSFORM_SCHEMA
     tuples. Road rows carry row_kind 'road' (or none); the junction,
@@ -727,8 +724,6 @@ def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
                                       with_remove_disconnected, steps)
     out = _finish_cell(doc_id, roads, imerges, extras, frozen,
                        driving_side)
-    out += [{"row_kind": "imerge", "src_i": surv, "dst_i": absd}
-            for absd, surv in sorted(imerges.items())]
     out += [{"row_kind": "step", "road_id": k, "name": name,
              "src_i": n_roads, "dst_i": n_is}
             for k, (name, n_roads, n_is) in enumerate(steps)]
@@ -771,15 +766,13 @@ def _nonnull_longs(df: DataFrame) -> DataFrame:
         for f in df.schema.fields))
 
 
-def run_transforms(roads: DataFrame,
+def run_transforms(roads: DataFrame, extras: DataFrame,
+                   driving_side: str,
                    with_sidepath_zip: bool = False,
                    with_remove_disconnected: bool = True,
                    split_threshold: int = 4000,
                    split_zoom: int = 12,
-                   n: int | None = None,
-                   extras: DataFrame | None = None,
-                   driving_side: str = DEFAULT_CONFIG.driving_side
-                   ) -> DataFrame:
+                   n: int | None = None) -> DataFrame:
     """Per-doc T4[+T3]+T1+T2+T1, then the finish of every junction
     (_finish_cell). Input needs the columns in _ROAD_FIELDS (per-end
     metadata columns optional — filled with nulls); `extras` holds the
@@ -802,12 +795,10 @@ def run_transforms(roads: DataFrame,
     src, cells = _prep_transform_cells(roads, split_threshold, split_zoom)
     src = src.select("doc_id", "_tcell", *(c for c, _ in _ROAD_FIELDS),
                      F.lit("road").alias("row_kind"))
-    if extras is not None:
-        extras = extras.withColumn("_tcell", F.lit(0)) \
-            if cells is None else extras.join(
-                cells.select("doc_id", "i_id", "_tcell"),
-                ["doc_id", "i_id"])
-        src = src.unionByName(extras, allowMissingColumns=True)
+    # (a junction no road reaches joins no cell: it has nothing to finish)
+    src = src.unionByName(
+        extras.join(cells.select("doc_id", "i_id", "_tcell"),
+                    ["doc_id", "i_id"]), allowMissingColumns=True)
     return map_groups(
         _nonnull_longs(src), ["doc_id", "_tcell"],
         lambda rows: _transform_rows(rows, with_sidepath_zip,
@@ -816,24 +807,26 @@ def run_transforms(roads: DataFrame,
         TRANSFORM_SCHEMA, n)
 
 
-def finish_seams(tout: DataFrame, driving_side: str) -> tuple:
+def finish_seams(tout: DataFrame, driving_side: str) -> DataFrame:
     """The frozen seam junctions of split docs, finished like every
-    other junction, and the roads with a frozen end → (the seams'
-    'intersection' and 'trim' rows, the finished 'road' rows), both in
-    `tout`'s schema. One map_groups pass per (doc_id, i_id) seam
-    junction (bounded groups, never a whole doc), then one per
-    (doc_id, road_id) that rebuilds each road with a frozen end from
-    its seam trims. Both read nothing unless a doc exceeded the split
+    other junction → their 'intersection' and 'trim' rows in `tout`'s
+    schema, the trims carrying their road for seam_roads. One
+    map_groups pass per (doc_id, i_id) seam junction: bounded groups,
+    never a whole doc. Reads nothing unless a doc exceeded the split
     threshold."""
-    kind = F.col("row_kind")
-    seams = map_groups(
-        _nonnull_longs(tout.where(kind.isin(
+    return map_groups(
+        _nonnull_longs(tout.where(F.col("row_kind").isin(
             "seam_end", "junction", "restriction", "signal_target"))),
         ["doc_id", "i_id"], lambda rows: _seam_rows(rows, driving_side),
         TRANSFORM_SCHEMA)
-    roads = map_groups(seams.where(kind == "trim"), ["doc_id", "road_id"],
-                       _seam_road_rows, TRANSFORM_SCHEMA)
-    return seams, roads
+
+
+def seam_roads(seams: DataFrame) -> DataFrame:
+    """The roads with a frozen end, each rebuilt from its seam trims
+    (finish_seams) in one map_groups pass per (doc_id, road_id)."""
+    return map_groups(seams.where(F.col("row_kind") == "trim"),
+                      ["doc_id", "road_id"], _seam_road_rows,
+                      TRANSFORM_SCHEMA)
 
 
 def _prep_transform_cells(roads: DataFrame, split_threshold: int,
@@ -842,7 +835,7 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
     metadata columns, assign dense docs their quadkey transform cell
     (_tcell; 0 = unsplit sentinel) and flag frozen seam
     intersections. → (roads, per-junction (doc_id, i_id, _tcell) of its
-    smallest cell, None when nothing splits)."""
+    smallest cell)."""
     src = roads
     if "osm_way_ids" not in src.columns:
         src = src.withColumn("osm_way_ids", F.array("way_id"))
@@ -861,6 +854,7 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
         if name not in src.columns:
             src = src.withColumn(name, default)
 
+    tcell = F.lit(0)
     if split_threshold:
         from .tiles import tile_xy
 
@@ -876,21 +870,18 @@ def _prep_transform_cells(roads: DataFrame, split_threshold: int,
         # +1 keeps split cells strictly positive: cell 0 is reserved as
         # the unsplit sentinel, so tile (0,0) at clamped extremes can
         # never be mistaken for "unsplit" by the kernel's T4 guard
-        src = src.withColumn(
-            "_tcell",
-            F.when(F.col("_nd") > split_threshold,
-                   (tx.cast("long") * F.lit(1 << 22) + ty.cast("long")
-                    + F.lit(1)))
-             .otherwise(F.lit(0))).drop("_nd")
-        # frozen seams: intersections whose incident roads span cells
-        cells = road_ends(src, "_tcell").groupBy("doc_id", "i_id").agg(
-            F.min("_tcell").alias("_tcell"),
-            F.count_distinct("_tcell").alias("_nc"))
-        frozen = cells.where(F.col("_nc") > 1)
-        for side, col in (("src", "src_i"), ("dst", "dst_i")):
-            src = src.drop(f"{side}_frozen").join(
-                frozen.select("doc_id", F.col("i_id").alias(col),
-                              F.lit(True).alias(f"{side}_frozen")),
-                ["doc_id", col], "left")
-        return src, cells
-    return src.withColumn("_tcell", F.lit(0)), None
+        tcell = F.when(F.col("_nd") > split_threshold,
+                       tx.cast("long") * F.lit(1 << 22) + ty.cast("long")
+                       + F.lit(1)).otherwise(F.lit(0))
+    src = src.withColumn("_tcell", tcell).drop("_nd")
+    # frozen seams: intersections whose incident roads span cells
+    cells = road_ends(src, "_tcell").groupBy("doc_id", "i_id").agg(
+        F.min("_tcell").alias("_tcell"),
+        F.count_distinct("_tcell").alias("_nc"))
+    frozen = cells.where(F.col("_nc") > 1)
+    for side, col in (("src", "src_i"), ("dst", "dst_i")):
+        src = src.drop(f"{side}_frozen").join(
+            frozen.select("doc_id", F.col("i_id").alias(col),
+                          F.lit(True).alias(f"{side}_frozen")),
+            ["doc_id", col], "left")
+    return src, cells

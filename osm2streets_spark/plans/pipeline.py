@@ -29,6 +29,7 @@ from ..operators.restrictions import resolve_restrictions, restriction_vias
 from ..operators.geometry_update import with_projected_geometry
 from ..operators.transforms import (
     INTERSECTION_COLS, ROAD_COLS, TRIM_COLS, finish_seams, run_transforms,
+    seam_roads,
 )
 from ..operators.render import render_roads, render_intersections
 from ..operators.tiles import with_tile, quadkey
@@ -111,7 +112,8 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     output_documents (span passthrough), trims (one row per road end:
     its junction, trim and clockwise position) and debug_steps. Roads,
     intersections, trims and debug_steps are filters of the one
-    transforms checkpoint, plus the frozen seams finish_seams completes.
+    transforms checkpoint, plus the frozen seams finish_seams and
+    seam_roads complete.
 
     debug_steps holds the transform kernel's row_kind='step' rows, the
     stepwise-debugging snapshots (transform/mod.rs:94-109) recorded in
@@ -280,18 +282,23 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     # (trim-annihilated roads, the trim_roads_for_merging memo), and
     # after the transforms finishes every junction it holds whole: T6
     # pass 2, restrictions, intersection rows and center lines
-    tout = run_transforms(roads, cfg.zip_sidepaths,
-                          cfg.remove_disconnected,
+    tout = run_transforms(roads, extras, cfg.driving_side,
+                          cfg.zip_sidepaths, cfg.remove_disconnected,
                           cfg.transform_split_threshold,
-                          cfg.transform_split_zoom, n, extras,
-                          cfg.driving_side) \
+                          cfg.transform_split_zoom, n) \
         .localCheckpoint(eager=False)
     # the seam junctions of docs over the split threshold (none
-    # otherwise) finish in their own per-junction pass
-    seams, seam_roads = finish_seams(tout, cfg.driving_side)
+    # otherwise) finish in their own per-junction pass, then the roads
+    # with a frozen end take their seam trims. The seam pass feeds the
+    # intersections, the trims and the seam roads, so its checkpoint
+    # runs its Python once. The two checkpoints also bound perfbench's
+    # segments: t6_pass2 runs the kernel (the seam shuffle computes its
+    # stage), apply_trims the seam roads, render the rest
+    seams = finish_seams(tout, cfg.driving_side).localCheckpoint(eager=False)
+    frozen_roads = seam_roads(seams).localCheckpoint(eager=False)
     done = tout.unionByName(seams)
     kind = F.col("row_kind")
-    roads_final = tout.where(kind == "road").unionByName(seam_roads) \
+    roads_final = tout.where(kind == "road").unionByName(frozen_roads) \
         .select(ROAD_COLS)
     ints_final = done.where(kind == "intersection").select(INTERSECTION_COLS)
 

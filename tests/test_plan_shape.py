@@ -28,24 +28,25 @@ from osm2streets_spark.plans.pipeline import (
 # node type, one extra actual boundary (the parse materialization).
 # Re-measured 2026-10 after the transforms kernel took over T6 pass 2,
 # the restriction re-resolve and the intersection finalize: every stage
-# is a filter of the transforms checkpoint plus the frozen-seam pass
-# (transforms.finish_seams), which reads no rows unless a doc exceeds
-# the split threshold. features 52→3 and intersections 52→1 exchanges
-# (the finalize joins and the live-junction semi-join are gone);
-# roads 0→2 and trims 0→1 exchanges, and one more checkpoint scan each
-# (1→2): the seam junction pass and the seam road pass, each one
-# map_groups shuffle, both reading zero rows here.
+# is a filter of the transforms checkpoint plus a frozen-seam
+# checkpoint (transforms.finish_seams, seam_roads), which reads no rows
+# unless a doc exceeds the split threshold. features 52→0 and
+# intersections 52→0 exchanges (the finalize joins and the
+# live-junction semi-join are gone; the two seam shuffles sit upstream
+# of their checkpoints); roads and trims stay at 0 exchanges and gain
+# one checkpoint scan each (1→2), the seam checkpoint they read.
 _CEILINGS = {
-    "features": (3, 4),
-    "roads": (2, 2),
-    "trims": (1, 2),
-    "intersections": (1, 2),
+    "features": (0, 4),
+    "roads": (0, 2),
+    "trims": (0, 2),
+    "intersections": (0, 2),
 }
 
 
 # Max Exchange nodes in the executed plan of each frame the build
 # checkpoints, in call order: the parse slices (nodes, ways, relations),
-# roads and the transforms output. The stage ceilings above start at
+# roads, the transforms output, the seam junctions and the seam roads
+# (one map_groups shuffle each). The stage ceilings above start at
 # these checkpoints, so an exchange added upstream of one (parse, graph,
 # the transforms input) shows only here. Measured 2026-10 at sf0.001,
 # the same over two builds. The transforms output went 44→35 while
@@ -53,7 +54,7 @@ _CEILINGS = {
 # has_restriction resolve and the way-signal lookup now read roads
 # through its checkpoint instead of embedding the persisted graph
 # subtree; the T6 trims (12) and final roads (2) checkpoints are gone.
-_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 35]
+_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 35, 1, 1]
 
 # Max Spark jobs of one build sunk to the noop format, counted through
 # a job group. Measured 2026-10 at sf0.001 over 9 builds: 46-48 (AQE

@@ -65,6 +65,7 @@ def test_dense_doc_transform_split(spark):
     groups — bounded per-task payload — while a sparse doc keeps
     exactly the single-group semantics (bit-identical output)."""
     import numpy as np
+    from osm2streets_spark.config import DEFAULT_CONFIG
     from osm2streets_spark.operators.transforms import run_transforms
 
     rng = np.random.RandomState(7)
@@ -87,18 +88,25 @@ def test_dense_doc_transform_split(spark):
             "osm_way_ids": [k], "lon0": 0.0, "lat0": 0.0,
         })
     roads = spark.createDataFrame(rows)
+    # roads only: no junction, restriction or signal_target rows
+    extras = spark.createDataFrame([], "doc_id string, i_id long, "
+                                       "row_kind string")
+    side = DEFAULT_CONFIG.driving_side
 
-    split = run_transforms(roads, split_threshold=100, split_zoom=12)
-    whole = run_transforms(roads, split_threshold=0)
+    split = run_transforms(roads, extras, side, split_threshold=100,
+                           split_zoom=12)
+    whole = run_transforms(roads, extras, side, split_threshold=0)
     got_split = {r.road_id for r in
                  split.where("row_kind = 'road'").collect()}
     got_whole = {r.road_id for r in
                  whole.where("row_kind = 'road'").collect()}
     # T4 keeps only the largest component in the unsplit path; the
     # split path skips T4 (documented) — compare without T4 instead
-    split_noT4 = run_transforms(roads, with_remove_disconnected=False,
+    split_noT4 = run_transforms(roads, extras, side,
+                                with_remove_disconnected=False,
                                 split_threshold=100, split_zoom=12)
-    whole_noT4 = run_transforms(roads, with_remove_disconnected=False,
+    whole_noT4 = run_transforms(roads, extras, side,
+                                with_remove_disconnected=False,
                                 split_threshold=0)
     ids_a = {r.road_id for r in
              split_noT4.where("row_kind = 'road'").collect()}

@@ -2,6 +2,7 @@
 
 import json
 
+from osm2streets_spark.config import DEFAULT_CONFIG
 from osm2streets_spark.operators.transforms import (
     TRANSFORM_SCHEMA, remove_disconnected, collapse_short_roads,
     collapse_degenerate, zip_sidepaths, _transform_rows,
@@ -59,8 +60,8 @@ def test_kernel_finds_trim_annihilated_roads_itself():
     """The transforms kernel computes every junction's initial trims
     itself: given no too_short or trim inputs, an 8 m link between two
     4-way junctions of 9.2 m wide roads is trimmed 4.6 m at each end,
-    so it is collapsed, and its dst junction reported merged into its
-    src."""
+    so it is collapsed, and its dst junction's node joins its src's
+    roster."""
     roads = [
         mk_road(1, 1, 2, [0, 0, 8, 0]),
         mk_road(2, 10, 1, [-100, 0, 0, 0]),
@@ -71,13 +72,15 @@ def test_kernel_finds_trim_annihilated_roads_itself():
         mk_road(7, 2, 15, [8, 0, 8, -100]),
     ]
     rows = [dict(r, doc_id="d", _tcell=0) for r in roads]
+    rows += [_junction(1, 501), _junction(2, 502)]
     out = [dict(zip(TRANSFORM_SCHEMA.names, t))
-           for t in _transform_rows(rows, False, True)]
+           for t in _transform_rows(rows, False, True,
+                                    DEFAULT_CONFIG.driving_side)]
     kept = {o["road_id"]: o for o in out if o["row_kind"] == "road"}
     assert sorted(kept) == [2, 3, 4, 5, 6, 7]
     assert {kept[k]["src_i"] for k in (5, 6, 7)} == {1}
-    assert [(o["src_i"], o["dst_i"]) for o in out
-            if o["row_kind"] == "imerge"] == [(1, 2)]
+    assert [(o["i_id"], o["osm_node_ids"]) for o in out
+            if o["row_kind"] == "intersection"] == [(1, [501, 502])]
 
 
 def test_collapse_degenerate_splices():
@@ -209,7 +212,8 @@ def test_kernel_resolves_restrictions_on_the_final_roads():
         rows += [_junction(1, 501), _junction(2, 502)]
         rows += [dict(ban)] if with_ban else []
         out = [dict(zip(TRANSFORM_SCHEMA.names, t))
-               for t in _transform_rows(rows, False, False)]
+               for t in _transform_rows(rows, False, False,
+                                        DEFAULT_CONFIG.driving_side)]
         kept = {o["road_id"] for o in out if o["row_kind"] == "road"}
         assert kept == {100, 102, 103, 104}
         (i,) = [o for o in out if o["row_kind"] == "intersection"
