@@ -588,9 +588,10 @@ _ROAD_FIELDS = [
 # output rows by row_kind, nulls elsewhere: 'road' (finished: pass-2
 # trims and center line), 'intersection', 'trim' (one road end) and
 # 'step' (road_id = step index, name, src_i = n_roads, dst_i =
-# n_intersections, per pass per group); for frozen seams only, 'seam_end' (a road with a frozen
-# end: its row, its unfrozen-end trims, i_id / is_src_end of the frozen
-# end) and the seam junction's input rows, passed through
+# n_intersections, per pass per group); for frozen seams only,
+# 'seam_end' (a road with a frozen end: its row, its unfrozen-end trims,
+# i_id / is_src_end of the frozen end) and the seam junction's input
+# rows, passed through
 _OUT_EXTRA = [
     ("row_kind", StringType()),
     ("pretrim_src", DoubleType()), ("pretrim_dst", DoubleType()),
