@@ -14,12 +14,15 @@ the whole corpus once per round; the per-doc kernel does the fixpoint
 in-memory in a single shuffle. The kernel is pure Python below
 (unit-testable without Spark).
 
-The same group then finishes every junction whose roads all sit in it,
-as osm2streets finishes an area in one in-memory pass: T6 pass 2, the
-turn restrictions resolved against the final roads, the intersection
-row (geometry_update.finish_junction) and each road's center line. The
-frozen seam junctions of a split doc are finished per junction by
-finish_seams, and their roads by seam_roads.
+The group decides its own T1/T2 guards, as osm2streets checks each
+collapse against the network it holds: the restricted roads from its
+restriction rows (_mark_restricted) and the frozen seam junctions of a
+split doc from its seam rows. It then finishes every junction whose
+roads all sit in it, as osm2streets finishes an area in one in-memory
+pass: T6 pass 2, the turn restrictions resolved against the final
+roads, the intersection row (geometry_update.finish_junction) and each
+road's center line. The frozen seam junctions are finished per junction
+by finish_seams, and their roads by seam_roads.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ from ..geom.intersection_kernel import compute_trims, road_end, sort_roads_cw
 from .geometry_update import (
     end_row, finish_junction, map_groups, rebuild_center, road_ends,
 )
+from .tiles import tile_xy
 
 
 def _recompute_trims_at(roads: list[dict], i_ids: set) -> None:
@@ -133,7 +137,7 @@ def remove_disconnected(roads: list[dict]) -> list[dict]:
     return out
 
 
-def collapse_short_roads(roads: list[dict],
+def collapse_short_roads(roads: list[dict], frozen: set,
                          imerges: dict[int, int] | None = None) -> list[dict]:
     """T1 (operations/collapse_short_road.rs:12-161): for each candidate
     (tagged junction=intersection, or trim-annihilated), merge its dst
@@ -141,7 +145,9 @@ def collapse_short_roads(roads: list[dict],
 
     Faithful details added for golden parity:
       * a candidate touching a MapEdge is skipped
-        (collapse_short_road.rs:24-28)
+        (collapse_short_road.rs:24-28), and so is one touching a
+        `frozen` seam junction of a split doc (its other-cell roads
+        are invisible here)
       * at each collapse, every surviving road incident to either
         merged intersection memoizes its CURRENT trim at that end
         (`trim_roads_for_merging`, :44-58) — consumed by the T6 kernel
@@ -169,10 +175,8 @@ def collapse_short_roads(roads: list[dict],
         incident.setdefault(r["dst_i"], []).append(r)
 
     cand_ids = set()
-    edge_is = {r["src_i"] for r in roads if r.get("src_is_edge")} | \
-              {r["dst_i"] for r in roads if r.get("dst_is_edge")} | \
-              {r["src_i"] for r in roads if r.get("src_frozen")} | \
-              {r["dst_i"] for r in roads if r.get("dst_frozen")}
+    edge_is = frozen | {r["src_i"] for r in roads if r.get("src_is_edge")} \
+        | {r["dst_i"] for r in roads if r.get("dst_is_edge")}
     for r in candidates:
         src, dst = resolve(r["src_i"]), resolve(r["dst_i"])
         if src in edge_is or dst in edge_is:
@@ -215,23 +219,23 @@ def collapse_short_roads(roads: list[dict],
     return out
 
 
-def collapse_degenerate(roads: list[dict],
+def collapse_degenerate(roads: list[dict], frozen: set,
                         touched_is: set | None = None) -> list[dict]:
     """T2 (transform/collapse_intersections.rs:9-87): splice the two
     roads of a 2-road intersection into one when lane specs, name,
     highway type, layer and placement all match, neither road carries a
-    turn restriction, the junction has no pedestrian crossing, and they
-    aren't opposing oneways. Keeps the first road's id; geometry
-    concatenated + RDP ε=1.0."""
+    turn restriction, the junction has no pedestrian crossing and is
+    not a `frozen` seam, and they aren't opposing oneways. Keeps the
+    first road's id; geometry concatenated + RDP ε=1.0."""
     by_id = {r["road_id"]: r for r in roads}
     incident: dict[int, list[int]] = {}
-    crossing_is: set[int] = set()
+    crossing_is = set(frozen)
     for r in roads:
         incident.setdefault(r["src_i"], []).append(r["road_id"])
         incident.setdefault(r["dst_i"], []).append(r["road_id"])
-        if r.get("src_has_crossing") or r.get("src_frozen"):
+        if r.get("src_has_crossing"):
             crossing_is.add(r["src_i"])
-        if r.get("dst_has_crossing") or r.get("dst_frozen"):
+        if r.get("dst_has_crossing"):
             crossing_is.add(r["dst_i"])
 
     for i_id in sorted(incident):
@@ -497,7 +501,7 @@ def zip_sidepaths(roads: list[dict]) -> list[dict]:
     return list(by_id.values())
 
 
-def apply_standard_transforms(roads: list[dict],
+def apply_standard_transforms(roads: list[dict], frozen: set,
                               with_sidepath_zip: bool = False,
                               imerges: dict[int, int] | None = None,
                               with_remove_disconnected: bool = True,
@@ -507,9 +511,9 @@ def apply_standard_transforms(roads: list[dict],
     standard_for_clipped_areas deliberately does NOT remove
     disconnected roads); T4 removal and T3 sidepath zipping are opt-in
     extras (RemoveDisconnectedRoads exists as a separate Transformation;
-    zipping matches osm2streets-py/src/lib.rs:90-99). `imerges`
-    (optional dict) collects absorbed→survivor intersection merges
-    across both T1 passes.
+    zipping matches osm2streets-py/src/lib.rs:90-99). No T1 or T2
+    touches a `frozen` junction. `imerges` (optional dict) collects
+    absorbed→survivor intersection merges across both T1 passes.
 
     `steps` (optional list) is the stepwise-debugging sink
     (apply_transformations_stepwise_debugging, transform/mod.rs:94-109:
@@ -529,17 +533,17 @@ def apply_standard_transforms(roads: list[dict],
     if with_sidepath_zip:
         roads = zip_sidepaths(roads)
         _snap("zip parallel sidepaths", roads)
-    roads = collapse_short_roads(roads, imerges)
+    roads = collapse_short_roads(roads, frozen, imerges)
     _snap("collapse short roads", roads)
     touched: set = set()
-    roads = collapse_degenerate(roads, touched_is=touched)
+    roads = collapse_degenerate(roads, frozen, touched_is=touched)
     if touched:
         # the reference recomputes junction geometry eagerly after each
         # splice; newly trim-annihilated roads become candidates for
         # the SECOND CollapseShortRoads pass
         _recompute_trims_at(roads, touched)
     _snap("collapse degenerate intersections", roads)
-    roads = collapse_short_roads(roads, imerges)
+    roads = collapse_short_roads(roads, frozen, imerges)
     _snap("collapse short roads", roads)
     if imerges is not None:
         # close chains across the two passes (dst of pass 1 may itself
@@ -576,13 +580,8 @@ _ROAD_FIELDS = [
     ("src_is_edge", BooleanType()), ("dst_is_edge", BooleanType()),
     ("src_has_crossing", BooleanType()),
     ("dst_has_crossing", BooleanType()),
-    ("has_restriction", BooleanType()),
     ("placement_shift", DoubleType()),
     ("lane_fingerprint", StringType()),
-    # dense-doc cell split: frozen-seam flags (an intersection whose
-    # incident roads span transform cells must not be collapsed — its
-    # other-cell roads are invisible to this kernel group)
-    ("src_frozen", BooleanType()), ("dst_frozen", BooleanType()),
 ]
 
 # output rows by row_kind, nulls elsewhere: 'road' (finished: pass-2
@@ -591,7 +590,7 @@ _ROAD_FIELDS = [
 # n_intersections, per pass per group); for frozen seams only,
 # 'seam_end' (a road with a frozen end: its row, its unfrozen-end trims,
 # i_id / is_src_end of the frozen end) and the seam junction's input
-# rows, passed through
+# rows other than 'seam', passed through by its smallest cell
 _OUT_EXTRA = [
     ("row_kind", StringType()),
     ("pretrim_src", DoubleType()), ("pretrim_dst", DoubleType()),
@@ -607,7 +606,10 @@ _OUT_EXTRA = [
 
 # input rows besides the roads (i_id: their junction before the
 # transforms): 'junction' (one per v0 intersection and node feature),
-# 'restriction' (restriction_vias) and 'signal_target'
+# 'restriction' (restriction_vias), 'signal_target' and, in each cell
+# of a frozen seam junction, 'seam' (its `_cells` and `seam_ways`, two
+# input-only columns: the cells that hold its roads and the way ids
+# that reach it from all of them)
 _JUNCTION_FIELDS = [
     ("qx", LongType()), ("qy", LongType()), ("n_uses", LongType()),
     ("osm_node_id", LongType()), ("lon", DoubleType()),
@@ -651,8 +653,8 @@ def _finish_cell(doc_id: str, roads: list[dict], imerges: dict,
     """Finish every junction of one transforms group whose roads all
     sit in it (finish_junction), then each road's center line. The
     input rows of a junction T1 absorbed go to its survivor (T1 merges
-    change via ids; round-1 VERDICT #4). A frozen seam junction's input
-    rows, and the ends of its roads, go out for finish_seams."""
+    change via ids; round-1 VERDICT #4). The ends of a frozen seam
+    junction's roads go out for finish_seams."""
     inputs: dict[int, list] = {}
     for x in extras:
         inputs.setdefault(imerges.get(x["i_id"], x["i_id"]), []).append(x)
@@ -660,7 +662,7 @@ def _finish_cell(doc_id: str, roads: list[dict], imerges: dict,
     for r in roads:
         ends.setdefault(r["src_i"], []).append((r, True))
         ends.setdefault(r["dst_i"], []).append((r, False))
-    out = [x for x in extras if x["i_id"] in frozen]
+    out: list[dict] = []
     for i, es in ends.items():
         if i not in frozen:
             out += finish_junction(doc_id, i, es, inputs.get(i, []),
@@ -679,52 +681,83 @@ def _finish_cell(doc_id: str, roads: list[dict], imerges: dict,
     return out
 
 
+def _mark_restricted(roads: list[dict], restrictions: list[dict],
+                     seam_ways: dict[int, list]) -> None:
+    """J4 for T2's guard (collapse_intersections.rs:41-47), before any
+    transform: a road is restricted when a via-node restriction at one
+    of its ends resolves there (split_ways.rs:123-160), i.e. both its
+    from and its to way reach the via, and the road carries one of the
+    two. Every road of an unfrozen via is in this group; the ways that
+    reach a frozen via from every cell are its `seam_ways`."""
+    ways_at: dict[int, set] = {}
+    for r in roads:
+        for i in (r["src_i"], r["dst_i"]):
+            ways_at.setdefault(i, set()).update(r["osm_way_ids"])
+    ways_at.update((i, set(ws)) for i, ws in seam_ways.items())
+    banned: dict[int, set] = {}  # via → the ways its restrictions name
+    for x in restrictions:
+        ways = ways_at.get(x["i_id"], ())
+        if x["from_way"] in ways and x["to_way"] in ways:
+            banned.setdefault(x["i_id"], set()).update(
+                (x["from_way"], x["to_way"]))
+    for r in roads:
+        r["has_restriction"] = any(
+            not banned.get(i, set()).isdisjoint(r["osm_way_ids"])
+            for i in (r["src_i"], r["dst_i"]))
+
+
 def _transform_rows(rows: list[dict], with_sidepath_zip: bool,
                     with_remove_disconnected: bool,
                     driving_side: str) -> list[tuple]:
     """One (doc_id, _tcell) group's transform fixpoint, then its
     finish (_finish_cell), over plain dict rows → TRANSFORM_SCHEMA
-    tuples. Road rows carry row_kind 'road' (or none); the junction,
-    restriction and signal_target rows ride along. Dict rows, not a
-    pandas frame: the per-doc to_dict("records") + per-doc output-frame
+    tuples. Road rows carry row_kind 'road'; the junction, restriction,
+    signal_target and seam rows ride along. Dict rows, not a pandas
+    frame: the per-doc to_dict("records") + per-doc output-frame
     construction was the majority of the whole transforms stage's CPU
     at sf0.1."""
-    doc_id = rows[0]["doc_id"]
-    if rows[0]["_tcell"]:
+    doc_id, cell = rows[0]["doc_id"], rows[0]["_tcell"]
+    if cell:
         # a cell of a split doc must never run T4: components span
         # cells, and a cell with no frozen seam (fully disconnected
         # interior roads) would otherwise prune per-cell. (At scale,
         # component pruning for split docs is a separate doc-level pass
         # over the edge list — cheap relative to geometry.)
         with_remove_disconnected = False
-    extras = [r for r in rows if (r.get("row_kind") or "road") != "road"]
-    rows = [r for r in rows if (r.get("row_kind") or "road") == "road"]
+    kinds: dict[str, list] = {}
+    for r in rows:
+        kinds.setdefault(r["row_kind"], []).append(r)
+    roads, seams = kinds.pop("road", []), kinds.pop("seam", [])
+    extras = [x for xs in kinds.values() for x in xs]
     # Arrow batch row order is nondeterministic; kernels must not depend
     # on it (e.g. T2 keeps the FIRST road's id) — sort by road_id first
-    rows.sort(key=lambda r: r["road_id"])
-    for r in rows:
+    roads.sort(key=lambda r: r["road_id"])
+    for r in roads:
         r["xy"] = list(r["xy"])
-        if r.get("osm_way_ids") is None:
-            r["osm_way_ids"] = [r["way_id"]]
-        else:
-            r["osm_way_ids"] = list(r["osm_way_ids"])
-    # no transform touches a frozen junction, so its id survives them
-    frozen = {r["src_i"] for r in rows if r.get("src_frozen")} \
-        | {r["dst_i"] for r in rows if r.get("dst_frozen")}
+        r["osm_way_ids"] = list(r["osm_way_ids"])
+    # a junction whose roads span cells is frozen: no transform touches
+    # it, so its id survives them. Its input rows reach every one of
+    # its cells and go on to finish_seams from the smallest.
+    frozen = {x["i_id"] for x in seams}
+    passed = {x["i_id"] for x in seams if min(x["_cells"]) == cell}
+    _mark_restricted(roads, kinds.get("restriction", []),
+                     {x["i_id"]: x["seam_ways"] for x in seams})
     # the initial geometry of every junction, before any transform
     # (split_ways.rs:313-322): trim_start/trim_end feed the
     # trim_roads_for_merging memo, too_short the CollapseShortRoads
     # candidates. A frozen seam junction sees only this cell's roads;
     # its trims are never used (no collapse or splice touches it, and
     # finish_seams recomputes them from all its roads).
-    _recompute_trims_at(rows, {i for r in rows for i in (r["src_i"],
-                                                        r["dst_i"])})
+    _recompute_trims_at(roads, {i for r in roads for i in (r["src_i"],
+                                                          r["dst_i"])})
     imerges: dict[int, int] = {}
     steps: list = []
-    roads = apply_standard_transforms(rows, with_sidepath_zip, imerges,
-                                      with_remove_disconnected, steps)
-    out = _finish_cell(doc_id, roads, imerges, extras, frozen,
-                       driving_side)
+    roads = apply_standard_transforms(roads, frozen, with_sidepath_zip,
+                                      imerges, with_remove_disconnected,
+                                      steps)
+    out = [x for x in extras if x["i_id"] in passed]
+    out += _finish_cell(doc_id, roads, imerges, extras, frozen,
+                        driving_side)
     out += [{"row_kind": "step", "road_id": k, "name": name,
              "src_i": n_roads, "dst_i": n_is}
             for k, (name, n_roads, n_is) in enumerate(steps)]
@@ -775,13 +808,12 @@ def run_transforms(roads: DataFrame, extras: DataFrame,
                    split_zoom: int = 12,
                    n: int | None = None) -> DataFrame:
     """Per-doc T4[+T3]+T1+T2+T1, then the finish of every junction
-    (_finish_cell). Input needs the columns in _ROAD_FIELDS (per-end
-    metadata columns optional — filled with nulls); `extras` holds the
-    junction, restriction and signal_target rows (doc_id, i_id,
-    row_kind and the _JUNCTION_FIELDS they use). Output: the row kinds
-    listed at _OUT_EXTRA, including the step rows of the reference's
-    apply_transformations_stepwise_debugging (transform/mod.rs:94-109),
-    "original" first, per (doc, cell) group.
+    (_finish_cell). Input needs the columns in _ROAD_FIELDS; `extras`
+    holds the junction, restriction and signal_target rows (doc_id,
+    i_id, row_kind and the _JUNCTION_FIELDS they use). Output: the row
+    kinds listed at _OUT_EXTRA, including the step rows of the
+    reference's apply_transformations_stepwise_debugging
+    (transform/mod.rs:94-109), "original" first, per (doc, cell) group.
 
     Skew: documents are the unit of parallelism, so a single megacity
     doc would otherwise pin one task. Docs with more than
@@ -790,16 +822,22 @@ def run_transforms(roads: DataFrame, extras: DataFrame,
     intersections whose incident roads span cells are FROZEN — no
     collapse may touch them (their other-cell roads are invisible to
     the group), finish_seams finishes them, and T4 is skipped for split
-    docs (components span cells). Every input row goes to the cell of
-    its junction (the smallest cell among the junction's roads). One
-    map_groups pass over (doc, cell) groups in n partitions."""
+    docs (components span cells). Every input row goes to each cell
+    that holds one of its junction's roads, and each cell of a frozen
+    junction also gets a 'seam' row. One map_groups pass over
+    (doc, cell) groups in n partitions."""
     src, cells = _prep_transform_cells(roads, split_threshold, split_zoom)
     src = src.select("doc_id", "_tcell", *(c for c, _ in _ROAD_FIELDS),
                      F.lit("road").alias("row_kind"))
     # (a junction no road reaches joins no cell: it has nothing to finish)
+    routes = cells.select("doc_id", "i_id", "_cells", "seam_ways",
+                          F.explode("_cells").alias("_tcell"))
+    seams = routes.where(F.size("_cells") > 1) \
+        .withColumn("row_kind", F.lit("seam"))
     src = src.unionByName(
-        extras.join(cells.select("doc_id", "i_id", "_tcell"),
-                    ["doc_id", "i_id"]), allowMissingColumns=True)
+        extras.join(routes.select("doc_id", "i_id", "_tcell"),
+                    ["doc_id", "i_id"]), allowMissingColumns=True) \
+        .unionByName(seams, allowMissingColumns=True)
     return map_groups(
         _nonnull_longs(src), ["doc_id", "_tcell"],
         lambda rows: _transform_rows(rows, with_sidepath_zip,
@@ -832,57 +870,31 @@ def seam_roads(seams: DataFrame) -> DataFrame:
 
 def _prep_transform_cells(roads: DataFrame, split_threshold: int,
                           split_zoom: int) -> tuple:
-    """Input prep for run_transforms: default-fill optional per-end
-    metadata columns, assign dense docs their quadkey transform cell
-    (_tcell; 0 = unsplit sentinel) and flag frozen seam
-    intersections. → (roads, per-junction (doc_id, i_id, _tcell) of its
-    smallest cell)."""
-    src = roads
-    if "osm_way_ids" not in src.columns:
-        src = src.withColumn("osm_way_ids", F.array("way_id"))
-    defaults = {
-        "src_is_edge": F.lit(None).cast("boolean"),
-        "dst_is_edge": F.lit(None).cast("boolean"),
-        "src_has_crossing": F.lit(None).cast("boolean"),
-        "dst_has_crossing": F.lit(None).cast("boolean"),
-        "has_restriction": F.lit(None).cast("boolean"),
-        "placement_shift": F.lit(None).cast("double"),
-        "lane_fingerprint": F.lit(None).cast("string"),
-        "src_frozen": F.lit(None).cast("boolean"),
-        "dst_frozen": F.lit(None).cast("boolean"),
-    }
-    for name, default in defaults.items():
-        if name not in src.columns:
-            src = src.withColumn(name, default)
-
-    tcell = F.lit(0)
-    if split_threshold:
-        from .tiles import tile_xy
-
-        counts = src.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_nd"))
-        src = src.join(counts, "doc_id")  # small agg side — AQE broadcasts
-        # road midpoint → lon/lat → zoom-12 tile cell (dense docs only)
-        n_pts = (F.size("xy") / 2).cast("int")
-        midi = (F.floor(n_pts / 2) * 2 + 1).cast("int")  # 1-based x idx
-        lat = F.col("lat0") + F.element_at("xy", midi + 1) / M_PER_DEG
-        lon = F.col("lon0") + F.element_at("xy", midi) \
-            / (M_PER_DEG * F.cos(F.radians(F.col("lat0"))))
-        tx, ty = tile_xy(lon, lat, split_zoom)
-        # +1 keeps split cells strictly positive: cell 0 is reserved as
-        # the unsplit sentinel, so tile (0,0) at clamped extremes can
-        # never be mistaken for "unsplit" by the kernel's T4 guard
-        tcell = F.when(F.col("_nd") > split_threshold,
-                       tx.cast("long") * F.lit(1 << 22) + ty.cast("long")
-                       + F.lit(1)).otherwise(F.lit(0))
+    """Input prep for run_transforms: assign dense docs their quadkey
+    transform cell (_tcell; 0 = unsplit sentinel). → (roads, one row
+    per junction: doc_id, i_id, `_cells` (the cells that hold its
+    roads; more than one makes it a frozen seam) and `seam_ways` (the
+    distinct way ids that reach it, collected in split docs only))."""
+    counts = roads.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_nd"))
+    src = roads.join(counts, "doc_id")  # small agg side — AQE broadcasts
+    # road midpoint → lon/lat → zoom-12 tile cell (dense docs only)
+    n_pts = (F.size("xy") / 2).cast("int")
+    midi = (F.floor(n_pts / 2) * 2 + 1).cast("int")  # 1-based x idx
+    lat = F.col("lat0") + F.element_at("xy", midi + 1) / M_PER_DEG
+    lon = F.col("lon0") + F.element_at("xy", midi) \
+        / (M_PER_DEG * F.cos(F.radians(F.col("lat0"))))
+    tx, ty = tile_xy(lon, lat, split_zoom)
+    # +1 keeps split cells strictly positive: cell 0 is reserved as
+    # the unsplit sentinel, so tile (0,0) at clamped extremes can
+    # never be mistaken for "unsplit" by the kernel's T4 guard
+    tcell = F.when(F.col("_nd") > split_threshold,
+                   tx.cast("long") * F.lit(1 << 22) + ty.cast("long")
+                   + F.lit(1)).otherwise(F.lit(0))
     src = src.withColumn("_tcell", tcell).drop("_nd")
-    # frozen seams: intersections whose incident roads span cells
-    cells = road_ends(src, "_tcell").groupBy("doc_id", "i_id").agg(
-        F.min("_tcell").alias("_tcell"),
-        F.count_distinct("_tcell").alias("_nc"))
-    frozen = cells.where(F.col("_nc") > 1)
-    for side, col in (("src", "src_i"), ("dst", "dst_i")):
-        src = src.drop(f"{side}_frozen").join(
-            frozen.select("doc_id", F.col("i_id").alias(col),
-                          F.lit(True).alias(f"{side}_frozen")),
-            ["doc_id", col], "left")
+    cells = road_ends(src, "_tcell", "osm_way_ids") \
+        .groupBy("doc_id", "i_id").agg(
+            F.collect_set("_tcell").alias("_cells"),
+            F.array_distinct(F.flatten(F.collect_list(
+                F.when(F.col("_tcell") > 0, F.col("osm_way_ids")))))
+            .alias("seam_ways"))
     return src, cells

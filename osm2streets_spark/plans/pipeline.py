@@ -25,7 +25,7 @@ from ..operators.extract import (
 )
 from ..operators.split_ways import build_network_v0
 from ..operators.lanes_udf import with_lanes
-from ..operators.restrictions import resolve_restrictions, restriction_vias
+from ..operators.restrictions import restriction_vias
 from ..operators.geometry_update import with_projected_geometry
 from ..operators.transforms import (
     INTERSECTION_COLS, ROAD_COLS, TRIM_COLS, finish_seams, run_transforms,
@@ -166,7 +166,8 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
     # per-end metadata for the T6 terminus rule and the transform kernel
     # guards (terminus.rs:16-29 MapEdge extension,
     # collapse_short_road.rs:24-28 MapEdge, collapse_intersections.rs
-    # :12-14 crossing, :41-47 restrictions)
+    # :12-14 crossing; the kernel works out the :41-47 restriction
+    # guard and the frozen seams from its own input rows)
     # MapEdge flags need NO join at all: a clipped synthetic endpoint
     # carries a negative node id (osm_xml.py boundary clip), so the
     # road's own pt_node_ids column answers it. (Same blind spot as the
@@ -197,13 +198,10 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
 
     # everything below reads roads through the checkpoint, which
     # computes the split/lane chain once and keeps its subtree out of
-    # the transforms plan. vias and resolved are tiny, but their subtree
-    # (relation pivot + via join) would otherwise re-execute per
-    # consumer: the kernel's restriction rows and the has_restriction
-    # broadcast
-    vias = restriction_vias(restriction_relations(relations), nodes) \
-        .persist()
-    resolved = resolve_restrictions(vias, roads).persist()
+    # the transforms plan. The via rows feed only the kernel, which
+    # resolves them itself (T2's guard, then against its final roads),
+    # so they need no persist
+    vias = restriction_vias(restriction_relations(relations), nodes)
 
     # Traffic signals tagged on incoming ways, not at the junction node
     # (split_ways.rs:216-241): a signal node interior to a road, with an
@@ -244,11 +242,6 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
         .unionByName(signal_targets.withColumn(
             "row_kind", F.lit("signal_target")), allowMissingColumns=True)
 
-    restricted_roads = resolved.select(
-        "doc_id", F.explode(F.array("from_road", "to_road"))
-        .alias("road_id")).distinct() \
-        .withColumn("has_restriction", F.lit(True))
-    roads = roads.join(restricted_roads, ["doc_id", "road_id"], "left")
     # lane-relevant raw-tag fingerprint for the T2 equality check —
     # the reference compares LaneSpecs that EMBED the muv Lane
     # (osm2lanes lib.rs:289), so surface/smoothness/oneway/width
@@ -278,8 +271,9 @@ def build_street_network(spark: SparkSession, docs: DataFrame,
             | ((k == "maxheight")
                & v.rlike(r"^\d+(\.\d+)?\s*m?$")),
         )))
-    # the transforms kernel computes each group's initial trims itself
-    # (trim-annihilated roads, the trim_roads_for_merging memo), and
+    # the transforms kernel computes each group's initial trims and its
+    # T1/T2 guards itself (trim-annihilated roads, the
+    # trim_roads_for_merging memo, restricted roads, frozen seams), and
     # after the transforms finishes every junction it holds whole: T6
     # pass 2, restrictions, intersection rows and center lines
     tout = run_transforms(roads, extras, cfg.driving_side,

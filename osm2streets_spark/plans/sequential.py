@@ -219,7 +219,8 @@ def _road_ends(doc_id: str, roads: list[dict], driving_side: str,
 def _resolve_restrictions(restrictions: list, node_q: dict,
                           roads: list[dict],
                           imerges: dict | None = None) -> list[dict]:
-    """Mirror of resolve_restrictions (J4): via-node → i_id; from/to way
+    """The twin of J4 (restrictions.restriction_vias, then the
+    transforms kernel's way matching): via-node → i_id; from/to way
     → incident road. Post-transform, a road matches every constituent
     way (osm_way_ids) and absorbed via intersections re-home."""
     incident = {}
@@ -486,8 +487,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
 
     # transforms (T4+T1+T2+T1) with the dense-doc cell split mirrored
     imerges: dict[int, int] = {}
-    if cfg.transform_split_threshold and \
-            len(roads) > cfg.transform_split_threshold:
+    if len(roads) > cfg.transform_split_threshold:
         for r in roads:
             flat = r["xy"]
             n_pts = len(flat) // 2
@@ -503,13 +503,10 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
             cells_of_i.setdefault(r["src_i"], set()).add(r["_tcell"])
             cells_of_i.setdefault(r["dst_i"], set()).add(r["_tcell"])
         frozen = {i for i, cs in cells_of_i.items() if len(cs) > 1}
-        for r in roads:
-            r["src_frozen"] = r["src_i"] in frozen or None
-            r["dst_frozen"] = r["dst_i"] in frozen or None
     else:
         for r in roads:
             r["_tcell"] = 0
-            r["src_frozen"] = r["dst_frozen"] = None
+        frozen = set()
     out_roads: list[dict] = []
     # stepwise-debug twin (s_debug_steps): per-pass counts summed
     # over cells, keyed (step_idx, step_name)
@@ -521,7 +518,7 @@ def convert_document(doc_id: str, spans, cfg: MapConfig = DEFAULT_CONFIG,
         # cells (mirrors _transform_rows' _tcell guard)
         cell_steps: list = []
         out_roads.extend(apply_standard_transforms(
-            group, cfg.zip_sidepaths, imerges,
+            group, frozen, cfg.zip_sidepaths, imerges,
             cfg.remove_disconnected and not bool(cell),
             steps=cell_steps))
         for idx, (name, n_r, n_i) in enumerate(cell_steps):

@@ -51,17 +51,21 @@ _CEILINGS = {
 # the transforms input) shows only here. Measured 2026-10 at sf0.001,
 # the same over two builds. The transforms output went 44→35 while
 # taking in the junction, restriction and signal_target rows: the
-# has_restriction resolve and the way-signal lookup now read roads
-# through its checkpoint instead of embedding the persisted graph
-# subtree; the T6 trims (12) and final roads (2) checkpoints are gone.
-_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 35, 1, 1]
+# way-signal lookup reads roads through its checkpoint instead of
+# embedding the persisted graph subtree; the T6 trims (12) and final
+# roads (2) checkpoints are gone. It went 35→20 (measured 2026-10, the
+# same over three builds) when the kernel took over its T1/T2 guards:
+# one per-junction cell aggregate replaced the Spark-side restriction
+# resolve, its has_restriction join and the two frozen-flag joins.
+_CHECKPOINT_CEILINGS = [1, 2, 2, 8, 20, 1, 1]
 
 # Max Spark jobs of one build sunk to the noop format, counted through
-# a job group. Measured 2026-10 at sf0.001 over 9 builds: 46-48 (AQE
+# a job group. Measured 2026-10 at sf0.001 over 9 builds: 39-40 (AQE
 # submits a few small stages as separate jobs or not, build to build;
+# 46-48 with the Spark-side restriction resolve and frozen-flag joins,
 # 78-80 before the transforms kernel finished junctions itself). The
 # ceiling is the maximum seen plus one job of that spread.
-_JOB_CEILING = 49
+_JOB_CEILING = 41
 
 
 def _executed_plan(df) -> str:

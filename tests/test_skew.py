@@ -59,6 +59,23 @@ def test_adaptive_cell_split(dense_net):
     assert over == []  # every non-max-zoom cell is under threshold
 
 
+def _road(doc_id, road_id, way_id, src_i, dst_i, xy):
+    """One run_transforms input road with every _ROAD_FIELDS column."""
+    return {
+        "doc_id": doc_id, "road_id": road_id, "way_id": way_id,
+        "src_i": src_i, "dst_i": dst_i, "xy": [float(v) for v in xy],
+        "highway_type": "residential", "name": "", "layer": 0,
+        "speed_kph": 0.0, "oneway_dir": "",
+        "lane_specs_json": "[]", "lane_chars": "dd",
+        "dir_chars": "^v", "total_width": 7.0, "driveable": True,
+        "internal_junction_road": False,
+        "osm_way_ids": [way_id], "lon0": 0.0, "lat0": 0.0,
+        "src_is_edge": False, "dst_is_edge": False,
+        "src_has_crossing": False, "dst_has_crossing": False,
+        "placement_shift": 0.0, "lane_fingerprint": "",
+    }
+
+
 def test_dense_doc_transform_split(spark):
     """north_rule skew handling: a single doc with more roads than the
     split threshold must fan out across multiple (doc, cell) transform
@@ -76,17 +93,8 @@ def test_dense_doc_transform_split(spark):
     for k in range(300):
         cx = float(rng.uniform(0, 90000))
         cy = float(rng.uniform(0, 90000))
-        rows.append({
-            "doc_id": "dense", "road_id": k, "way_id": k,
-            "src_i": 2 * k, "dst_i": 2 * k + 1,
-            "xy": [cx, cy, cx + 50.0, cy + 40.0],
-            "highway_type": "residential", "name": "", "layer": 0,
-            "speed_kph": 0.0, "oneway_dir": "",
-            "lane_specs_json": "[]", "lane_chars": "dd",
-            "dir_chars": "^v", "total_width": 7.0, "driveable": True,
-            "internal_junction_road": False, "too_short": False,
-            "osm_way_ids": [k], "lon0": 0.0, "lat0": 0.0,
-        })
+        rows.append(_road("dense", k, k, 2 * k, 2 * k + 1,
+                          [cx, cy, cx + 50.0, cy + 40.0]))
     roads = spark.createDataFrame(rows)
     # roads only: no junction, restriction or signal_target rows
     extras = spark.createDataFrame([], "doc_id string, i_id long, "
@@ -95,7 +103,7 @@ def test_dense_doc_transform_split(spark):
 
     split = run_transforms(roads, extras, side, split_threshold=100,
                            split_zoom=12)
-    whole = run_transforms(roads, extras, side, split_threshold=0)
+    whole = run_transforms(roads, extras, side, split_threshold=1000)
     got_split = {r.road_id for r in
                  split.where("row_kind = 'road'").collect()}
     got_whole = {r.road_id for r in
@@ -107,7 +115,7 @@ def test_dense_doc_transform_split(spark):
                                 split_threshold=100, split_zoom=12)
     whole_noT4 = run_transforms(roads, extras, side,
                                 with_remove_disconnected=False,
-                                split_threshold=0)
+                                split_threshold=1000)
     ids_a = {r.road_id for r in
              split_noT4.where("row_kind = 'road'").collect()}
     ids_b = {r.road_id for r in
@@ -118,6 +126,53 @@ def test_dense_doc_transform_split(spark):
     # path skips T4 entirely and keeps all 300 (documented semantics)
     assert len(got_whole) == 1
     assert got_split == set(range(300))
+
+
+def test_restriction_at_a_frozen_seam(spark):
+    """A ban via the seam junction 102 of a split doc, from way 11
+    (road 2, in the west cell) to way 12 (road 3, in the east cell).
+    Both roads are restricted, though each cell holds only one of them,
+    so T2 splices neither at its other, degree-2 end (101 with road 1,
+    103 with road 4), as the sequential twin's whole-doc resolve says."""
+    from osm2streets_spark.config import DEFAULT_CONFIG
+    from osm2streets_spark.operators.transforms import (
+        apply_standard_transforms, run_transforms,
+    )
+    from osm2streets_spark.plans.sequential import _resolve_restrictions
+
+    # a chain 100 → 101 → … → 104 along y = 100: zoom-12 tile columns
+    # meet at x = 0 (lon 0), and a 3-point road's middle point picks
+    # its cell, so roads 1-2 are west and 3-4 east
+    roads = [_road("seam", k, 9 + k, 99 + k, 100 + k,
+                   [x, 100, x + 100, 100, x + 200, 100])
+             for k, x in zip((1, 2, 3, 4), (-400, -200, 0, 200))]
+    ban = {"restriction_type": "Ban", "from_way": 11, "to_way": 12}
+    extras = spark.createDataFrame(
+        [dict(ban, doc_id="seam", i_id=102, row_kind="restriction")])
+    out = run_transforms(spark.createDataFrame(roads), extras,
+                         DEFAULT_CONFIG.driving_side, split_threshold=3,
+                         split_zoom=12).collect()
+    got = {(r.road_id, r.src_i, r.dst_i, tuple(r.osm_way_ids))
+           for r in out if r.row_kind in ("road", "seam_end")}
+    assert sorted((r.road_id, r.i_id) for r in out
+                  if r.row_kind == "seam_end") == [(2, 102), (3, 102)]
+
+    # the twin: J4 over the whole doc, then each cell's transforms
+    twin = [dict(r) for r in roads]
+    resolved = _resolve_restrictions([dict(ban, via_node=7)], {7: 102}, twin)
+    restricted = {x["from_road"] for x in resolved} \
+        | {x["to_road"] for x in resolved}
+    for r in twin:
+        r["has_restriction"] = r["road_id"] in restricted
+    want = set()
+    for cell in ({1, 2}, {3, 4}):
+        want |= {(r["road_id"], r["src_i"], r["dst_i"],
+                  tuple(r["osm_way_ids"]))
+                 for r in apply_standard_transforms(
+                     [r for r in twin if r["road_id"] in cell], {102},
+                     False, {}, False, [])}
+    assert got == want == {(1, 100, 101, (10,)), (2, 101, 102, (11,)),
+                           (3, 102, 103, (12,)), (4, 103, 104, (13,))}
 
 
 def test_split_path_finishes_like_the_twin(spark, fixture_dir):

@@ -29,6 +29,9 @@ def mk_road(rid, src, dst, xy, hw="residential", lanes="s|dd|s",
         "driveable": driveable, "internal_junction_road": False,
         "osm_way_ids": [rid],
         "lon0": 0.0, "lat0": 0.0,
+        "src_is_edge": None, "dst_is_edge": None,
+        "src_has_crossing": None, "dst_has_crossing": None,
+        "placement_shift": None, "lane_fingerprint": None,
     }
     r.update(kw)
     return r
@@ -50,7 +53,7 @@ def test_collapse_short_road_merges_endpoints():
         mk_road(2, 11, 12, [100, 0, 103, 0], internal_junction_road=True),
         mk_road(3, 12, 13, [103, 0, 200, 0]),
     ]
-    out = collapse_short_roads(roads)
+    out = collapse_short_roads(roads, set())
     assert sorted(r["road_id"] for r in out) == [1, 3]
     r3 = next(r for r in out if r["road_id"] == 3)
     assert r3["src_i"] == 11  # dst of candidate merged into its src
@@ -71,7 +74,7 @@ def test_kernel_finds_trim_annihilated_roads_itself():
         mk_road(6, 2, 14, [8, 0, 8, 100]),
         mk_road(7, 2, 15, [8, 0, 8, -100]),
     ]
-    rows = [dict(r, doc_id="d", _tcell=0) for r in roads]
+    rows = [dict(r, doc_id="d", _tcell=0, row_kind="road") for r in roads]
     rows += [_junction(1, 501), _junction(2, 502)]
     out = [dict(zip(TRANSFORM_SCHEMA.names, t))
            for t in _transform_rows(rows, False, True,
@@ -88,11 +91,28 @@ def test_collapse_degenerate_splices():
         mk_road(1, 10, 11, [0, 0, 100, 0]),
         mk_road(2, 11, 12, [100, 0, 200, 0]),
     ]
-    out = collapse_degenerate(roads)
+    out = collapse_degenerate(roads, set())
     assert len(out) == 1
     merged = out[0]
     assert merged["src_i"] == 10 and merged["dst_i"] == 12
     assert sorted(merged["osm_way_ids"]) == [1, 2]
+
+
+def test_frozen_junction_is_guarded_after_a_splice():
+    """T2 splices roads 1 (11→5) and 2 (11→12) at 11, flipping road 1,
+    into road 1 as 5→12. Junction 5 is a frozen seam and 12 is not, so
+    the second T1 pass collapses the internal road 3 (12→13), and the
+    frozen junction 5 stays road 1's end."""
+    roads = [
+        mk_road(1, 11, 5, [0, 0, -100, 0]),
+        mk_road(2, 11, 12, [0, 0, 100, 0]),
+        mk_road(3, 12, 13, [100, 0, 103, 0], name="Y",
+                internal_junction_road=True),
+    ]
+    frozen = {5}
+    out = collapse_short_roads(collapse_degenerate(roads, frozen), frozen)
+    assert [(r["road_id"], r["src_i"], r["dst_i"]) for r in out] == [
+        (1, 5, 12)]
 
 
 def test_zip_sidepath_splices_lanes():
@@ -208,7 +228,7 @@ def test_kernel_resolves_restrictions_on_the_final_roads():
            "to_way": 2000}
 
     def survivor(with_ban):
-        rows = [dict(r, doc_id="d", _tcell=0) for r in roads]
+        rows = [dict(r, doc_id="d", _tcell=0, row_kind="road") for r in roads]
         rows += [_junction(1, 501), _junction(2, 502)]
         rows += [dict(ban)] if with_ban else []
         out = [dict(zip(TRANSFORM_SCHEMA.names, t))
